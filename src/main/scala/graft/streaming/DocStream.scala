@@ -9,8 +9,9 @@ import graft.operators.TextAnalysis
 
 /** Streaming document-ingest operators (north star — the reference is
   * strictly batch, SURVEY.md §2.5). Same harness contract as
-  * [[EventStream]]: file-stream source over the static parquet, memory
-  * sink + `processAllAvailable` drain for the oracle gate only.
+  * [[EventStream]]: file-stream source over the static parquet, drained
+  * through [[Streams]] (memory sink or per-batch store appends) for the
+  * oracle gate only.
   */
 object DocStream {
 
@@ -40,15 +41,8 @@ object DocStream {
       .parquet(dir)
       .select(md5(TextAnalysis.normalizedText(col("text"))).as("fp"))
       .dropDuplicates("fp")
-    val name = "stream_dedup_out"
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8") // state stores sized to keys, see EventStream
-    try {
-      val q = fps.writeStream.outputMode(OutputMode.Append())
-        .format("memory").queryName(name).start()
-      try q.processAllAvailable() finally q.stop()
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
-    spark.table(name).orderBy("fp")
+    Streams.drain(fps, OutputMode.Append(), Streams.stateWidth(spark))
+      .orderBy("fp")
   }
 
   /** Synthetic event time spanning [[WatermarkSpanSecs]] seconds — the
@@ -88,15 +82,8 @@ object DocStream {
       .withWatermark("ts", WatermarkDelay)
       .dropDuplicatesWithinWatermark("fp")
       .select("fp")
-    val name = "stream_dedup_wm_out"
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8") // state stores sized to keys, see EventStream
-    try {
-      val q = fps.writeStream.outputMode(OutputMode.Append())
-        .format("memory").queryName(name).start()
-      try q.processAllAvailable() finally q.stop()
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
-    spark.table(name).orderBy("fp")
+    Streams.drain(fps, OutputMode.Append(), Streams.stateWidth(spark))
+      .orderBy("fp")
   }
 
   /** Streaming incremental dedup — [[graft.operators.Dedup.incremental]]
@@ -132,15 +119,8 @@ object DocStream {
       .groupBy("fp")
       .agg(min("doc_id").as("doc_id"), count(lit(1)).as("n_batch_dups"))
       .select(col("doc_id"), col("fp"), col("n_batch_dups"))
-    val name = "stream_inc_dedup_out"
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8") // state stores sized to keys, see EventStream
-    try {
-      val q = deduped.writeStream.outputMode(OutputMode.Complete())
-        .format("memory").queryName(name).start()
-      try q.processAllAvailable() finally q.stop()
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
-    spark.table(name).orderBy("doc_id")
+    Streams.drain(deduped, OutputMode.Complete(), Streams.stateWidth(spark))
+      .orderBy("doc_id")
   }
 
   /** `stream_dedup_spans`: the INGEST-stream twin of
@@ -204,13 +184,8 @@ object DocStream {
         concat_ws(",", transform(
           sort_array(collect_list(when(col("hit"), col("s")))),
           x => x.cast("string"))).as("dup_starts"))
-    val name = "stream_dedup_spans_out"
-    EventStream.withStatePartitions(spark) {
-      val q = report.writeStream.outputMode(OutputMode.Complete())
-        .format("memory").queryName(name).start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    spark.table(name).orderBy("doc_id")
+    Streams.drain(report, OutputMode.Complete(), Streams.stateWidth(spark))
+      .orderBy("doc_id")
   }
 
   private val embeddingsSchema = StructType(Seq(
@@ -314,15 +289,10 @@ object DocStream {
       // dependent on the pair, so min() is just the value
       .groupBy("batch_id", "hist_id")
       .agg(min("jaccard").as("jaccard"))
-    val name = "stream_inc_minhash_out"
-    val prevSmj = spark.conf.get("spark.sql.join.preferSortMergeJoin")
-    spark.conf.set("spark.sql.join.preferSortMergeJoin", "false")
-    try EventStream.withStatePartitions(spark) {
-      val q = pairs.writeStream.outputMode(OutputMode.Complete())
-        .format("memory").queryName(name).start()
-      try q.processAllAvailable() finally { q.stop(); Dedup.retireCaches() }
-    } finally spark.conf.set("spark.sql.join.preferSortMergeJoin", prevSmj)
-    spark.table(name).orderBy("batch_id", "hist_id")
+    try Streams.drain(pairs, OutputMode.Complete(),
+        Streams.stateWidth(spark) ++ Streams.HashJoins)
+      .orderBy("batch_id", "hist_id")
+    finally Dedup.retireCaches()
   }
 
   /** `stream_incremental_semantic`: the INGEST-stream twin of
@@ -368,11 +338,9 @@ object DocStream {
         round(dot(spark, col("bv"), col("hv")) / (col("bn") * col("hn")), 6)
           .as("cosine"))
       .filter(col("cosine") >= Dedup.CosineDupThreshold)
-    val name = "stream_inc_semantic_out"
-    val q = pairs.writeStream.outputMode(OutputMode.Append())
-      .format("memory").queryName(name).start()
-    try q.processAllAvailable() finally { q.stop(); Dedup.retireCaches() }
-    spark.table(name).orderBy("batch_id", "hist_id")
+    try Streams.drain(pairs, OutputMode.Append())
+      .orderBy("batch_id", "hist_id")
+    finally Dedup.retireCaches()
   }
 
   /** `stream_phash_incremental`: the ingest-stream twin of
@@ -420,13 +388,9 @@ object DocStream {
       .filter(col("hamming") <= Multimodal.PhashMaxHamming)
       .groupBy("batch_id", "hist_id")
       .agg(min("hamming").as("hamming"))
-    val name = "stream_phash_out"
-    EventStream.withStatePartitions(spark) {
-      val q = pairs.writeStream.outputMode(OutputMode.Complete())
-        .format("memory").queryName(name).start()
-      try q.processAllAvailable() finally { q.stop(); Dedup.retireCaches() }
-    }
-    spark.table(name).orderBy("batch_id", "hist_id")
+    try Streams.drain(pairs, OutputMode.Complete(), Streams.stateWidth(spark))
+      .orderBy("batch_id", "hist_id")
+    finally Dedup.retireCaches()
   }
 
   /** `stream_audio_neardup`: the ingest-stream twin of
@@ -475,13 +439,9 @@ object DocStream {
       .filter(col("hamming") <= Multimodal.PhashMaxHamming)
       .groupBy("batch_id", "hist_id")
       .agg(min("hamming").as("hamming"))
-    val name = "stream_audio_neardup_out"
-    EventStream.withStatePartitions(spark) {
-      val q = pairs.writeStream.outputMode(OutputMode.Complete())
-        .format("memory").queryName(name).start()
-      try q.processAllAvailable() finally { q.stop(); Dedup.retireCaches() }
-    }
-    spark.table(name).orderBy("batch_id", "hist_id")
+    try Streams.drain(pairs, OutputMode.Complete(), Streams.stateWidth(spark))
+      .orderBy("batch_id", "hist_id")
+    finally Dedup.retireCaches()
   }
 
   /** `stream_video_neardup`: the ingest-stream twin of
@@ -533,13 +493,9 @@ object DocStream {
       .groupBy("batch_id", "hist_id")
       .agg(count(lit(1)).as("n_frame_matches"), min("hamming").as("min_hamming"))
       .filter(col("n_frame_matches") >= Multimodal.VideoMatchMinFrames)
-    val name = "stream_video_neardup_out"
-    EventStream.withStatePartitions(spark) {
-      val q = pairs.writeStream.outputMode(OutputMode.Complete())
-        .format("memory").queryName(name).start()
-      try q.processAllAvailable() finally { q.stop(); Dedup.retireCaches() }
-    }
-    spark.table(name).orderBy("batch_id", "hist_id")
+    try Streams.drain(pairs, OutputMode.Complete(), Streams.stateWidth(spark))
+      .orderBy("batch_id", "hist_id")
+    finally Dedup.retireCaches()
   }
 
   /** STREAMING FLAGSHIP — [[graft.operators.Corpus.ingest]] run as a
@@ -639,15 +595,8 @@ object DocStream {
         min("quality").as("quality"))
       .select("doc_id", "fp", "n_batch_dups", "quality")
 
-    val name = "stream_pipeline_ingest_out"
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8") // state stores sized to keys, see EventStream
-    try {
-      val q = result.writeStream.outputMode(OutputMode.Complete())
-        .format("memory").queryName(name).start()
-      try q.processAllAvailable() finally q.stop()
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
-    spark.table(name).orderBy("doc_id")
+    Streams.drain(result, OutputMode.Complete(), Streams.stateWidth(spark))
+      .orderBy("doc_id")
   }
 
   val QualityThreshold = 0.5
@@ -682,12 +631,8 @@ object DocStream {
   }
 
   def streamQuality(spark: SparkSession, dir: String): DataFrame = {
-    val scored = qualityStreamFrame(spark, dir)
-    val name = "stream_quality_out"
-    val q = scored.writeStream.outputMode(OutputMode.Append())
-      .format("memory").queryName(name).start()
-    try q.processAllAvailable() finally q.stop()
-    spark.table(name).orderBy("doc_id")
+    Streams.drain(qualityStreamFrame(spark, dir), OutputMode.Append())
+      .orderBy("doc_id")
   }
 
   /** `stream_quality_classifier`: the TRAINED quality head applied on
@@ -712,11 +657,8 @@ object DocStream {
       .parquet(dir)
     val scored = QualityClassifier.scoreFrame(
       QualityClassifier.featuresOf(stream), head)
-    val name = "stream_quality_classifier_out"
-    val q = scored.writeStream.outputMode(OutputMode.Append())
-      .format("memory").queryName(name).start()
-    try q.processAllAvailable() finally q.stop()
-    spark.table(name).orderBy("doc_id")
+    Streams.drain(scored, OutputMode.Append())
+      .orderBy("doc_id")
   }
 
   /** `stream_bm25_index`: the search index MAINTAINED under
@@ -765,18 +707,13 @@ object DocStream {
     */
   private def ingestSearchStore(spark: SparkSession, dir: String): java.nio.file.Path = {
     val tmp = java.nio.file.Files.createTempDirectory("graft-stream-index")
-    val tmpPath = tmp.toString
-    val q = spark.readStream
+    Streams.drainBatches(spark.readStream
       .schema(documentsSchema)
       .option("pathGlobFilter", "documents.parquet")
       .parquet(dir)
-      .select(col("doc_id"), col("text"))
-      .writeStream.outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        appendSearchBatch(batch, tmpPath)
-      }
-      .start()
-    try q.processAllAvailable() finally q.stop()
+      .select(col("doc_id"), col("text"))) { (batch, _) =>
+      appendSearchBatch(batch, tmp.toString)
+    }
     tmp
   }
 
@@ -913,18 +850,14 @@ object DocStream {
     try {
       val splitOf =
         substring(md5(concat(lit("inc:"), col("vec_id").cast("string"))), 1, 1)
-      val q = spark.readStream
+      Streams.drainBatches(spark.readStream
         .schema(embeddingsSchema)
         .option("pathGlobFilter", "embeddings.parquet")
         .parquet(dir)
         .select(col("vec_id"), col("embedding"))
-        .filter(splitOf < Dedup.IncBatchThreshold)
-        .writeStream.outputMode(OutputMode.Append())
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          ProductQuant.appendBatchToIndex(batch, base, delta)
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
+        .filter(splitOf < Dedup.IncBatchThreshold)) { (batch, _) =>
+        ProductQuant.appendBatchToIndex(batch, base, delta)
+      }
       graft.operators.Kernels.trackedCheckpoint(
         ProductQuant.annIvfPqFromLayers(spark, dir, base, delta))
     } finally graft.operators.Kernels.rmTree(tmp.toFile)
@@ -959,32 +892,28 @@ object DocStream {
         .write.parquet(s"$tmp/keep_v0")
       // Atomic, not a plain local var: the counter is written on the
       // stream-execution thread (inside foreachBatch) and read on the
-      // caller thread after processAllAvailable() — a captured plain
+      // caller thread after the drain returns — a captured plain
       // var rides an unsynchronized ObjectRef, leaving visibility to
       // incidental locking inside the streaming engine
       val version = new java.util.concurrent.atomic.AtomicInteger(0)
       val splitOf =
         substring(md5(concat(lit("inc:"), col("doc_id").cast("string"))), 1, 1)
       val synth = udf((body: Array[Byte]) => Multimodal.synthPayload(body))
-      val q = spark.readStream
+      Streams.drainBatches(spark.readStream
         .schema(documentsSchema)
         .option("pathGlobFilter", "documents.parquet")
         .parquet(dir)
         .select(col("doc_id"), col("text"), splitOf.as("split"))
         .filter(col("split") < Dedup.IncBatchThreshold)
-        .select(col("doc_id"), synth(encode(col("text"), "UTF-8")).as("payload"))
-        .writeStream.outputMode(OutputMode.Append())
-        .foreachBatch { (batch: DataFrame, _: Long) =>
+        .select(col("doc_id"), synth(encode(col("text"), "UTF-8")).as("payload"))) {
+        (batch, _) =>
           val v = version.get()
           val sigs = Multimodal.mediaSigFrame(batch, imgMu, audMu, vidMu)
           Multimodal.mergeMediaKeep(
               spark.read.parquet(s"$tmp/keep_v$v"), sigs)
             .write.parquet(s"$tmp/keep_v${v + 1}")
           version.incrementAndGet()
-          ()
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
+      }
       Kernels.trackedCheckpoint(
         spark.read.parquet(s"$tmp/keep_v${version.get()}")
           .orderBy("modality", "keep_id"))
@@ -1107,10 +1036,10 @@ object DocStream {
       // partial output and folds once. Visibility: the CopyOnWrite
       // list covers labelsAt()'s cross-thread reads of `processed`;
       // the caller-thread reads of the plain keep MAPS at drain rest
-      // on q.processAllAvailable()'s own lock (its await establishes
-      // the happens-before with the stream thread's batch bodies) —
-      // replacing processAllAvailable with status polling would need
-      // an explicit fence for the maps.
+      // on the drain's await for the last batch, which takes the
+      // query's progress lock (the happens-before with the stream
+      // thread's batch bodies) — replacing that await with status
+      // polling would need an explicit fence for the maps.
       val processed = new java.util.concurrent.CopyOnWriteArrayList[Long]()
       // bids whose deferred contraction has been folded into a labels
       // file, newest last — per-batch edge/sig writes accumulate
@@ -1157,88 +1086,70 @@ object DocStream {
       // micro-batch bodies plan without AQE, where the static planner
       // picks SortMergeJoin for the batch-x-store banded probes —
       // sorting the store per batch; hash joins keep the exchanges but
-      // drop the sorts (the streamIncrementalMinhash drain's measured
-      // trick). Set BEFORE start() — batch 0 plans as soon as the
-      // query launches — and restored on EVERY exit path below (the
-      // restore's try covers stream construction and start() too, so
-      // a bad source cannot leak the conf session-wide).
-      // SCOPE CAVEAT: the override is session-global for the drain's
-      // duration, so a CONCURRENT query on this SparkSession would
-      // plan under it (and the restore re-pins the pre-read value even
-      // if it was default-inherited). Acceptable under the repo's
-      // single-threaded gate contract; if concurrent use ever
-      // appears, scope the stream to a cloned session
-      // (spark.newSession) instead.
-      val prevSmj = spark.conf.get("spark.sql.join.preferSortMergeJoin")
-      spark.conf.set("spark.sql.join.preferSortMergeJoin", "false")
-      try {
-        val q = reader
+      // drop the sorts (the streamIncrementalMinHash drain's measured
+      // trick)
+      Streams.drainBatches(reader
           .parquet(srcDir)
           .select(col("doc_id"), col("text"), splitOf.as("split"))
           .filter(col("split") < Dedup.IncBatchThreshold)
-          .select(col("doc_id"), synth(encode(col("text"), "UTF-8")).as("payload"))
-          .writeStream.outputMode(OutputMode.Append())
-          .foreachBatch { (batch: DataFrame, bid: Long) =>
-            if (!processed.isEmpty && processed.get(processed.size - 1) >= bid) {
-              // replayed, fully-committed batch — skip (idempotence)
-            } else {
-              // per-sig aggregates collected first (bounded by the
-              // batch's present sigs) so the driver fold is a pure
-              // in-memory step AFTER every Spark job has succeeded
-              val imgAgg = Multimodal.sigBatchAgg(
-                Multimodal.phashSigFrame(batch, imgMu, "doc_id", "ph"))
-              val audAgg = Multimodal.sigBatchAgg(
-                Multimodal.audioSigFrame(batch, audMu))
-              // the batch's frame sigs feed three consumers (two probe
-              // sides, the store write) — checkpoint so the decode
-              // kernel runs once per batch
-              val vidS = (Multimodal.frameSigFrame(batch, vidMu,
-                "doc_id", "sample_no", "ph").localCheckpoint())
-              // per-batch work stops at EDGES: the blast-radius probe
-              // (batch frames x accumulated store, banded — work
-              // proportional to the batch) plus within-batch pairs,
-              // written keyed by bid. The label contraction defers —
-              // see [[VideoContractEvery]].
-              (Multimodal.videoClipPairsProbe(vidS, vidSigsAt())
-                .select("doc_a", "doc_b")
-                .unionByName(Multimodal.videoClipPairs(vidS)
-                  .select("doc_a", "doc_b"))
-                .write.mode("overwrite").parquet(s"$tmp/edges_b$bid"))
-              (vidS.write.mode("overwrite").parquet(s"$tmp/vidsigs_b$bid"))
-              // the batch's checkpoint blocks are dead once the writes
-              // are done — free them per batch instead of leaving one
-              // node-sized block PER MICRO-BATCH to the ContextCleaner
-              // (which only runs on driver GC)
-              Kernels.checkpointRddId(vidS).foreach { id =>
-                spark.sparkContext.getPersistentRDDs.get(id)
-                  .foreach(_.unpersist(true))
-              }
-              // driver state LAST — pure in-memory, cannot fail midway
-              Multimodal.sigKeepFold(imgKeep, imgAgg)
-              Multimodal.sigKeepFold(audKeep, audAgg)
-              processed.add(bid)
-              // deferred contraction: fold accumulated edges into the
-              // label table once enough batches are pending (a replayed
-              // batch that died between the labels write and the
-              // `contracted` append simply re-contracts at the next
-              // point — confluent, and the write is keyed + overwrite)
-              if (pendingBids().size >= contractEvery) contract(bid)
-            }
-            // the label maintenance's component loop registers tracked
-            // caches/checkpoints in THIS (stream-execution) thread's
-            // scope; drain them per batch — the dead-thread backstop
-            // would otherwise hold them for the whole drain
-            Kernels.drainThreadScope()
-            ()
+          .select(col("doc_id"), synth(encode(col("text"), "UTF-8")).as("payload")),
+        Streams.HashJoins) { (batch, bid) =>
+        if (!processed.isEmpty && processed.get(processed.size - 1) >= bid) {
+          // replayed, fully-committed batch — skip (idempotence)
+        } else {
+          // per-sig aggregates collected first (bounded by the
+          // batch's present sigs) so the driver fold is a pure
+          // in-memory step AFTER every Spark job has succeeded
+          val imgAgg = Multimodal.sigBatchAgg(
+            Multimodal.phashSigFrame(batch, imgMu, "doc_id", "ph"))
+          val audAgg = Multimodal.sigBatchAgg(
+            Multimodal.audioSigFrame(batch, audMu))
+          // the batch's frame sigs feed three consumers (two probe
+          // sides, the store write) — checkpoint so the decode
+          // kernel runs once per batch
+          val vidS = (Multimodal.frameSigFrame(batch, vidMu,
+            "doc_id", "sample_no", "ph").localCheckpoint())
+          // per-batch work stops at EDGES: the blast-radius probe
+          // (batch frames x accumulated store, banded — work
+          // proportional to the batch) plus within-batch pairs,
+          // written keyed by bid. The label contraction defers —
+          // see [[VideoContractEvery]].
+          (Multimodal.videoClipPairsProbe(vidS, vidSigsAt())
+            .select("doc_a", "doc_b")
+            .unionByName(Multimodal.videoClipPairs(vidS)
+              .select("doc_a", "doc_b"))
+            .write.mode("overwrite").parquet(s"$tmp/edges_b$bid"))
+          (vidS.write.mode("overwrite").parquet(s"$tmp/vidsigs_b$bid"))
+          // the batch's checkpoint blocks are dead once the writes
+          // are done — free them per batch instead of leaving one
+          // node-sized block PER MICRO-BATCH to the ContextCleaner
+          // (which only runs on driver GC)
+          Kernels.checkpointRddId(vidS).foreach { id =>
+            spark.sparkContext.getPersistentRDDs.get(id)
+              .foreach(_.unpersist(true))
           }
-          .start()
-        try q.processAllAvailable() finally q.stop()
-      } finally spark.conf.set("spark.sql.join.preferSortMergeJoin", prevSmj)
+          // driver state LAST — pure in-memory, cannot fail midway
+          Multimodal.sigKeepFold(imgKeep, imgAgg)
+          Multimodal.sigKeepFold(audKeep, audAgg)
+          processed.add(bid)
+          // deferred contraction: fold accumulated edges into the
+          // label table once enough batches are pending (a replayed
+          // batch that died between the labels write and the
+          // `contracted` append simply re-contracts at the next
+          // point — confluent, and the write is keyed + overwrite)
+          if (pendingBids().size >= contractEvery) contract(bid)
+        }
+        // the label maintenance's component loop registers tracked
+        // caches/checkpoints in THIS (stream-execution) thread's
+        // scope; drain them per batch — the dead-thread backstop
+        // would otherwise hold them for the whole drain
+        Kernels.drainThreadScope()
+      }
       nkdMark("drain")
       // drain-time contraction of whatever is still pending — on the
       // CALLER thread, so the component loop plans with AQE instead of
-      // the micro-batch static planner (processAllAvailable's await
-      // establishes the happens-before with the stream thread's writes)
+      // the micro-batch static planner (the drain's await establishes
+      // the happens-before with the stream thread's writes)
       import scala.jdk.CollectionConverters._
       processed.asScala.lastOption.foreach(contract)
       nkdMark("contract")
@@ -1280,19 +1191,15 @@ object DocStream {
       val version = new java.util.concurrent.atomic.AtomicInteger(0)
       val splitOf =
         substring(md5(concat(lit("inc:"), col("vec_id").cast("string"))), 1, 1)
-      val q = spark.readStream
+      Streams.drainBatches(spark.readStream
         .schema(embeddingsSchema)
         .option("pathGlobFilter", "embeddings.parquet")
         .parquet(dir)
         .select(col("vec_id"))
-        .filter(splitOf < Dedup.IncBatchThreshold)
-        .writeStream.outputMode(OutputMode.Append())
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          version.set(
-            Graph.appendBatchToKnn(batch, dir, tmp.toString, version.get()))
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
+        .filter(splitOf < Dedup.IncBatchThreshold)) { (batch, _) =>
+        version.set(
+          Graph.appendBatchToKnn(batch, dir, tmp.toString, version.get()))
+      }
       mark("drain")
       val served = Kernels.trackedCheckpoint(
         Graph.mutualFromDirected(

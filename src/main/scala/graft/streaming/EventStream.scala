@@ -33,11 +33,11 @@ case class KmvEstimate(event_type: String, n_rows: Long, est_users: Long)
   * these are north-star capability extensions: the same queries
   * declared over `readStream`, runnable unchanged against a live file/
   * Kafka source. For the oracle gate each runs against the static
-  * events parquet via the file stream source, drains with
-  * `processAllAvailable`, and returns the memory-sink table — the
-  * memory sink is test-only; production would `writeStream` to a real
-  * sink. Results are identical to the batch twins (same partial-agg +
-  * shuffle plan per micro-batch, state store between batches).
+  * events parquet via the file stream source and drains through
+  * [[Streams]], which returns the memory-sink rows — the memory sink is
+  * test-only; production would `writeStream` to a real sink. Results
+  * are identical to the batch twins (same partial-agg + shuffle plan
+  * per micro-batch, state store between batches).
   */
 object EventStream {
 
@@ -84,14 +84,8 @@ object EventStream {
     * the clamp below still caps partitions at the session's
     * parallelism, and at production key cardinalities the quotient —
     * not the budget — is what sizes the state layout.
-    *
-    * Parameterized (env `SPARK_GRAFT_KEYS_PER_STORE`) because it is a
-    * deployment-scale knob — the committed default is what the driver
-    * measures; the env hook exists for same-session A/B pairs of the
-    * budget itself (this round's 64-vs-256 re-measurement).
     */
-  val TargetKeysPerStore: Long =
-    sys.env.get("SPARK_GRAFT_KEYS_PER_STORE").map(_.toLong).getOrElse(64L)
+  val TargetKeysPerStore = 64L
 
   /** Expected state keys for this suite's queries (event types ×
     * hours, user ids, session keys — a few hundred at every SF the
@@ -121,19 +115,6 @@ object EventStream {
     math.max(1, math.min(batchDefault, wanted))
   }
 
-  /** Run a streaming drain with shuffle partitions sized to the given
-    * state cardinality via [[statePartitionsFor]]. The result is
-    * identical for ANY partition count — the oracle gate asserts so,
-    * and a spec drains one query at two sizings to pin the invariance.
-    */
-  private[graft] def withStatePartitions[T](
-      spark: SparkSession, expectedKeys: Long = ExpectedStateKeys)(f: => T): T = {
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions",
-      statePartitionsFor(spark, expectedKeys).toString)
-    try f finally spark.conf.set("spark.sql.shuffle.partitions", prev)
-  }
-
   /** Streaming hourly rollup, complete mode (the streaming twin of
     * Events.hourlyRollup — same result set once drained).
     */
@@ -142,13 +123,8 @@ object EventStream {
       .groupBy(date_trunc("hour", col("ts")).as("hour"), col("event_type"))
       .agg(count(lit(1)).as("n_events"),
            sum(col("value").cast("decimal(18,2)")).cast("double").as("total_value"))
-    val name = "stream_hourly_out"
-    withStatePartitions(spark) {
-      val q = agg.writeStream.outputMode(OutputMode.Complete())
-        .format("memory").queryName(name).start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    spark.table(name).orderBy("hour", "event_type")
+    Streams.drain(agg, OutputMode.Complete(), Streams.stateWidth(spark))
+      .orderBy("hour", "event_type")
   }
 
   /** Arbitrary stateful aggregation with `mapGroupsWithState`: running
@@ -175,17 +151,12 @@ object EventStream {
       .as[(Long, Long, Double)]
       .groupByKey(_._1)
       .mapGroupsWithState(GroupStateTimeout.NoTimeout)(updateFn)
-    val name = "stream_user_totals_out"
-    withStatePartitions(spark) {
-      val q = out.writeStream.outputMode(OutputMode.Update())
-        .format("memory").queryName(name).start()
-      try q.processAllAvailable() finally q.stop()
-    }
+    val drained = Streams.drain(out, OutputMode.Update(), Streams.stateWidth(spark))
     // Update mode emits one row per user per batch; the final state per
     // user is the row with the highest n_events (monotone within a user).
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("user_id").orderBy(col("n_events").desc)
-    spark.table(name)
+    drained
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") === 1)
       .select("user_id", "n_events", "value_cents")
@@ -224,13 +195,8 @@ object EventStream {
         col("session_window.start").as("session_start"),
         col("session_window.end").as("session_end"),
         col("n_events"), col("session_value"))
-    val name = "stream_session_window_out"
-    withStatePartitions(spark) {
-      val q = agg.writeStream.outputMode(OutputMode.Append())
-        .format("memory").queryName(name).start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    spark.table(name).orderBy("user_id", "session_start")
+    Streams.drain(agg, OutputMode.Append(), Streams.stateWidth(spark))
+      .orderBy("user_id", "session_start")
   }
 
   def sessionizeStream(spark: SparkSession, dir: String): DataFrame = {
@@ -273,13 +239,7 @@ object EventStream {
       .as[(Long, Long, Long, Double)]
       .groupByKey(_._1)
       .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout)(fn)
-    val name = "stream_sessionize_out"
-    withStatePartitions(spark) {
-      val q = out.writeStream.outputMode(OutputMode.Append())
-        .format("memory").queryName(name).start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    spark.table(name)
+    Streams.drain(out, OutputMode.Append(), Streams.stateWidth(spark))
       .select(col("user_id"), col("session_seq"), col("n_events"),
               expr("timestamp_micros(start_us)").as("session_start"),
               expr("timestamp_micros(end_us)").as("session_end"),
@@ -298,13 +258,8 @@ object EventStream {
       .groupBy(window(col("ts"), "1 hour"), col("event_type"))
       .agg(count(lit(1)).as("n_events"))
       .select(col("window.start").as("hour"), col("event_type"), col("n_events"))
-    val name = "stream_windowed_out"
-    withStatePartitions(spark) {
-      val q = agg.writeStream.outputMode(OutputMode.Append())
-        .format("memory").queryName(name).start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    spark.table(name).orderBy("hour", "event_type")
+    Streams.drain(agg, OutputMode.Append(), Streams.stateWidth(spark))
+      .orderBy("hour", "event_type")
   }
 
   /** Ranks kept per finalized window by [[trendingTopK]]. */
@@ -328,13 +283,7 @@ object EventStream {
       .groupBy(window(col("ts"), "1 hour"), col("event_type"))
       .agg(count(lit(1)).as("n_events"))
       .select(col("window.start").as("hour"), col("event_type"), col("n_events"))
-    val name = "stream_topk_out"
-    withStatePartitions(spark) {
-      val q = agg.writeStream.outputMode(OutputMode.Append())
-        .format("memory").queryName(name).start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    spark.table(name)
+    Streams.drain(agg, OutputMode.Append(), Streams.stateWidth(spark))
       .withColumn("rnk", row_number().over(
         Window.partitionBy("hour").orderBy(col("n_events").desc, col("event_type")))
         .cast("long"))
@@ -366,13 +315,8 @@ object EventStream {
         expr("max_by(value, ord)").as("close"))
       .select(col("window.start").as("hour"), col("event_type"),
         col("n_events"), col("open"), col("high"), col("low"), col("close"))
-    val name = "stream_ohlc_out"
-    withStatePartitions(spark) {
-      val q = agg.writeStream.outputMode(OutputMode.Append())
-        .format("memory").queryName(name).start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    spark.table(name).orderBy("event_type", "hour")
+    Streams.drain(agg, OutputMode.Append(), Streams.stateWidth(spark))
+      .orderBy("event_type", "hour")
   }
 
   /** STREAM-STREAM interval join: each error event joined to the same
@@ -402,13 +346,9 @@ object EventStream {
         col("p_ts") < col("e_ts"))
       .select(col("error_id"), col("user_id"), col("purchase_id"),
         col("p_value").cast("decimal(18,2)").cast("double").as("purchase_value"))
-    val name = "stream_error_purchase_out"
-    withStatePartitions(spark, JoinBandKeys) {
-      val q = joined.writeStream.outputMode(OutputMode.Append())
-        .format("memory").queryName(name).start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    spark.table(name).orderBy("error_id", "purchase_id")
+    Streams.drain(joined, OutputMode.Append(),
+      Streams.stateWidth(spark, JoinBandKeys))
+      .orderBy("error_id", "purchase_id")
   }
 
   /** `stream_error_purchase_outer`: the LEFT OUTER stream-stream
@@ -440,13 +380,9 @@ object EventStream {
         col("p_ts") < col("e_ts"), "left_outer")
       .select(col("error_id"), col("user_id"), col("purchase_id"),
         col("p_value").cast("decimal(18,2)").cast("double").as("purchase_value"))
-    val name = "stream_error_purchase_outer_out"
-    withStatePartitions(spark, JoinBandKeys) {
-      val q = joined.writeStream.outputMode(OutputMode.Append())
-        .format("memory").queryName(name).start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    spark.table(name).orderBy("error_id", "purchase_id")
+    Streams.drain(joined, OutputMode.Append(),
+      Streams.stateWidth(spark, JoinBandKeys))
+      .orderBy("error_id", "purchase_id")
   }
 
   /** `stream_error_purchase_full`: the FULL OUTER stream-stream
@@ -480,13 +416,9 @@ object EventStream {
         coalesce(col("user_id"), col("p_user")).as("user_id"),
         col("purchase_id"),
         col("p_value").cast("decimal(18,2)").cast("double").as("purchase_value"))
-    val name = "stream_error_purchase_full_out"
-    withStatePartitions(spark, JoinBandKeys) {
-      val q = joined.writeStream.outputMode(OutputMode.Append())
-        .format("memory").queryName(name).start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    spark.table(name).orderBy("error_id", "purchase_id")
+    Streams.drain(joined, OutputMode.Append(),
+      Streams.stateWidth(spark, JoinBandKeys))
+      .orderBy("error_id", "purchase_id")
   }
 
   /** Streaming cardinality sketch: per-type distinct-user estimates on
@@ -539,17 +471,12 @@ object EventStream {
       .as[(String, Long, Long)]
       .groupByKey(_._1)
       .mapGroupsWithState(GroupStateTimeout.NoTimeout)(fn)
-    val name = "stream_approx_users_out"
-    withStatePartitions(spark) {
-      val q = out.writeStream.outputMode(OutputMode.Update())
-        .format("memory").queryName(name).start()
-      try q.processAllAvailable() finally q.stop()
-    }
+    val drained = Streams.drain(out, OutputMode.Update(), Streams.stateWidth(spark))
     // Update mode emits one row per type per batch; the final state is
     // the row with the highest n_rows (strictly monotone within a key).
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("event_type").orderBy(col("n_rows").desc)
-    spark.table(name)
+    drained
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") === 1)
       .select("event_type", "est_users")
@@ -579,15 +506,10 @@ object EventStream {
       .select(explode(Sketches.rowBuckets(col("user_id"))).as("rb"))
       .groupBy(col("rb.j").as("j"), col("rb.b").as("b"))
       .agg(count(lit(1)).as("cnt"))
-    val name = "stream_heavy_hitters_grid"
-    withStatePartitions(spark) {
-      // Complete mode re-emits the whole (≤256-row) grid per batch; the
-      // drained table is the final full-history sketch
-      val q = grid.writeStream.outputMode(OutputMode.Complete())
-        .format("memory").queryName(name).start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    Sketches.probeSketchTopK(spark, dir, spark.table(name))
+    // Complete mode re-emits the whole (≤256-row) grid per batch; the
+    // drained table is the final full-history sketch
+    Sketches.probeSketchTopK(spark, dir,
+      Streams.drain(grid, OutputMode.Complete(), Streams.stateWidth(spark)))
   }
 
   /** `stream_sketch_maintain`: the DURABLE-store twin of
@@ -611,16 +533,11 @@ object EventStream {
     // failure anywhere never leaks the dir; the serve result is an
     // eager checkpoint leaf with no dependency on the deleted store
     try {
-      val q = readEventsStream(spark, dir)
-        .select(col("ts"), col("user_id"))
-        .writeStream.outputMode(OutputMode.Append())
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
+      Streams.drainBatches(readEventsStream(spark, dir).select(col("ts"), col("user_id"))) {
+        (batch, _) =>
           Sketches.dailyCmsGridsOf(batch)
             .write.mode("append").partitionBy("day").parquet(s"$tmp/cms")
-          ()
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
+      }
       val merged = spark.read.parquet(s"$tmp/cms")
         .groupBy("j", "b").agg(sum("cnt").as("cnt"))
       graft.operators.Kernels.trackedCheckpoint(

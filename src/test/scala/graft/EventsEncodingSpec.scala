@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.OutputMode
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -86,11 +87,8 @@ class EventsEncodingSpec extends AnyFunSuite {
     test(s"stream reader canonicalizes $name to exact micro instants") {
       val stream = graft.streaming.EventStream.readEventsStream(spark, flavors(name))
       assert(stream.schema("ts").dataType === TimestampType)
-      val sink = s"enc_${name.replace('-', '_')}_out"
-      val q = stream.select(col("ts"))
-        .writeStream.outputMode("append").format("memory").queryName(sink).start()
-      try q.processAllAvailable() finally q.stop()
-      assert(collectedMicros(spark.table(sink)) === microsExpected.sorted)
+      val drained = graft.streaming.Streams.drain(stream.select(col("ts")), OutputMode.Append())
+      assert(collectedMicros(drained) === microsExpected.sorted)
     }
   }
 }

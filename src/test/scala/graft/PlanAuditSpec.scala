@@ -1244,6 +1244,27 @@ class PlanAuditSpec extends AnyFunSuite {
         s"stale allowlist entry: $f Window.partitionBy($k) x$n no longer matches the source")
   }
 
+  test("stream-drain audit: only the drain helper starts, drains or re-confs a stream") {
+    // `Streams` owns what a drain leaves behind — the sink view, the
+    // checkpoint dir, the session confs — and serializes the overrides.
+    // A hand-copied drain (31 existed before the helper) skips at least
+    // one of those, so the tokens that start one may appear in no other
+    // source file.
+    import scala.jdk.CollectionConverters._
+    val helper = java.nio.file.Path.of("src/main/scala/graft/streaming/Streams.scala")
+    val tokens = Seq("processAllAvailable", """format("memory")""", "queryName(", "conf.set(")
+    val sources = java.nio.file.Files.walk(java.nio.file.Path.of("src/main/scala"))
+      .iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
+    assert(sources.contains(helper), s"the audit must see the helper at $helper")
+    val hits = for {
+      p <- sources if p != helper
+      (line, i) <- java.nio.file.Files.readAllLines(p).asScala.zipWithIndex
+      if tokens.exists(line.contains)
+    } yield s"$p:${i + 1}: ${line.trim}"
+    assert(hits.isEmpty,
+      s"drain or session-conf code outside the helper — go through Streams:\n${hits.mkString("\n")}")
+  }
+
   test("orders_percentile_rank: two-level rank, no per-priority corpus window, one orders scan") {
     val df = Relational.ordersPercentileRank(spark, sf)
     val p = plan(df)

@@ -4,7 +4,7 @@ import java.nio.file.{Files, Path}
 
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.OutputMode
+import org.apache.spark.sql.streaming.{OutputMode, StreamingQueryListener, StreamingQueryProgress}
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -290,7 +290,7 @@ class StreamingRecoverySpec extends AnyFunSuite {
   }
 
   test("state-partition sizing follows key cardinality and never changes results") {
-    import graft.streaming.EventStream
+    import graft.streaming.{EventStream, Streams}
     // the sizing arithmetic: one store per TargetKeysPerStore keys,
     // clamped to [1, the session's batch parallelism] (4 in this suite)
     assert(EventStream.statePartitionsFor(spark, 1L) == 1)
@@ -302,60 +302,87 @@ class StreamingRecoverySpec extends AnyFunSuite {
     // result invariance across sizings: the SAME stateful drain at 1
     // store and at the clamp must emit identical aggregates — the
     // property that makes the partition count a pure perf knob
-    def drain(name: String, expectedKeys: Long): Set[(Long, String, Long)] =
-      EventStream.withStatePartitions(spark, expectedKeys) {
-        assert(spark.conf.get("spark.sql.shuffle.partitions").toInt ==
-          EventStream.statePartitionsFor(spark, expectedKeys))
-        val agg = EventStream.readEventsStream(spark, SparkTestSession.Sf)
-          .groupBy(date_trunc("hour", col("ts")).as("hour"), col("event_type"))
-          .agg(count(lit(1)).as("n"))
-        val q = agg.writeStream.outputMode(OutputMode.Complete())
-          .format("memory").queryName(name).start()
-        try q.processAllAvailable() finally q.stop()
-        spark.table(name).collect()
-          .map(r => (r.getAs[java.sql.Timestamp]("hour").getTime,
-            r.getAs[String]("event_type"), r.getAs[Long]("n"))).toSet
-      }
-    val small = drain("state_size_small", 1L)
-    val large = drain("state_size_large", 1000000L)
+    def drain(expectedKeys: Long): Set[(Long, String, Long)] = {
+      val agg = EventStream.readEventsStream(spark, SparkTestSession.Sf)
+        .groupBy(date_trunc("hour", col("ts")).as("hour"), col("event_type"))
+        .agg(count(lit(1)).as("n"))
+      val (rows, progress) = withProgress(
+        Streams.drain(agg, OutputMode.Complete(), Streams.stateWidth(spark, expectedKeys))
+          .collect())
+      // the width the drain's state operator actually ran at
+      assert(progress.flatMap(_.stateOperators.map(_.numShufflePartitions)).toSet ==
+        Set(EventStream.statePartitionsFor(spark, expectedKeys).toLong))
+      rows.map(r => (r.getAs[java.sql.Timestamp]("hour").getTime,
+        r.getAs[String]("event_type"), r.getAs[Long]("n"))).toSet
+    }
+    val small = drain(1L)
+    val large = drain(1000000L)
     assert(small.nonEmpty && small == large,
       "stateful results must be invariant to the state-partition sizing")
   }
 
   test("rocksdb state store drains the same results as the in-memory provider") {
-    import graft.streaming.EventStream
+    import graft.streaming.{EventStream, Streams}
     // the 100 TB posture for streaming state: the in-memory
     // HDFS-backed provider holds every store's map on-heap — the
     // 128 GiB-VM shape; at production state sizes the spillable
     // RocksDB provider is the deployment config. The provider is a
     // pure storage swap: one drain under each must emit identical
     // rows (and rocksdb must actually be the provider in effect, not
-    // a silently-ignored conf).
+    // a silently-ignored conf — its state operators report rocksdb
+    // metrics).
     val key = "spark.sql.streaming.stateStore.providerClass"
     val rocks = "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-    def drain(name: String, provider: Option[String]): Set[(Long, String, Long)] = {
-      val saved = spark.conf.getOption(key)
-      provider.foreach(spark.conf.set(key, _))
-      try {
-        assert(spark.conf.getOption(key) == provider.orElse(saved))
-        val agg = EventStream.readEventsStream(spark, SparkTestSession.Sf)
-          .withWatermark("ts", "1 hour")
-          .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-          .agg(count(lit(1)).as("n"), approx_count_distinct("user_id").as("u"))
-        val q = agg.writeStream.outputMode(OutputMode.Complete())
-          .format("memory").queryName(name).start()
-        try q.processAllAvailable() finally q.stop()
-        spark.table(name).collect()
-          .map(r => (r.getAs[Row]("window").getAs[java.sql.Timestamp]("start").getTime,
-            r.getAs[String]("event_type"), r.getAs[Long]("n"))).toSet
-      } finally saved match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
+    def drain(provider: Option[String]): Set[(Long, String, Long)] = {
+      val agg = EventStream.readEventsStream(spark, SparkTestSession.Sf)
+        .withWatermark("ts", "1 hour")
+        .groupBy(window(col("ts"), "1 hour"), col("event_type"))
+        .agg(count(lit(1)).as("n"), approx_count_distinct("user_id").as("u"))
+      val (rows, progress) = withProgress(
+        Streams.drain(agg, OutputMode.Complete(), provider.map(key -> _).toMap).collect())
+      import scala.jdk.CollectionConverters._
+      val metrics = progress.flatMap(_.stateOperators.flatMap(_.customMetrics.keySet.asScala))
+      assert(metrics.nonEmpty && metrics.exists(_.startsWith("rocksdb")) == provider.isDefined,
+        s"provider $provider in effect? state metrics: ${metrics.distinct}")
+      rows.map(r => (r.getAs[Row]("window").getAs[java.sql.Timestamp]("start").getTime,
+        r.getAs[String]("event_type"), r.getAs[Long]("n"))).toSet
     }
-    val mem = drain("state_provider_mem", None)
-    val rdb = drain("state_provider_rocks", Some(rocks))
+    val saved = spark.conf.getOption(key)
+    val mem = drain(None)
+    val rdb = drain(Some(rocks))
+    assert(spark.conf.getOption(key) == saved, "the drain must restore the provider conf")
     assert(mem.nonEmpty && mem == rdb,
       "the state-store provider must be a pure storage swap: identical drained rows")
+  }
+
+  /** Runs `body` with a listener on the session's stream queries and
+    * returns its result with the progress every query it ran reported.
+    * Listener events arrive asynchronously, and a query's progress
+    * events precede its termination event, so waiting for every
+    * started query to report termination collects them all.
+    */
+  private def withProgress[T](body: => T): (T, Seq[StreamingQueryProgress]) = {
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.SpanSugar._
+    val started = new java.util.concurrent.atomic.AtomicInteger()
+    val ended = new java.util.concurrent.atomic.AtomicInteger()
+    val progress = new java.util.concurrent.ConcurrentLinkedQueue[StreamingQueryProgress]()
+    val listener = new StreamingQueryListener {
+      override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit =
+        started.incrementAndGet()
+      override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit =
+        progress.add(e.progress)
+      override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit =
+        ended.incrementAndGet()
+    }
+    spark.streams.addListener(listener)
+    try {
+      val out = body
+      eventually(timeout(60.seconds), interval(50.millis)) {
+        assert(started.get > 0 && ended.get == started.get)
+      }
+      import scala.jdk.CollectionConverters._
+      (out, progress.asScala.toSeq)
+    } finally spark.streams.removeListener(listener)
   }
 }
