@@ -100,66 +100,23 @@ object Bpe {
   // views of ONE training run and must not re-derive it (the
   // ProductQuant.trainedBooks pattern). The memo holds only
   // localCheckpoint-backed vocab-sized frames, so keeping it for the
-  // session costs |vocab| rows, not corpus. The key includes the
-  // SESSION — the SparkSession reference itself, not an identity hash
-  // (identity hashes can be reused after GC, so a hash key could alias
-  // a dead session's entry and serve localCheckpoint frames whose
-  // blocks are gone): localCheckpoint blocks belong to the session
-  // that created them, so serving a memoized frame to a different
-  // SparkSession in the same JVM would either throw (first session
-  // stopped — truncated lineage is unrecoverable) or silently run
-  // against foreign session state. Dead sessions' entries are EVICTED,
-  // not just never served: a context-end listener (registered once per
-  // SparkContext at first training) plus an is-stopped sweep on every
-  // train call drop entries whose context died, so a long-lived JVM
-  // cycling getOrCreate/stop sessions (a server, a test harness) does
-  // not strongly retain every stopped session and its frames for the
-  // process lifetime. (Sibling `newSession()`s of one LIVE context can
-  // still accumulate entries — bounded at vocab-size each and freed the
-  // moment that shared context stops.)
-  private val trainMemo =
-    scala.collection.mutable.Map.empty[(SparkSession, String, String), (DataFrame, Seq[DataFrame])]
-
-  private val hookedContexts =
-    scala.collection.mutable.Set.empty[org.apache.spark.SparkContext]
-
-  private[graft] def evictStopped(): Unit = trainMemo.synchronized {
-    trainMemo.filterInPlace { case ((s, _, _), _) => !s.sparkContext.isStopped }
-  }
-
-  private[graft] def memoSize: Int = trainMemo.synchronized(trainMemo.size)
-
-  private def ensureEvictionHook(spark: SparkSession): Unit =
-    hookedContexts.synchronized {
-      val sc = spark.sparkContext
-      if (hookedContexts.add(sc)) {
-        sc.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-          override def onApplicationEnd(
-              e: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit = {
-            evictStopped()
-            hookedContexts.synchronized { hookedContexts -= sc }
-          }
-        })
-      }
-    }
-
+  // session costs |vocab| rows, not corpus. Checkpoint blocks belong to
+  // the SparkContext that made them: sessions of one live context share
+  // the memo, and once that context stops its entry counts as absent
+  // (Kernels.memo), so a new context retrains instead of serving frames
+  // whose blocks are gone.
   /** Final symbol frame + the per-round merge rules. */
   private def train(spark: SparkSession, dir: String): (DataFrame, Seq[DataFrame]) =
-    trainMemo.synchronized {
-      evictStopped() // belt next to the listener's braces
-      ensureEvictionHook(spark)
-      val (d, fp) = Kernels.inputKey(dir, "documents.parquet")
-      trainMemo.getOrElseUpdate((spark, d, fp), {
-        var syms = charSyms(vocab(spark, dir))
-        val merges = (1 to Rounds).map { _ =>
-          val (next, best) = oneRound(syms)
-          // materialize each round's output: bounds lineage depth AND
-          // runs the per-round shuffle exactly once across both queries
-          syms = next.localCheckpoint()
-          best
-        }
-        (syms, merges)
-      })
+    Kernels.memo("bpe-train", Kernels.inputKey(dir, "documents.parquet")) {
+      var syms = charSyms(vocab(spark, dir))
+      val merges = (1 to Rounds).map { _ =>
+        val (next, best) = oneRound(syms)
+        // materialize each round's output: bounds lineage depth AND
+        // runs the per-round shuffle exactly once across both queries
+        syms = next.localCheckpoint()
+        best
+      }
+      (syms, merges)
     }
 
   /** `bpe_vocab_encode`: every vocabulary word's segmentation after
@@ -188,13 +145,12 @@ object Bpe {
   }
 
   /** Materializes the trained merge table to `path` as parquet — the
-    * DURABLE half of the memoization story. The session-local
-    * [[trainMemo]] only caches within the training session
-    * (localCheckpoint blocks die with it); production pipelines train
-    * once in a build job, write this artifact, and every consumer — a
-    * 100 TB encode job, a fresh session, another JVM — reads the
-    * parquet instead of retraining. Tiny ([[Rounds]] rows), so the
-    * single output file is deliberate.
+    * DURABLE half of the memoization story. The training memo only
+    * caches within the training context (localCheckpoint blocks die
+    * with it); production pipelines train once in a build job, write
+    * this artifact, and every consumer — a 100 TB encode job, a fresh
+    * session, another JVM — reads the parquet instead of retraining.
+    * Tiny ([[Rounds]] rows), so the single output file is deliberate.
     */
   def writeMergeTable(spark: SparkSession, dir: String, path: String): Unit =
     mergeTable(spark, dir).coalesce(1).write.mode("overwrite").parquet(path)

@@ -325,13 +325,9 @@ object Dedup {
   // component loop) — memoized per input and localCheckpoint'ed so the
   // session pays the prefix-filtered join once, and the builder's
   // SF-sized caches retire the moment the checkpoint materializes.
-  private val pairsMemo =
-    scala.collection.mutable.Map.empty[(String, String), DataFrame]
-
   private def ngramPairs(spark: SparkSession, dir: String): DataFrame =
-    pairsMemo.synchronized {
-      pairsMemo.getOrElseUpdate(Kernels.inputKey(dir, "documents.parquet"),
-        { val out = buildNgramPairs(spark, dir).localCheckpoint(); retireCaches(); out })
+    Kernels.memo("dedup-pairs", Kernels.inputKey(dir, "documents.parquet")) {
+      val out = buildNgramPairs(spark, dir).localCheckpoint(); retireCaches(); out
     }
 
   // package-private so the plan audit inspects the BUILDER's join plan
@@ -395,41 +391,37 @@ object Dedup {
   // The label frame is a per-corpus PRODUCT a production pipeline
   // materializes ONCE per ingest and every consumer reads (clusters,
   // keep-list, the training-set composition) — so it is memoized per
-  // input like the k-means codebook (keyed on dir + file fingerprint,
+  // input like the k-means codebook (keyed on table path + file fingerprint,
   // see Kernels.inputKey) and localCheckpoint'ed: lineage-free, blocks
   // pinned by the memo reference, so it survives the per-query cache
   // retirement that drops the builder's own intermediates. Without the
   // memo, dedup_clusters, dedup_keep and pipeline_training_set each
   // re-ran the full pair join + component loop (3x the most expensive
   // computation in the bench).
-  private val labelsMemo =
-    scala.collection.mutable.Map.empty[(String, String), DataFrame]
 
   /** [[clusters]] without the output sort, shared with [[keep]] (which
     * immediately re-aggregates — a sort there would be pure overhead).
     */
   private def clusterLabels(spark: SparkSession, dir: String): DataFrame =
-    labelsMemo.synchronized {
-      labelsMemo.getOrElseUpdate(Kernels.inputKey(dir, "documents.parquet"), {
-        // The edge set arrives ALREADY materialized and lineage-free
-        // (the ngramPairs checkpoint): an iterative consumer that kept
-        // the ngram pipeline in its plan re-executed pieces of it
-        // through every union branch / range-sort sampling pass
-        // (measured 197s for the FIRST round at sf0.1 vs 9.6s for
-        // ngramJaccard standalone). The pair set is the dedup OUTPUT —
-        // orders of magnitude smaller than the corpus — so
-        // checkpointing it is cheap at any scale (production: a
-        // reliable checkpoint dir; localCheckpoint is the single-node
-        // twin).
-        val edges = ngramPairs(spark, dir).select(col("doc_a"), col("doc_b"))
-        val docs = Tables.documents(spark, dir).select(col("doc_id"))
-        val labels = clustersFromEdges(docs, edges).localCheckpoint()
-        // the checkpoint is the materializing action: the loop's own
-        // caches are dead weight from here on — free them immediately
-        // instead of waiting for the caller's retirement
-        retireCaches()
-        labels
-      })
+    Kernels.memo("dedup-labels", Kernels.inputKey(dir, "documents.parquet")) {
+      // The edge set arrives ALREADY materialized and lineage-free
+      // (the ngramPairs checkpoint): an iterative consumer that kept
+      // the ngram pipeline in its plan re-executed pieces of it
+      // through every union branch / range-sort sampling pass
+      // (measured 197s for the FIRST round at sf0.1 vs 9.6s for
+      // ngramJaccard standalone). The pair set is the dedup OUTPUT —
+      // orders of magnitude smaller than the corpus — so
+      // checkpointing it is cheap at any scale (production: a
+      // reliable checkpoint dir; localCheckpoint is the single-node
+      // twin).
+      val edges = ngramPairs(spark, dir).select(col("doc_a"), col("doc_b"))
+      val docs = Tables.documents(spark, dir).select(col("doc_id"))
+      val labels = clustersFromEdges(docs, edges).localCheckpoint()
+      // the checkpoint is the materializing action: the loop's own
+      // caches are dead weight from here on — free them immediately
+      // instead of waiting for the caller's retirement
+      retireCaches()
+      labels
     }
 
   /** The dedup END PRODUCT: one row per SURVIVING document — each
@@ -1034,30 +1026,23 @@ object Dedup {
     * they gate the derivation itself.)
     */
   private[graft] def ensureBandStore(spark: SparkSession, dir: String): String =
-    bandStoreMemo.synchronized {
-      val key = Kernels.inputKey(dir, "documents.parquet")
-      bandStoreMemo.getOrElseUpdate(key,
-        Kernels.buildStore("graft-band-store", s"bands|${key._1}|${key._2}")(
-          // layout follows the probes (guide §6), at every scale:
-          //  - directory-partitioned by `band`, so the per-band probes
-          //    (the drain's band-index join, the verify join's
-          //    `band = 0` payload slice, the ingest stream's four
-          //    band anti-joins) prune to their band's directory
-          //    instead of row-group-filtering the whole store;
-          //  - `maxRecordsPerFile` caps files at 16Ki rows — with
-          //    production shingle arrays (KBs/row) that is the
-          //     128 MB–1 GB file band §6 targets, and at every SF it
-          //    makes the scan width FOLLOW the store's row count
-          //    (the single-file store at gate SFs serialized every
-          //    probe into 1-2 tasks).
-          historyBandStore(spark, dir).write.mode("overwrite")
-            .partitionBy("band")
-            .option("maxRecordsPerFile", 16384)
-            .parquet(_)))
-    }
-
-  private val bandStoreMemo =
-    scala.collection.mutable.Map.empty[(String, String), String]
+    Kernels.buildStore("graft-band-store", Kernels.inputKey(dir, "documents.parquet"))(
+      // layout follows the probes (guide §6), at every scale:
+      //  - directory-partitioned by `band`, so the per-band probes
+      //    (the drain's band-index join, the verify join's
+      //    `band = 0` payload slice, the ingest stream's four
+      //    band anti-joins) prune to their band's directory
+      //    instead of row-group-filtering the whole store;
+      //  - `maxRecordsPerFile` caps files at 16Ki rows — with
+      //    production shingle arrays (KBs/row) that is the
+      //     128 MB–1 GB file band §6 targets, and at every SF it
+      //    makes the scan width FOLLOW the store's row count
+      //    (the single-file store at gate SFs serialized every
+      //    probe into 1-2 tasks).
+      historyBandStore(spark, dir).write.mode("overwrite")
+        .partitionBy("band")
+        .option("maxRecordsPerFile", 16384)
+        .parquet(_))
 
   private[graft] def historyBandStore(spark: SparkSession, dir: String): DataFrame = {
     val split = substring(md5(concat(lit("inc:"), col("doc_id").cast("string"))), 1, 1)
@@ -1100,17 +1085,11 @@ object Dedup {
     * amortize this across gate queries ([[retireCaches]] kills them
     * per query); only the disk store does.
     */
-  private[graft] def ensureCelledIndexStore(spark: SparkSession, dir: String): String =
-    celledIndexMemo.synchronized {
-      val key = Kernels.inputKey(dir, "embeddings.parquet")
-      celledIndexMemo.getOrElseUpdate(key,
-        Kernels.buildStore("graft-celled-idx",
-            s"celled|$SemCellCap|${key._1}|${key._2}")(
-          celledIndexFrame(spark, dir).write.mode("overwrite").parquet(_)))
-    }
-
-  private val celledIndexMemo =
-    scala.collection.mutable.Map.empty[(String, String), String]
+  private[graft] def ensureCelledIndexStore(spark: SparkSession, dir: String): String = {
+    val (table, fp) = Kernels.inputKey(dir, "embeddings.parquet")
+    Kernels.buildStore("graft-celled-idx", (s"$table|cap$SemCellCap", fp))(
+      celledIndexFrame(spark, dir).write.mode("overwrite").parquet(_))
+  }
 
   /** The inline derivation behind [[ensureCelledIndexStore]] — the
     * memoized Lloyd assignment through [[capCells]] at [[SemCellCap]]

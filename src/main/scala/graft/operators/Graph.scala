@@ -215,15 +215,8 @@ object Graph {
     * inline — it gates the construction.
     */
   private[graft] def ensureKnnEdges(spark: SparkSession, dir: String): String =
-    knnEdgeMemo.synchronized {
-      val key = Kernels.inputKey(dir, "embeddings.parquet")
-      knnEdgeMemo.getOrElseUpdate(key,
-        Kernels.buildStore("graft-knn-edges", s"knn|${key._1}|${key._2}")(
-          mutualKnnEdges(spark, dir).write.mode("overwrite").parquet(_)))
-    }
-
-  private val knnEdgeMemo =
-    scala.collection.mutable.Map.empty[(String, String), String]
+    Kernels.buildStore("graft-knn-edges", Kernels.inputKey(dir, "embeddings.parquet"))(
+      mutualKnnEdges(spark, dir).write.mode("overwrite").parquet(_))
 
   private def mutualKnnEdges(spark: SparkSession, dir: String): DataFrame = {
     val idx = Kernels.cacheTracked(Dedup.cappedCelledIndex(spark, dir)
@@ -317,19 +310,20 @@ object Graph {
     */
   private[graft] def ensureKnnDirectedHistory(
       spark: SparkSession, dir: String, thresh: String): String =
-    knnHistMemo.synchronized {
-      val key = Kernels.inputKey(dir, "embeddings.parquet")
-      knnHistMemo.getOrElseUpdate((key, thresh),
-        Kernels.buildStore("graft-knn-hist", s"knnhist|$thresh|${key._1}|${key._2}")(
-          directedTopK(spark,
-            Dedup.cappedCelledIndex(spark, dir)
-              .filter(incSplit >= thresh)
-              .select("vec_id", "cluster", "sub", "v", "norm"))
-            .write.mode("overwrite").parquet(_)))
-    }
+    Kernels.buildStore("graft-knn-hist", threshKey(dir, thresh))(
+      directedTopK(spark,
+        Dedup.cappedCelledIndex(spark, dir)
+          .filter(incSplit >= thresh)
+          .select("vec_id", "cluster", "sub", "v", "norm"))
+        .write.mode("overwrite").parquet(_))
 
-  private val knnHistMemo =
-    scala.collection.mutable.Map.empty[((String, String), String), String]
+  /** The embeddings' memo key with the history split threshold folded
+    * into its name, so each threshold keeps its own store.
+    */
+  private def threshKey(dir: String, thresh: String): (String, String) = {
+    val (table, fp) = Kernels.inputKey(dir, "embeddings.parquet")
+    (s"$table|$thresh", fp)
+  }
 
   private def incSplit =
     substring(md5(concat(lit("inc:"), col("vec_id").cast("string"))), 1, 1)
@@ -415,16 +409,8 @@ object Graph {
     */
   private[graft] def ensureMaintainedKnnEdges(spark: SparkSession, dir: String,
       thresh: String = Dedup.IncBatchThreshold): String =
-    knnMaintEdgeMemo.synchronized {
-      val key = Kernels.inputKey(dir, "embeddings.parquet")
-      knnMaintEdgeMemo.getOrElseUpdate((key, thresh),
-        Kernels.buildStore("graft-knn-maint", s"knnmaint|$thresh|${key._1}|${key._2}")(
-          maintainedKnnEdges(spark, dir, thresh)
-            .write.mode("overwrite").parquet(_)))
-    }
-
-  private val knnMaintEdgeMemo =
-    scala.collection.mutable.Map.empty[((String, String), String), String]
+    Kernels.buildStore("graft-knn-maint", threshKey(dir, thresh))(
+      maintainedKnnEdges(spark, dir, thresh).write.mode("overwrite").parquet(_))
 
   /** The maintained mutual-edge frame without the output ordering —
     * the LIVE merge [[ensureMaintainedKnnEdges]] materializes (all
@@ -562,19 +548,12 @@ object Graph {
     * analytic shares.
     */
   private[graft] def ensureIncidence(spark: SparkSession, dir: String): String =
-    incidenceMemo.synchronized {
-      val key = Kernels.inputKey(dir, "documents.parquet")
-      incidenceMemo.getOrElseUpdate(key,
-        Kernels.buildStore("graft-tr-inc", s"trinc|${key._1}|${key._2}")(
-          graft.Tables.documents(spark, dir)
-            .select(col("doc_id"),
-              explode(TextAnalysis.tokens(lower(col("text")))).as("term"))
-            .distinct()
-            .write.mode("overwrite").parquet(_)))
-    }
-
-  private val incidenceMemo =
-    scala.collection.mutable.Map.empty[(String, String), String]
+    Kernels.buildStore("graft-tr-inc", Kernels.inputKey(dir, "documents.parquet"))(
+      graft.Tables.documents(spark, dir)
+        .select(col("doc_id"),
+          explode(TextAnalysis.tokens(lower(col("text")))).as("term"))
+        .distinct()
+        .write.mode("overwrite").parquet(_))
 
   /** Cap-parameterized body of [[textRank]] over a prepared (doc_id,
     * term) incidence — the production query fixes cap =

@@ -110,27 +110,6 @@ object KMeansCodebook {
       }
       .toArray.sortBy(_._1)
 
-  // Training is deterministic, so the trained codebook (K·dim values,
-  // trivially small) is memoized per input for the session — the same
-  // train-once/reuse contract as a fitted MLlib model. Queries
-  // composing on the assignment (centroids, balanced sample) then pay
-  // one distributed assignment pass, not a full retrain each. The memo
-  // key is the dir PLUS a file-listing fingerprint, so regenerating the
-  // data under the same path within a JVM session invalidates the memo
-  // instead of silently serving centroids trained on stale data.
-  private val trainedCodebooks =
-    scala.collection.mutable.Map.empty[(String, String), Codebook]
-
-  /** Cheap input fingerprint: recursive (path, length, mtime) listing of
-    * the embeddings table — no data read, stable across sessions.
-    */
-  private def memoKey(dir: String): (String, String) = {
-    def walk(f: java.io.File): Seq[String] =
-      if (f.isDirectory) f.listFiles().sortBy(_.getName).toSeq.flatMap(walk)
-      else Seq(s"${f.getName}:${f.length}:${f.lastModified}")
-    (dir, walk(new java.io.File(s"$dir/embeddings.parquet")).mkString("|"))
-  }
-
   // memoCache, not cacheTracked: this frame is only built (lazily, by
   // name) inside the globally-memoized trainedCodebookOn/assignmentOn
   // miss paths, which can fire on the STREAM-EXECUTION thread
@@ -138,7 +117,7 @@ object KMeansCodebook {
   // lastAssignment) — a thread whose per-thread registry scope no
   // query thread ever retires. Its lifetime is the memo's, exactly
   // like the assignment frame it feeds, so it drains globally with
-  // the memo-invalidation hooks.
+  // its until-retire memo entry.
   private def embeddingBase(spark: SparkSession, dir: String): DataFrame =
     Kernels.memoCache(Kernels.fanOut(
       Tables.embeddings(spark, dir)
@@ -152,35 +131,27 @@ object KMeansCodebook {
     * on the dense-id full table selects exactly the `vec_id < K` rows
     * the oracle's rank-form init CTE mirrors. `base` is by-name: it is
     * only built (and only registers its cache) on a memo miss.
+    * Training is deterministic, so the codebook (K·dim values) is
+    * memoized for the session — the train-once contract of a fitted
+    * MLlib model.
     */
   private[operators] def trainedCodebookOn(
       spark: SparkSession, key: (String, String), base: => DataFrame): Codebook =
-    trainedCodebooks.synchronized {
-      trainedCodebooks.getOrElseUpdate(key, {
-        import spark.implicits._
-        val b = base
-        var cb: Codebook = b.orderBy("vec_id").limit(K).as[(Long, Seq[Double])]
-          .collect()
-          .map { case (id, v) => (id, v.map(dec9).toArray) }
-          .sortBy(_._1)
-        for (_ <- 1 until LloydIters)
-          cb = collectCodebook(recompute(assign(spark, b, cb)))
-        cb
-      })
+    Kernels.memo("kmeans-codebook", key) {
+      import spark.implicits._
+      val b = base
+      var cb: Codebook = b.orderBy("vec_id").limit(K).as[(Long, Seq[Double])]
+        .collect()
+        .map { case (id, v) => (id, v.map(dec9).toArray) }
+        .sortBy(_._1)
+      for (_ <- 1 until LloydIters)
+        cb = collectCodebook(recompute(assign(spark, b, cb)))
+      cb
     }
 
   private def trainedCodebook(spark: SparkSession, dir: String): Codebook =
-    trainedCodebookOn(spark, memoKey(dir), embeddingBase(spark, dir))
-
-  // The CACHED assignment frame is memoized too, so a query sequence of
-  // centroids-then-balanced-sample pays the distributed assignment scan
-  // once, not per query. Backing caches are retired by
-  // Kernels.retireCaches — the hook drops the memo at the same moment
-  // (a memo outliving its cache would recompute uncached: worse than a
-  // fresh cacheTracked registration).
-  private val assignments =
-    scala.collection.mutable.Map.empty[(String, String), DataFrame]
-  Kernels.onRetire(() => assignments.synchronized(assignments.clear()))
+    trainedCodebookOn(spark, Kernels.inputKey(dir, "embeddings.parquet"),
+      embeddingBase(spark, dir))
 
   /** Top-`nProbe` nearest codebook cells for each of the first
     * `nProbes` vectors — the probe-selection half of
@@ -241,23 +212,21 @@ object KMeansCodebook {
     * [[Similarity.annIvfKmeans]] searches it as the IVF index.
     */
   private[graft] def lastAssignment(spark: SparkSession, dir: String): DataFrame =
-    assignmentOn(spark, memoKey(dir), embeddingBase(spark, dir))
+    assignmentOn(spark, Kernels.inputKey(dir, "embeddings.parquet"),
+      embeddingBase(spark, dir))
 
   /** [[lastAssignment]] over an explicit corpus frame, memoized under
     * `key` — shares [[trainedCodebookOn]]'s memo key so a corpus is
-    * trained once and assigned once regardless of entry point.
+    * trained once and assigned once regardless of entry point. The
+    * CACHED frame lives until the next Kernels.retireCaches, so a query
+    * sequence of centroids-then-balanced-sample pays the distributed
+    * assignment scan once, not per query.
     */
   private[operators] def assignmentOn(
       spark: SparkSession, key: (String, String), base: => DataFrame): DataFrame =
-    assignments.synchronized {
-      assignments.getOrElseUpdate(key, {
-        val b = base
-        val cb = trainedCodebookOn(spark, key, b)
-        // memoCache, not cacheTracked: the memo may be created on the
-        // stream-execution thread (foreachBatch) whose scope is never
-        // retired; memo-lifetime pins drain globally with the hooks
-        Kernels.memoCache(assign(spark, b, cb))
-      })
+    Kernels.memoUntilRetire("kmeans-assign", key) {
+      val b = base
+      assign(spark, b, trainedCodebookOn(spark, key, b))
     }
 
   /** `kmeans_centroids`: the trained codebook after [[LloydIters]]
@@ -311,7 +280,8 @@ object KMeansCodebook {
     * fresh session is value-equal (spec-pinned).
     */
   def writeIndex(spark: SparkSession, dir: String, path: String): Unit =
-    writeIndexOn(spark, memoKey(dir), embeddingBase(spark, dir), path)
+    writeIndexOn(spark, Kernels.inputKey(dir, "embeddings.parquet"),
+      embeddingBase(spark, dir), path)
 
   /** [[writeIndex]] for an explicit (key, corpus) — the coarse half of
     * the keep-filtered [[graft.operators.ProductQuant.pipelineIndex]]

@@ -165,13 +165,12 @@ object MRApps {
           .map(w => KeyValue(w, "1")).toSeq)
     spark.udf.register("graft_reducef_count",
       (values: Seq[String]) => values.length.toString)
-    Tables.documents(spark, dir)
-      .select(col("doc_id").cast("string").as("name"), col("text").as("contents"))
-      .createOrReplaceTempView("mr_input")
-    spark.sql(
-      """SELECT kv.key AS key, graft_reducef_count(collect_list(kv.value)) AS value
-        |FROM mr_input LATERAL VIEW explode(graft_mapf_wc(name, contents)) t AS kv
-        |GROUP BY kv.key ORDER BY key""".stripMargin)
+    Kernels.sqlOver(spark, "mr_input" -> Tables.documents(spark, dir)
+        .select(col("doc_id").cast("string").as("name"), col("text").as("contents"))) { v =>
+      s"""SELECT kv.key AS key, graft_reducef_count(collect_list(kv.value)) AS value
+         |FROM ${v("mr_input")} LATERAL VIEW explode(graft_mapf_wc(name, contents)) t AS kv
+         |GROUP BY kv.key ORDER BY key""".stripMargin
+    }
   }
 
   val GrepPattern = "data"

@@ -90,78 +90,21 @@ object Multimodal {
   // mm_audio_neardup, mm_media_keep AND the keep-list; the per-frame
   // clip signatures feed video near-dup, scene cuts, keyframes,
   // mm_media_keep, the keep-list and (via mediaKeep) pack_media. Keyed
-  // on dir + file fingerprint (Kernels.inputKey) and localCheckpoint'ed
+  // on table path + file fingerprint (Kernels.inputKey) and localCheckpoint'ed
   // — lineage-free, blocks pinned by the memo reference, surviving the
   // per-query cache retirement that drops each builder's own
   // intermediates. Frames are ≤ one row per doc (K per clip) — the
   // bounded-artifact bar.
-  /** One memo slot whose build runs under ITS OWN monitor (`lazy val`),
-    * not the registry map's: a slow signature build (an eager Spark job
-    * over the whole corpus) must block only callers of the SAME key —
-    * with the build inside the registry lock, one kind's build stalled
-    * every other kind's (and corpus's) memo lookup for its full
-    * duration. Two racing callers of one key still build exactly once
-    * (the lazy-val latch IS the double-checked getOrElseUpdate).
-    * `valueIfBuilt` exposes completion without forcing a build —
-    * eviction must never run a stale corpus's job just to free its
-    * blocks.
-    */
-  private final class MemoSlot[T <: AnyRef](build: () => T) {
-    @volatile private var done = false
-    lazy val value: T = { val v = build(); done = true; v }
-    def valueIfBuilt: Option[T] = if (done) Some(value) else None
-  }
-
-  // registry keyed (kind, dir, corpus fingerprint) so superseded
-  // fingerprints for the same (kind, dir) are evictable
-  private val sigMemo =
-    scala.collection.mutable.Map.empty[(String, String, String), MemoSlot[DataFrame]]
-
   private def memoSig(spark: SparkSession, dir: String, kind: String)(
-      build: => DataFrame): DataFrame = {
-    val (d, fp) = Kernels.inputKey(dir, "documents.parquet")
-    val slot = sigMemo.synchronized {
-      // evict keys superseded by a corpus regeneration under the same
-      // dir: without this the stale entries pin their checkpoint
-      // blocks for the JVM lifetime (the labelsMemo leak, multiplied
-      // across memo kinds). Only COMPLETED builds unpersist here; an
-      // in-flight stale build still leaves the registry and its blocks
-      // fall to the ContextCleaner backstop once the builder drops it.
-      val stale = sigMemo.keys
-        .filter(k => k._1 == kind && k._2 == d && k._3 != fp).toSeq
-      stale.foreach { k =>
-        sigMemo.remove(k).flatMap(_.valueIfBuilt).foreach { old =>
-          Kernels.checkpointRddId(old).foreach { id =>
-            old.sparkSession.sparkContext.getPersistentRDDs.get(id)
-              .foreach(_.unpersist(true))
-          }
-        }
-      }
-      sigMemo.getOrElseUpdate((kind, d, fp),
-        new MemoSlot(() => build.localCheckpoint()))
-    }
-    slot.value // built OUTSIDE the registry lock, under the slot's latch
-  }
+      build: => DataFrame): DataFrame =
+    Kernels.memo(s"sig:$kind", Kernels.inputKey(dir, "documents.parquet"))(
+      build.localCheckpoint())
 
   // Trained-threshold DRIVER values (≤ PhashBits doubles each) —
   // memoized per corpus like the k-means codebooks they parallel: every
   // incremental/stream/maintain query re-collected the same aggregate.
-  // Same slot discipline as [[memoSig]]: the collect runs outside the
-  // registry lock, and superseded fingerprints leave the map (tiny
-  // values — eviction here is hygiene, not block reclamation).
-  private val muMemo =
-    scala.collection.mutable.Map.empty[(String, String, String), MemoSlot[AnyRef]]
-
-  private def memoMu[T <: AnyRef](dir: String, kind: String)(build: => T): T = {
-    val (d, fp) = Kernels.inputKey(dir, "documents.parquet")
-    val slot = muMemo.synchronized {
-      muMemo.filterInPlace { case ((k, dd, f), _) =>
-        !(k == kind && dd == d && f != fp)
-      }
-      muMemo.getOrElseUpdate((kind, d, fp), new MemoSlot(() => build))
-    }
-    slot.value.asInstanceOf[T]
-  }
+  private def memoMu[T <: AnyRef](dir: String, kind: String)(build: => T): T =
+    Kernels.memo(s"mu:$kind", Kernels.inputKey(dir, "documents.parquet"))(build)
 
   /** Synthesize a real container payload around a media body: the byte
     * format is chosen by body length (n%3 → BMP / binary PPM / RIFF,
@@ -1849,15 +1792,8 @@ object Multimodal {
     */
   private[graft] def ensureMediaKeepNearDupStore(
       spark: SparkSession, dir: String): String =
-    keepStoreMemo.synchronized {
-      val key = Kernels.inputKey(dir, "documents.parquet")
-      keepStoreMemo.getOrElseUpdate(key,
-        Kernels.buildStore("graft-media-keep", s"mediakeepnear|${key._1}|${key._2}")(
-          mediaKeepNearDup(spark, dir).write.mode("overwrite").parquet(_)))
-    }
-
-  private val keepStoreMemo =
-    scala.collection.mutable.Map.empty[(String, String), String]
+    Kernels.buildStore("graft-media-keep", Kernels.inputKey(dir, "documents.parquet"))(
+      mediaKeepNearDup(spark, dir).write.mode("overwrite").parquet(_))
 
   /** The durable keep artifact as a frame — the flagship's input (a
     * parquet scan, no derivation in the plan).

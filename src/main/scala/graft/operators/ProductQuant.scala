@@ -137,12 +137,6 @@ object ProductQuant {
   // Trained books and the encoded corpus are memoized per input
   // fingerprint, mirroring KMeansCodebook's train-once contract; the
   // codes cache retires with Kernels.retireCaches.
-  private val trainedBooksMemo =
-    scala.collection.mutable.Map.empty[(String, String), PqBooks]
-  private val codesMemo =
-    scala.collection.mutable.Map.empty[(String, String), DataFrame]
-  Kernels.onRetire(() => codesMemo.synchronized(codesMemo.clear()))
-
   private def trainedBooks(spark: SparkSession, dir: String): PqBooks =
     trainedBooksOn(spark, Kernels.inputKey(dir, "embeddings.parquet"),
       subBase(spark, dir))
@@ -157,23 +151,21 @@ object ProductQuant {
     */
   private[operators] def trainedBooksOn(
       spark: SparkSession, key: (String, String), base: => DataFrame): PqBooks =
-    trainedBooksMemo.synchronized {
-      trainedBooksMemo.getOrElseUpdate(key, {
-        import spark.implicits._
-        val b = base
-        val initIds = b.select(col("vec_id")).distinct()
-          .orderBy("vec_id").limit(PqK).as[Long].collect().toSeq
-        var books: PqBooks = b.filter(col("vec_id").isin(initIds: _*))
-          .as[(Long, Long, Seq[Double])].collect()
-          .groupBy(_._2)
-          .map { case (ss, rows) =>
-            ss -> rows.map { case (id, _, sub) => (id, sub.map(dec9).toArray) }
-              .sortBy(_._1)
-          }
-        for (_ <- 1 until PqIters)
-          books = collectBooks(recompute(assign(spark, b, books)))
-        books
-      })
+    Kernels.memo("pq-books", key) {
+      import spark.implicits._
+      val b = base
+      val initIds = b.select(col("vec_id")).distinct()
+        .orderBy("vec_id").limit(PqK).as[Long].collect().toSeq
+      var books: PqBooks = b.filter(col("vec_id").isin(initIds: _*))
+        .as[(Long, Long, Seq[Double])].collect()
+        .groupBy(_._2)
+        .map { case (ss, rows) =>
+          ss -> rows.map { case (id, _, sub) => (id, sub.map(dec9).toArray) }
+            .sortBy(_._1)
+        }
+      for (_ <- 1 until PqIters)
+        books = collectBooks(recompute(assign(spark, b, books)))
+      books
     }
 
   /** Final encoded corpus (vec_id, ss, code), cached per input. */
@@ -187,15 +179,10 @@ object ProductQuant {
     */
   private def codesOfOn(
       spark: SparkSession, key: (String, String), base: => DataFrame): DataFrame =
-    codesMemo.synchronized {
-      codesMemo.getOrElseUpdate(key, {
-        val b = base
-        val books = trainedBooksOn(spark, key, b)
-        // memoCache: memo-lifetime pin (see Kernels.memoCache)
-        Kernels.memoCache(
-          assign(spark, b, books)
-            .select(col("vec_id"), col("ss"), col("code")))
-      })
+    Kernels.memoUntilRetire("pq-codes", key) {
+      val b = base
+      assign(spark, b, trainedBooksOn(spark, key, b))
+        .select(col("vec_id"), col("ss"), col("code"))
     }
 
   /** `embedding_pq`: the encoded corpus — M codes per vector. */
@@ -501,17 +488,11 @@ object ProductQuant {
     * [[writeCodebooks]] directly with a real warehouse path.
     */
   def ensureIndexArtifact(spark: SparkSession, dir: String): String =
-    artifactMemo.synchronized {
-      val key = Kernels.inputKey(dir, "embeddings.parquet")
-      artifactMemo.getOrElseUpdate(key,
-        Kernels.buildStore("graft-ann-index", s"${key._1}|${key._2}") { root =>
-          KMeansCodebook.writeIndex(spark, dir, root)
-          writeCodebooks(spark, dir, root)
-        })
+    Kernels.buildStore("graft-ann-index", Kernels.inputKey(dir, "embeddings.parquet")) {
+      root =>
+        KMeansCodebook.writeIndex(spark, dir, root)
+        writeCodebooks(spark, dir, root)
     }
-
-  private val artifactMemo =
-    scala.collection.mutable.Map.empty[(String, String), String]
 
   // -------------------------------------------------------------------
   // Index MAINTENANCE under ingest — the missing refresh path between
@@ -621,15 +602,8 @@ object ProductQuant {
     * deltas over. Built once per (corpus, JVM); never written again.
     */
   private[graft] def ensureHistoryArtifact(spark: SparkSession, dir: String): String =
-    histMemo.synchronized {
-      val key = maintKey(dir)
-      histMemo.getOrElseUpdate(key,
-        Kernels.buildStore("graft-ann-hist", s"hist|${key._1}|${key._2}")(
-          writeHistoryTrainedIndex(spark, dir, _)))
-    }
-
-  private val histMemo =
-    scala.collection.mutable.Map.empty[(String, String), String]
+    Kernels.buildStore("graft-ann-hist", maintKey(dir))(
+      writeHistoryTrainedIndex(spark, dir, _))
 
   /** [[annIvfPqFrom]] over a LAYERED store: codebooks and probe cells
     * from the immutable `base`, candidate codes from the UNION of the
@@ -656,20 +630,13 @@ object ProductQuant {
   }
 
   private[graft] def ensureMaintainedArtifact(spark: SparkSession, dir: String): String =
-    maintMemo.synchronized {
-      val key = maintKey(dir)
-      maintMemo.getOrElseUpdate(key,
-        Kernels.buildStore("graft-ann-maint", s"${key._1}|${key._2}") { root =>
-          writeHistoryTrainedIndex(spark, dir, root)
-          // --- the maintenance step: frozen-codebook ingest of the batch
-          appendBatchToIndex(
-            Tables.embeddings(spark, dir)
-              .filter(isIncBatchVec(col("vec_id"))), root)
-        })
+    Kernels.buildStore("graft-ann-maint", maintKey(dir)) { root =>
+      writeHistoryTrainedIndex(spark, dir, root)
+      // --- the maintenance step: frozen-codebook ingest of the batch
+      appendBatchToIndex(
+        Tables.embeddings(spark, dir)
+          .filter(isIncBatchVec(col("vec_id"))), root)
     }
-
-  private val maintMemo =
-    scala.collection.mutable.Map.empty[(String, String), String]
 
   /** Compacts a maintained celled artifact into a self-contained twin
     * at `root/compact` — the index's consolidation step: every ingest
@@ -700,13 +667,8 @@ object ProductQuant {
   }
 
   private[graft] def ensureCompactedIndex(spark: SparkSession, dir: String): String =
-    compactIdxMemo.synchronized {
-      compactIdxMemo.getOrElseUpdate(maintKey(dir),
-        compactIndexStore(spark, ensureMaintainedArtifact(spark, dir)))
-    }
-
-  private val compactIdxMemo =
-    scala.collection.mutable.Map.empty[(String, String), String]
+    Kernels.memo("ann-compact", maintKey(dir))(
+      compactIndexStore(spark, ensureMaintainedArtifact(spark, dir)))
 
   /** `ann_ivf_pq_compact`: the probe batch served from the COMPACTED
     * maintained index — [[annIvfPqFrom]] unchanged against the
@@ -763,19 +725,12 @@ object ProductQuant {
     * side streams.
     */
   private def pipeBase(spark: SparkSession, dir: String): DataFrame =
-    pipeBaseMemo.synchronized {
-      pipeBaseMemo.getOrElseUpdate(pipeKey(dir),
-        // memoCache: memo-lifetime pin (see Kernels.memoCache)
-        Kernels.memoCache(Kernels.fanOut(
-          Tables.embeddings(spark, dir)
-            .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-            .join(Dedup.keepIds(spark, dir).select(col("doc_id").as("vec_id")),
-              Seq("vec_id"), "left_semi"))))
-    }
-
-  private val pipeBaseMemo =
-    scala.collection.mutable.Map.empty[(String, String), DataFrame]
-  Kernels.onRetire(() => pipeBaseMemo.synchronized(pipeBaseMemo.clear()))
+    Kernels.memoUntilRetire("pipe-base", pipeKey(dir))(
+      Kernels.fanOut(
+        Tables.embeddings(spark, dir)
+          .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
+          .join(Dedup.keepIds(spark, dir).select(col("doc_id").as("vec_id")),
+            Seq("vec_id"), "left_semi")))
 
   /** Memo key for the keep-filtered corpus: distinct from the
     * full-table keys (so the two corpora never share a trained
@@ -793,20 +748,15 @@ object ProductQuant {
     * [[KMeansCodebook.writeIndex]]/[[writeCodebooks]] layout) under a
     * fingerprinted root, once per (corpus, JVM); returns the root.
     */
-  private[graft] def ensurePipelineArtifact(spark: SparkSession, dir: String): String =
-    pipeArtifactMemo.synchronized {
-      val key = pipeKey(dir)
-      pipeArtifactMemo.getOrElseUpdate(key,
-        Kernels.buildStore("graft-pipe-index", s"${key._1}|${key._2}") { root =>
-          val base = pipeBase(spark, dir)
-          KMeansCodebook.writeIndexOn(spark, key, base, root)
-          writeCodebooksOn(spark, key, subBaseOf(base),
-            KMeansCodebook.assignmentOn(spark, key, base), root)
-        })
+  private[graft] def ensurePipelineArtifact(spark: SparkSession, dir: String): String = {
+    val key = pipeKey(dir)
+    Kernels.buildStore("graft-pipe-index", key) { root =>
+      val base = pipeBase(spark, dir)
+      KMeansCodebook.writeIndexOn(spark, key, base, root)
+      writeCodebooksOn(spark, key, subBaseOf(base),
+        KMeansCodebook.assignmentOn(spark, key, base), root)
     }
-
-  private val pipeArtifactMemo =
-    scala.collection.mutable.Map.empty[(String, String), String]
+  }
 
   /** `pipeline_index` — FLAGSHIP #3, the index release pipeline as ONE
     * declarative chain: near-dup keep-list → surviving embeddings →

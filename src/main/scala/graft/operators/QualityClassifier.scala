@@ -141,51 +141,46 @@ object QualityClassifier {
   // train-once/reuse contract as the k-means codebook memo. Plain
   // doubles: nothing here for retireCaches to kill, so the memo
   // legitimately amortizes across gate queries.
-  private val weightMemo =
-    scala.collection.mutable.Map.empty[(String, String), Array[Double]]
-
   /** Runs (or reuses) the [[Steps]]-step training and returns the
     * weight vector (w1..w4, bias). One cached feature pass + one
     * bounded aggregate per step; only 5-double rows ever reach the
     * driver.
     */
   private[graft] def trainedWeights(spark: SparkSession, dir: String): Array[Double] =
-    weightMemo.synchronized {
-      weightMemo.getOrElseUpdate(Kernels.inputKey(dir, "documents.parquet"), {
-        val f = Kernels.cacheTracked(featureFrame(spark, dir))
-        val head = f.agg(count(lit(1)).as("n"), sum(col("y")).as("npos")).collect()(0)
-        val n = head.getLong(0)
-        // sum(y) is NULL on an empty corpus — read it defensively so
-        // the require below stays the failure path (getDouble on the
-        // null would throw an opaque NPE before it)
-        val npos = if (head.isNullAt(1)) 0.0 else head.getDouble(1)
-        // a single-class (or empty) corpus has no decision boundary to
-        // learn — loud beats a silently degenerate all-one head
-        require(npos > 0 && npos < n,
-          s"quality_classifier: empty or single-class labels (n=$n, npos=$npos)")
-        val cwp = r6(n / (2.0 * npos))
-        val cwn = r6(n / (2.0 * (n - npos)))
-        var w = Array.fill(5)(0.0)
-        val zero = lit(java.math.BigDecimal.ZERO).cast("decimal(18,6)")
-        for (_ <- 1 to Steps) {
-          val z = marginOf(w)
-          val p = linkOf(z)
-          val cw = when(col("y") === 1.0, cwp).otherwise(cwn)
-          val r = (p - col("y")) * cw
-          val active = z > SigLo && z < SigHi
-          // clamped rows contribute zero gradient (hard-sigmoid slope
-          // is 0 outside the linear band); coalesce guards the
-          // all-clamped corner against a null sum
-          def g(x: Column) = coalesce(
-            sum(when(active, round(r * x, 6)).otherwise(0.0).cast("decimal(18,6)")),
-            zero)
-          val row = f.agg(g(col("x1")), g(col("x2")), g(col("x3")), g(col("x4")),
-            g(lit(1.0))).collect()(0)
-          w = Array.tabulate(5)(j =>
-            r6(w(j) - Eta * row.getDecimal(j).doubleValue / n))
-        }
-        w
-      })
+    Kernels.memo("quality-weights", Kernels.inputKey(dir, "documents.parquet")) {
+      val f = Kernels.cacheTracked(featureFrame(spark, dir))
+      val head = f.agg(count(lit(1)).as("n"), sum(col("y")).as("npos")).collect()(0)
+      val n = head.getLong(0)
+      // sum(y) is NULL on an empty corpus — read it defensively so
+      // the require below stays the failure path (getDouble on the
+      // null would throw an opaque NPE before it)
+      val npos = if (head.isNullAt(1)) 0.0 else head.getDouble(1)
+      // a single-class (or empty) corpus has no decision boundary to
+      // learn — loud beats a silently degenerate all-one head
+      require(npos > 0 && npos < n,
+        s"quality_classifier: empty or single-class labels (n=$n, npos=$npos)")
+      val cwp = r6(n / (2.0 * npos))
+      val cwn = r6(n / (2.0 * (n - npos)))
+      var w = Array.fill(5)(0.0)
+      val zero = lit(java.math.BigDecimal.ZERO).cast("decimal(18,6)")
+      for (_ <- 1 to Steps) {
+        val z = marginOf(w)
+        val p = linkOf(z)
+        val cw = when(col("y") === 1.0, cwp).otherwise(cwn)
+        val r = (p - col("y")) * cw
+        val active = z > SigLo && z < SigHi
+        // clamped rows contribute zero gradient (hard-sigmoid slope
+        // is 0 outside the linear band); coalesce guards the
+        // all-clamped corner against a null sum
+        def g(x: Column) = coalesce(
+          sum(when(active, round(r * x, 6)).otherwise(0.0).cast("decimal(18,6)")),
+          zero)
+        val row = f.agg(g(col("x1")), g(col("x2")), g(col("x3")), g(col("x4")),
+          g(lit(1.0))).collect()(0)
+        w = Array.tabulate(5)(j =>
+          r6(w(j) - Eta * row.getDecimal(j).doubleValue / n))
+      }
+      w
     }
 
   private val FeatureNames =
@@ -252,21 +247,14 @@ object QualityClassifier {
     * weights instead of retraining.
     */
   private[graft] def ensureWeightStore(spark: SparkSession, dir: String): String =
-    storeMemo.synchronized {
-      val key = Kernels.inputKey(dir, "documents.parquet")
-      storeMemo.getOrElseUpdate(key,
-        Kernels.buildStore("graft-quality-head", s"qhead|${key._1}|${key._2}") {
-          root =>
-            import spark.implicits._
-            val w = trainedWeights(spark, dir)
-            FeatureNames.zip(Seq(w(4), w(0), w(1), w(2), w(3)))
-              .toDF("feature", "weight")
-              .write.mode("overwrite").parquet(root)
-        })
+    Kernels.buildStore("graft-quality-head", Kernels.inputKey(dir, "documents.parquet")) {
+      root =>
+        import spark.implicits._
+        val w = trainedWeights(spark, dir)
+        FeatureNames.zip(Seq(w(4), w(0), w(1), w(2), w(3)))
+          .toDF("feature", "weight")
+          .write.mode("overwrite").parquet(root)
     }
-
-  private val storeMemo =
-    scala.collection.mutable.Map.empty[(String, String), String]
 
   /** `quality_classifier_served`: scores from the STORED head — any
     * session that can read the artifact scores without retraining.

@@ -522,24 +522,24 @@ object Relational {
       .agg(count(lit(1)).as("n_orders"), dsum(dec(col("o_totalprice"))).as("total"))
       .orderBy(col("o_orderstatus").asc_nulls_first, col("o_orderpriority").asc_nulls_first)
 
-  /** SQL-facing API: the same engine over `spark.sql` with the tables
-    * registered as temp views — a user can address every table in ANSI
-    * SQL and Catalyst plans it identically to the DataFrame form.
+  /** SQL-facing API: the same engine over `spark.sql`, with the tables
+    * registered as temp views for the call only ([[Kernels.sqlOver]]:
+    * per-call names, dropped before returning, so the caller's own
+    * `orders`/`lineitem` views are never replaced) — ANSI SQL over the
+    * tables, planned by Catalyst identically to the DataFrame form.
     */
-  def sqlRevenueByPriority(spark: SparkSession, dir: String): DataFrame = {
-    Seq("orders", "lineitem").foreach { t =>
-      Tables.table(spark, dir, t).createOrReplaceTempView(t)
+  def sqlRevenueByPriority(spark: SparkSession, dir: String): DataFrame =
+    Kernels.sqlOver(spark,
+        "orders" -> Tables.orders(spark, dir), "lineitem" -> Tables.lineitem(spark, dir)) { v =>
+      s"""SELECT o_orderpriority,
+         |  count(DISTINCT o_orderkey) AS n_orders,
+         |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))
+         |           * (CAST(1 AS DECIMAL(3,2)) - CAST(l_discount AS DECIMAL(3,2)))) AS DOUBLE) AS revenue
+         |FROM ${v("orders")} JOIN ${v("lineitem")} ON o_orderkey = l_orderkey
+         |WHERE o_orderdate >= TIMESTAMP '1997-01-01 00:00:00'
+         |GROUP BY o_orderpriority
+         |ORDER BY o_orderpriority""".stripMargin
     }
-    spark.sql(
-      """SELECT o_orderpriority,
-        |  count(DISTINCT o_orderkey) AS n_orders,
-        |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))
-        |           * (CAST(1 AS DECIMAL(3,2)) - CAST(l_discount AS DECIMAL(3,2)))) AS DOUBLE) AS revenue
-        |FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-        |WHERE o_orderdate >= TIMESTAMP '1997-01-01 00:00:00'
-        |GROUP BY o_orderpriority
-        |ORDER BY o_orderpriority""".stripMargin)
-  }
 
   /** Full cube over the same dimensions. */
   def cubeOrders(spark: SparkSession, dir: String): DataFrame =
@@ -555,18 +555,17 @@ object Relational {
     * once per set). `grouping()` flags disambiguate a NULL group key
     * from a real NULL, surfaced as a set id.
     */
-  def groupingSetsOrders(spark: SparkSession, dir: String): DataFrame = {
-    Tables.orders(spark, dir).createOrReplaceTempView("orders")
-    spark.sql(
-      """SELECT o_orderstatus, o_orderpriority,
-        |  CAST(grouping(o_orderstatus) * 2 + grouping(o_orderpriority) AS BIGINT) AS set_id,
-        |  count(*) AS n_orders,
-        |  CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total
-        |FROM orders
-        |GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority))
-        |ORDER BY set_id, o_orderstatus ASC NULLS FIRST, o_orderpriority ASC NULLS FIRST
-        |""".stripMargin)
-  }
+  def groupingSetsOrders(spark: SparkSession, dir: String): DataFrame =
+    Kernels.sqlOver(spark, "orders" -> Tables.orders(spark, dir)) { v =>
+      s"""SELECT o_orderstatus, o_orderpriority,
+         |  CAST(grouping(o_orderstatus) * 2 + grouping(o_orderpriority) AS BIGINT) AS set_id,
+         |  count(*) AS n_orders,
+         |  CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total
+         |FROM ${v("orders")}
+         |GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority))
+         |ORDER BY set_id, o_orderstatus ASC NULLS FIRST, o_orderpriority ASC NULLS FIRST
+         |""".stripMargin
+    }
 
   val OrderPriorities: Seq[(String, String)] = Seq(
     "1-URGENT" -> "n_urgent", "2-HIGH" -> "n_high", "3-MEDIUM" -> "n_medium",

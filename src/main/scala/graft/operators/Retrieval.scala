@@ -425,15 +425,8 @@ object Retrieval {
     * once per (corpus, JVM) — the gate-facing wrapper.
     */
   def ensureMaxSimIndex(spark: SparkSession, dir: String): String =
-    maxSimIndexMemo.synchronized {
-      val key = Kernels.inputKey(dir, "documents.parquet")
-      maxSimIndexMemo.getOrElseUpdate(key,
-        Kernels.buildStore("graft-maxsim", s"maxsim|${key._1}|${key._2}")(
-          writeMaxSimIndex(spark, dir, _)))
-    }
-
-  private val maxSimIndexMemo =
-    scala.collection.mutable.Map.empty[(String, String), String]
+    Kernels.buildStore("graft-maxsim", Kernels.inputKey(dir, "documents.parquet"))(
+      writeMaxSimIndex(spark, dir, _))
 
   /** `retrieval_maxsim_served`: [[maxSimSearch]] answered from the
     * stored multi-vector index with NO access to the document text —
@@ -530,15 +523,8 @@ object Retrieval {
     * [[writeSearchIndex]] with a warehouse path).
     */
   def ensureSearchIndex(spark: SparkSession, dir: String): String =
-    indexMemo.synchronized {
-      val key = Kernels.inputKey(dir, "documents.parquet")
-      indexMemo.getOrElseUpdate(key,
-        Kernels.buildStore("graft-search-index", s"${key._1}|${key._2}")(
-          writeSearchIndex(spark, dir, _)))
-    }
-
-  private val indexMemo =
-    scala.collection.mutable.Map.empty[(String, String), String]
+    Kernels.buildStore("graft-search-index", Kernels.inputKey(dir, "documents.parquet"))(
+      writeSearchIndex(spark, dir, _))
 
   /** `bm25_search_served`: BM25 answered from the [[writeSearchIndex]]
     * artifact — no tokenize, no text scan; the postings probe joins a

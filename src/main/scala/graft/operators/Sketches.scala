@@ -342,15 +342,8 @@ object Sketches {
     * [[writeSketchStore]] with a warehouse path).
     */
   def ensureSketchStore(spark: SparkSession, dir: String): String =
-    storeMemo.synchronized {
-      val key = Kernels.inputKey(dir, "events.parquet")
-      storeMemo.getOrElseUpdate(key,
-        Kernels.buildStore("graft-sketch-store", s"${key._1}|${key._2}")(
-          writeSketchStore(spark, dir, _)))
-    }
-
-  private val storeMemo =
-    scala.collection.mutable.Map.empty[(String, String), String]
+    Kernels.buildStore("graft-sketch-store", Kernels.inputKey(dir, "events.parquet"))(
+      writeSketchStore(spark, dir, _))
 
   /** `events_heavy_hitters_daily`: heavy hitters served from the
     * stored per-day CM grids — cell-wise addition reassembles the
@@ -458,16 +451,8 @@ object Sketches {
 
   private[graft] def ensureMaintainedSketchStore(
       spark: SparkSession, dir: String): String =
-    maintStoreMemo.synchronized {
-      val k = Kernels.inputKey(dir, "events.parquet")
-      val key = (s"sketch-maintain:${k._1}", k._2)
-      maintStoreMemo.getOrElseUpdate(key,
-        Kernels.buildStore("graft-sketch-maint", s"${key._1}|${key._2}")(
-          writeMaintainedSketchStore(spark, dir, _)))
-    }
-
-  private val maintStoreMemo =
-    scala.collection.mutable.Map.empty[(String, String), String]
+    Kernels.buildStore("graft-sketch-maint", Kernels.inputKey(dir, "events.parquet"))(
+      writeMaintainedSketchStore(spark, dir, _))
 
   /** `events_heavy_hitters_maintain`: heavy hitters served from the
     * INCREMENTALLY-built store — same merge + probe as
@@ -540,14 +525,8 @@ object Sketches {
     * memo-hit) first, then compacted once per (corpus, JVM).
     */
   private[graft] def ensureCompactedStore(spark: SparkSession, dir: String): String =
-    compactMemo.synchronized {
-      val key = Kernels.inputKey(dir, "events.parquet")
-      compactMemo.getOrElseUpdate(key,
-        compactSketchStore(spark, ensureSketchStore(spark, dir)))
-    }
-
-  private val compactMemo =
-    scala.collection.mutable.Map.empty[(String, String), String]
+    Kernels.memo("sketch-compact", Kernels.inputKey(dir, "events.parquet"))(
+      compactSketchStore(spark, ensureSketchStore(spark, dir)))
 
   /** `events_heavy_hitters_compact`: heavy hitters served from the
     * COMPACTED (weekly) store — cell-wise addition over |weeks| grids

@@ -120,6 +120,108 @@ class KernelsScopeSpec extends AnyFunSuite {
       "a dead thread's orphaned checkpoint blocks must drain on the next retire")
   }
 
+  // ---- the memo registry (Kernels.memo / memoUntilRetire) ----
+
+  /** Runs `f` on a fresh thread and reports whether it returned within
+    * `ms` — a blocked memo call shows as false instead of hanging.
+    */
+  private def returnsWithin(ms: Long)(f: => Unit): Boolean = {
+    val t = new Thread(() => f)
+    t.start(); t.join(ms)
+    !t.isAlive
+  }
+
+  test("memo: one key on two threads builds once") {
+    val builds = new java.util.concurrent.atomic.AtomicInteger()
+    val started = new java.util.concurrent.CountDownLatch(1)
+    val finish = new java.util.concurrent.CountDownLatch(1)
+    def build(): String = {
+      builds.incrementAndGet(); started.countDown(); finish.await(); "built"
+    }
+    val results = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val first = new Thread(() => { results.add(Kernels.memo("spec-once", ("k", "fp"))(build())); () })
+    first.start()
+    started.await()
+    val second = new Thread(() => { results.add(Kernels.memo("spec-once", ("k", "fp"))(build())); () })
+    second.start()
+    // hold the first build until the second caller waits on the same slot
+    val deadline = System.nanoTime() + 10e9.toLong
+    while (second.getState != Thread.State.BLOCKED && System.nanoTime() < deadline)
+      Thread.sleep(5)
+    assert(second.getState == Thread.State.BLOCKED, "the second caller must wait on the build")
+    finish.countDown()
+    first.join(); second.join()
+    assert(builds.get == 1, s"one key built ${builds.get} times")
+    assert(results.toArray.toSeq == Seq("built", "built"))
+  }
+
+  test("memo: a build in flight blocks neither other keys nor retireCaches") {
+    val started = new java.util.concurrent.CountDownLatch(1)
+    val finish = new java.util.concurrent.CountDownLatch(1)
+    val slow = new Thread(() => {
+      Kernels.memo("spec-slow", ("a", "fp")) { started.countDown(); finish.await(); "a" }
+      ()
+    })
+    slow.start()
+    started.await()
+    try {
+      assert(returnsWithin(10000)(Kernels.memo("spec-other", ("b", "fp"))("b")),
+        "another key waited on an unrelated build")
+      assert(returnsWithin(10000)(Kernels.retireCaches()),
+        "retireCaches waited on a memo build")
+    } finally finish.countDown()
+    slow.join()
+  }
+
+  test("memo: a new fingerprint frees the old value's checkpoint blocks") {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    val v1 = Kernels.memo("spec-ckpt", ("t", "fp1"))((1 to 10).toDF("x").localCheckpoint())
+    val id1 = Kernels.checkpointRddId(v1)
+    assert(id1.exists(sc.getPersistentRDDs.contains), "the memoized checkpoint must be live")
+    // the same fingerprint is a hit
+    val hit = Kernels.memo[org.apache.spark.sql.DataFrame]("spec-ckpt", ("t", "fp1"))(
+      fail("a hit must not build"))
+    assert(hit eq v1)
+    val v2 = Kernels.memo("spec-ckpt", ("t", "fp2"))((1 to 20).toDF("x").localCheckpoint())
+    assert(v2.count() == 20)
+    assert(id1.forall(id => !sc.getPersistentRDDs.contains(id)),
+      "the superseded value's checkpoint blocks must be freed")
+    // a driver value in turn supersedes v2, freeing its blocks too
+    val id2 = Kernels.checkpointRddId(v2)
+    Kernels.memo[AnyRef]("spec-ckpt", ("t", "fp3"))("driver value")
+    assert(id2.forall(id => !sc.getPersistentRDDs.contains(id)))
+  }
+
+  test("memo: a build that throws is retried by the next call") {
+    var builds = 0
+    intercept[IllegalStateException] {
+      Kernels.memo[String]("spec-throw", ("k", "fp")) { builds += 1; throw new IllegalStateException("boom") }
+    }
+    assert(Kernels.memo("spec-throw", ("k", "fp")) { builds += 1; "ok" } == "ok")
+    assert(Kernels.memo("spec-throw", ("k", "fp")) { builds += 1; "again" } == "ok")
+    assert(builds == 2)
+  }
+
+  test("memo: retireCaches drops memoUntilRetire entries and keeps memo entries") {
+    import spark.implicits._
+    var frames, values = 0
+    def frame() = Kernels.memoUntilRetire("spec-retire", ("k", "fp")) {
+      frames += 1; (1 to 5).toDF("x")
+    }
+    def value() = Kernels.memo("spec-keep", ("k", "fp")) { values += 1; "kept" }
+    val pinned = frame()
+    assert(pinned.count() == 5 && pinned.storageLevel != StorageLevel.NONE)
+    frame(); value(); value()
+    assert(frames == 1 && values == 1)
+    Kernels.retireCaches()
+    assert(pinned.storageLevel == StorageLevel.NONE, "the until-retire frame must be unpersisted")
+    frame(); value()
+    assert(frames == 2, "retireCaches must drop the until-retire entry")
+    assert(values == 1, "retireCaches must keep the session memo")
+    Kernels.retireCaches()
+  }
+
   test("loopCheckpoint severs inherited plan statistics and tracks the persisted blocks") {
     import spark.implicits._
     val sc = spark.sparkContext

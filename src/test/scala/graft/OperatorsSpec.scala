@@ -2456,15 +2456,15 @@ class OperatorsSpec extends AnyFunSuite {
   }
 
   test("bpe merge table round-trips through a parquet artifact into a fresh session") {
-    // the durable half of the memo story: the session-local
-    // localCheckpoint memo can never serve another session (its blocks
-    // die with the creator), so the production "materialize once"
+    // the durable half of the memo story: the localCheckpoint memo can
+    // never serve another SparkContext (its blocks die with the
+    // creator's), so the production "materialize once"
     // contract is the written artifact — build in session A, write,
     // read back in a DIFFERENT session, value-equal
     val out = SparkTestSession.tmpDir("bpe-artifact").resolve("merges").toString
     Bpe.writeMergeTable(spark, sf, out)
     val trained = Bpe.mergeTable(spark, sf).collect().map(_.toSeq).toSeq
-    val fresh = spark.newSession() // distinct session state: the train memo keys on session and must not serve it
+    val fresh = spark.newSession() // distinct session state: the served table is read from the artifact, not the train memo
     val served = Bpe.mergeTableFrom(fresh, out).collect().map(_.toSeq).toSeq
     assert(served.nonEmpty && served == trained)
   }

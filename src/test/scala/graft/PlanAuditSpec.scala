@@ -1244,25 +1244,44 @@ class PlanAuditSpec extends AnyFunSuite {
         s"stale allowlist entry: $f Window.partitionBy($k) x$n no longer matches the source")
   }
 
+  /** Lines under `src/main/scala` outside `helper` that contain any of
+    * `tokens`, as `path:line: text`.
+    */
+  private def sourceHitsOutside(helper: String, tokens: Seq[String]): Seq[String] = {
+    import scala.jdk.CollectionConverters._
+    val own = java.nio.file.Path.of(helper)
+    val sources = java.nio.file.Files.walk(java.nio.file.Path.of("src/main/scala"))
+      .iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
+    assert(sources.contains(own), s"the audit must see the helper at $own")
+    for {
+      p <- sources if p != own
+      (line, i) <- java.nio.file.Files.readAllLines(p).asScala.zipWithIndex
+      if tokens.exists(line.contains)
+    } yield s"$p:${i + 1}: ${line.trim}"
+  }
+
   test("stream-drain audit: only the drain helper starts, drains or re-confs a stream") {
     // `Streams` owns what a drain leaves behind — the sink view, the
     // checkpoint dir, the session confs — and serializes the overrides.
     // A hand-copied drain (31 existed before the helper) skips at least
     // one of those, so the tokens that start one may appear in no other
     // source file.
-    import scala.jdk.CollectionConverters._
-    val helper = java.nio.file.Path.of("src/main/scala/graft/streaming/Streams.scala")
-    val tokens = Seq("processAllAvailable", """format("memory")""", "queryName(", "conf.set(")
-    val sources = java.nio.file.Files.walk(java.nio.file.Path.of("src/main/scala"))
-      .iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
-    assert(sources.contains(helper), s"the audit must see the helper at $helper")
-    val hits = for {
-      p <- sources if p != helper
-      (line, i) <- java.nio.file.Files.readAllLines(p).asScala.zipWithIndex
-      if tokens.exists(line.contains)
-    } yield s"$p:${i + 1}: ${line.trim}"
+    val hits = sourceHitsOutside("src/main/scala/graft/streaming/Streams.scala",
+      Seq("processAllAvailable", """format("memory")""", "queryName(", "conf.set("))
     assert(hits.isEmpty,
       s"drain or session-conf code outside the helper — go through Streams:\n${hits.mkString("\n")}")
+  }
+
+  test("memo audit: only Kernels locks or hooks a shared registry") {
+    // `Kernels.memo` owns the one registry: builds run outside its lock,
+    // superseded fingerprints free their blocks, retire drops the
+    // until-retire entries. A hand-rolled `xMemo.synchronized {
+    // getOrElseUpdate }` (29 existed before) builds under a shared lock,
+    // so the tokens that start one may appear in no other source file.
+    val hits = sourceHitsOutside("src/main/scala/graft/operators/Kernels.scala",
+      Seq(".synchronized", "onRetire("))
+    assert(hits.isEmpty,
+      s"a lock or retire hook outside Kernels — go through Kernels.memo:\n${hits.mkString("\n")}")
   }
 
   test("orders_percentile_rank: two-level rank, no per-priority corpus window, one orders scan") {
