@@ -2919,7 +2919,7 @@ object SparkEntry {
   }
 
   /** Full-corpus pixel-phash signature subquery — `SELECT doc_id, ph`
-    * (mirrors Multimodal.phashSigCorpus; shared by the image pair
+    * (mirrors Multimodal.corpusSigs for Pixel; shared by the image pair
     * oracle and the media near-dup keep-list).
     */
   private lazy val phashSigSql: String =
@@ -2932,7 +2932,7 @@ object SparkEntry {
        |SELECT doc_id, ph FROM ph""".stripMargin
 
   /** Full-corpus audio energy-profile signature subquery — `SELECT
-    * doc_id, ph` (mirrors Multimodal.audioSigCorpus).
+    * doc_id, ph` (mirrors Multimodal.corpusSigs for Audio).
     */
   private lazy val audioSigSql: String =
     s"""WITH ${audioEnergyCtesFor(Multimodal.PhashBits)},
@@ -2946,7 +2946,7 @@ object SparkEntry {
   /** Banded Hamming pair replay over a `(doc_id, ph)` signature
     * subquery — the shared tail of the image/audio pair oracles and
     * the near-dup keep-list's edge streams (mirrors
-    * Multimodal.sigBandPairs; DISTINCT stands in for the engine's
+    * Multimodal.sigPairs; DISTINCT stands in for the engine's
     * stateless lowest-matching-band collapse — same surviving set).
     * Unordered; callers append ORDER BY or nest.
     */
@@ -2964,7 +2964,7 @@ object SparkEntry {
 
   /** Clip-level near-dup pair replay (unordered) — banded frame-pair
     * candidates over the per-frame signature chain, Hamming verify,
-    * clip lift with the match floor (mirrors Multimodal.videoClipPairs;
+    * clip lift with the match floor (mirrors Multimodal.sigPairs;
     * shared by the video pair oracle and the near-dup keep-list).
     */
   private lazy val videoClipPairsSql: String = videoClipPairsSqlOver(videoFrameSigCtes)

@@ -155,13 +155,18 @@ object TopKFunctions {
   private val FnName = "graft_topk"
 
   /** Register once per session; idempotent (same pattern as
-    * [[VectorFunctions.register]]; [[graft.GraftExtensions]] injects it
-    * at session build for cluster deployments).
+    * [[VectorFunctions.register]]): a session that already has the
+    * function — [[graft.GraftExtensions]] injects it at session build —
+    * keeps its builder, so repeated `topK` columns neither replace it
+    * nor log the replacement.
     */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FnName, exprs => TopKByScore(exprs(0), exprs(1), exprs(2))
-        .toAggregateExpression(), "built-in")
+  def register(spark: SparkSession): Unit = {
+    val reg = spark.sessionState.functionRegistry
+    if (!reg.functionExists(org.apache.spark.sql.catalyst.FunctionIdentifier(FnName)))
+      reg.createOrReplaceTempFunction(
+        FnName, exprs => TopKByScore(exprs(0), exprs(1), exprs(2))
+          .toAggregateExpression(), "built-in")
+  }
 
   /** `topK(score, id, k)` aggregate column. */
   def topK(spark: SparkSession, score: Column, id: Column, k: Column): Column = {

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession, functions}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -24,7 +24,7 @@ object Dedup {
 
   /** Lowercased letter-run tokens (same tokenizer as TextAnalysis). */
   private def toksLower: Column =
-    filter(split(lower(col("text")), TextAnalysis.TokenSplitRe), t => length(t) > 0)
+    filter(functions.split(lower(col("text")), TextAnalysis.TokenSplitRe), t => length(t) > 0)
 
   // Cached intermediates can't be unpersisted inside the builders (the
   // returned DataFrame is lazy — the cache must survive until the
@@ -149,6 +149,15 @@ object Dedup {
     */
   val IncBatchThreshold = "4"
 
+  /** The `inc:` id-hash split every incremental query shares: the
+    * first hex char of md5("inc:"+id), compared to [[IncBatchThreshold]].
+    */
+  def split(id: Column): Column =
+    substring(md5(concat(lit("inc:"), id.cast("string"))), 1, 1)
+
+  /** The batch role of [[split]]; its negation is the history. */
+  def isBatch(id: Column): Column = split(id) < IncBatchThreshold
+
   /** Incremental dedup — the production shape of [[exact]]: a NEW
     * ingest batch is deduplicated against the fingerprint store of the
     * existing corpus, emitting only first-seen batch documents (with
@@ -170,7 +179,7 @@ object Dedup {
     val docs = Tables.documents(spark, dir)
       .select(col("doc_id"),
         md5(TextAnalysis.normalizedText(col("text"))).as("fp"),
-        substring(md5(concat(lit("inc:"), col("doc_id").cast("string"))), 1, 1).as("split"))
+        split(col("doc_id")).as("split"))
     val batch = docs.filter(col("split") < IncBatchThreshold)
     val history = docs.filter(col("split") >= IncBatchThreshold)
     batch.join(history.select("fp").distinct(), Seq("fp"), "left_anti")
@@ -211,7 +220,7 @@ object Dedup {
     val docs = Tables.documents(spark, dir)
       .select(col("doc_id"),
         md5(TextAnalysis.normalizedText(col("text"))).as("fp"),
-        substring(md5(concat(lit("inc:"), col("doc_id").cast("string"))), 1, 1).as("split"))
+        split(col("doc_id")).as("split"))
     val batch = docs.filter(col("split") < IncBatchThreshold)
     // cached: feeds the bloom build AND the anti-join right side
     val store = cacheTracked(docs.filter(col("split") >= IncBatchThreshold)
@@ -573,10 +582,6 @@ object Dedup {
     rekeyed.unionByName(batchLabels)
   }
 
-  /** Batch-role predicate of the shared `inc:` id-hash split. */
-  private def isIncBatch(id: Column): Column =
-    substring(md5(concat(lit("inc:"), id.cast("string"))), 1, 1) < IncBatchThreshold
-
   /** `dedup_keep_maintain`: incremental keep-list maintenance — the
     * missing refresh path between the per-ingest duplicate FINDERS
     * ([[incremental]] and friends) and the full-corpus keep-list
@@ -607,14 +612,14 @@ object Dedup {
       spark: SparkSession, dir: String): (DataFrame, DataFrame, DataFrame) = {
     val edges = ngramPairs(spark, dir).select("doc_a", "doc_b")
     val docs = Tables.documents(spark, dir).select("doc_id")
-    val histDocs = docs.filter(!isIncBatch(col("doc_id")))
-    val histEdges = edges.filter(!isIncBatch(col("doc_a")) && !isIncBatch(col("doc_b")))
+    val histDocs = docs.filter(!isBatch(col("doc_id")))
+    val histEdges = edges.filter(!isBatch(col("doc_a")) && !isBatch(col("doc_b")))
     // materialized + lineage-cut: the base state is an input to the
     // merge, not part of its plan (production reads it from parquet)
     val histLabels = clustersFromEdges(histDocs, histEdges).localCheckpoint()
     retireCaches() // the history component loop's caches are dead now
-    val batchDocs = docs.filter(isIncBatch(col("doc_id")))
-    val batchEdges = edges.filter(isIncBatch(col("doc_a")) || isIncBatch(col("doc_b")))
+    val batchDocs = docs.filter(isBatch(col("doc_id")))
+    val batchEdges = edges.filter(isBatch(col("doc_a")) || isBatch(col("doc_b")))
     (histLabels, batchDocs, batchEdges)
   }
 
@@ -644,9 +649,9 @@ object Dedup {
   def keepMaintainFrom(spark: SparkSession, dir: String, path: String): DataFrame = {
     val histLabels = spark.read.parquet(s"$path/labels")
     val docs = Tables.documents(spark, dir).select("doc_id")
-    val batchDocs = docs.filter(isIncBatch(col("doc_id")))
+    val batchDocs = docs.filter(isBatch(col("doc_id")))
     val batchEdges = ngramPairs(spark, dir).select("doc_a", "doc_b")
-      .filter(isIncBatch(col("doc_a")) || isIncBatch(col("doc_b")))
+      .filter(isBatch(col("doc_a")) || isBatch(col("doc_b")))
     maintainKeep(histLabels, batchDocs, batchEdges).orderBy("doc_id")
   }
 
@@ -997,9 +1002,8 @@ object Dedup {
   def incrementalMinHash(spark: SparkSession, dir: String): DataFrame = {
     retirePreviousCaches()
     val shArr = cacheTracked(docShingles(spark, dir))
-    val split = substring(md5(concat(lit("inc:"), col("doc_id").cast("string"))), 1, 1)
     val bands = cacheTracked(minHashBands(minHashSignatureKernel(shArr))
-      .withColumn("split", split))
+      .withColumn("split", split(col("doc_id"))))
     val cand = bands.filter(col("split") < IncBatchThreshold).as("x")
       .join(bands.filter(col("split") >= IncBatchThreshold).as("y"), Seq("band", "bkey"))
       .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
@@ -1045,9 +1049,8 @@ object Dedup {
         .parquet(_))
 
   private[graft] def historyBandStore(spark: SparkSession, dir: String): DataFrame = {
-    val split = substring(md5(concat(lit("inc:"), col("doc_id").cast("string"))), 1, 1)
     val shArr = docShingles(spark, dir)
-      .withColumn("split", split)
+      .withColumn("split", split(col("doc_id")))
       .filter(col("split") >= IncBatchThreshold)
       .select("doc_id", "sh")
     val hashed = shArr.select(col("doc_id"),
@@ -1347,8 +1350,7 @@ object Dedup {
     */
   def incrementalSemantic(spark: SparkSession, dir: String): DataFrame = {
     import graft.functions.VectorFunctions.dot
-    val split = substring(md5(concat(lit("inc:"), col("vec_id").cast("string"))), 1, 1)
-    val a = cappedCelledIndex(spark, dir).withColumn("split", split)
+    val a = cappedCelledIndex(spark, dir).withColumn("split", split(col("vec_id")))
     a.filter(col("split") < IncBatchThreshold).as("a")
       .join(a.filter(col("split") >= IncBatchThreshold).as("b"),
         col("a.cluster") === col("b.cluster") && col("a.sub") === col("b.sub"))
@@ -1484,12 +1486,11 @@ object Dedup {
     */
   private def simHashBandRows(
       spark: SparkSession, dir: String, withSplit: Boolean): DataFrame = {
-    val split = substring(md5(concat(lit("inc:"), col("doc_id").cast("string"))), 1, 1)
     val base = simHashSignatures(spark, dir)
       .withColumn("h1", conv(substring(col("simhash"), 1, 32), 2, 10).cast("long"))
       .withColumn("h2", conv(substring(col("simhash"), 33, 32), 2, 10).cast("long"))
     val sigs = cacheTracked(
-      if (withSplit) base.withColumn("split", split) else base)
+      if (withSplit) base.withColumn("split", split(col("doc_id"))) else base)
     val bandStructs = (0 until SimHashBands).map { b =>
       struct(lit(b).as("band"),
         substring(col("simhash"), b * SimHashBandBits + 1, SimHashBandBits).as("bkey"))

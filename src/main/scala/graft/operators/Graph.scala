@@ -303,7 +303,7 @@ object Graph {
     * dst, sim) — one row per directed neighbor, keyed by the cell so
     * the maintainer can carry untouched cells over by anti-join.
     *
-    * NOTE: the `incSplit` filter runs AFTER [[Dedup.cappedCelledIndex]]
+    * NOTE: the `inc:` split filter runs AFTER [[Dedup.cappedCelledIndex]]
     * celling, so `sub` boundaries here reflect the batch-inclusive
     * snapshot (memo-keyed to the full corpus fingerprint) — see the
     * contract note on [[knnMaintain]].
@@ -313,7 +313,7 @@ object Graph {
     Kernels.buildStore("graft-knn-hist", threshKey(dir, thresh))(
       directedTopK(spark,
         Dedup.cappedCelledIndex(spark, dir)
-          .filter(incSplit >= thresh)
+          .filter(Dedup.split(col("vec_id")) >= thresh)
           .select("vec_id", "cluster", "sub", "v", "norm"))
         .write.mode("overwrite").parquet(_))
 
@@ -324,9 +324,6 @@ object Graph {
     val (table, fp) = Kernels.inputKey(dir, "embeddings.parquet")
     (s"$table|$thresh", fp)
   }
-
-  private def incSplit =
-    substring(md5(concat(lit("inc:"), col("vec_id").cast("string"))), 1, 1)
 
   /** Directed in-cell top-[[KnnK]] lists over an arbitrary celled
     * membership frame — the shared kernel of [[mutualKnnEdges]] (full
@@ -421,7 +418,7 @@ object Graph {
       thresh: String = Dedup.IncBatchThreshold): DataFrame = {
     val idx = Kernels.cacheTracked(Dedup.cappedCelledIndex(spark, dir)
       .select("vec_id", "cluster", "sub", "v", "norm"))
-    val batchCells = idx.filter(incSplit < thresh)
+    val batchCells = idx.filter(Dedup.split(col("vec_id")) < thresh)
       .select("cluster", "sub").distinct()
     val hist = spark.read.parquet(ensureKnnDirectedHistory(spark, dir, thresh))
     maintainedEdges(spark, idx, hist, batchCells)
@@ -486,7 +483,7 @@ object Graph {
       val seen = spark.read.parquet(s"$storeRoot/seen")
       val batchCells = idx.join(bids, Seq("vec_id"), "left_semi")
         .select("cluster", "sub").distinct()
-      val members = idx.filter(incSplit >= Dedup.IncBatchThreshold)
+      val members = idx.filter(!Dedup.isBatch(col("vec_id")))
         .unionByName(idx.join(seen, Seq("vec_id"), "left_semi"))
       val recomputed = directedTopK(spark,
         members.join(broadcast(batchCells), Seq("cluster", "sub"), "left_semi"))

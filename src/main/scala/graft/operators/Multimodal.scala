@@ -2,7 +2,7 @@ package graft.operators
 
 import java.security.MessageDigest
 
-import org.apache.spark.sql.{DataFrame, Encoder, Encoders, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -100,12 +100,6 @@ object Multimodal {
     Kernels.memo(s"sig:$kind", Kernels.inputKey(dir, "documents.parquet"))(
       build.localCheckpoint())
 
-  // Trained-threshold DRIVER values (≤ PhashBits doubles each) —
-  // memoized per corpus like the k-means codebooks they parallel: every
-  // incremental/stream/maintain query re-collected the same aggregate.
-  private def memoMu[T <: AnyRef](dir: String, kind: String)(build: => T): T =
-    Kernels.memo(s"mu:$kind", Kernels.inputKey(dir, "documents.parquet"))(build)
-
   /** Synthesize a real container payload around a media body: the byte
     * format is chosen by body length (n%3 → BMP / binary PPM / RIFF,
     * with the RIFF class split n%6 → WAVE / AVI, and the WAVE class
@@ -185,13 +179,24 @@ object Multimodal {
     * in for the production ingest boundary (media files on disk);
     * every downstream operator sees only the container bytes.
     */
-  def ingestBinary(spark: SparkSession, dir: String): DataFrame = {
-    val synth = udf((body: Array[Byte]) => synthPayload(body))
+  def ingestBinary(spark: SparkSession, dir: String): DataFrame =
     Tables.documents(spark, dir)
-      .select(col("doc_id"),
-              synth(encode(col("text"), "UTF-8")).as("payload"),
-              col("source"))
-  }
+      .select(col("doc_id"), payloadOf(col("text")).as("payload"), col("source"))
+
+  /** A document's text as its container payload ([[synthPayload]] over
+    * the UTF-8 bytes) — the ingest boundary the batch corpus and the
+    * media ingest stream share.
+    */
+  private[graft] def payloadOf(text: Column): Column =
+    udf((body: Array[Byte]) => synthPayload(body)).apply(encode(text, "UTF-8"))
+
+  /** The media corpus as (doc_id, payload) rows, kept by `keep` (one
+    * side of the [[Dedup.split]], a format test), fanned out for the
+    * map-side kernels — the batch source of every media operator.
+    */
+  private[graft] def payloads(spark: SparkSession, dir: String,
+      keep: Column = lit(true)): DataFrame =
+    Kernels.fanOut(ingestBinary(spark, dir).filter(keep).select("doc_id", "payload"))
 
   /** STUB fallback for payloads no header parser claims: a real
     * pipeline would quarantine these; here the metadata is a
@@ -433,8 +438,7 @@ object Multimodal {
     */
   def audioStats(spark: SparkSession, dir: String): DataFrame = {
     implicit val enc: Encoder[AudioMeta] = Encoders.product[AudioMeta]
-    Kernels.fanOut(
-      ingestBinary(spark, dir).select("doc_id", "payload"))
+    payloads(spark, dir)
       .mapPartitions { rows: Iterator[Row] =>
         rows.flatMap(r => audioMeta(r.getLong(0), r.getAs[Array[Byte]](1)))
       }
@@ -478,8 +482,7 @@ object Multimodal {
     */
   def audioEnergy(spark: SparkSession, dir: String): DataFrame = {
     implicit val enc: Encoder[AudioEnergy] = Encoders.product[AudioEnergy]
-    Kernels.fanOut(
-      ingestBinary(spark, dir).select("doc_id", "payload"))
+    payloads(spark, dir)
       .mapPartitions { rows: Iterator[Row] =>
         rows.flatMap(r => audioEnergyRows(r.getLong(0), r.getAs[Array[Byte]](1)))
       }
@@ -613,8 +616,8 @@ object Multimodal {
     * bits). Re-containered copies keep their sample bytes, so their
     * contours — computed from the parsed data chunk, not the
     * container — still collide. Pairs at Hamming ≤ [[PhashMaxHamming]]
-    * via the banded join with the stateless [[firstBandOnly]]
-    * collapse — never all-pairs, no distinct exchange.
+    * via the banded join ([[sigPairs]]) — never all-pairs, no distinct
+    * exchange.
     *
     * Scale shape: energy profiles are map-only over decoded batches;
     * thresholds are ONE [[PhashBits]]-row broadcast (decimal-summed,
@@ -622,176 +625,20 @@ object Multimodal {
     * groupBy(doc); candidates come banded. Exact integer/6dp
     * arithmetic end to end — the oracle replays every bit.
     */
-  /** The corpus audio signature frame (doc_id, ph) under whole-corpus
-    * per-window thresholds — the frame [[audioNearDup]] banded-joins
-    * and [[mediaKeep]] groups by. Map-only energy kernel, one
-    * [[PhashBits]]-row threshold broadcast, one combiner-friendly
-    * fold per clip.
-    */
-  private[graft] def audioSigCorpus(spark: SparkSession, dir: String): DataFrame =
-    memoSig(spark, dir, "audiosig")(audioSigCorpusBuild(spark, dir))
-
-  /** The un-memoized build plan (the plan audit inspects this). */
-  private[graft] def audioSigCorpusBuild(spark: SparkSession, dir: String): DataFrame = {
-      implicit val enc: Encoder[AudioEnergy] = Encoders.product[AudioEnergy]
-      val energy = Kernels.fanOut(
-        ingestBinary(spark, dir).select("doc_id", "payload"))
-        .mapPartitions { rows: Iterator[Row] =>
-          rows.flatMap(r =>
-            audioEnergyRows(r.getLong(0), r.getAs[Array[Byte]](1), PhashBits))
-        }
-        .toDF()
-      val mu = energy.groupBy("win")
-        .agg(round(sum(col("energy").cast("decimal(18,6)")).cast("double")
-          / count(lit(1)), 6).as("mu"))
-      energy.join(broadcast(mu), "win")
-        .groupBy("doc_id")
-        .agg(sum(when(col("energy") > col("mu"),
-          expr("shiftleft(CAST(1 AS BIGINT), CAST(win AS INT))"))
-          .otherwise(lit(0L))).as("ph"))
-    }
-
   def audioNearDup(spark: SparkSession, dir: String): DataFrame =
-    sigBandPairs(audioSigCorpus(spark, dir)).orderBy("doc_a", "doc_b")
-
-  /** Banded Hamming near-dup pairs over a (doc_id, ph) signature frame
-    * — the ONE corpus-side band-join shape the image and audio pair
-    * queries share (and [[mediaKeepNearDup]]'s edge streams reuse):
-    * explode each signature into its [[PhashBands]] band keys, equi-join
-    * band collisions (never all-pairs), collapse multi-band collisions
-    * STATELESSLY via [[firstBandOnly]] (one surviving row per pair, no
-    * distinct exchange), verify with an integer XOR popcount at Hamming
-    * ≤ [[PhashMaxHamming]]. Output is unordered (doc_a, doc_b,
-    * hamming) with doc_a < doc_b; callers order or consume.
-    */
-  private[graft] def sigBandPairs(sig: DataFrame): DataFrame = {
-    val bands = sig
-      .select(col("doc_id"), col("ph"),
-        explode(phashBands(col("ph"))).as("bs"))
-      .select(col("doc_id"), col("ph"),
-        col("bs.band").as("b"), col("bs.bkey").as("bk"))
-    bands.as("x").join(bands.as("y"),
-        col("x.b") === col("y.b") && col("x.bk") === col("y.bk") &&
-          col("x.doc_id") < col("y.doc_id"))
-      .filter(firstBandOnly(col("x.ph"), col("y.ph"), col("x.b")))
-      .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"),
-        expr("CAST(bit_count(x.ph ^ y.ph) AS BIGINT)").as("hamming"))
-      .filter(col("hamming") <= PhashMaxHamming)
-  }
-
-  /** Per-window energy thresholds trained on the HISTORY side — the
-    * audio analogue of [[historyMu]]/[[historyFrameMu]]: new clips
-    * must be hashed with the thresholds the stored signatures used.
-    * Windows no history clip ever populated carry NO threshold (and
-    * can never set a bit — the inner-join semantics of the corpus
-    * [[audioNearDup]], made explicit). ≤ [[PhashBits]] values,
-    * collected once and shipped in the task closure.
-    */
-  private[graft] def historyAudioMu(spark: SparkSession, dir: String): Map[Long, Double] = memoMu(dir, "audmu") {
-    implicit val enc: Encoder[AudioEnergy] = Encoders.product[AudioEnergy]
-    val splitOf = substring(md5(concat(lit("inc:"), col("doc_id").cast("string"))), 1, 1)
-    Kernels.fanOut(
-      ingestBinary(spark, dir)
-        .filter(splitOf >= Dedup.IncBatchThreshold)
-        .select("doc_id", "payload"))
-      .mapPartitions { rows: Iterator[Row] =>
-        rows.flatMap(r =>
-          audioEnergyRows(r.getLong(0), r.getAs[Array[Byte]](1), PhashBits))
-      }
-      .toDF()
-      .groupBy("win")
-      .agg(round(sum(col("energy").cast("decimal(18,6)")).cast("double")
-        / count(lit(1)), 6).as("mu"))
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-  }
-
-  /** The energy-profile signature from one payload under TRAINED
-    * per-window thresholds — bit w set iff window w exists, has a
-    * threshold, and beats it; None for payloads that yield no energy
-    * windows (non-WAV / unknown bit depth / empty stream). Shared
-    * verbatim by the batch incremental and its streaming twin.
-    */
-  private[graft] def audioSigOfBody(p: Array[Byte],
-      mu: Map[Long, Double]): Option[Long] = {
-    val rows = audioEnergyRows(0L, p, PhashBits).toSeq
-    // a clip none of whose windows carries a trained threshold has no
-    // signature at all (the inner-join semantics, kept exactly —
-    // the frameSigRows convention) — distinct from a clip whose
-    // thresholded windows all read 0
-    if (!rows.exists(e => mu.contains(e.win))) None
-    else Some(rows.foldLeft(0L) { (acc, e) =>
-      mu.get(e.win) match {
-        case Some(m) if e.energy > m => acc | (1L << e.win.toInt)
-        case _ => acc
-      }
-    })
-  }
-
-  /** The history side's banded audio-signature store (hist_id, h_ph,
-    * band, bkey) — in production a materialized table maintained by
-    * ingest (the [[historyPhashStore]] contract at the audio
-    * modality).
-    */
-  private[graft] def historyAudioStore(spark: SparkSession, dir: String,
-      mu: Map[Long, Double]): DataFrame = {
-    implicit val enc: Encoder[(Long, Long)] =
-      Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong)
-    val splitOf = substring(md5(concat(lit("inc:"), col("doc_id").cast("string"))), 1, 1)
-    Kernels.fanOut(
-      ingestBinary(spark, dir)
-        .filter(splitOf >= Dedup.IncBatchThreshold)
-        .select("doc_id", "payload"))
-      .mapPartitions { rows: Iterator[Row] =>
-        rows.flatMap { r =>
-          audioSigOfBody(r.getAs[Array[Byte]](1), mu).map((r.getLong(0), _))
-        }
-      }
-      .toDF("hist_id", "h_ph")
-      .select(col("hist_id"), col("h_ph"),
-        explode(phashBands(col("h_ph"))).as("bk"))
-      .select(col("hist_id"), col("h_ph"),
-        col("bk.band").as("band"), col("bk.bkey").as("bkey"))
-  }
+    sigPairs(Audio, corpusSigs(spark, dir, Audio)).orderBy("doc_a", "doc_b")
 
   /** `mm_audio_neardup_incremental`: the ingest form of audio
-    * near-dup — a batch of new clips probes the HISTORICAL signature
-    * store only (batch-internal pairs are [[audioNearDup]]'s job on
-    * the batch alone), completing the incremental family across ALL
-    * content modalities: text, images, video and now audio have
+    * near-dup — a batch of new clips probes the HISTORICAL signatures
+    * only (batch-internal pairs are [[audioNearDup]]'s job on the
+    * batch alone), so text, images, video and audio all have
     * batch-vs-history twins. Thresholds are the history's
-    * ([[historyAudioMu]]); candidates come banded; a multi-band
-    * collision folds through the pair aggregate (one signature per
-    * clip — `min` over duplicate band rows is exact). Scale shape:
-    * everything batch-sized except the store scan, which in
-    * production is the pre-materialized banded table.
+    * ([[historyMu]]); candidates come banded ([[incrementalPairs]]).
+    * Scale shape: everything batch-sized except the history scan,
+    * which in production is the pre-materialized banded table.
     */
-  def audioNearDupIncremental(spark: SparkSession, dir: String): DataFrame = {
-    implicit val enc: Encoder[(Long, Long)] =
-      Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong)
-    val mu = historyAudioMu(spark, dir)
-    val splitOf = substring(md5(concat(lit("inc:"), col("doc_id").cast("string"))), 1, 1)
-    val batch = Kernels.fanOut(
-      ingestBinary(spark, dir)
-        .filter(splitOf < Dedup.IncBatchThreshold)
-        .select("doc_id", "payload"))
-      .mapPartitions { rows: Iterator[Row] =>
-        rows.flatMap { r =>
-          audioSigOfBody(r.getAs[Array[Byte]](1), mu).map((r.getLong(0), _))
-        }
-      }
-      .toDF("batch_id", "ph")
-      .select(col("batch_id"), col("ph"),
-        explode(phashBands(col("ph"))).as("bk"))
-      .select(col("batch_id"), col("ph"),
-        col("bk.band").as("band"), col("bk.bkey").as("bkey"))
-    batch.join(historyAudioStore(spark, dir, mu), Seq("band", "bkey"))
-      .select(col("batch_id"), col("hist_id"),
-        expr("CAST(bit_count(ph ^ h_ph) AS BIGINT)").as("hamming"))
-      .filter(col("hamming") <= PhashMaxHamming)
-      .groupBy("batch_id", "hist_id")
-      .agg(min("hamming").as("hamming"))
-      .orderBy("batch_id", "hist_id")
-  }
+  def audioNearDupIncremental(spark: SparkSession, dir: String): DataFrame =
+    incremental(spark, dir, Audio)
 
   /** Batch decode: binary payloads → typed metadata via
     * `mapPartitions` (one iterator per partition; the executor
@@ -799,9 +646,7 @@ object Multimodal {
     */
   def decodeMeta(spark: SparkSession, dir: String): DataFrame = {
     implicit val enc: Encoder[MediaMeta] = Encoders.product[MediaMeta]
-    Kernels.fanOut(
-      ingestBinary(spark, dir)
-        .select("doc_id", "payload")) // single-file scan -> fan out decode
+    payloads(spark, dir)
       .mapPartitions { rows: Iterator[Row] =>
         rows.map(r => decodeMedia(r.getLong(0), r.getAs[Array[Byte]](1)))
       }
@@ -861,8 +706,7 @@ object Multimodal {
     */
   def resizeExec(spark: SparkSession, dir: String): DataFrame = {
     implicit val enc: Encoder[ResizeOut] = Encoders.product[ResizeOut]
-    Kernels.fanOut(
-      ingestBinary(spark, dir).select("doc_id", "payload"))
+    payloads(spark, dir)
       .mapPartitions { rows: Iterator[Row] =>
         rows.flatMap(r => resizeOne(r.getLong(0), r.getAs[Array[Byte]](1)))
       }
@@ -904,51 +748,23 @@ object Multimodal {
 
   val FeatureDim = 8
 
-  /** Average-pool feature extraction over the DECODED raster: split
-    * the media stream the parse located ([[bodyStart]]) into `dims`
-    * contiguous blocks (byte j → block ⌊j·dims/n⌋ — block sizes differ
-    * by at most one) and emit each block's mean byte value scaled to
-    * [0,1]. The mean is exact integer arithmetic in 10⁻⁶ units —
-    * ⌊(sum·10⁶ + den/2) / den⌋ with den = count·255 — so the oracle
-    * replays it bit-for-bit with the same integer ops. This is the
-    * classic average-pooling front of a perceptual pipeline: real
-    * pixel content, no codec needed, because BMP and PPM bodies are
-    * raw raster bytes (WAV/AVI bodies pool the same way over
-    * samples/frame data — a spectral stand-in).
+  /** Exact block means of the `len` bytes of `p` from `from`: byte j
+    * goes to block ⌊j·dims/len⌋ (block sizes differ by at most one),
+    * and each block owning ≥ 1 byte yields (0-based block, mean byte
+    * value scaled to [0,1]). The mean is exact integer arithmetic in
+    * 10⁻⁶ units — ⌊(sum·10⁶ + den/2) / den⌋ with den = count·255 — so
+    * the oracle replays it bit-for-bit with the same integer ops. The
+    * one pooling loop of the pixel features, the pixel phash channels
+    * and the per-frame video channels.
     */
-  private[graft] def blockFeatures(p: Array[Byte], dims: Int): Array[Double] = {
-    val off = bodyStart(p)
-    val n = p.length - off
+  private def blockMeans(p: Array[Byte], from: Int, len: Int,
+      dims: Int): Iterator[(Int, Double)] = {
     val sums = new Array[Long](dims)
     val cnts = new Array[Long](dims)
     var j = 0
-    while (j < n) {
-      val d = (j.toLong * dims / n).toInt
-      sums(d) += p(off + j) & 0xff
-      cnts(d) += 1
-      j += 1
-    }
-    Array.tabulate(dims) { d =>
-      val den = cnts(d) * 255
-      if (den == 0) 0.0
-      else ((sums(d) * 1000000L + den / 2) / den).toDouble / 1e6
-    }
-  }
-
-  /** [[blockFeatures]] as (0-based dim, value) pairs for POPULATED
-    * blocks only — the row-emitting form whose output matches the
-    * oracle's byte-driven replay exactly (a block owning no byte
-    * produces no row, not a 0.0 filler).
-    */
-  private[graft] def blockChannels(p: Array[Byte], dims: Int): Iterator[(Int, Double)] = {
-    val off = bodyStart(p)
-    val n = p.length - off
-    val sums = new Array[Long](dims)
-    val cnts = new Array[Long](dims)
-    var j = 0
-    while (j < n) {
-      val d = (j.toLong * dims / n).toInt
-      sums(d) += p(off + j) & 0xff
+    while (j < len) {
+      val d = (j.toLong * dims / len).toInt
+      sums(d) += p(from + j) & 0xff
       cnts(d) += 1
       j += 1
     }
@@ -958,40 +774,52 @@ object Multimodal {
     }
   }
 
-  /** The per-document pixel-channel frame (doc_id, dim, f) — one
-    * [[blockFeatures]] kernel pass shared by [[features]] (8 dims) and
-    * the perceptual-hash family ([[PhashBits]] dims). Map-only,
-    * iterator-to-iterator, typed output.
+  /** Average-pool feature extraction over the DECODED raster: the
+    * [[blockMeans]] of the media stream the parse located
+    * ([[bodyStart]]) as a dense `dims` vector, 0.0 for blocks owning no
+    * byte. This is the classic average-pooling front of a perceptual
+    * pipeline: real pixel content, no codec needed, because BMP and
+    * PPM bodies are raw raster bytes (WAV/AVI bodies pool the same way
+    * over samples/frame data — a spectral stand-in).
     */
-  private def pixelChannels(payloads: DataFrame, dims: Int): DataFrame = {
-    implicit val enc: Encoder[MediaFeature] = Encoders.product[MediaFeature]
-    Kernels.fanOut(payloads)
-      .mapPartitions { rows: Iterator[Row] =>
-        rows.flatMap { r =>
-          val id = r.getLong(0)
-          // populated channels ONLY — the oracle's byte-driven CTE can
-          // only produce rows for blocks owning >= 1 byte, so a body
-          // shorter than `dims` bytes must not emit 0.0 filler rows
-          // here (they would shift the per-dim corpus means). Same
-          // convention as the frame-granularity twin frameChannelRows.
-          blockChannels(r.getAs[Array[Byte]](1), dims)
-            .map { case (d, f) => MediaFeature(id, d + 1L, f) }
-        }
-      }
-      .toDF()
+  private[graft] def blockFeatures(p: Array[Byte], dims: Int): Array[Double] = {
+    val out = new Array[Double](dims)
+    blockChannels(p, dims).foreach { case (d, f) => out(d) = f }
+    out
+  }
+
+  /** [[blockFeatures]] as (0-based dim, value) pairs for POPULATED
+    * blocks only — the row-emitting form whose output matches the
+    * oracle's byte-driven replay exactly (a block owning no byte
+    * produces no row, not a 0.0 filler that would shift the per-dim
+    * corpus means).
+    */
+  private[graft] def blockChannels(p: Array[Byte], dims: Int): Iterator[(Int, Double)] = {
+    val off = bodyStart(p)
+    blockMeans(p, off, p.length - off, dims)
   }
 
   /** `mm_features`: [[FeatureDim]]-dim average-pool embedding per
     * payload, computed from the ACTUAL raster bytes the decode parse
-    * locates — [[blockFeatures]] over the body at [[bodyStart]]. The
-    * output joins the corpus as a (doc_id, dim, f) frame ready for
-    * [[Similarity]]/[[Dedup.embeddingNearDupLsh]]-style consumers; a
-    * production pipeline swaps the pooling kernel for a learned image
-    * encoder behind the same `mapPartitions` batch shape.
+    * locates — the populated [[blockChannels]] as (doc_id, 1-based
+    * dim, f) rows, ready for [[Similarity]]/[[Dedup.embeddingNearDupLsh]]-
+    * style consumers; a production pipeline swaps the pooling kernel
+    * for a learned image encoder behind the same `mapPartitions` batch
+    * shape. Map-only, iterator-to-iterator, typed output.
     */
-  def features(spark: SparkSession, dir: String): DataFrame =
-    pixelChannels(ingestBinary(spark, dir).select("doc_id", "payload"), FeatureDim)
+  def features(spark: SparkSession, dir: String): DataFrame = {
+    implicit val enc: Encoder[MediaFeature] = Encoders.product[MediaFeature]
+    payloads(spark, dir)
+      .mapPartitions { rows: Iterator[Row] =>
+        rows.flatMap { r =>
+          val id = r.getLong(0)
+          blockChannels(r.getAs[Array[Byte]](1), FeatureDim)
+            .map { case (d, f) => MediaFeature(id, d + 1L, f) }
+        }
+      }
+      .toDF()
       .orderBy("doc_id", "dim")
+  }
 
   /** The image-feature corpus as DENSE vectors (vec_id, v) — the
     * [[blockFeatures]] channels assembled into fixed
@@ -999,14 +827,13 @@ object Multimodal {
     * [[blockFeatures]] convention), which is the shape the ANN
     * machinery consumes: [[graft.operators.KMeansCodebook]] trains
     * cells over it and [[Similarity.annImageSearch]] serves from them.
-    * Empty bodies emit no vector (the [[pixelChannels]] convention —
+    * Empty bodies emit no vector (the [[blockChannels]] convention —
     * an all-zero vector has no direction to search by). Map-only
     * kernel, one pass over the payloads.
     */
   private[graft] def imageVectors(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    Kernels.fanOut(
-      ingestBinary(spark, dir).select("doc_id", "payload"))
+    payloads(spark, dir)
       .mapPartitions { rows: Iterator[Row] =>
         rows.flatMap { r =>
           val p = r.getAs[Array[Byte]](1)
@@ -1052,8 +879,7 @@ object Multimodal {
     */
   def frameSample(spark: SparkSession, dir: String): DataFrame = {
     implicit val enc: Encoder[VideoMeta] = Encoders.product[VideoMeta]
-    Kernels.fanOut(
-      ingestBinary(spark, dir).select("doc_id", "payload"))
+    payloads(spark, dir)
       .mapPartitions { rows: Iterator[Row] =>
         rows.flatMap(r => videoMeta(r.getLong(0), r.getAs[Array[Byte]](1)))
       }
@@ -1082,8 +908,7 @@ object Multimodal {
     */
   def frameBytes(spark: SparkSession, dir: String): DataFrame = {
     implicit val enc: Encoder[FrameBytes] = Encoders.product[FrameBytes]
-    Kernels.fanOut(
-      ingestBinary(spark, dir).select("doc_id", "payload"))
+    payloads(spark, dir)
       .mapPartitions { rows: Iterator[Row] =>
         rows.flatMap { r =>
           val p = r.getAs[Array[Byte]](1)
@@ -1121,7 +946,7 @@ object Multimodal {
   val VideoMatchMinFrames = 4L
 
   /** Per-sampled-frame phash channels ([[videoNearDup]]'s kernel):
-    * [[blockFeatures]]' block-mean pooling applied WITHIN each sampled
+    * [[blockMeans]] pooling applied WITHIN each sampled
     * frame's byte range (the [[frameBytes]] bounds — frame f owns body
     * bytes [⌊f·n/nf⌋, ⌊(f+1)·n/nf⌋)). Empty frames emit nothing;
     * channels that own no byte emit nothing (they pack as 0 bits
@@ -1136,56 +961,9 @@ object Multimodal {
         val f = s * vm.n_frames / FrameSampleK
         val from = (f * n / vm.n_frames).toInt
         val until = ((f + 1) * n / vm.n_frames).toInt
-        val flen = until - from
-        if (flen <= 0) Iterator.empty
-        else {
-          val dims = PhashBits
-          val sums = new Array[Long](dims)
-          val cnts = new Array[Long](dims)
-          var jl = 0
-          while (jl < flen) {
-            val d = (jl.toLong * dims / flen).toInt
-            sums(d) += p(off + from + jl) & 0xff
-            cnts(d) += 1
-            jl += 1
-          }
-          (0 until dims).iterator.filter(cnts(_) > 0).map { d =>
-            val den = cnts(d) * 255
-            FrameChannel(docId, s, d + 1L,
-              ((sums(d) * 1000000L + den / 2) / den).toDouble / 1e6)
-          }
-        }
+        blockMeans(p, off + from, until - from, PhashBits)
+          .map { case (d, mean) => FrameChannel(docId, s, d + 1L, mean) }
       }
-    }
-
-  /** The (doc_id, sample_no, ph) frame-signature frame under
-    * PER-CORPUS per-channel mean thresholds — the signature pipeline
-    * [[videoNearDup]] banded-joins over and [[videoSceneCuts]] scans
-    * sequentially. Channels come from the frame's actual bytes
-    * ([[frameChannelRows]]); thresholds are ONE [[PhashBits]]-row
-    * broadcast (decimal-summed, order-exact); the signature fold is
-    * one combiner-friendly groupBy per sampled frame.
-    */
-  private[graft] def corpusFrameSigs(spark: SparkSession, dir: String): DataFrame =
-    memoSig(spark, dir, "framesig")(corpusFrameSigsBuild(spark, dir))
-
-  /** The un-memoized build plan (the plan audit inspects this). */
-  private[graft] def corpusFrameSigsBuild(spark: SparkSession, dir: String): DataFrame = {
-      implicit val enc: Encoder[FrameChannel] = Encoders.product[FrameChannel]
-      val fch = Kernels.fanOut(
-        ingestBinary(spark, dir).select("doc_id", "payload"))
-        .mapPartitions { rows: Iterator[Row] =>
-          rows.flatMap(r => frameChannelRows(r.getLong(0), r.getAs[Array[Byte]](1)))
-        }
-        .toDF()
-      val mu = fch.groupBy("dim")
-        .agg(round(sum(col("f").cast("decimal(18,6)")).cast("double")
-          / count(lit(1)), 6).as("mu"))
-      fch.join(broadcast(mu), "dim")
-        .groupBy("doc_id", "sample_no")
-        .agg(sum(when(col("f") > col("mu"),
-          expr("shiftleft(CAST(1 AS BIGINT), CAST(dim - 1 AS INT))"))
-          .otherwise(lit(0L))).as("ph"))
     }
 
   /** `mm_video_neardup`: CLIP-level near-duplicate video pairs — the
@@ -1210,201 +988,27 @@ object Multimodal {
     * exact integer/6dp arithmetic the oracle replays bit-for-bit.
     */
   def videoNearDup(spark: SparkSession, dir: String): DataFrame =
-    // the signature frame is the memoized checkpoint artifact
-    // ([[corpusFrameSigs]]) — both self-join sides read its blocks
-    videoClipPairs(corpusFrameSigs(spark, dir))
-      .orderBy("doc_a", "doc_b")
-
-  /** The clip-lift band join over an explicit per-frame signature
-    * frame (doc_id, sample_no, ph) — shared by [[videoNearDup]] and
-    * [[mediaKeepNearDup]]'s video edge stream. Unordered output.
-    */
-  private[graft] def videoClipPairs(ph: DataFrame): DataFrame = {
-    val bands = frameBands(ph)
-    clipLift(bands.as("x").join(bands.as("y"),
-      col("x.b") === col("y.b") && col("x.bk") === col("y.bk") &&
-        col("x.doc_id") < col("y.doc_id")))
-  }
-
-  /** Batch-touching clip pairs via an asymmetric banded PROBE — the
-    * [[videoNearDupIncremental]] join shape over explicit sig frames:
-    * the probe side's frames band-join the full frame, so extracting
-    * one ingest batch's blast-radius edges costs |batch|×collisions,
-    * never the full corpus self-join a filter-after-the-fact pays.
-    * Pair predicate identical to [[videoClipPairs]] (the frame-match
-    * count is orientation-independent); probe-internal pairs emit in
-    * BOTH orientations, which the component fold — which symmetrizes
-    * its edge stream anyway — absorbs unchanged.
-    */
-  private[graft] def videoClipPairsProbe(probe: DataFrame, all: DataFrame): DataFrame =
-    clipLift(frameBands(probe).as("x").join(frameBands(all).as("y"),
-      col("x.b") === col("y.b") && col("x.bk") === col("y.bk") &&
-        col("x.doc_id") =!= col("y.doc_id")))
-
-  /** Band-explode a (doc_id, sample_no, ph) frame. */
-  private def frameBands(ph: DataFrame): DataFrame = {
-    val bandBits = PhashBits / PhashBands
-    val mask = (1L << bandBits) - 1
-    ph.select(col("doc_id"), col("sample_no"), col("ph"),
-        explode(sequence(lit(0), lit(PhashBands - 1))).as("b"))
-      .withColumn("bk", expr(s"shiftright(ph, CAST($bandBits * b AS INT)) & $mask"))
-  }
-
-  /** The frame-match → clip-pair lift over a banded candidate join. */
-  private def clipLift(cand: DataFrame): DataFrame =
-    cand
-      // multi-band collisions collapse STATELESSLY via the lowest-
-      // matching-band filter the streaming twin uses (one surviving
-      // row per frame pair, no distinct = no extra exchange of the
-      // banded candidate stream; same surviving set — the oracle's
-      // SELECT DISTINCT replays it)
-      .filter(firstBandOnly(col("x.ph"), col("y.ph"), col("x.b")))
-      .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"),
-        col("x.sample_no").as("sa"), col("y.sample_no").as("sb"),
-        expr("CAST(bit_count(x.ph ^ y.ph) AS BIGINT)").as("hamming"))
-      .filter(col("hamming") <= PhashMaxHamming)
-      .groupBy("doc_a", "doc_b")
-      .agg(count(lit(1)).as("n_frame_matches"), min("hamming").as("min_hamming"))
-      .filter(col("n_frame_matches") >= VideoMatchMinFrames)
-
-  /** Per-channel frame thresholds trained on the HISTORY side — the
-    * clip analogue of [[historyMu]]: new clips must be hashed with the
-    * thresholds the stored frame signatures used. Dims no history
-    * frame ever populated carry NO threshold (and therefore can never
-    * set a bit — the inner-join semantics of the full-corpus
-    * [[videoNearDup]], made explicit here). [[PhashBits]] values max,
-    * collected once and shipped in the task closure.
-    */
-  private[graft] def historyFrameMu(spark: SparkSession, dir: String): Map[Long, Double] = memoMu(dir, "framemu") {
-    implicit val enc: Encoder[FrameChannel] = Encoders.product[FrameChannel]
-    val splitOf = substring(md5(concat(lit("inc:"), col("doc_id").cast("string"))), 1, 1)
-    Kernels.fanOut(
-      ingestBinary(spark, dir)
-        .filter(splitOf >= Dedup.IncBatchThreshold)
-        .select("doc_id", "payload"))
-      .mapPartitions { rows: Iterator[Row] =>
-        rows.flatMap(r => frameChannelRows(r.getLong(0), r.getAs[Array[Byte]](1)))
-      }
-      .toDF()
-      .groupBy("dim")
-      .agg(round(sum(col("f").cast("decimal(18,6)")).cast("double")
-        / count(lit(1)), 6).as("mu"))
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-  }
-
-  /** Per-sampled-frame signatures under trained thresholds (kernel):
-    * bit d−1 set iff channel d exists, has a trained threshold, and
-    * beats it. Shared verbatim by the batch incremental and its
-    * streaming twin — same bytes, same thresholds, same bits.
-    */
-  private[graft] def frameSigRows(docId: Long, p: Array[Byte],
-      mu: Map[Long, Double]): Iterator[(Long, Long, Long)] =
-    frameChannelRows(docId, p).toSeq.groupBy(_.sample_no).iterator.collect {
-      // a frame none of whose channels carries a trained threshold has
-      // no signature at all (the inner-join semantics, kept exactly) —
-      // distinct from a frame whose thresholded channels all read 0
-      case (s, cs) if cs.exists(c => mu.contains(c.dim)) =>
-        var bits = 0L
-        cs.foreach { c =>
-          mu.get(c.dim).foreach { m => if (c.f > m) bits |= 1L << (c.dim - 1).toInt }
-        }
-        (docId, s, bits)
-    }
-
-  /** Kernel: (id, payload) → per-frame signature frame. */
-  private[graft] def frameSigFrame(payloads: DataFrame, mu: Map[Long, Double],
-      idAlias: String, sampleAlias: String, sigAlias: String): DataFrame = {
-    implicit val enc: Encoder[(Long, Long, Long)] =
-      Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong, Encoders.scalaLong)
-    Kernels.fanOut(payloads)
-      .mapPartitions { rows: Iterator[Row] =>
-        rows.flatMap(r => frameSigRows(r.getLong(0), r.getAs[Array[Byte]](1), mu))
-      }
-      .toDF(idAlias, sampleAlias, sigAlias)
-  }
-
-  /** The history side's banded FRAME-signature store (hist_id, hs,
-    * h_ph, band, bkey) — in production a materialized table maintained
-    * by ingest (the [[historyPhashStore]] contract at frame
-    * granularity).
-    */
-  private[graft] def historyFrameStore(spark: SparkSession, dir: String,
-      mu: Map[Long, Double]): DataFrame = {
-    val splitOf = substring(md5(concat(lit("inc:"), col("doc_id").cast("string"))), 1, 1)
-    frameSigFrame(
-      ingestBinary(spark, dir)
-        .filter(splitOf >= Dedup.IncBatchThreshold)
-        .select("doc_id", "payload"),
-      mu, "hist_id", "hs", "h_ph")
-      .select(col("hist_id"), col("hs"), col("h_ph"),
-        explode(phashBands(col("h_ph"))).as("bk"))
-      .select(col("hist_id"), col("hs"), col("h_ph"),
-        col("bk.band").as("band"), col("bk.bkey").as("bkey"))
-  }
-
-  /** Stateless multi-band dedup: keep a (frame-pair, band) hit only on
-    * the LOWEST band whose keys collide — band 0, or any later band
-    * whose preceding bands all differ. Each matched pair then survives
-    * on exactly one row, so the downstream count needs no `distinct` —
-    * which is what lets the STREAMING twin count frame matches with a
-    * single stateful aggregation (distinct aggregates are not
-    * streaming-legal). With [[PhashBands]] = 2 the condition is: band
-    * 0, or the band-0 keys differ.
-    */
-  private[graft] def firstBandOnly(ph: org.apache.spark.sql.Column,
-      hph: org.apache.spark.sql.Column,
-      band: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
-    val bandBits = PhashBits / PhashBands
-    val mask = (1L << bandBits) - 1
-    (1 until PhashBands).foldLeft(band === 0) { (acc, b) =>
-      acc || (band === b &&
-        (0 until b).map { lower =>
-          shiftright(ph, bandBits * lower).bitwiseAND(lit(mask)) =!=
-            shiftright(hph, bandBits * lower).bitwiseAND(lit(mask))
-        }.reduce[org.apache.spark.sql.Column](_ || _))
-    }
-  }
+    sigPairs(Frame, corpusSigs(spark, dir, Frame)).orderBy("doc_a", "doc_b")
 
   /** `mm_video_neardup_incremental`: the ingest form of clip-level
-    * near-dup — a batch of new clips probes the HISTORICAL frame-
-    * signature store only (batch-internal pairs are [[videoNearDup]]'s
-    * job on the batch alone), completing the incremental family across
-    * modalities: text, images and now video all have batch-vs-history
-    * twins. Thresholds are the history's ([[historyFrameMu]]); frame
-    * candidates come banded; multi-band collisions collapse via
-    * [[firstBandOnly]] (not `distinct` — the streaming twin shares the
-    * plan shape); the clip lift keeps the [[VideoMatchMinFrames]]
-    * floor. Scale shape: everything batch-sized except the store scan,
-    * which in production is the pre-materialized banded table.
+    * near-dup — a batch of new clips probes the HISTORICAL frame
+    * signatures only (batch-internal pairs are [[videoNearDup]]'s job
+    * on the batch alone). Thresholds are the history's
+    * ([[historyMu]]); frame candidates come banded, multi-band
+    * collisions collapse via [[firstBandOnly]] (not `distinct` — the
+    * streaming twin shares the plan shape), and the clip lift keeps
+    * the [[VideoMatchMinFrames]] floor. Scale shape: everything
+    * batch-sized except the history scan, which in production is the
+    * pre-materialized banded table.
     */
-  def videoNearDupIncremental(spark: SparkSession, dir: String): DataFrame = {
-    val mu = historyFrameMu(spark, dir)
-    val splitOf = substring(md5(concat(lit("inc:"), col("doc_id").cast("string"))), 1, 1)
-    val batch = frameSigFrame(
-      ingestBinary(spark, dir)
-        .filter(splitOf < Dedup.IncBatchThreshold)
-        .select("doc_id", "payload"),
-      mu, "batch_id", "bs", "ph")
-      .select(col("batch_id"), col("bs"), col("ph"),
-        explode(phashBands(col("ph"))).as("bk"))
-      .select(col("batch_id"), col("bs"), col("ph"),
-        col("bk.band").as("band"), col("bk.bkey").as("bkey"))
-    batch.join(historyFrameStore(spark, dir, mu), Seq("band", "bkey"))
-      .filter(firstBandOnly(col("ph"), col("h_ph"), col("band")))
-      .select(col("batch_id"), col("hist_id"),
-        expr("CAST(bit_count(ph ^ h_ph) AS BIGINT)").as("hamming"))
-      .filter(col("hamming") <= PhashMaxHamming)
-      .groupBy("batch_id", "hist_id")
-      .agg(count(lit(1)).as("n_frame_matches"), min("hamming").as("min_hamming"))
-      .filter(col("n_frame_matches") >= VideoMatchMinFrames)
-      .orderBy("batch_id", "hist_id")
-  }
+  def videoNearDupIncremental(spark: SparkSession, dir: String): DataFrame =
+    incremental(spark, dir, Frame)
 
   /** `mm_video_scene_cuts`: shot-boundary detection — the temporal
     * segmentation a video pipeline runs before sampling one keyframe
     * per shot. Each consecutive pair of a clip's sampled frames emits
     * a transition row with the Hamming distance between their
-    * perceptual hashes ([[corpusFrameSigs]] — the same signatures the
+    * perceptual hashes ([[corpusSigs]] — the same signatures the
     * near-dup family banded-joins, read sequentially here) and a cut
     * flag at distance > [[SceneCutHamming]]. Empty sampled frames have
     * no signature, so the lag pairs each frame with its nearest
@@ -1418,7 +1022,7 @@ object Multimodal {
     */
   def videoSceneCuts(spark: SparkSession, dir: String): DataFrame = {
     val byDoc = Window.partitionBy("doc_id").orderBy("sample_no")
-    corpusFrameSigs(spark, dir)
+    corpusSigs(spark, dir, Frame)
       .withColumn("prev_sample", lag(col("sample_no"), 1).over(byDoc))
       .withColumn("prev_ph", lag(col("ph"), 1).over(byDoc))
       .filter(col("prev_sample").isNotNull)
@@ -1444,7 +1048,7 @@ object Multimodal {
     */
   def videoKeyframes(spark: SparkSession, dir: String): DataFrame = {
     val byDoc = Window.partitionBy("doc_id").orderBy("sample_no")
-    corpusFrameSigs(spark, dir)
+    corpusSigs(spark, dir, Frame)
       .withColumn("prev_ph", lag(col("ph"), 1).over(byDoc))
       .withColumn("boundary",
         when(col("prev_ph").isNull ||
@@ -1478,128 +1082,258 @@ object Multimodal {
     */
   val SceneCutHamming = PhashMaxHamming
 
-  /** Per-channel thresholds trained on the HISTORY side — the phash
-    * analogue of a served index statistic: new images must be hashed
-    * with the thresholds the stored signatures used, or batch and
-    * store bits mean different things. Channels are the PIXEL block
-    * means ([[blockFeatures]] at [[PhashBits]] dims). 16 values,
-    * collected once and shipped in the task closure (the codebook
-    * contract).
-    */
-  private[graft] def historyMu(spark: SparkSession, dir: String): IndexedSeq[Double] = memoMu(dir, "pixmu") {
-    val splitOf = substring(md5(concat(lit("inc:"), col("doc_id").cast("string"))), 1, 1)
-    pixelChannels(
-      ingestBinary(spark, dir)
-        .filter(splitOf >= Dedup.IncBatchThreshold)
-        .select("doc_id", "payload"),
-      PhashBits)
-      .groupBy("dim")
-      .agg(round(sum(col("f").cast("decimal(18,6)")).cast("double")
-        / count(lit(1)), 6).as("mu"))
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).sortBy(_._1).map(_._2)
-      .toIndexedSeq
-  }
+  // ---- the banded-signature path: ONE dataflow for the image, audio
+  // and video near-dup families (channel kernel → threshold fit → bit
+  // fold → band explode → band join → XOR-popcount verify), shared by
+  // the corpus, incremental, keep-list and stream operators. A modality
+  // contributes only its channel kernel — the reference's user `mapf`
+  // (mr/worker.go): the map function varies, the dataflow around it
+  // does not. ----
 
-  /** The whole signature from one payload (kernel-side): bit i set iff
-    * pixel channel i beats its trained threshold. Shared verbatim by
-    * the batch incremental and its streaming twin
-    * ([[graft.streaming.DocStream.streamPhashIncremental]]) — same
-    * bytes, same thresholds, same bits.
+  /** A media near-dup family: its channel kernel `(docId, payload) →
+    * (sample_no, bit, value)` and the memo kinds of its corpus
+    * signatures (`<sigKind>sig`), history thresholds (`muKind`) and
+    * history-thresholded signatures (`hist<sigKind>sig`). A `clip`
+    * family hashes several samples per doc and lifts frame matches to
+    * doc pairs ([[clipLift]]); the others hash one sample (0) per doc.
     */
-  private[graft] def phashOfBody(p: Array[Byte], mu: IndexedSeq[Double]): Long = {
-    val f = blockFeatures(p, PhashBits)
-    var bits = 0L
-    var i = 0
-    while (i < PhashBits) {
-      if (f(i) > mu(i)) bits |= 1L << i
-      i += 1
-    }
-    bits
-  }
+  private[graft] final case class SigFamily(sigKind: String, muKind: String,
+      clip: Boolean, channels: (Long, Array[Byte]) => Iterator[(Long, Int, Double)])
 
-  /** Kernel: (id, payload) → (idAlias, sigAlias) signature frame with
-    * thresholds shipped in the closure.
+  /** Pixel average hash: the raster's [[blockChannels]] at [[PhashBits]]. */
+  private[graft] val Pixel = SigFamily("phash", "pixmu", clip = false,
+    (_, p) => blockChannels(p, PhashBits).map { case (d, f) => (0L, d, f) })
+
+  /** Audio energy-profile hash: [[PhashBits]] [[audioEnergyRows]] windows. */
+  private[graft] val Audio = SigFamily("audio", "audmu", clip = false,
+    (_, p) => audioEnergyRows(0L, p, PhashBits).map(e => (0L, e.win.toInt, e.energy)))
+
+  /** Video frame hash: each sampled frame's [[frameChannelRows]], bit = dim − 1. */
+  private[graft] val Frame = SigFamily("frame", "framemu", clip = true,
+    (id, p) => frameChannelRows(id, p).map(c => (c.sample_no, (c.dim - 1).toInt, c.f)))
+
+  /** Every channel (doc_id, sample_no, bit, v) of a payload frame under
+    * a family's kernel — map-only, iterator-to-iterator.
     */
-  private[graft] def phashSigFrame(payloads: DataFrame, mu: IndexedSeq[Double],
-      idAlias: String, sigAlias: String): DataFrame = {
-    implicit val enc: Encoder[(Long, Long)] =
-      Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong)
-    Kernels.fanOut(payloads)
-      .mapPartitions { rows: Iterator[Row] =>
-        // populated bodies ONLY (flatMap — the pixelChannels
-        // convention): an empty raster has no channels, so it gets NO
-        // signature row rather than an all-zero ph=0 the oracle's
-        // byte-driven replay can never produce (a ph=0 filler here
-        // would band-collide empty docs into hamming-0 pairs)
-        rows.flatMap { r =>
-          val p = r.getAs[Array[Byte]](1)
-          if (p.length - bodyStart(p) <= 0) Iterator.empty
-          else Iterator.single((r.getLong(0), phashOfBody(p, mu)))
-        }
+  private def channelRows(payloads: DataFrame, fam: SigFamily): DataFrame = {
+    implicit val enc: Encoder[(Long, Long, Int, Double)] = Encoders.tuple(
+      Encoders.scalaLong, Encoders.scalaLong, Encoders.scalaInt, Encoders.scalaDouble)
+    payloads.mapPartitions { rows: Iterator[Row] =>
+      rows.flatMap { r =>
+        val id = r.getLong(0)
+        fam.channels(id, r.getAs[Array[Byte]](1)).map { case (s, b, v) => (id, s, b, v) }
       }
-      .toDF(idAlias, sigAlias)
+    }.toDF("doc_id", "sample_no", "bit", "v")
   }
 
-  /** Band structs (band, bkey) for a signature column — map-only. */
-  private[graft] def phashBands(ph: org.apache.spark.sql.Column)
-      : org.apache.spark.sql.Column = {
+  /** The threshold fit: (bit, mu) with mu each bit's mean channel
+    * value, decimal-summed so the mean is order-exact — a
+    * [[PhashBits]]-row aggregate.
+    */
+  private def bitMeans(channels: DataFrame): DataFrame =
+    channels.groupBy("bit")
+      .agg(round(sum(col("v").cast("decimal(18,6)")).cast("double")
+        / count(lit(1)), 6).as("mu"))
+
+  /** Corpus signatures (doc_id, sample_no, ph) under thresholds fit on
+    * the same payloads — the average hash: bit b says "this sample is
+    * above the corpus mean in channel b". One map-only channel pass,
+    * the threshold frame joined by broadcast, one combiner-friendly
+    * fold per sample. The un-memoized build plan (the plan audit
+    * inspects this).
+    */
+  private[graft] def corpusSigsBuild(payloads: DataFrame, fam: SigFamily): DataFrame = {
+    val ch = channelRows(payloads, fam)
+    ch.join(broadcast(bitMeans(ch)), "bit")
+      .groupBy("doc_id", "sample_no")
+      .agg(sum(when(col("v") > col("mu"), expr("shiftleft(CAST(1 AS BIGINT), bit)"))
+        .otherwise(lit(0L))).as("ph"))
+  }
+
+  /** [[corpusSigsBuild]] over the whole media corpus, memoized per
+    * corpus ([[memoSig]]): the pair queries, the keep-lists, the scene
+    * cuts and keyframes all read one signature frame per family.
+    */
+  private[graft] def corpusSigs(spark: SparkSession, dir: String, fam: SigFamily): DataFrame =
+    memoSig(spark, dir, s"${fam.sigKind}sig")(corpusSigsBuild(payloads(spark, dir), fam))
+
+  /** Per-bit thresholds trained on the HISTORY side of the
+    * [[Dedup.split]] — new docs must hash with the thresholds the
+    * stored signatures used, or batch and store bits mean different
+    * things. Bits no history channel populated carry NO threshold and
+    * never set. ≤ [[PhashBits]] values, memoized per corpus and shipped
+    * in task closures (the codebook contract).
+    */
+  private[graft] def historyMu(spark: SparkSession, dir: String, fam: SigFamily): Map[Int, Double] =
+    fitHistoryMu(spark, dir, fam, fam.muKind, lit(true))
+
+  /** Pixel thresholds trained on the history's IMAGE docs only:
+    * [[mediaKeep]]'s image fingerprints are image-corpus-thresholded,
+    * so maintaining them needs the history slice of that same corpus.
+    */
+  private[graft] def historyImageMu(spark: SparkSession, dir: String): Map[Int, Double] =
+    fitHistoryMu(spark, dir, Pixel, "imgmu", isImagePayload)
+
+  // memoized per corpus like the k-means codebooks they parallel: every
+  // incremental/stream/maintain query would re-collect the same aggregate
+  private def fitHistoryMu(spark: SparkSession, dir: String, fam: SigFamily,
+      kind: String, only: Column): Map[Int, Double] =
+    Kernels.memo(s"mu:$kind", Kernels.inputKey(dir, "documents.parquet")) {
+      bitMeans(channelRows(payloads(spark, dir, !Dedup.isBatch(col("doc_id")) && only), fam))
+        .collect().map(r => r.getInt(0) -> r.getDouble(1)).toMap
+    }
+
+  /** One payload's per-sample signatures under trained thresholds: bit
+    * b set iff channel b exists, has a threshold and beats it. A
+    * sample none of whose channels has a threshold gets NO row (the
+    * inner-join rule of the corpus fold) — distinct from a sample
+    * whose thresholded channels all read 0.
+    */
+  private def trainedSig(fam: SigFamily, id: Long, p: Array[Byte],
+      mu: Map[Int, Double]): Iterator[(Long, Long)] =
+    fam.channels(id, p).toSeq.groupBy(_._1).iterator.collect {
+      case (s, cs) if cs.exists(c => mu.contains(c._2)) =>
+        s -> cs.foldLeft(0L) { case (acc, (_, b, v)) =>
+          if (mu.get(b).exists(v > _)) acc | (1L << b) else acc
+        }
+    }
+
+  /** (doc_id, sample_no, ph) signatures of a payload frame under the
+    * trained thresholds in the closure — map-only and stateless
+    * (streaming-legal), so the incremental queries, the memoized
+    * history frames and the stream twins hash with the same kernel.
+    */
+  private[graft] def trainedSigs(payloads: DataFrame, fam: SigFamily,
+      mu: Map[Int, Double]): DataFrame = {
+    implicit val enc: Encoder[(Long, Long, Long)] =
+      Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong, Encoders.scalaLong)
+    payloads.mapPartitions { rows: Iterator[Row] =>
+      rows.flatMap { r =>
+        val id = r.getLong(0)
+        trainedSig(fam, id, r.getAs[Array[Byte]](1), mu).map { case (s, ph) => (id, s, ph) }
+      }
+    }.toDF("doc_id", "sample_no", "ph")
+  }
+
+  /** The history side's signatures under its own thresholds — in
+    * production the banded table ingest maintains (the
+    * [[Dedup.incremental]] contract).
+    */
+  private[graft] def historySigs(spark: SparkSession, dir: String, fam: SigFamily,
+      mu: Map[Int, Double]): DataFrame =
+    trainedSigs(payloads(spark, dir, !Dedup.isBatch(col("doc_id"))), fam, mu)
+
+  /** Stateless multi-band dedup: keep a (sample-pair, band) hit only on
+    * the LOWEST band whose keys collide — band 0, or any later band
+    * whose preceding bands all differ. Each matched pair then survives
+    * on exactly one row, so the downstream count needs no `distinct` —
+    * which is what lets the STREAMING twins count matches with a
+    * single stateful aggregation (distinct aggregates are not
+    * streaming-legal). With [[PhashBands]] = 2 the condition is: band
+    * 0, or the band-0 keys differ.
+    */
+  private[graft] def firstBandOnly(ph: Column, hph: Column, band: Column): Column = {
     val bandBits = PhashBits / PhashBands
     val mask = (1L << bandBits) - 1
-    array((0 until PhashBands).map { b =>
-      struct(lit(b).as("band"),
-        shiftright(ph, bandBits * b).bitwiseAND(lit(mask)).as("bkey"))
-    }: _*)
+    (1 until PhashBands).foldLeft(band === 0) { (acc, b) =>
+      acc || (band === b &&
+        (0 until b).map { lower =>
+          shiftright(ph, bandBits * lower).bitwiseAND(lit(mask)) =!=
+            shiftright(hph, bandBits * lower).bitwiseAND(lit(mask))
+        }.reduce[Column](_ || _))
+    }
   }
 
-  /** The history side's banded signature store (hist_id, band, bkey,
-    * h_ph) — in production a materialized table maintained by ingest,
-    * here derived from the split (the [[Dedup.incremental]] contract).
+  /** Band rows (doc_id, ph, band, bkey) of a signature frame: one row
+    * per [[PhashBands]] band, keyed by its [[PhashBits]]/[[PhashBands]]
+    * bits — map-only.
     */
-  private[graft] def historyPhashStore(spark: SparkSession, dir: String,
-      mu: IndexedSeq[Double]): DataFrame = {
-    val splitOf = substring(md5(concat(lit("inc:"), col("doc_id").cast("string"))), 1, 1)
-    phashSigFrame(
-      ingestBinary(spark, dir)
-        .filter(splitOf >= Dedup.IncBatchThreshold)
-        .select("doc_id", "payload"),
-      mu, "hist_id", "h_ph")
-      .select(col("hist_id"), col("h_ph"),
-        explode(phashBands(col("h_ph"))).as("bk"))
-      .select(col("hist_id"), col("h_ph"),
-        col("bk.band").as("band"), col("bk.bkey").as("bkey"))
+  private def bands(sig: DataFrame): DataFrame = {
+    val bandBits = PhashBits / PhashBands
+    val mask = (1L << bandBits) - 1
+    sig.select(col("doc_id"), col("ph"), explode(array((0 until PhashBands).map { b =>
+        struct(lit(b).as("band"),
+          shiftright(col("ph"), bandBits * b).bitwiseAND(lit(mask)).as("bkey"))
+      }: _*)).as("bk"))
+      .select(col("doc_id"), col("ph"), col("bk.band").as("band"), col("bk.bkey").as("bkey"))
+  }
+
+  /** Banded Hamming matches (doc_a, doc_b, hamming) between two
+    * signature frames: band collisions equi-join under the `pair`
+    * predicate on the doc ids (never all-pairs), multi-band collisions
+    * collapse via [[firstBandOnly]], and an integer XOR popcount
+    * verifies at Hamming ≤ [[PhashMaxHamming]].
+    */
+  private def bandMatches(x: DataFrame, y: DataFrame,
+      pair: (Column, Column) => Column): DataFrame =
+    bands(x).as("x").join(bands(y).as("y"),
+        col("x.band") === col("y.band") && col("x.bkey") === col("y.bkey") &&
+          pair(col("x.doc_id"), col("y.doc_id")))
+      .filter(firstBandOnly(col("x.ph"), col("y.ph"), col("x.band")))
+      .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"),
+        expr("CAST(bit_count(x.ph ^ y.ph) AS BIGINT)").as("hamming"))
+      .filter(col("hamming") <= PhashMaxHamming)
+
+  /** The frame-match → clip-pair lift: two videos are near-dups when ≥
+    * [[VideoMatchMinFrames]] cross-frame pairs match.
+    */
+  private def clipLift(matches: DataFrame): DataFrame =
+    matches.groupBy("doc_a", "doc_b")
+      .agg(count(lit(1)).as("n_frame_matches"), min("hamming").as("min_hamming"))
+      .filter(col("n_frame_matches") >= VideoMatchMinFrames)
+
+  /** Corpus near-dup pairs (doc_a < doc_b) of one signature frame:
+    * image/audio pairs are the matches (one signature per doc, one row
+    * per pair after [[firstBandOnly]]); clips lift. Unordered.
+    */
+  private[graft] def sigPairs(fam: SigFamily, sig: DataFrame): DataFrame = {
+    val m = bandMatches(sig, sig, _ < _)
+    if (fam.clip) clipLift(m) else m
+  }
+
+  /** Probe pairs (doc_a from `probe`, doc_b from `store`, doc_a ≠
+    * doc_b) — the asymmetric band join whose cost is |probe| ×
+    * collisions, never the store's self-join. Image/audio fold matches
+    * per pair (a no-op after [[firstBandOnly]], and the aggregate a
+    * stream twin's complete-mode drain needs); clips lift. Pairs
+    * inside the probe come in both orientations.
+    */
+  private[graft] def probePairs(fam: SigFamily, probe: DataFrame, store: DataFrame): DataFrame = {
+    val m = bandMatches(probe, store, _ =!= _)
+    if (fam.clip) clipLift(m) else m.groupBy("doc_a", "doc_b").agg(min("hamming").as("hamming"))
+  }
+
+  /** [[probePairs]] as (batch_id, hist_id, …): the one batch-vs-history
+    * probe of the three `mm_*_incremental` queries and their stream
+    * twins.
+    */
+  private[graft] def incrementalPairs(fam: SigFamily, batch: DataFrame,
+      history: DataFrame): DataFrame =
+    probePairs(fam, batch, history)
+      .withColumnRenamed("doc_a", "batch_id").withColumnRenamed("doc_b", "hist_id")
+
+  /** An `mm_*_incremental` query: the batch side of the [[Dedup.split]]
+    * probes the history side, both hashed with the history's
+    * thresholds. Everything batch-sized except the history scan.
+    */
+  private def incremental(spark: SparkSession, dir: String, fam: SigFamily): DataFrame = {
+    val mu = historyMu(spark, dir, fam)
+    incrementalPairs(fam,
+      trainedSigs(payloads(spark, dir, Dedup.isBatch(col("doc_id"))), fam, mu),
+      historySigs(spark, dir, fam, mu))
+      .orderBy("batch_id", "hist_id")
   }
 
   /** `mm_phash_incremental`: the ingest form of perceptual dedup — a
-    * batch of new images probes the HISTORICAL signature store only
+    * batch of new images probes the HISTORICAL signatures only
     * (batch-internal pairs are [[phashPairs]]' job on the batch
-    * alone), completing the incremental family across modalities:
-    * exact, MinHash, SimHash, spans, semantic, and now images all have
-    * batch-vs-history twins. Thresholds are the history's
+    * alone): exact, MinHash, SimHash, spans, semantic, and images all
+    * have batch-vs-history twins. Thresholds are the history's
     * ([[historyMu]]); signatures hash the PIXEL blocks; candidates
-    * come banded; a multi-band collision folds to one row. Scale
-    * shape: everything batch-sized except the store scan, which in
-    * production is the pre-materialized banded signature table.
+    * come banded; a multi-band collision folds to one row.
     */
-  def phashIncremental(spark: SparkSession, dir: String): DataFrame = {
-    val mu = historyMu(spark, dir)
-    val splitOf = substring(md5(concat(lit("inc:"), col("doc_id").cast("string"))), 1, 1)
-    val batch = phashSigFrame(
-      ingestBinary(spark, dir)
-        .filter(splitOf < Dedup.IncBatchThreshold)
-        .select("doc_id", "payload"),
-      mu, "batch_id", "ph")
-      .select(col("batch_id"), col("ph"),
-        explode(phashBands(col("ph"))).as("bk"))
-      .select(col("batch_id"), col("ph"),
-        col("bk.band").as("band"), col("bk.bkey").as("bkey"))
-    batch.join(historyPhashStore(spark, dir, mu), Seq("band", "bkey"))
-      .select(col("batch_id"), col("hist_id"),
-        expr("CAST(bit_count(ph ^ h_ph) AS BIGINT)").as("hamming"))
-      .filter(col("hamming") <= PhashMaxHamming)
-      .groupBy("batch_id", "hist_id")
-      .agg(min("hamming").as("hamming"))
-      .orderBy("batch_id", "hist_id")
-  }
+  def phashIncremental(spark: SparkSession, dir: String): DataFrame =
+    incremental(spark, dir, Pixel)
 
   /** `mm_phash_pairs`: perceptual near-dup pairs over the media corpus
     * — the image half of dedup. Per-image features are the PIXEL block
@@ -1619,32 +1353,7 @@ object Multimodal {
     * integer/6dp arithmetic, replayed bit-for-bit by the oracle.
     */
   def phashPairs(spark: SparkSession, dir: String): DataFrame =
-    sigBandPairs(phashSigCorpus(spark, dir)).orderBy("doc_a", "doc_b")
-
-  /** The corpus pixel-phash signature frame (doc_id, ph) under
-    * whole-corpus per-dimension thresholds — the frame [[phashPairs]]
-    * banded-joins (the image twin of [[audioSigCorpus]]); every
-    * payload with a non-empty decoded body carries a signature. One
-    * map-only channel kernel pass, one [[PhashBits]]-row threshold
-    * broadcast (decimal-summed, order-exact), one combiner-friendly
-    * fold per document.
-    */
-  private[graft] def phashSigCorpus(spark: SparkSession, dir: String): DataFrame =
-    memoSig(spark, dir, "phashsig")(phashSigCorpusBuild(spark, dir))
-
-  /** The un-memoized build plan (the plan audit inspects this). */
-  private[graft] def phashSigCorpusBuild(spark: SparkSession, dir: String): DataFrame = {
-      val f = pixelChannels(
-        ingestBinary(spark, dir).select("doc_id", "payload"), PhashBits)
-      val mu = f.groupBy("dim")
-        .agg(round(sum(col("f").cast("decimal(18,6)")).cast("double")
-          / count(lit(1)), 6).as("mu"))
-      f.join(broadcast(mu), "dim")
-        .groupBy("doc_id")
-        .agg(sum(when(col("f") > col("mu"),
-          expr("shiftleft(CAST(1 AS BIGINT), CAST(dim - 1 AS INT))"))
-          .otherwise(lit(0L))).as("ph"))
-    }
+    sigPairs(Pixel, corpusSigs(spark, dir, Pixel)).orderBy("doc_a", "doc_b")
 
   /** `mm_media_keep`: the cross-modal dedup keep-list — ONE
     * signature-identical grouping over the whole media corpus, the
@@ -1652,9 +1361,9 @@ object Multimodal {
     * ingest keeps one representative per content group regardless of
     * container. Each payload gets its MODALITY-NATIVE fingerprint —
     * images: the [[PhashBits]]-bit pixel average hash under
-    * image-corpus thresholds; audio: the energy-profile hash
-    * ([[audioSigCorpus]]); video: a clip fingerprint folding the
-    * ordered per-frame signatures ([[corpusFrameSigs]]) — and groups
+    * image-corpus thresholds; audio: the energy-profile hash; video: a
+    * clip fingerprint folding the ordered per-frame signatures (both
+    * [[corpusSigs]]) — and groups
     * with identical (modality, fingerprint) keep their minimum doc_id
     * (the [[Dedup]] keep-list convention). Payloads with no decodable
     * content (empty bodies) have no fingerprint and emit no row.
@@ -1667,6 +1376,14 @@ object Multimodal {
     * complements (signature-EQUALITY dedup is the exact tier; the
     * banded Hamming pairs are the near tier).
     */
+  def mediaKeep(spark: SparkSession, dir: String): DataFrame =
+    // the grouped keep table is itself a memoized artifact ("one
+    // keep-list per corpus version" — the writeKeepList story): its own
+    // gate AND pack_media read it without re-running the three
+    // signature chains
+    memoSig(spark, dir, "mediakeep")(mediaKeepBuild(spark, dir))
+      .orderBy("modality", "keep_id")
+
   /** Image-format predicate as a COLUMN expression on the leading
     * payload bytes (binary substring comparisons mirror isBmp/isPpm
     * exactly: 'BM' + 54-byte header floor, or 'P6') — keeps image-side
@@ -1674,51 +1391,29 @@ object Multimodal {
     * full-row deserialization and a typed barrier. Shared by
     * [[mediaKeep]] and the keep-list maintenance twins.
     */
-  private def isImagePayload: org.apache.spark.sql.Column =
+  private def isImagePayload: Column =
     (substring(col("payload"), 1, 2) === lit("BM".getBytes("US-ASCII")) &&
       length(col("payload")) >= 54) ||
     substring(col("payload"), 1, 2) === lit("P6".getBytes("US-ASCII"))
-
-  // the grouped keep table is itself a memoized artifact ("one
-  // keep-list per corpus version" — the writeKeepList story): its own
-  // gate AND pack_media read it without re-running the three signature
-  // chains
-  def mediaKeep(spark: SparkSession, dir: String): DataFrame =
-    memoSig(spark, dir, "mediakeep") {
-      mediaKeepBuild(spark, dir)
-    }.orderBy("modality", "keep_id")
 
   /** The keep-table build plan (un-memoized) — [[mediaKeep]] caches its
     * one materialization per corpus; the plan audit inspects THIS.
     */
   private[graft] def mediaKeepBuild(spark: SparkSession, dir: String): DataFrame = {
-    val payloads = ingestBinary(spark, dir).select("doc_id", "payload")
     // IMAGE: pixel phash under IMAGE-corpus thresholds (the parsed
-    // format is the filter — magic bytes, never the synthesis formula).
-    // The magic test is a COLUMN expression on the leading payload
-    // bytes (binary substring comparisons mirror isBmp/isPpm exactly:
-    // 'BM' + 54-byte header floor, or 'P6'), so the scan stays
-    // codegen-friendly — a Row-lambda filter here forced full-row
-    // deserialization and a typed barrier ahead of pixelChannels, the
-    // only typed filter in the otherwise columnar keep-list plan.
-    val imgF = pixelChannels(payloads.filter(isImagePayload), PhashBits)
-    val imgMu = imgF.groupBy("dim")
-      .agg(round(sum(col("f").cast("decimal(18,6)")).cast("double")
-        / count(lit(1)), 6).as("mu"))
-    val imgSig = imgF.join(broadcast(imgMu), "dim")
-      .groupBy("doc_id")
-      .agg(sum(when(col("f") > col("mu"),
-        expr("shiftleft(CAST(1 AS BIGINT), CAST(dim - 1 AS INT))"))
-        .otherwise(lit(0L))).as("sig"))
+    // format is the filter — magic bytes, never the synthesis formula;
+    // a column test, so the scan stays codegen-friendly where a
+    // Row-lambda filter forced a typed barrier)
+    val imgSig = corpusSigsBuild(payloads(spark, dir, isImagePayload), Pixel)
       .select(col("doc_id"), lit("image").as("modality"),
-        col("sig").cast("string").as("fingerprint"))
+        col("ph").cast("string").as("fingerprint"))
     // AUDIO: the energy-profile hash
-    val audSig = audioSigCorpus(spark, dir)
+    val audSig = corpusSigs(spark, dir, Audio)
       .select(col("doc_id"), lit("audio").as("modality"),
         col("ph").cast("string").as("fingerprint"))
     // VIDEO: ordered fold of the per-frame signatures — re-encoded
     // copies keep frame content, so their clip fingerprints collide
-    val vidSig = corpusFrameSigs(spark, dir)
+    val vidSig = corpusSigs(spark, dir, Frame)
       .groupBy("doc_id")
       .agg(md5(concat_ws(",",
         transform(sort_array(collect_list(struct(col("sample_no"), col("ph")))),
@@ -1812,12 +1507,12 @@ object Multimodal {
     mediaKeepNearDupArtifact(spark, dir).orderBy("modality", "keep_id")
 
   private[graft] def mediaKeepNearDupBuild(spark: SparkSession, dir: String): DataFrame = {
-    val img = sigComponentKeep(spark, phashSigCorpus(spark, dir), "image")
-    val aud = sigComponentKeep(spark, audioSigCorpus(spark, dir), "audio")
-    val vidSig = corpusFrameSigs(spark, dir)
+    val img = sigComponentKeep(spark, corpusSigs(spark, dir, Pixel), "image")
+    val aud = sigComponentKeep(spark, corpusSigs(spark, dir, Audio), "audio")
+    val vidSig = corpusSigs(spark, dir, Frame)
     val vid = Dedup.clustersFromEdges(
         vidSig.select("doc_id").distinct(),
-        videoClipPairs(vidSig).select("doc_a", "doc_b"))
+        sigPairs(Frame, vidSig).select("doc_a", "doc_b"))
       .groupBy("cluster")
       .agg(count(lit(1)).as("n_members"))
       .select(lit("video").as("modality"), col("cluster").as("keep_id"),
@@ -1841,7 +1536,7 @@ object Multimodal {
     *
     * PIGEONHOLE PRECONDITION: this solves components over the FULL
     * Hamming-radius adjacency, while the pair streams
-    * ([[sigBandPairs]]) and the DuckDB oracle emit BANDED candidates —
+    * ([[sigPairs]]) and the DuckDB oracle emit BANDED candidates —
     * the two agree only because [[PhashMaxHamming]] < [[PhashBands]]
     * guarantees every within-radius pair leaves at least one band
     * untouched (≤ bands−1 differing bits cannot hit every band), i.e.
@@ -1891,23 +1586,6 @@ object Multimodal {
       .groupBy("comp")
       .agg(min("doc_id").as("keep_id"), count(lit(1)).as("n_members"))
       .select(lit(modality).as("modality"), col("keep_id"), col("n_members"))
-  }
-
-  /** Kernel: (doc_id, payload) → (doc_id, ph) audio energy-profile
-    * signatures under the thresholds in the closure — the audio twin
-    * of [[phashSigFrame]]/[[frameSigFrame]], shared by the memoized
-    * history frame and the streaming twin's per-micro-batch hashing
-    * (stateless `mapPartitions`, streaming-legal).
-    */
-  private[graft] def audioSigFrame(payloads: DataFrame,
-      mu: Map[Long, Double]): DataFrame = {
-    implicit val enc: Encoder[(Long, Long)] =
-      Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong)
-    Kernels.fanOut(payloads).mapPartitions { rows: Iterator[Row] =>
-      rows.flatMap { r =>
-        audioSigOfBody(r.getAs[Array[Byte]](1), mu).map((r.getLong(0), _))
-      }
-    }.toDF("doc_id", "ph")
   }
 
   /** One ingest batch's per-sig aggregate, collected — bounded by the
@@ -1962,7 +1640,7 @@ object Multimodal {
     * ingests, so new docs hash with the thresholds the store used —
     * the incremental convention shared with [[phashIncremental]]/
     * [[audioNearDupIncremental]]/[[videoNearDupIncremental]], whose
-    * kernels this reuses verbatim). Memoized per corpus fingerprint
+    * kernel — [[trainedSigs]] — this is). Memoized per corpus fingerprint
     * ([[memoSig]], the corpus-signature-frame contract): the
     * history-thresholded signatures are a per-corpus PRODUCT every
     * maintenance/stream run consumes — deriving them per query
@@ -1972,15 +1650,9 @@ object Multimodal {
     */
   private[graft] def mediaHistSigFrames(spark: SparkSession, dir: String)
       : (DataFrame, DataFrame, DataFrame) = {
-    def payloads = ingestBinary(spark, dir).select("doc_id", "payload")
-    val imgSig = memoSig(spark, dir, "histphashsig")(
-      phashSigFrame(payloads, historyMu(spark, dir), "doc_id", "ph"))
-    val audSig = memoSig(spark, dir, "histaudiosig")(
-      audioSigFrame(payloads, historyAudioMu(spark, dir)))
-    val vidSig = memoSig(spark, dir, "histframesig")(
-      frameSigFrame(payloads, historyFrameMu(spark, dir),
-        "doc_id", "sample_no", "ph"))
-    (imgSig, audSig, vidSig)
+    def hist(fam: SigFamily) = memoSig(spark, dir, s"hist${fam.sigKind}sig")(
+      trainedSigs(payloads(spark, dir), fam, historyMu(spark, dir, fam)))
+    (hist(Pixel), hist(Audio), hist(Frame))
   }
 
   /** The video HISTORY labels (doc → cluster over the history-only
@@ -1996,16 +1668,10 @@ object Multimodal {
       val vidSig = mediaHistSigFrames(spark, dir)._3
       Dedup.clustersFromEdges(
         vidSig.select("doc_id").distinct()
-          .filter(!isIncBatchDoc(col("doc_id"))),
-        videoClipPairs(vidSig).select("doc_a", "doc_b")
-          .filter(!isIncBatchDoc(col("doc_a")) &&
-            !isIncBatchDoc(col("doc_b"))))
+          .filter(!Dedup.isBatch(col("doc_id"))),
+        sigPairs(Frame, vidSig).select("doc_a", "doc_b")
+          .filter(!Dedup.isBatch(col("doc_a")) && !Dedup.isBatch(col("doc_b"))))
     }
-
-  /** The batch-role predicate of the shared `inc:` id-hash split. */
-  private def isIncBatchDoc(id: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    substring(md5(concat(lit("inc:"), id.cast("string"))), 1, 1) <
-      Dedup.IncBatchThreshold
 
   /** Sig-space CDC maintenance for one modality: the stored product is
     * the HISTORY sig-component keep table; an ingest batch's blast
@@ -2024,7 +1690,7 @@ object Multimodal {
       modality: String): DataFrame = {
     import spark.implicits._
     val pinned = Kernels.cacheTracked(
-      sig.withColumn("is_batch", isIncBatchDoc(col("doc_id"))))
+      sig.withColumn("is_batch", Dedup.isBatch(col("doc_id"))))
     // ONE presence pass serves both sig views: (sig, carried by any
     // HISTORY doc) — two separate distinct-collects were two jobs over
     // the same frame for strictly less information
@@ -2093,9 +1759,9 @@ object Multimodal {
     // so the end-of-query retire frees them (never the memo's blocks).
     val batchNodes = Kernels.adoptCheckpoint(
       vidSig.select("doc_id").distinct()
-        .filter(isIncBatchDoc(col("doc_id"))).localCheckpoint())
+        .filter(Dedup.isBatch(col("doc_id"))).localCheckpoint())
     val batchEdges = Kernels.adoptCheckpoint(
-      videoClipPairsProbe(vidSig.filter(isIncBatchDoc(col("doc_id"))), vidSig)
+      probePairs(Frame, vidSig.filter(Dedup.isBatch(col("doc_id"))), vidSig)
         .select("doc_a", "doc_b").localCheckpoint())
     val hist = vidHistLabels(spark, dir)
     mark("vid_hist_labels")
@@ -2109,75 +1775,31 @@ object Multimodal {
   // maintained store (the dedup_keep_maintain pattern at the media
   // modalities) ----
 
-  /** Per-dimension pixel thresholds trained on the HISTORY side's
-    * IMAGE docs — the keep-list maintenance analogue of [[historyMu]]
-    * (which trains over the WHOLE history corpus for the cross-format
-    * phash probe): [[mediaKeep]]'s image fingerprints are
-    * image-corpus-thresholded, so maintaining them needs the history
-    * slice of that same corpus. Dims no history image populated carry
-    * NO threshold (inner-join semantics). ≤ [[PhashBits]] values,
-    * collected once and shipped in task closures.
-    */
-  private[graft] def historyImageMu(spark: SparkSession, dir: String): Map[Long, Double] = memoMu(dir, "imgmu") {
-    val splitOf = substring(md5(concat(lit("inc:"), col("doc_id").cast("string"))), 1, 1)
-    pixelChannels(
-      ingestBinary(spark, dir)
-        .filter(splitOf >= Dedup.IncBatchThreshold)
-        .select("doc_id", "payload")
-        .filter(isImagePayload),
-      PhashBits)
-      .groupBy("dim")
-      .agg(round(sum(col("f").cast("decimal(18,6)")).cast("double")
-        / count(lit(1)), 6).as("mu"))
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-  }
-
-  /** The pixel average-hash from one payload under TRAINED
-    * per-dimension thresholds — bit d−1 set iff block d is populated,
-    * has a threshold, and beats it; None when no populated block
-    * carries a trained threshold (the [[frameSigRows]] inner-join
-    * convention). The Map-keyed twin of [[phashOfBody]] (whose dense
-    * IndexedSeq assumes every dim trained — true for whole-corpus
-    * thresholds, not for a maintained store's).
-    */
-  private[graft] def phashOfBodyMap(p: Array[Byte], mu: Map[Long, Double]): Option[Long] = {
-    val chans = blockChannels(p, PhashBits).toSeq
-    if (!chans.exists { case (d, _) => mu.contains(d + 1L) }) None
-    else Some(chans.foldLeft(0L) { case (acc, (d, f)) =>
-      mu.get(d + 1L) match {
-        case Some(m) if f > m => acc | (1L << d)
-        case _ => acc
-      }
-    })
-  }
-
   /** One payload's modality-native fingerprint under TRAINED
     * thresholds — the [[mediaKeep]] signature law with the history's
     * thresholds in the closure, dispatched on the PARSED format
     * (magic bytes, the [[decodeMedia]] contract): images the pixel
     * phash, audio the energy-profile hash, video the md5 fold of the
-    * ordered per-frame signatures. None for undecodable payloads or
-    * payloads none of whose channels/windows/frames carry a trained
-    * threshold. Shared verbatim by the batch maintenance and its
-    * streaming twin — same bytes, same thresholds, same fingerprints.
+    * ordered per-frame signatures, each from [[trainedSig]]. None for
+    * undecodable payloads or payloads none of whose channels carry a
+    * trained threshold.
     */
   private[graft] def mediaSigOfPayload(p: Array[Byte],
-      imgMu: Map[Long, Double], audMu: Map[Long, Double],
-      vidMu: Map[Long, Double]): Option[(String, String)] =
-    if (isBmp(p) || isPpm(p))
-      phashOfBodyMap(p, imgMu).map(s => ("image", s.toString))
-    else if (isWav(p))
-      audioSigOfBody(p, audMu).map(s => ("audio", s.toString))
+      imgMu: Map[Int, Double], audMu: Map[Int, Double],
+      vidMu: Map[Int, Double]): Option[(String, String)] = {
+    def sigs(fam: SigFamily, mu: Map[Int, Double]) = trainedSig(fam, 0L, p, mu).toSeq
+    if (isBmp(p) || isPpm(p)) sigs(Pixel, imgMu).headOption.map(s => ("image", s._2.toString))
+    else if (isWav(p)) sigs(Audio, audMu).headOption.map(s => ("audio", s._2.toString))
     else if (isAvi(p)) {
-      val frames = frameSigRows(0L, p, vidMu).toSeq
+      val frames = sigs(Frame, vidMu)
       if (frames.isEmpty) None
       else {
-        val folded = frames.sortBy(_._2).map(f => s"${f._2}:${f._3}").mkString(",")
-        val md = java.security.MessageDigest.getInstance("MD5")
-          .digest(folded.getBytes("UTF-8"))
-        Some(("video", md.map("%02x".format(_)).mkString))
+        val folded = frames.sortBy(_._1).map { case (n, ph) => s"$n:$ph" }.mkString(",")
+        Some(("video", MessageDigest.getInstance("MD5")
+          .digest(folded.getBytes("UTF-8")).map("%02x".format(_)).mkString))
       }
     } else None
+  }
 
   /** Kernel: an explicit (doc_id, payload) frame → (doc_id, modality,
     * fingerprint) under the thresholds in the closure. Map-only,
@@ -2185,8 +1807,8 @@ object Multimodal {
     * the batch maintenance and the stream's per-micro-batch ingest.
     */
   private[graft] def mediaSigFrame(payloads: DataFrame,
-      imgMu: Map[Long, Double], audMu: Map[Long, Double],
-      vidMu: Map[Long, Double]): DataFrame = {
+      imgMu: Map[Int, Double], audMu: Map[Int, Double],
+      vidMu: Map[Int, Double]): DataFrame = {
     implicit val enc: Encoder[(Long, String, String)] = Encoders.tuple(
       Encoders.scalaLong, Encoders.STRING, Encoders.STRING)
     payloads.mapPartitions { rows: Iterator[Row] =>
@@ -2200,21 +1822,15 @@ object Multimodal {
   /** The HISTORY corpus's keep store — [[mediaKeep]]'s grouping over
     * the history docs under history-trained thresholds: the durable
     * artifact ingest maintenance merges into (in production a
-    * materialized table; the [[historyPhashStore]] contract at the
+    * materialized table; the [[historySigs]] contract at the
     * keep-list product).
     */
   private[graft] def mediaKeepHistoryStore(spark: SparkSession, dir: String,
-      imgMu: Map[Long, Double], audMu: Map[Long, Double],
-      vidMu: Map[Long, Double]): DataFrame = {
-    val splitOf = substring(md5(concat(lit("inc:"), col("doc_id").cast("string"))), 1, 1)
-    mediaSigFrame(
-      Kernels.fanOut(ingestBinary(spark, dir)
-        .filter(splitOf >= Dedup.IncBatchThreshold)
-        .select("doc_id", "payload")),
-      imgMu, audMu, vidMu)
+      imgMu: Map[Int, Double], audMu: Map[Int, Double],
+      vidMu: Map[Int, Double]): DataFrame =
+    mediaSigFrame(payloads(spark, dir, !Dedup.isBatch(col("doc_id"))), imgMu, audMu, vidMu)
       .groupBy("modality", "fingerprint")
       .agg(min("doc_id").as("keep_id"), count(lit(1)).as("n_members"))
-  }
 
   /** Merge one ingest batch's fingerprint groups into a keep store —
     * the [[Dedup.maintainKeep]] CDC shape at the media keep-list:
@@ -2257,13 +1873,9 @@ object Multimodal {
     */
   def mediaKeepMaintain(spark: SparkSession, dir: String): DataFrame = {
     val imgMu = historyImageMu(spark, dir)
-    val audMu = historyAudioMu(spark, dir)
-    val vidMu = historyFrameMu(spark, dir)
-    val splitOf = substring(md5(concat(lit("inc:"), col("doc_id").cast("string"))), 1, 1)
-    val batch = mediaSigFrame(
-      Kernels.fanOut(ingestBinary(spark, dir)
-        .filter(splitOf < Dedup.IncBatchThreshold)
-        .select("doc_id", "payload")),
+    val audMu = historyMu(spark, dir, Audio)
+    val vidMu = historyMu(spark, dir, Frame)
+    val batch = mediaSigFrame(payloads(spark, dir, Dedup.isBatch(col("doc_id"))),
       imgMu, audMu, vidMu)
     mergeMediaKeep(mediaKeepHistoryStore(spark, dir, imgMu, audMu, vidMu), batch)
       .orderBy("modality", "keep_id")

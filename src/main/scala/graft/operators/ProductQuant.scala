@@ -502,19 +502,12 @@ object ProductQuant {
   // celled stores. The keep-list got exactly this in
   // Dedup.keepMaintain; the index now has its twin.
 
-  /** Batch-role predicate: the shared `inc:` id-hash split applied to
-    * vectors ([[graft.operators.Dedup]]'s convention, so the "ingest
-    * batch" is the same slice of ids every incremental query uses).
-    */
-  private def isIncBatchVec(id: org.apache.spark.sql.Column) =
-    substring(md5(concat(lit("inc:"), id.cast("string"))), 1, 1) < Dedup.IncBatchThreshold
-
   /** The history corpus (trains the index) under the `inc:` split. */
   private def histVecBase(spark: SparkSession, dir: String): DataFrame =
     Kernels.fanOut(
       Tables.embeddings(spark, dir)
         .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-        .filter(!isIncBatchVec(col("vec_id"))))
+        .filter(!Dedup.isBatch(col("vec_id"))))
 
   /** History-corpus memo key — distinct from the full-table keys so
     * the history-trained codebooks never collide with the full-corpus
@@ -635,7 +628,7 @@ object ProductQuant {
       // --- the maintenance step: frozen-codebook ingest of the batch
       appendBatchToIndex(
         Tables.embeddings(spark, dir)
-          .filter(isIncBatchVec(col("vec_id"))), root)
+          .filter(Dedup.isBatch(col("vec_id"))), root)
     }
 
   /** Compacts a maintained celled artifact into a self-contained twin

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 import org.apache.spark.sql.types._
 
-import graft.operators.TextAnalysis
+import graft.operators.{Dedup, Kernels, Multimodal, TextAnalysis}
 
 /** Streaming document-ingest operators (north star — the reference is
   * strictly batch, SURVEY.md §2.5). Same harness contract as
@@ -102,9 +102,8 @@ object DocStream {
     * gates both.
     */
   def streamIncrementalDedup(spark: SparkSession, dir: String): DataFrame = {
-    import graft.operators.Dedup
     val fpOf = md5(TextAnalysis.normalizedText(col("text")))
-    val splitOf = substring(md5(concat(lit("inc:"), col("doc_id").cast("string"))), 1, 1)
+    val splitOf = Dedup.split(col("doc_id"))
     val store = graft.Tables.documents(spark, dir)
       .select(fpOf.as("fp"), splitOf.as("split"))
       .filter(col("split") >= Dedup.IncBatchThreshold)
@@ -147,10 +146,9 @@ object DocStream {
     * split, so the DuckDB replay gates it exactly.
     */
   def streamSpanDedup(spark: SparkSession, dir: String): DataFrame = {
-    import graft.operators.Dedup
     val k = Dedup.SpanK
     val toksOf = TextAnalysis.tokens(lower(col("text")))
-    val splitOf = substring(md5(concat(lit("inc:"), col("doc_id").cast("string"))), 1, 1)
+    val splitOf = Dedup.split(col("doc_id"))
     def gramsOf(toks: org.apache.spark.sql.Column) =
       when(size(toks) >= k,
         transform(sequence(lit(1), size(toks) - (k - 1)),
@@ -210,7 +208,6 @@ object DocStream {
     * batch query bit-for-bit, so the SAME oracle gates both.
     */
   def streamIncrementalMinHash(spark: SparkSession, dir: String): DataFrame = {
-    import graft.operators.{Dedup, Kernels}
     // the DURABLE band-store artifact (built once per corpus/JVM, the
     // production pre-materialized table): the drain's per-batch probes
     // read stored rows, never re-run the history shingle + signature
@@ -222,7 +219,7 @@ object DocStream {
     val store = spark.read.parquet(Dedup.ensureBandStore(spark, dir))
     val toksLower = filter(
       split(lower(col("text")), TextAnalysis.TokenSplitRe), t => length(t) > 0)
-    val splitOf = substring(md5(concat(lit("inc:"), col("doc_id").cast("string"))), 1, 1)
+    val splitOf = Dedup.split(col("doc_id"))
     // signature via the batch's typed byte-level kernel (stateless
     // mapPartitions — streaming-legal); the earlier declarative
     // 16×md5-per-shingle expression made this the slowest bench query
@@ -315,9 +312,8 @@ object DocStream {
     * both.
     */
   def streamIncrementalSemantic(spark: SparkSession, dir: String): DataFrame = {
-    import graft.operators.{Dedup, Kernels}
     import graft.functions.VectorFunctions.dot
-    val splitOf = substring(md5(concat(lit("inc:"), col("vec_id").cast("string"))), 1, 1)
+    val splitOf = Dedup.split(col("vec_id"))
     val idx = Kernels.cacheTracked(
       Dedup.cappedCelledIndex(spark, dir).withColumn("split", splitOf))
     val history = idx.filter(col("split") >= Dedup.IncBatchThreshold)
@@ -343,160 +339,74 @@ object DocStream {
     finally Dedup.retireCaches()
   }
 
-  /** `stream_phash_incremental`: the ingest-stream twin of
-    * [[graft.operators.Multimodal.phashIncremental]] — newly-arriving
-    * media probes the HISTORICAL perceptual-signature store per
-    * micro-batch. The trained thresholds ride the task closure (16
-    * values — the codebook contract), the signature is the SAME pixel
-    * kernel as the batch query ([[graft.operators.Multimodal.phashOfBody]]
-    * over the parsed raster — stateless `mapPartitions`,
-    * streaming-legal), its bands are map-only expressions, candidates
-    * come from a stream-static equi-join on the banded store, and the
-    * only aggregation is the multi-band-collision fold (a pair can
-    * collide on both bands), so the complete-mode result equals the
-    * batch query bit-for-bit and the SAME oracle gates both.
+  /** The media ingest stream (doc_id, payload): newly-arriving
+    * documents on the batch side of the [[graft.operators.Dedup.split]],
+    * synthesized into container payloads by the batch ingest's own
+    * [[graft.operators.Multimodal.payloadOf]] — the one streaming source
+    * of the media twins. `glob` and `filesPerTrigger` let a spec drive
+    * a multi-file copy of the corpus one file per trigger.
     */
-  def streamPhashIncremental(spark: SparkSession, dir: String): DataFrame = {
-    import graft.operators.{Dedup, Kernels, Multimodal}
-    val mu = Multimodal.historyMu(spark, dir)
-    val store = Kernels.cacheTracked(Multimodal.historyPhashStore(spark, dir, mu))
-    val splitOf = substring(md5(concat(lit("inc:"), col("doc_id").cast("string"))), 1, 1)
-    val synth = udf((body: Array[Byte]) => Multimodal.synthPayload(body))
-    implicit val sigEnc: org.apache.spark.sql.Encoder[(Long, Long)] =
-      org.apache.spark.sql.Encoders.tuple(
-        org.apache.spark.sql.Encoders.scalaLong,
-        org.apache.spark.sql.Encoders.scalaLong)
-    val pairs = spark.readStream
+  private def payloadStream(spark: SparkSession, srcDir: String,
+      glob: String = "documents.parquet",
+      filesPerTrigger: Option[Int] = None): DataFrame = {
+    val reader = spark.readStream
       .schema(documentsSchema)
-      .option("pathGlobFilter", "documents.parquet")
-      .parquet(dir)
-      .select(col("doc_id"), col("text"), splitOf.as("split"))
-      .filter(col("split") < Dedup.IncBatchThreshold)
-      .select(col("doc_id"), synth(encode(col("text"), "UTF-8")).as("payload"))
-      .mapPartitions { rows: Iterator[org.apache.spark.sql.Row] =>
-        rows.map(r =>
-          (r.getLong(0), Multimodal.phashOfBody(r.getAs[Array[Byte]](1), mu)))
-      }
-      .toDF("batch_id", "ph")
-      .select(col("batch_id"), col("ph"),
-        explode(Multimodal.phashBands(col("ph"))).as("bk"))
-      .select(col("batch_id"), col("ph"),
-        col("bk.band").as("band"), col("bk.bkey").as("bkey"))
-      .join(store, Seq("band", "bkey"))
-      .select(col("batch_id"), col("hist_id"),
-        expr("CAST(bit_count(ph ^ h_ph) AS BIGINT)").as("hamming"))
-      .filter(col("hamming") <= Multimodal.PhashMaxHamming)
-      .groupBy("batch_id", "hist_id")
-      .agg(min("hamming").as("hamming"))
+      .option("pathGlobFilter", glob)
+    filesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n.toString))
+    reader.parquet(srcDir)
+      .filter(Dedup.isBatch(col("doc_id")))
+      .select(col("doc_id"), Multimodal.payloadOf(col("text")).as("payload"))
+  }
+
+  /** A media near-dup stream twin: newly-arriving media probes the
+    * HISTORICAL signatures per micro-batch. The history's trained
+    * thresholds ride the task closure (≤ PhashBits values — the
+    * codebook contract), each micro-batch hashes with the batch
+    * query's kernel ([[graft.operators.Multimodal.trainedSigs]] —
+    * stateless `mapPartitions`, streaming-legal) and probes through
+    * the batch query's band join
+    * ([[graft.operators.Multimodal.incrementalPairs]] — a stream-static
+    * equi-join on the cached history signatures, multi-band collisions
+    * collapsed statelessly by
+    * [[graft.operators.Multimodal.firstBandOnly]]). The only
+    * aggregation is that probe's per-pair fold (the clip lift for
+    * video), so the complete-mode result equals the batch query
+    * bit-for-bit and the SAME oracle gates both.
+    */
+  private def streamProbe(spark: SparkSession, dir: String,
+      fam: Multimodal.SigFamily): DataFrame = {
+    val mu = Multimodal.historyMu(spark, dir, fam)
+    val history = Kernels.cacheTracked(Multimodal.historySigs(spark, dir, fam, mu))
+    val pairs = Multimodal.incrementalPairs(fam,
+      Multimodal.trainedSigs(payloadStream(spark, dir), fam, mu), history)
     try Streams.drain(pairs, OutputMode.Complete(), Streams.stateWidth(spark))
       .orderBy("batch_id", "hist_id")
     finally Dedup.retireCaches()
   }
+
+  /** `stream_phash_incremental`: the ingest-stream twin of
+    * [[graft.operators.Multimodal.phashIncremental]] ([[streamProbe]]
+    * over the pixel phash).
+    */
+  def streamPhashIncremental(spark: SparkSession, dir: String): DataFrame =
+    streamProbe(spark, dir, Multimodal.Pixel)
 
   /** `stream_audio_neardup`: the ingest-stream twin of
-    * [[graft.operators.Multimodal.audioNearDupIncremental]] — newly-
-    * arriving clips probe the HISTORICAL energy-signature store per
-    * micro-batch. The trained per-window thresholds ride the task
-    * closure; the signature is the SAME sample-width-aware kernel as
-    * the batch query ([[graft.operators.Multimodal.audioSigOfBody]] —
-    * stateless `mapPartitions`, streaming-legal); bands are map-only
-    * expressions; candidates come from a stream-static equi-join on
-    * the banded store; and the only aggregation is the multi-band-
-    * collision fold, so the complete-mode result equals the batch
-    * query bit-for-bit and the SAME oracle gates both.
+    * [[graft.operators.Multimodal.audioNearDupIncremental]]
+    * ([[streamProbe]] over the energy-profile hash).
     */
-  def streamAudioNearDup(spark: SparkSession, dir: String): DataFrame = {
-    import graft.operators.{Dedup, Kernels, Multimodal}
-    val mu = Multimodal.historyAudioMu(spark, dir)
-    val store = Kernels.cacheTracked(Multimodal.historyAudioStore(spark, dir, mu))
-    val splitOf = substring(md5(concat(lit("inc:"), col("doc_id").cast("string"))), 1, 1)
-    val synth = udf((body: Array[Byte]) => Multimodal.synthPayload(body))
-    implicit val sigEnc: org.apache.spark.sql.Encoder[(Long, Long)] =
-      org.apache.spark.sql.Encoders.tuple(
-        org.apache.spark.sql.Encoders.scalaLong,
-        org.apache.spark.sql.Encoders.scalaLong)
-    val pairs = spark.readStream
-      .schema(documentsSchema)
-      .option("pathGlobFilter", "documents.parquet")
-      .parquet(dir)
-      .select(col("doc_id"), col("text"), splitOf.as("split"))
-      .filter(col("split") < Dedup.IncBatchThreshold)
-      .select(col("doc_id"), synth(encode(col("text"), "UTF-8")).as("payload"))
-      .mapPartitions { rows: Iterator[org.apache.spark.sql.Row] =>
-        rows.flatMap { r =>
-          Multimodal.audioSigOfBody(r.getAs[Array[Byte]](1), mu)
-            .map((r.getLong(0), _))
-        }
-      }
-      .toDF("batch_id", "ph")
-      .select(col("batch_id"), col("ph"),
-        explode(Multimodal.phashBands(col("ph"))).as("bk"))
-      .select(col("batch_id"), col("ph"),
-        col("bk.band").as("band"), col("bk.bkey").as("bkey"))
-      .join(store, Seq("band", "bkey"))
-      .select(col("batch_id"), col("hist_id"),
-        expr("CAST(bit_count(ph ^ h_ph) AS BIGINT)").as("hamming"))
-      .filter(col("hamming") <= Multimodal.PhashMaxHamming)
-      .groupBy("batch_id", "hist_id")
-      .agg(min("hamming").as("hamming"))
-    try Streams.drain(pairs, OutputMode.Complete(), Streams.stateWidth(spark))
-      .orderBy("batch_id", "hist_id")
-    finally Dedup.retireCaches()
-  }
+  def streamAudioNearDup(spark: SparkSession, dir: String): DataFrame =
+    streamProbe(spark, dir, Multimodal.Audio)
 
   /** `stream_video_neardup`: the ingest-stream twin of
-    * [[graft.operators.Multimodal.videoNearDupIncremental]] — newly-
-    * arriving clips probe the HISTORICAL frame-signature store per
-    * micro-batch. Frame signatures are the SAME kernel as the batch
-    * query ([[graft.operators.Multimodal.frameSigRows]] with the
-    * trained thresholds in the closure — stateless `mapPartitions`),
-    * candidates come from a stream-static equi-join on the banded
-    * store, multi-band collisions collapse STATELESSLY via
-    * [[graft.operators.Multimodal.firstBandOnly]] (a `distinct` here
-    * would be a second stateful operator — not streaming-legal next to
-    * the clip aggregation), and the single complete-mode aggregation
-    * lifts frame matches to clip pairs, so the result equals the batch
-    * query bit-for-bit and the SAME oracle gates both.
+    * [[graft.operators.Multimodal.videoNearDupIncremental]]
+    * ([[streamProbe]] over the frame hashes; the clip lift is the one
+    * complete-mode aggregation — a `distinct` for the multi-band
+    * collapse would be a second stateful operator, not streaming-legal
+    * next to it).
     */
-  def streamVideoNearDup(spark: SparkSession, dir: String): DataFrame = {
-    import graft.operators.{Dedup, Kernels, Multimodal}
-    val mu = Multimodal.historyFrameMu(spark, dir)
-    val store = Kernels.cacheTracked(Multimodal.historyFrameStore(spark, dir, mu))
-    val splitOf = substring(md5(concat(lit("inc:"), col("doc_id").cast("string"))), 1, 1)
-    val synth = udf((body: Array[Byte]) => Multimodal.synthPayload(body))
-    implicit val sigEnc: org.apache.spark.sql.Encoder[(Long, Long, Long)] =
-      org.apache.spark.sql.Encoders.tuple(
-        org.apache.spark.sql.Encoders.scalaLong,
-        org.apache.spark.sql.Encoders.scalaLong,
-        org.apache.spark.sql.Encoders.scalaLong)
-    val pairs = spark.readStream
-      .schema(documentsSchema)
-      .option("pathGlobFilter", "documents.parquet")
-      .parquet(dir)
-      .select(col("doc_id"), col("text"), splitOf.as("split"))
-      .filter(col("split") < Dedup.IncBatchThreshold)
-      .select(col("doc_id"), synth(encode(col("text"), "UTF-8")).as("payload"))
-      .mapPartitions { rows: Iterator[org.apache.spark.sql.Row] =>
-        rows.flatMap(r =>
-          Multimodal.frameSigRows(r.getLong(0), r.getAs[Array[Byte]](1), mu))
-      }
-      .toDF("batch_id", "bs", "ph")
-      .select(col("batch_id"), col("bs"), col("ph"),
-        explode(Multimodal.phashBands(col("ph"))).as("bk"))
-      .select(col("batch_id"), col("bs"), col("ph"),
-        col("bk.band").as("band"), col("bk.bkey").as("bkey"))
-      .join(store, Seq("band", "bkey"))
-      .filter(Multimodal.firstBandOnly(col("ph"), col("h_ph"), col("band")))
-      .select(col("batch_id"), col("hist_id"),
-        expr("CAST(bit_count(ph ^ h_ph) AS BIGINT)").as("hamming"))
-      .filter(col("hamming") <= Multimodal.PhashMaxHamming)
-      .groupBy("batch_id", "hist_id")
-      .agg(count(lit(1)).as("n_frame_matches"), min("hamming").as("min_hamming"))
-      .filter(col("n_frame_matches") >= Multimodal.VideoMatchMinFrames)
-    try Streams.drain(pairs, OutputMode.Complete(), Streams.stateWidth(spark))
-      .orderBy("batch_id", "hist_id")
-    finally Dedup.retireCaches()
-  }
+  def streamVideoNearDup(spark: SparkSession, dir: String): DataFrame =
+    streamProbe(spark, dir, Multimodal.Frame)
 
   /** STREAMING FLAGSHIP — [[graft.operators.Corpus.ingest]] run as a
     * continuous stream: the full per-batch ingest composition (quality
@@ -527,9 +437,9 @@ object DocStream {
     * makes the batch oracle replay the stream bit-for-bit.
     */
   def streamPipelineIngest(spark: SparkSession, dir: String): DataFrame = {
-    import graft.operators.{Corpus, Dedup, Kernels}
+    import graft.operators.Corpus
     val fpOf = md5(TextAnalysis.normalizedText(col("text")))
-    val splitOf = substring(md5(concat(lit("inc:"), col("doc_id").cast("string"))), 1, 1)
+    val splitOf = Dedup.split(col("doc_id"))
     // static sides — in production: materialized store tables appended
     // per ingest; cached because four band probes (and every
     // micro-batch) re-read them
@@ -836,7 +746,7 @@ object DocStream {
     * and band-store maintenance streams.
     */
   def streamAnnMaintain(spark: SparkSession, dir: String): DataFrame = {
-    import graft.operators.{Dedup, ProductQuant}
+    import graft.operators.ProductQuant
     // the trained BASE layer is immutable and memoized per corpus —
     // the stream never writes it; each call owns only a DELTA layer of
     // its batches' celled rows (the LSM shape: base + delta at serve,
@@ -848,19 +758,17 @@ object DocStream {
     // ingest + serve run inside the finally so a failure anywhere never
     // leaks the delta; the serve result is an eager checkpoint leaf
     try {
-      val splitOf =
-        substring(md5(concat(lit("inc:"), col("vec_id").cast("string"))), 1, 1)
       Streams.drainBatches(spark.readStream
         .schema(embeddingsSchema)
         .option("pathGlobFilter", "embeddings.parquet")
         .parquet(dir)
         .select(col("vec_id"), col("embedding"))
-        .filter(splitOf < Dedup.IncBatchThreshold)) { (batch, _) =>
+        .filter(Dedup.isBatch(col("vec_id")))) { (batch, _) =>
         ProductQuant.appendBatchToIndex(batch, base, delta)
       }
-      graft.operators.Kernels.trackedCheckpoint(
+      Kernels.trackedCheckpoint(
         ProductQuant.annIvfPqFromLayers(spark, dir, base, delta))
-    } finally graft.operators.Kernels.rmTree(tmp.toFile)
+    } finally Kernels.rmTree(tmp.toFile)
   }
 
   /** `stream_media_keep`: the streaming twin of
@@ -882,10 +790,9 @@ object DocStream {
     * band-store and ANN-index maintenance streams.
     */
   def streamMediaKeep(spark: SparkSession, dir: String): DataFrame = {
-    import graft.operators.{Dedup, Kernels, Multimodal}
     val imgMu = Multimodal.historyImageMu(spark, dir)
-    val audMu = Multimodal.historyAudioMu(spark, dir)
-    val vidMu = Multimodal.historyFrameMu(spark, dir)
+    val audMu = Multimodal.historyMu(spark, dir, Multimodal.Audio)
+    val vidMu = Multimodal.historyMu(spark, dir, Multimodal.Frame)
     val tmp = java.nio.file.Files.createTempDirectory("graft-stream-mediakeep")
     try {
       Multimodal.mediaKeepHistoryStore(spark, dir, imgMu, audMu, vidMu)
@@ -896,28 +803,18 @@ object DocStream {
       // var rides an unsynchronized ObjectRef, leaving visibility to
       // incidental locking inside the streaming engine
       val version = new java.util.concurrent.atomic.AtomicInteger(0)
-      val splitOf =
-        substring(md5(concat(lit("inc:"), col("doc_id").cast("string"))), 1, 1)
-      val synth = udf((body: Array[Byte]) => Multimodal.synthPayload(body))
-      Streams.drainBatches(spark.readStream
-        .schema(documentsSchema)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(dir)
-        .select(col("doc_id"), col("text"), splitOf.as("split"))
-        .filter(col("split") < Dedup.IncBatchThreshold)
-        .select(col("doc_id"), synth(encode(col("text"), "UTF-8")).as("payload"))) {
-        (batch, _) =>
-          val v = version.get()
-          val sigs = Multimodal.mediaSigFrame(batch, imgMu, audMu, vidMu)
-          Multimodal.mergeMediaKeep(
-              spark.read.parquet(s"$tmp/keep_v$v"), sigs)
-            .write.parquet(s"$tmp/keep_v${v + 1}")
-          version.incrementAndGet()
+      Streams.drainBatches(payloadStream(spark, dir)) { (batch, _) =>
+        val v = version.get()
+        val sigs = Multimodal.mediaSigFrame(batch, imgMu, audMu, vidMu)
+        Multimodal.mergeMediaKeep(
+            spark.read.parquet(s"$tmp/keep_v$v"), sigs)
+          .write.parquet(s"$tmp/keep_v${v + 1}")
+        version.incrementAndGet()
       }
       Kernels.trackedCheckpoint(
         spark.read.parquet(s"$tmp/keep_v${version.get()}")
           .orderBy("modality", "keep_id"))
-    } finally graft.operators.Kernels.rmTree(tmp.toFile)
+    } finally Kernels.rmTree(tmp.toFile)
   }
 
   /** `stream_media_keep_neardup`: the streaming twin of
@@ -984,14 +881,11 @@ object DocStream {
   private[graft] def streamMediaKeepNearDupFrom(
       spark: SparkSession, dir: String, srcDir: String, glob: String,
       filesPerTrigger: Option[Int], contractEvery: Int): DataFrame = {
-    import graft.operators.{Dedup, Kernels, Multimodal}
-    val imgMu = Multimodal.historyMu(spark, dir)
-    val audMu = Multimodal.historyAudioMu(spark, dir)
-    val vidMu = Multimodal.historyFrameMu(spark, dir)
+    val imgMu = Multimodal.historyMu(spark, dir, Multimodal.Pixel)
+    val audMu = Multimodal.historyMu(spark, dir, Multimodal.Audio)
+    val vidMu = Multimodal.historyMu(spark, dir, Multimodal.Frame)
     val (imgSig, audSig, vidSig) = Multimodal.mediaHistSigFrames(spark, dir)
-    val splitOf =
-      substring(md5(concat(lit("inc:"), col("doc_id").cast("string"))), 1, 1)
-    val isHist = splitOf >= Dedup.IncBatchThreshold
+    val isHist = !Dedup.isBatch(col("doc_id"))
     val tmp = java.nio.file.Files.createTempDirectory("graft-stream-nkd")
     val marker = Kernels.phaseMarker()
     def nkdMark(tag: String): Unit = {
@@ -1078,21 +972,12 @@ object DocStream {
           contracted.add(atBid)
         }
       }
-      val synth = udf((body: Array[Byte]) => Multimodal.synthPayload(body))
-      val reader = spark.readStream
-        .schema(documentsSchema)
-        .option("pathGlobFilter", glob)
-      filesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n.toString))
       // micro-batch bodies plan without AQE, where the static planner
       // picks SortMergeJoin for the batch-x-store banded probes —
       // sorting the store per batch; hash joins keep the exchanges but
       // drop the sorts (the streamIncrementalMinHash drain's measured
       // trick)
-      Streams.drainBatches(reader
-          .parquet(srcDir)
-          .select(col("doc_id"), col("text"), splitOf.as("split"))
-          .filter(col("split") < Dedup.IncBatchThreshold)
-          .select(col("doc_id"), synth(encode(col("text"), "UTF-8")).as("payload")),
+      Streams.drainBatches(payloadStream(spark, srcDir, glob, filesPerTrigger),
         Streams.HashJoins) { (batch, bid) =>
         if (!processed.isEmpty && processed.get(processed.size - 1) >= bid) {
           // replayed, fully-committed batch — skip (idempotence)
@@ -1100,23 +985,24 @@ object DocStream {
           // per-sig aggregates collected first (bounded by the
           // batch's present sigs) so the driver fold is a pure
           // in-memory step AFTER every Spark job has succeeded
+          val payloads = Kernels.fanOut(batch)
           val imgAgg = Multimodal.sigBatchAgg(
-            Multimodal.phashSigFrame(batch, imgMu, "doc_id", "ph"))
+            Multimodal.trainedSigs(payloads, Multimodal.Pixel, imgMu))
           val audAgg = Multimodal.sigBatchAgg(
-            Multimodal.audioSigFrame(batch, audMu))
+            Multimodal.trainedSigs(payloads, Multimodal.Audio, audMu))
           // the batch's frame sigs feed three consumers (two probe
           // sides, the store write) — checkpoint so the decode
           // kernel runs once per batch
-          val vidS = (Multimodal.frameSigFrame(batch, vidMu,
-            "doc_id", "sample_no", "ph").localCheckpoint())
+          val vidS = Multimodal.trainedSigs(payloads, Multimodal.Frame, vidMu)
+            .localCheckpoint()
           // per-batch work stops at EDGES: the blast-radius probe
           // (batch frames x accumulated store, banded — work
           // proportional to the batch) plus within-batch pairs,
           // written keyed by bid. The label contraction defers —
           // see [[VideoContractEvery]].
-          (Multimodal.videoClipPairsProbe(vidS, vidSigsAt())
+          (Multimodal.probePairs(Multimodal.Frame, vidS, vidSigsAt())
             .select("doc_a", "doc_b")
-            .unionByName(Multimodal.videoClipPairs(vidS)
+            .unionByName(Multimodal.sigPairs(Multimodal.Frame, vidS)
               .select("doc_a", "doc_b"))
             .write.mode("overwrite").parquet(s"$tmp/edges_b$bid"))
           (vidS.write.mode("overwrite").parquet(s"$tmp/vidsigs_b$bid"))
@@ -1164,7 +1050,7 @@ object DocStream {
             .select(lit("video").as("modality"),
               col("cluster").as("keep_id"), col("n_members")))
           .orderBy("modality", "keep_id"))
-    } finally graft.operators.Kernels.rmTree(tmp.toFile)
+    } finally Kernels.rmTree(tmp.toFile)
   }
 
   /** `stream_knn_maintain`: the streaming twin of
@@ -1178,7 +1064,7 @@ object DocStream {
     * build — `graph_knn`'s oracle text gates this query too.
     */
   def streamKnnMaintain(spark: SparkSession, dir: String): DataFrame = {
-    import graft.operators.{Dedup, Graph, Kernels}
+    import graft.operators.Graph
     val mark = Kernels.phaseMarker()
     val hist = Graph.ensureKnnDirectedHistory(spark, dir, Dedup.IncBatchThreshold)
     mark("hist_artifact")
@@ -1189,14 +1075,12 @@ object DocStream {
       mark("seed_store")
       // atomic for cross-thread visibility — the streamMediaKeep note
       val version = new java.util.concurrent.atomic.AtomicInteger(0)
-      val splitOf =
-        substring(md5(concat(lit("inc:"), col("vec_id").cast("string"))), 1, 1)
       Streams.drainBatches(spark.readStream
         .schema(embeddingsSchema)
         .option("pathGlobFilter", "embeddings.parquet")
         .parquet(dir)
         .select(col("vec_id"))
-        .filter(splitOf < Dedup.IncBatchThreshold)) { (batch, _) =>
+        .filter(Dedup.isBatch(col("vec_id")))) { (batch, _) =>
         version.set(
           Graph.appendBatchToKnn(batch, dir, tmp.toString, version.get()))
       }
@@ -1207,6 +1091,6 @@ object DocStream {
           .orderBy("vec_a", "vec_b"))
       mark("mutual_serve")
       served
-    } finally graft.operators.Kernels.rmTree(tmp.toFile)
+    } finally Kernels.rmTree(tmp.toFile)
   }
 }

@@ -949,7 +949,7 @@ class OperatorsSpec extends AnyFunSuite {
     // the keep law, replayed exactly on one modality: group the audio
     // corpus by its signature driver-side — keep_id must be each
     // group's MINIMUM doc and n_members its size, value for value
-    val audSigs = Multimodal.audioSigCorpus(spark, sf).collect()
+    val audSigs = Multimodal.corpusSigs(spark, sf, Multimodal.Audio).collect()
       .map(r => r.getAs[Long]("doc_id") -> r.getAs[Long]("ph"))
     Dedup.retireCaches()
     val expAudio = audSigs.groupBy(_._2).map { case (sig, ds) =>
@@ -991,15 +991,15 @@ class OperatorsSpec extends AnyFunSuite {
     def check(mod: String, univ: Set[Long], pairs: Seq[(Long, Long)]): Unit =
       assert(gotByMod(mod) == components(univ, pairs),
         s"$mod: clusters diverge from the union-find replay over the pair stream")
-    val imgUniv = Multimodal.phashSigCorpus(spark, sf).collect()
+    val imgUniv = Multimodal.corpusSigs(spark, sf, Multimodal.Pixel).collect()
       .map(_.getAs[Long]("doc_id")).toSet
     Dedup.retireCaches()
     check("image", imgUniv, pairsOf(Multimodal.phashPairs(spark, sf)))
-    val audUniv = Multimodal.audioSigCorpus(spark, sf).collect()
+    val audUniv = Multimodal.corpusSigs(spark, sf, Multimodal.Audio).collect()
       .map(_.getAs[Long]("doc_id")).toSet
     Dedup.retireCaches()
     check("audio", audUniv, pairsOf(Multimodal.audioNearDup(spark, sf)))
-    val vidUniv = Multimodal.corpusFrameSigs(spark, sf).select("doc_id").distinct()
+    val vidUniv = Multimodal.corpusSigs(spark, sf, Multimodal.Frame).select("doc_id").distinct()
       .collect().map(_.getAs[Long]("doc_id")).toSet
     Dedup.retireCaches()
     check("video", vidUniv, pairsOf(Multimodal.videoNearDup(spark, sf)))
@@ -1008,7 +1008,7 @@ class OperatorsSpec extends AnyFunSuite {
     // inside ONE near cluster (image/video exact groups are format-
     // filtered/fold-keyed — the audio modality is the directly
     // comparable one)
-    val audSigs = Multimodal.audioSigCorpus(spark, sf).collect()
+    val audSigs = Multimodal.corpusSigs(spark, sf, Multimodal.Audio).collect()
       .map(r => r.getAs[Long]("doc_id") -> r.getAs[Long]("ph"))
     Dedup.retireCaches()
     val nearPairs = pairsOf(Multimodal.audioNearDup(spark, sf))
@@ -1030,8 +1030,8 @@ class OperatorsSpec extends AnyFunSuite {
   test("media keep maintenance: merge == rebuild, two-batch merges commute") {
     import org.apache.spark.sql.functions._
     val imgMu = Multimodal.historyImageMu(spark, sf)
-    val audMu = Multimodal.historyAudioMu(spark, sf)
-    val vidMu = Multimodal.historyFrameMu(spark, sf)
+    val audMu = Multimodal.historyMu(spark, sf, Multimodal.Audio)
+    val vidMu = Multimodal.historyMu(spark, sf, Multimodal.Frame)
     val payloads = Multimodal.ingestBinary(spark, sf).select("doc_id", "payload")
     def rows(df: org.apache.spark.sql.DataFrame): Set[(String, String, Long, Long)] =
       df.collect().map(r => (r.getAs[String]("modality"),
@@ -1097,9 +1097,9 @@ class OperatorsSpec extends AnyFunSuite {
     val universes = Map(
       "image" -> docs(imgSig), "audio" -> docs(audSig), "video" -> docs(vidSig))
     val edgesByMod = Map(
-      "image" -> pairs(Multimodal.sigBandPairs(imgSig)),
-      "audio" -> pairs(Multimodal.sigBandPairs(audSig)),
-      "video" -> pairs(Multimodal.videoClipPairs(vidSig)))
+      "image" -> pairs(Multimodal.sigPairs(Multimodal.Pixel, imgSig)),
+      "audio" -> pairs(Multimodal.sigPairs(Multimodal.Audio, audSig)),
+      "video" -> pairs(Multimodal.sigPairs(Multimodal.Frame, vidSig)))
     Dedup.retireCaches()
     val rebuilt = universes.keySet.flatMap { m =>
       unionFind(universes(m), edgesByMod(m)).map { case (k, n) => (m, k, n) }
@@ -1156,9 +1156,9 @@ class OperatorsSpec extends AnyFunSuite {
       var store = vidSig.filter(isHist).localCheckpoint(true)
       for (p <- order) {
         val b = half(vidSig, p).localCheckpoint(true)
-        val edges = Multimodal.videoClipPairsProbe(b, store)
+        val edges = Multimodal.probePairs(Multimodal.Frame, b, store)
           .select("doc_a", "doc_b")
-          .unionByName(Multimodal.videoClipPairs(b).select("doc_a", "doc_b"))
+          .unionByName(Multimodal.sigPairs(Multimodal.Frame, b).select("doc_a", "doc_b"))
         labels = Dedup.maintainLabels(labels, b.select("doc_id").distinct(), edges)
           .localCheckpoint(true)
         store = store.unionByName(b).localCheckpoint(true)
@@ -1390,7 +1390,7 @@ class OperatorsSpec extends AnyFunSuite {
   }
 
   test("scene cuts pair each present frame with its nearest present predecessor") {
-    val sigs = Multimodal.corpusFrameSigs(spark, sf).collect()
+    val sigs = Multimodal.corpusSigs(spark, sf, Multimodal.Frame).collect()
       .map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("sample_no"), r.getAs[Long]("ph")))
     Dedup.retireCaches()
     val byDoc = sigs.groupBy(_._1)
@@ -2004,6 +2004,42 @@ class OperatorsSpec extends AnyFunSuite {
     val bbm = Retrieval.bm25Search(spark, sf).collect().map(_.toSeq).toSeq
     assert(sbm.nonEmpty && sbm == bbm,
       "BM25 from the stream-maintained index must equal the batch ranking")
+  }
+
+  test("stream phash incremental equals its batch twin on an empty-body batch doc") {
+    import spark.implicits._
+    // an empty body has no pixel channels, so it carries no signature
+    // on either side — a stream kernel that hashed it to ph = 0 would
+    // band-collide it with an all-low history doc the batch never pairs
+    def isBatch(id: Long) = java.security.MessageDigest.getInstance("MD5")
+      .digest(s"inc:$id".getBytes("UTF-8")).map("%02x".format(_)).mkString
+      .substring(0, 1) < Dedup.IncBatchThreshold
+    val batchIds = Iterator.from(1).map(_.toLong).filter(isBatch)
+    val histIds = Iterator.from(1).map(_.toLong).filterNot(isBatch)
+    val (emptyId, dupId, lowId) = (batchIds.next(), batchIds.next(), histIds.next())
+    // ordinary history bodies are >= 16 bytes, so every dim has a threshold
+    val ordinary = Seq("the quick brown fox jumps over the lazy dog",
+      "pack my box with five dozen liquor jugs", "sphinx of black quartz, judge my vow",
+      "how vexingly quick daft zebras jump", "waltz, bad nymph, for quick jigs vex")
+    val texts = Seq(emptyId -> "", dupId -> ordinary.head, lowId -> "\u0001" * 48) ++
+      ordinary.map(histIds.next() -> _)
+    val dir = SparkTestSession.tmpDir("graft-phash-empty")
+    val stage = SparkTestSession.tmpDir("graft-phash-empty-stage").resolve("out")
+    texts.map { case (id, t) => (id, t, "en", "fixture", t.length.toLong) }
+      .toDF("doc_id", "text", "lang", "source", "n_chars")
+      .coalesce(1).write.parquet(stage.toString)
+    val part = stage.toFile.listFiles
+      .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
+      .getOrElse(fail(s"no part file under $stage"))
+    java.nio.file.Files.copy(part.toPath, dir.resolve("documents.parquet"))
+    val bph = Multimodal.phashIncremental(spark, dir.toString).collect().map(_.toSeq).toSeq
+    Dedup.retireCaches()
+    val sph = graft.streaming.DocStream.streamPhashIncremental(spark, dir.toString)
+      .collect().map(_.toSeq).toSeq
+    Dedup.retireCaches()
+    assert(bph.exists(_(0) == dupId), "the duplicated batch doc must pair with its history twin")
+    assert(!bph.exists(_(0) == emptyId), "an empty body carries no signature")
+    assert(sph == bph, s"stream $sph != batch $bph")
   }
 
   test("full-outer stream join is the union of inner, left-null and right-null parts") {
@@ -3059,6 +3095,24 @@ class OperatorsSpec extends AnyFunSuite {
     assert(got.take(3).forall(_._1.isNaN), s"NaN scores must rank first, got $got")
     assert(got.take(3).map(_._2) == Seq(13L, 26L, 39L), "NaN ties break by id ASC")
     assert(got(3) == (40.0, 40L))
+  }
+
+  test("graft_topk registers once: topK columns keep the session's builder") {
+    import graft.functions.TopKFunctions.topK
+    // a fresh registry holds the builder GraftExtensions injected; a
+    // topK column must find it there, not replace it on every use
+    val fresh = spark.newSession()
+    val reg = fresh.sessionState.functionRegistry
+    val id = org.apache.spark.sql.catalyst.FunctionIdentifier("graft_topk")
+    val injected = reg.lookupFunctionBuilder(id)
+    assert(injected.isDefined, "GraftExtensions must inject graft_topk")
+    def builderAfterTopK() = {
+      topK(fresh, col("score"), col("id"), lit(3))
+      reg.lookupFunctionBuilder(id).get
+    }
+    val first = builderAfterTopK()
+    assert(builderAfterTopK() eq first, "a second topK call replaced graft_topk")
+    assert(first eq injected.get, "topK replaced the injected graft_topk")
   }
 
   test("graft_overlap equals set-intersection size on sorted distinct arrays") {

@@ -1284,6 +1284,17 @@ class PlanAuditSpec extends AnyFunSuite {
       s"a lock or retire hook outside Kernels — go through Kernels.memo:\n${hits.mkString("\n")}")
   }
 
+  test("inc: split audit: only Dedup spells out the ingest id-hash split") {
+    // `Dedup.split` / `Dedup.isBatch` define the batch/history split
+    // every incremental query shares; a hand-copied md5("inc:" …) prefix
+    // (34 existed before) can drift from it, so the token that builds
+    // one may appear in no other source file
+    val hits = sourceHitsOutside("src/main/scala/graft/operators/Dedup.scala",
+      Seq("""lit("inc:")"""))
+    assert(hits.isEmpty,
+      s"an inc: split outside Dedup — use Dedup.split / Dedup.isBatch:\n${hits.mkString("\n")}")
+  }
+
   test("orders_percentile_rank: two-level rank, no per-priority corpus window, one orders scan") {
     val df = Relational.ordersPercentileRank(spark, sf)
     val p = plan(df)
@@ -1400,8 +1411,8 @@ class PlanAuditSpec extends AnyFunSuite {
     // scale) and the 16-row threshold frame arriving by broadcast
     // audit the BUILD plan — the serving entry reads the memoized
     // signature artifact, whose plan is a checkpoint leaf
-    val p = plan(Multimodal.videoClipPairs(
-      Multimodal.corpusFrameSigsBuild(spark, sf)))
+    val p = plan(Multimodal.sigPairs(Multimodal.Frame,
+      Multimodal.corpusSigsBuild(Multimodal.payloads(spark, sf), Multimodal.Frame)))
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
       s"frame candidates must come from the banded equi-join:\n${p.take(800)}")
     assert(p.contains("BroadcastHashJoin"),
@@ -1415,8 +1426,8 @@ class PlanAuditSpec extends AnyFunSuite {
     // threshold frame arriving by broadcast
     // audit the BUILD plan — the serving entry reads the memoized
     // signature artifact, whose plan is a checkpoint leaf
-    val p = plan(Multimodal.sigBandPairs(
-      Multimodal.audioSigCorpusBuild(spark, sf)))
+    val p = plan(Multimodal.sigPairs(Multimodal.Audio,
+      Multimodal.corpusSigsBuild(Multimodal.payloads(spark, sf), Multimodal.Audio)))
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
       s"audio candidates must come from the banded equi-join:\n${p.take(800)}")
     assert(p.contains("BroadcastHashJoin"),
