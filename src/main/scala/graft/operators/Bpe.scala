@@ -170,7 +170,7 @@ object Bpe {
     * the previous round's localCheckpoint, so the count must stay
     * CONSTANT from round 2 on — growth here is exactly the ~2^R plan
     * compounding the checkpoint cut exists to prevent (spec-asserted
-    * at 16 rounds; ProfileMain records 64-round wall times at sf0.1).
+    * at 16 rounds).
     */
   private[graft] def roundProbe(
       spark: SparkSession, dir: String, rounds: Int): Seq[(Int, Double)] = {

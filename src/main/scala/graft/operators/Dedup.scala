@@ -775,9 +775,7 @@ object Dedup {
     val sc = docs.sparkSession.sparkContext
     var changed = 1L
     var iter = 0
-    val dbg = sys.env.contains("GRAFT_CC_DEBUG")
     while (changed > 0 && iter < 50) {
-      val t0 = System.nanoTime()
       val prop = sym.as("e")
         .join(labels.as("l"), col("e.doc_b") === col("l.doc_id"))
         .groupBy(col("e.doc_a").as("pid"))
@@ -843,7 +841,6 @@ object Dedup {
       labels = next.select(col("doc_id"), col("label"))
       iter += 1
       probe(iter, next.queryExecution.analyzed.collect { case n => n }.size, changed)
-      if (dbg) println(f"[cc] round $iter changed=$changed ${(System.nanoTime() - t0) / 1e9}%.2f s")
     }
     require(changed == 0, s"dedup_clusters did not converge within $iter rounds")
     val singletons = docs.select(col("doc_id"))

@@ -529,9 +529,8 @@ private[graft] object Kernels {
   // runs them; Bench resets before each timed rep and drains after,
   // publishing the marks of each query's BEST rep into
   // bench_full.json's "phases" map — so stage-level drift across
-  // rounds is as mechanical as drift_vs_prev (the env-gated stderr
-  // twin of these marks was r17's best diagnostic; this makes it an
-  // artifact instead of a live-session-only probe).
+  // rounds is as mechanical as drift_vs_prev; every rep's marks also
+  // go to its stderr ledger line.
   private val phaseMarks =
     scala.collection.mutable.ArrayBuffer.empty[(String, Double)]
 
@@ -544,9 +543,8 @@ private[graft] object Kernels {
     phaseMarks.synchronized { val s = phaseMarks.toList; phaseMarks.clear(); s }
 
   /** A t0-bound marker: records seconds-since-creation under `tag` and
-    * returns the value (so env-gated stderr probes can print the same
-    * number). One helper instead of a hand-rolled closure per marked
-    * operator.
+    * returns the value. One helper instead of a hand-rolled closure per
+    * marked operator.
     */
   def phaseMarker(): String => Double = {
     val t0 = System.nanoTime()

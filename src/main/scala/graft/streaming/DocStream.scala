@@ -887,12 +887,7 @@ object DocStream {
     val (imgSig, audSig, vidSig) = Multimodal.mediaHistSigFrames(spark, dir)
     val isHist = !Dedup.isBatch(col("doc_id"))
     val tmp = java.nio.file.Files.createTempDirectory("graft-stream-nkd")
-    val marker = Kernels.phaseMarker()
-    def nkdMark(tag: String): Unit = {
-      val t = marker(tag)
-      if (sys.env.contains("GRAFT_NKD_TIME"))
-        System.err.println(f"[nkd] $tag at $t%.2fs")
-    }
+    val nkdMark = Kernels.phaseMarker()
     try {
       // image/audio state lives in DRIVER memory for the whole drain:
       // the per-sig keep stores are ≤ 2^PhashBits rows by construction

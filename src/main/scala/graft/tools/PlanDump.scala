@@ -12,7 +12,8 @@ import java.nio.file.{Files, Paths}
   * Each query's plan lands at `<outDir>/<name>_<suffix>.txt`. Queries
   * whose registered builder RUNS work eagerly (streams, store builds)
   * pay that work here too — the dumped plan is the final returned
-  * frame's, exactly what the bench's `.count()` executes.
+  * frame's, exactly what the bench's `.count()` executes. The session
+  * is the deployment one, sized by `SPARK_GRAFT_CPUS`.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
@@ -22,26 +23,16 @@ object PlanDump {
     val names =
       if (args.length > 3) args.drop(3).toSeq
       else graft.SparkEntry.queries.keys.toSeq.sorted
-    val spark = graft.GraftSession.builder("local[32]", "32")
-      .config("spark.sql.autoBroadcastJoinThreshold", (64 * 1024 * 1024).toString)
-      .config("spark.sql.adaptive.autoBroadcastJoinThreshold", (64 * 1024 * 1024).toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.deployment()
     Files.createDirectories(Paths.get(out))
     names.foreach { name =>
-      try {
+      graft.GraftSession.step("plandump", name) {
         val df = graft.SparkEntry.queries(name)(spark, dir)
         val plan = df.queryExecution.explainString(
           org.apache.spark.sql.execution.FormattedMode)
         Files.write(Paths.get(s"$out/${name}_$suffix.txt"),
           plan.getBytes(StandardCharsets.UTF_8))
         println(s"[plandump] wrote $name")
-      } catch {
-        case e: Throwable =>
-          System.err.println(s"[plandump] $name FAILED: ${e.getMessage}")
-      } finally {
-        graft.operators.Dedup.retireCaches()
-        System.gc()
       }
     }
     spark.stop()

@@ -1295,6 +1295,18 @@ class PlanAuditSpec extends AnyFunSuite {
       s"an inc: split outside Dedup — use Dedup.split / Dedup.isBatch:\n${hits.mkString("\n")}")
   }
 
+  test("session audit: only GraftSession builds, sizes or cleans up after a main's session") {
+    // `GraftSession.deployment` and `GraftSession.step` are the one
+    // session and the one per-query step of every main; a copied
+    // broadcast conf, log level or retire-then-GC loop (23 lines existed
+    // before) drifts from them, so the tokens may appear in no other
+    // source file
+    val hits = sourceHitsOutside("src/main/scala/graft/GraftSession.scala",
+      Seq("SparkSession.builder()", "autoBroadcastJoinThreshold", "setLogLevel(", "System.gc()"))
+    assert(hits.isEmpty,
+      s"session setup outside GraftSession — use deployment / step:\n${hits.mkString("\n")}")
+  }
+
   test("orders_percentile_rank: two-level rank, no per-priority corpus window, one orders scan") {
     val df = Relational.ordersPercentileRank(spark, sf)
     val p = plan(df)
