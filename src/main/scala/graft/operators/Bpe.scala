@@ -98,7 +98,7 @@ object Bpe {
   // Trained state (final symbols + merge rules) is memoized per corpus
   // fingerprint — `bpe_vocab_encode` and `bpe_merge_table` are two
   // views of ONE training run and must not re-derive it (the
-  // ProductQuant.trainedBooks pattern). The memo holds only
+  // KMeansCodebook.train pattern). The memo holds only
   // localCheckpoint-backed vocab-sized frames, so keeping it for the
   // session costs |vocab| rows, not corpus. Checkpoint blocks belong to
   // the SparkContext that made them: sessions of one live context share

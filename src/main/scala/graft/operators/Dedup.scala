@@ -1,8 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession, functions}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession, functions}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, StringType, StructType}
 
 import graft.Tables
 
@@ -854,30 +855,11 @@ object Dedup {
   val MinHashBands = 4
   val MinHashRows: Int = MinHashFns / MinHashBands // 4
 
-  /** MinHash signature + banded LSH + exact-Jaccard verification.
-    *
-    * Hash family i: `md5(i ++ ":" ++ shingle)`; the signature component
-    * is the minimum digest (fixed-width hex, so string-min == value-min).
-    * Docs sharing any of the 4 bands (concatenated 4-component keys)
-    * become candidates; candidates are verified with true Jaccard ≥ 0.3
-    * over their shingle sets. At scale: signature computation is one
-    * groupBy over exploded shingles; the LSH join touches only
-    * band-collisions — the whole point vs. the O(n²) alternative.
-    */
-  /** Signatures as a MAP-ONLY typed kernel over the per-doc shingle
-    * arrays: the min over each hash family is computed inside the row,
-    * so no shingle occurrence ever shuffles (the explode +
-    * 16×min(md5) groupBy formulation shuffled every occurrence — at
-    * 100 TB that exchange is the operator's bottleneck; here signature
-    * extraction is embarrassingly parallel, like the simhash kernel).
-    * Digest minima compare as unsigned bytes, which equals the
-    * fixed-width-hex string min the DuckDB oracle computes.
-    */
-  /** The per-doc signature loop shared by both kernel entry points:
-    * byte-level MD5 minima over the hash family, hex-encoded.
+  /** The per-doc signature loop: byte-level MD5 minima over the hash
+    * family, hex-encoded.
     */
   private def sigOf(md: java.security.MessageDigest,
-      prefixes: Array[Array[Byte]], sh: Array[String]): Array[String] = {
+      prefixes: Array[Array[Byte]], sh: Seq[String]): Array[String] = {
     val hex = "0123456789abcdef".toCharArray
     val mins = Array.ofDim[Array[Byte]](MinHashFns)
     sh.foreach { s =>
@@ -898,76 +880,71 @@ object Dedup {
     }
   }
 
-  private def minHashSignatureKernel(shArr: DataFrame): DataFrame = {
-    val spark = shArr.sparkSession
-    import spark.implicits._
-    shArr.as[(Long, Array[String])].mapPartitions { it =>
+  /** The MinHash signature kernel: replaces the `sh` shingle array with
+    * its signature `sig`, carrying every other input column through —
+    * a MAP-ONLY pass with one reused digest per partition, so no
+    * shingle occurrence ever shuffles (the explode + 16×min(md5)
+    * groupBy formulation shuffled every occurrence — at 100 TB that
+    * exchange is the operator's bottleneck — and the declarative
+    * 16×md5-per-shingle expression cost ~7 s at sf0.1 in the stream
+    * probe where this loop costs under 2). Stateless, so legal in a
+    * streaming plan. Digest minima compare as unsigned bytes, which
+    * equals the fixed-width-hex string min the DuckDB oracle computes.
+    * A shingle-less row gets a NULL signature: its band keys stay NULL
+    * and never match, and [[minHashBands]] drops it.
+    */
+  private[graft] def minHashSig(df: DataFrame): DataFrame = {
+    val shAt = df.schema.fieldIndex("sh")
+    val carried = df.schema.indices.filter(_ != shAt)
+    val out = StructType(carried.map(df.schema(_))).add("sig", ArrayType(StringType))
+    df.mapPartitions { it =>
       val md = java.security.MessageDigest.getInstance("MD5")
       val prefixes = Array.tabulate(MinHashFns)(i => s"$i:".getBytes("UTF-8"))
-      it.flatMap { case (id, sh) =>
-        if (sh.isEmpty) Iterator.empty // no shingles → no signature (as the explode form)
-        else Iterator.single((id, sigOf(md, prefixes, sh)))
+      it.map { r =>
+        val sh = r.getSeq[String](shAt)
+        Row.fromSeq(carried.map(r.get) :+
+          (if (sh.isEmpty) null else sigOf(md, prefixes, sh).toSeq))
       }
-    }.toDF("doc_id", "sig")
+    }(Encoders.row(out))
   }
 
-  /** Kernel entry for the STREAMING probe: computes the signature with
-    * the same byte-level loop while CARRYING the hashed-shingle verify
-    * payload through the typed pass (stateless mapPartitions — legal
-    * in a streaming plan). The declarative 16×md5-per-shingle
-    * expression this replaces was the whole-bench slowest query: 16
-    * string md5s per shingle through codegen cost ~7 s at sf0.1 where
-    * this loop costs under 2.
+  /** Band `b`'s LSH key: its [[MinHashRows]] signature entries joined
+    * by "|".
     */
-  private[graft] def minHashSigCarry(df: DataFrame): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.as[(Long, Array[String], Array[Long], Int)].mapPartitions { it =>
-      val md = java.security.MessageDigest.getInstance("MD5")
-      val prefixes = Array.tabulate(MinHashFns)(i => s"$i:".getBytes("UTF-8"))
-      it.map { case (id, sh, shh, nsh) => (id, sigOf(md, prefixes, sh), shh, nsh) }
-    }.toDF("doc_id", "sig", "shh", "nsh")
-  }
+  private[graft] def bandKey(b: Int): Column =
+    concat_ws("|", (0 until MinHashRows).map(r =>
+      element_at(col("sig"), MinHashRows * b + r + 1)): _*)
 
-  /** [[minHashSigCarry]] for the ingest pipeline: carries (fp, quality)
-    * through the signature kernel so the composed stream computes
-    * signatures in typed code (reused digest, no per-shingle expression
-    * allocation — the same kernel-vs-expression swap that fixed the
-    * standalone stream probe) without a rejoin for the carried columns.
-    */
-  private[graft] def minHashSigCarryIngest(df: DataFrame): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.as[(Long, String, Double, Array[String], Array[Long], Int)].mapPartitions { it =>
-      val md = java.security.MessageDigest.getInstance("MD5")
-      val prefixes = Array.tabulate(MinHashFns)(i => s"$i:".getBytes("UTF-8"))
-      it.map { case (id, fp, q, sh, shh, nsh) =>
-        // shingle-less docs ride through with a null signature (their
-        // band keys stay NULL and never match a store row)
-        (id, fp, q, if (sh.isEmpty) null else sigOf(md, prefixes, sh), shh, nsh) }
-    }.toDF("doc_id", "fp", "quality", "sig", "shh", "nsh")
-  }
+  /** One (band, bkey) struct per band, exploded into one row each. */
+  private[graft] def bandRows: Column =
+    explode(array((0 until MinHashBands).map(b =>
+      struct(lit(b).as("band"), bandKey(b).as("bkey"))): _*))
 
-  /** One (doc_id, band, bkey) row per band: the LSH index rows both the
-    * full-corpus join and the incremental band store are built from.
+  /** One (doc_id, band, bkey) row per band of every signed doc: the LSH
+    * index rows both the full-corpus join and the incremental band
+    * store are built from.
     */
-  private def minHashBands(sigs: DataFrame): DataFrame = {
-    val bandStructs = (0 until MinHashBands).map { b =>
-      struct(lit(b).as("band"),
-        concat_ws("|", (0 until MinHashRows).map(r =>
-          element_at(col("sig"), MinHashRows * b + r + 1)): _*).as("bkey"))
-    }
-    sigs
-      .select(col("doc_id"), explode(array(bandStructs: _*)).as("bk"))
+  private def minHashBands(sigs: DataFrame): DataFrame =
+    sigs.filter(col("sig").isNotNull)
+      .select(col("doc_id"), bandRows.as("bk"))
       .select(col("doc_id"), col("bk.band").as("band"), col("bk.bkey").as("bkey"))
-  }
 
+  /** MinHash signature + banded LSH + exact-Jaccard verification.
+    *
+    * Hash family i: `md5(i ++ ":" ++ shingle)`; the signature component
+    * is the minimum digest (fixed-width hex, so string-min == value-min).
+    * Docs sharing any of the 4 bands (concatenated 4-component keys)
+    * become candidates; candidates are verified with true Jaccard ≥ 0.3
+    * over their shingle sets. At scale: signature computation is the
+    * map-only [[minHashSig]] kernel; the LSH join touches only
+    * band-collisions — the whole point vs. the O(n²) alternative.
+    */
   def minHashLsh(spark: SparkSession, dir: String): DataFrame = {
     retirePreviousCaches()
     // shArr and bands each feed two join sides; cache so the shingle +
     // signature pipeline runs once, not four times (4x wall measured)
     val shArr = cacheTracked(docShingles(spark, dir))
-    val bands = cacheTracked(minHashBands(minHashSignatureKernel(shArr)))
+    val bands = cacheTracked(minHashBands(minHashSig(shArr)))
     val cand = bands.as("x")
       .join(bands.as("y"), Seq("band", "bkey"))
       .filter(col("x.doc_id") < col("y.doc_id"))
@@ -999,7 +976,7 @@ object Dedup {
   def incrementalMinHash(spark: SparkSession, dir: String): DataFrame = {
     retirePreviousCaches()
     val shArr = cacheTracked(docShingles(spark, dir))
-    val bands = cacheTracked(minHashBands(minHashSignatureKernel(shArr))
+    val bands = cacheTracked(minHashBands(minHashSig(shArr))
       .withColumn("split", split(col("doc_id"))))
     val cand = bands.filter(col("split") < IncBatchThreshold).as("x")
       .join(bands.filter(col("split") >= IncBatchThreshold).as("y"), Seq("band", "bkey"))
@@ -1053,7 +1030,7 @@ object Dedup {
     val hashed = shArr.select(col("doc_id"),
       sort_array(transform(col("sh"), s => xxhash64(s))).as("h_shh"),
       size(col("sh")).as("h_nsh"))
-    minHashBands(minHashSignatureKernel(shArr))
+    minHashBands(minHashSig(shArr))
       .join(hashed, "doc_id")
       .select(col("doc_id").as("hist_id"),
         col("band"), col("bkey"), col("h_shh"), col("h_nsh"))
@@ -1062,7 +1039,7 @@ object Dedup {
   /** The capped celled embedding index (vec_id, cluster, sub, v, norm)
     * — the trained cells + [[capCells]] sub-split + precomputed norms,
     * i.e. exactly the per-vector state a production celled index table
-    * holds (the [[graft.operators.ProductQuant.writeCodebooks]] layout
+    * holds (the [[graft.operators.ProductQuant.buildIndex]] layout
     * plus the float payload). Served from the fingerprinted durable
     * artifact ([[ensureCelledIndexStore]]): every consumer — the
     * semantic dedup pair joins, the whole kNN-graph family, the

@@ -69,22 +69,41 @@ object Graph {
       pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
         .union(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst"))),
       col("src"))
+    // unit weights: pr·1/count is bit-equal to pr/deg
+    val (pr, deg) = powerIteration(sym.withColumn("w", lit(1L)), PrIters,
+      "graph_pagerank needs at least one near-dup edge")
+    pr.join(deg, col("pid") === col("node"))
+      .select(col("node").as("doc_id"), col("wd").as("deg"), col("pr").as("pagerank"))
+      .orderBy("doc_id")
+  }
+
+  /** The damped power iteration of [[pageRank]] (unit weights) and
+    * [[textRankOn]] over a pinned symmetric (src, dst, w) edge frame:
+    * the weighted-degree frame (node, wd), a uniform start, then
+    * `iters` rounds of pr′(v) = (1−d)/n + d·Σ_{u∼v} pr(u)·w/wd(u), each
+    * contribution rounded to 12dp and summed as decimal. Returns the
+    * final (pid, pr) and the degree frame; `empty` is the message of a
+    * graph without edges.
+    */
+  private def powerIteration(sym: DataFrame, iters: Int,
+      empty: String): (DataFrame, DataFrame) = {
     val deg = Kernels.trackedCheckpoint(
-      sym.groupBy("src").agg(count(lit(1)).as("deg"))
-        .select(col("src").as("doc_id"), col("deg")))
+      sym.groupBy("src").agg(sum("w").as("wd"))
+        .select(col("src").as("node"), col("wd")))
     val n = deg.count()
-    require(n > 0, "graph_pagerank needs at least one near-dup edge")
+    require(n > 0, empty)
     val teleport = PrResid / n.toDouble
     // the rank frame carries its own key name (pid) so each round's
     // join against the static edge/degree frames can never alias
     var pr = Kernels.trackedCheckpoint(
-      deg.select(col("doc_id").as("pid"), lit(r12(1.0 / n.toDouble)).as("pr")))
-    for (i <- 1 to PrIters) {
+      deg.select(col("node").as("pid"), lit(r12(1.0 / n.toDouble)).as("pr")))
+    for (i <- 1 to iters) {
       val next = sym
         .join(pr, col("src") === col("pid"))
-        .join(deg, col("src") === col("doc_id"))
+        .join(deg, col("src") === col("node"))
         .select(col("dst"),
-          round(col("pr") / col("deg"), 12).cast("decimal(22,12)").as("c"))
+          round(col("pr") * col("w") / col("wd"), 12)
+            .cast("decimal(22,12)").as("c"))
         .groupBy("dst")
         .agg(sum("c").as("s"))
         .select(col("dst").as("pid"),
@@ -94,11 +113,9 @@ object Graph {
       // any round count while not paying an eager checkpoint job per
       // round (on node-sized frames job launch, not compute, is what a
       // checkpoint costs)
-      pr = if (i % 3 == 0 || i == PrIters) Kernels.trackedCheckpoint(next) else next
+      pr = if (i % 3 == 0 || i == iters) Kernels.trackedCheckpoint(next) else next
     }
-    pr.join(deg, col("pid") === col("doc_id"))
-      .select(col("doc_id"), col("deg"), col("pr").as("pagerank"))
-      .orderBy("doc_id")
+    (pr, deg)
   }
 
   /** `graph_degrees`: the degree distribution of the near-dup graph —
@@ -576,30 +593,10 @@ object Graph {
       edges.select(col("ta").as("src"), col("tb").as("dst"), col("w"))
         .union(edges.select(col("tb").as("src"), col("ta").as("dst"), col("w"))),
       col("src"), vocabCap.toLong * (vocabCap - 1L))
-    val wdeg = Kernels.trackedCheckpoint(
-      sym.groupBy("src").agg(sum("w").as("wd"))
-        .select(col("src").as("term"), col("wd")))
-    val n = wdeg.count()
-    require(n > 0, "keywords_textrank needs at least one co-occurring term pair")
-    val teleport = PrResid / n.toDouble
-    var pr = Kernels.trackedCheckpoint(
-      wdeg.select(col("term").as("pid"), lit(r12(1.0 / n.toDouble)).as("pr")))
-    for (i <- 1 to TrIters) {
-      val next = sym
-        .join(pr, col("src") === col("pid"))
-        .join(wdeg, col("src") === col("term"))
-        .select(col("dst"),
-          round(col("pr") * col("w") / col("wd"), 12)
-            .cast("decimal(22,12)").as("c"))
-        .groupBy("dst")
-        .agg(sum("c").as("s"))
-        .select(col("dst").as("pid"),
-          round(lit(teleport) + lit(PrDamping) * col("s").cast("double"), 12)
-            .as("pr"))
-      pr = if (i % 3 == 0 || i == TrIters) Kernels.trackedCheckpoint(next) else next
-    }
-    pr.join(wdeg, col("pid") === col("term"))
-      .select(col("term"), col("wd").as("weighted_degree"),
+    val (pr, wdeg) = powerIteration(sym, TrIters,
+      "keywords_textrank needs at least one co-occurring term pair")
+    pr.join(wdeg, col("pid") === col("node"))
+      .select(col("node").as("term"), col("wd").as("weighted_degree"),
         col("pr").as("textrank"))
       .orderBy(col("textrank").desc, col("term"))
   }

@@ -7,29 +7,37 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 
-/** Trained k-means codebook over the `embeddings` table (north star;
-  * the reference has no similarity operators) — the real
-  * codebook-training step that [[Similarity.annIvf]]'s static
-  * sign-random-projection cells deliberately avoid, and the canonical
-  * ITERATIVE Spark workload: Lloyd's algorithm, unrolled a fixed
-  * number of rounds.
+/** The exact-decimal Lloyd kernel and the trained k-means codebook over
+  * the `embeddings` table (north star; the reference has no similarity
+  * operators) — the real codebook-training step that
+  * [[Similarity.annIvf]]'s static sign-random-projection cells
+  * deliberately avoid, and the canonical ITERATIVE Spark workload:
+  * Lloyd's algorithm, unrolled a fixed number of rounds.
+  *
+  * The kernel is the only copy of the job. It trains, assigns and
+  * measures over (vec_id, ss, v) rows, where `ss` names a subspace with
+  * its own entries: k-means is the one-subspace case ([[oneSpace]]:
+  * `ss` = 0 as a projected literal, the vector unsliced), and product
+  * quantization ([[ProductQuant]]) passes each vector's subspace slices
+  * — PQ is k-means run once per subspace.
   *
   * Execution shape per Lloyd round — the MLlib `KMeans` shape:
-  *  1. the K×dim codebook (tiny, fixed size) is COLLECTED to the
-  *     driver and shipped inside the assignment task closure — the
-  *     corpus itself never moves for assignment, which runs as a
-  *     map-only typed kernel (argmin over K exact-decimal distances);
+  *  1. the books (tiny, fixed size) are COLLECTED to the driver and
+  *     shipped inside the assignment task closure — the corpus itself
+  *     never moves for assignment, which runs as a map-only typed
+  *     kernel (argmin over the subspace's exact-decimal distances);
   *  2. centroid recomputation is one combiner-friendly aggregate on
-  *     (cluster, dim): partial sums on the map side mean the exchange
-  *     carries K·dim rows per map task, never a corpus-sized shuffle.
-  * The only driver-side data is the codebook (K·dim values per round,
-  * independent of corpus size) — the same contract as broadcasting
-  * MLlib cluster centers; per-row work stays distributed.
+  *     (ss, cluster, dim): partial sums on the map side mean the
+  *     exchange carries books-sized rows per map task, never a
+  *     corpus-sized shuffle.
+  * The only driver-side data is the books (independent of corpus
+  * size) — the same contract as broadcasting MLlib cluster centers;
+  * per-row work stays distributed.
   *
   * Determinism / oracle parity (the interesting part — a naive double
   * formulation is irreproducible because both the assignment argmin
   * and the centroid mean depend on float summation order):
-  *  - init: centroids = the first [[K]] vectors by `vec_id` (no RNG);
+  *  - init: centroids = the first k vectors by `vec_id` (no RNG);
   *  - coordinates are fixed to DECIMAL(18,9) (Spark's HALF_UP
   *    double→decimal cast == `BigDecimal.valueOf(d).setScale(9)`, both
   *    mirrored by DuckDB's cast), so squared-L2 distances are EXACT
@@ -47,187 +55,215 @@ object KMeansCodebook {
   val LloydIters = 2 // assign+recompute rounds after init
 
   /** Spark's Cast(double → decimal(18,9)) semantics: shortest-repr
-    * BigDecimal, HALF_UP at scale 9.
+    * BigDecimal, HALF_UP at scale 9 — the one fix of every coordinate
+    * the kernel compares (a stored DECIMAL(18,9) is already fixed).
     */
-  private def dec9(d: Double): JBig =
-    JBig.valueOf(d).setScale(9, RoundingMode.HALF_UP)
+  private def dec9(d: JBig): JBig = d.setScale(9, RoundingMode.HALF_UP)
+  private def dec9(d: Double): JBig = dec9(JBig.valueOf(d))
 
-  private[operators] type Codebook = Array[(Long, Array[JBig])]
-
-  /** Map-only assignment: each vector to its nearest codebook entry by
-    * exact-decimal squared L2, rounded to 6dp, ties to the lowest
-    * cluster id. The codebook rides the task closure (K·dim values).
+  /** Books per subspace: ss -> (cluster, fixed centroid coordinates),
+    * sorted by cluster. A k-means codebook holds `ss` = 0 only.
     */
-  private[operators] def assign(spark: SparkSession, base: DataFrame, cb: Codebook): DataFrame = {
-    import spark.implicits._
-    base.as[(Long, Seq[Double])].mapPartitions { it =>
-      it.map { case (id, v) =>
-        val xd = new Array[JBig](v.length)
-        var i = 0
-        while (i < v.length) { xd(i) = dec9(v(i)); i += 1 }
-        var bestC = Long.MaxValue
-        var bestD: JBig = null
-        cb.foreach { case (c, cent) =>
-          // a ragged vector silently truncating the distance loop would
-          // mask data corruption with a plausible-looking assignment
-          require(xd.length == cent.length,
-            s"vec_id=$id dim ${xd.length} != codebook dim ${cent.length}")
-          var s = JBig.ZERO
-          var j = 0
-          val n = cent.length
-          while (j < n) {
-            val diff = xd(j).subtract(cent(j))
-            s = s.add(diff.multiply(diff))
-            j += 1
-          }
-          val d6 = s.setScale(6, RoundingMode.HALF_UP)
-          val cmp = if (bestD == null) -1 else d6.compareTo(bestD)
-          if (cmp < 0 || (cmp == 0 && c < bestC)) { bestD = d6; bestC = c }
-        }
-        (id, bestC, v)
-      }
-    }.toDF("vec_id", "cluster", "v")
+  private[operators] type Books = Map[Long, Array[(Long, Array[JBig])]]
+
+  /** One corpus the kernel indexes. `key` names the memo entries of its
+    * codebook, books, assignment and codes; `scan` is its unpinned
+    * (vec_id, v) frame, which probes, ADC tables and reranks read;
+    * `vectors` is the frame training and assignment read, under the
+    * corpus's own pin. `vectors` is built on first use, so a memo hit
+    * pins nothing.
+    */
+  private[operators] final class Corpus(
+      val key: (String, String), scanOf: => DataFrame, pinned: => DataFrame) {
+    def scan: DataFrame = scanOf
+    lazy val vectors: DataFrame = pinned
   }
 
-  /** One combiner-friendly aggregate: per-(cluster, dim) member count
-    * and exact decimal coordinate sum; the mean divides as double and
-    * rounds to 6dp (order-independent — see [[Similarity.labelCentroids]]).
+  /** A table's (vec_id, v): its `embedding` column as array<double>. */
+  private[operators] def vectorsOf(table: DataFrame): DataFrame =
+    table.select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
+
+  /** The full `embeddings` corpus, pinned with memoCache, not
+    * cacheTracked: the pinned frame is only built inside the
+    * globally-memoized train/assign miss paths, which can fire on the
+    * STREAM-EXECUTION thread (foreachBatch → appendBatchToKnn →
+    * cappedCelledIndex → lastAssignment) — a thread whose per-thread
+    * registry scope no query thread ever retires. Its lifetime is the
+    * memo's, exactly like the assignment frame it feeds, so it drains
+    * globally with its until-retire memo entry.
+    */
+  private[operators] def embeddings(spark: SparkSession, dir: String): Corpus = {
+    def scan = vectorsOf(Tables.embeddings(spark, dir))
+    new Corpus(Kernels.inputKey(dir, "embeddings.parquet"), scan,
+      Kernels.memoCache(Kernels.fanOut(scan)))
+  }
+
+  /** k-means rows: one subspace, `ss` = 0, the vector unsliced. */
+  private[operators] def oneSpace(df: DataFrame): DataFrame = df.withColumn("ss", lit(0L))
+
+  private def rowsOf(rows: DataFrame) = {
+    val spark = rows.sparkSession
+    import spark.implicits._
+    rows.select("vec_id", "ss", "v").as[(Long, Long, Seq[Double])]
+  }
+
+  /** Exact-decimal squared L2 between a fixed vector and a centroid,
+    * rounded to 6dp — the one distance of assignment, probe-cell
+    * selection and ADC tables.
+    */
+  private def d6(xd: Array[JBig], cent: Array[JBig], id: Long): JBig = {
+    // a ragged vector silently truncating the distance loop would mask
+    // data corruption with a plausible-looking assignment
+    require(xd.length == cent.length,
+      s"vec_id=$id dim ${xd.length} != codebook dim ${cent.length}")
+    var s = JBig.ZERO
+    var j = 0
+    while (j < cent.length) {
+      val diff = xd(j).subtract(cent(j))
+      s = s.add(diff.multiply(diff))
+      j += 1
+    }
+    s.setScale(6, RoundingMode.HALF_UP)
+  }
+
+  /** Map-only assignment (vec_id, ss, cluster, v): each row to its
+    * subspace's nearest entry by [[d6]], ties to the lowest cluster id.
+    * The books ride the task closure.
+    */
+  private[operators] def assign(rows: DataFrame, books: Books): DataFrame = {
+    val spark = rows.sparkSession
+    import spark.implicits._
+    rowsOf(rows).mapPartitions { it =>
+      it.map { case (id, ss, v) =>
+        val xd = v.map(x => dec9(x)).toArray
+        var bestC = Long.MaxValue
+        var bestD: JBig = null
+        books(ss).foreach { case (c, cent) =>
+          val d = d6(xd, cent, id)
+          val cmp = if (bestD == null) -1 else d.compareTo(bestD)
+          if (cmp < 0 || (cmp == 0 && c < bestC)) { bestD = d; bestC = c }
+        }
+        (id, ss, bestC, v)
+      }
+    }.toDF("vec_id", "ss", "cluster", "v")
+  }
+
+  /** Each row's `keep` nearest entries of its subspace (vec_id, ss,
+    * cluster, d), nearest first, ties to the lowest cluster id: probe
+    * cells keep the nearest few, an ADC table keeps every entry. Probe
+    * batches are query-sized, so this is a filtered scan and a tiny
+    * flatMap — no shuffle.
+    */
+  private[operators] def nearest(rows: DataFrame, books: Books, keep: Int): DataFrame = {
+    val spark = rows.sparkSession
+    import spark.implicits._
+    rowsOf(rows).flatMap { case (id, ss, v) =>
+      val xd = v.map(x => dec9(x)).toArray
+      books(ss).map { case (c, cent) => (d6(xd, cent, id), c) }
+        .sortWith { case ((d1, c1), (d2, c2)) =>
+          val cmp = d1.compareTo(d2); cmp < 0 || (cmp == 0 && c1 < c2)
+        }
+        .take(keep).map { case (d, c) => (id, ss, c, d) }
+    }.toDF("vec_id", "ss", "cluster", "d")
+  }
+
+  /** One combiner-friendly aggregate: per-(ss, cluster, dim) member
+    * count and exact decimal coordinate sum; the mean divides as double
+    * and rounds to 6dp (order-independent — see [[Similarity.labelCentroids]]).
     */
   private def recompute(assigned: DataFrame): DataFrame =
     assigned
-      .select(col("cluster"), posexplode(col("v")).as(Seq("pos", "x")))
-      .groupBy(col("cluster"), (col("pos") + 1).cast("long").as("dim"))
+      .select(col("ss"), col("cluster"), posexplode(col("v")).as(Seq("pos", "x")))
+      .groupBy(col("ss"), col("cluster"), (col("pos") + 1).cast("long").as("dim"))
       .agg(count(lit(1)).as("n_members"),
            sum(col("x").cast("decimal(18,9)")).as("sx"))
-      .select(col("cluster"), col("dim"), col("n_members"),
+      .select(col("ss"), col("cluster"), col("dim"), col("n_members"),
         round(col("sx").cast("double") / col("n_members"), 6).as("c"))
 
-  private def collectCodebook(cent: DataFrame): Codebook =
-    cent.select("cluster", "dim", "c").collect()
-      .groupBy(_.getLong(0))
-      .map { case (c, rows) =>
-        (c, rows.sortBy(_.getLong(1)).map(r => dec9(r.getDouble(2))))
-      }
-      .toArray.sortBy(_._1)
-
-  // memoCache, not cacheTracked: this frame is only built (lazily, by
-  // name) inside the globally-memoized trainedCodebookOn/assignmentOn
-  // miss paths, which can fire on the STREAM-EXECUTION thread
-  // (foreachBatch → appendBatchToKnn → cappedCelledIndex →
-  // lastAssignment) — a thread whose per-thread registry scope no
-  // query thread ever retires. Its lifetime is the memo's, exactly
-  // like the assignment frame it feeds, so it drains globally with
-  // its until-retire memo entry.
-  private def embeddingBase(spark: SparkSession, dir: String): DataFrame =
-    Kernels.memoCache(Kernels.fanOut(
-      Tables.embeddings(spark, dir)
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))))
-
-  /** The Lloyd trainer over an EXPLICIT corpus frame (vec_id, v),
-    * memoized under `key` — the full-table path and the keep-filtered
-    * [[graft.operators.ProductQuant.pipelineIndex]] corpus share every
-    * kernel; only the corpus (and so the memo key) differs. Init is
-    * the first [[K]] corpus vectors by `vec_id` — a TakeOrdered, which
-    * on the dense-id full table selects exactly the `vec_id < K` rows
-    * the oracle's rank-form init CTE mirrors. `base` is by-name: it is
-    * only built (and only registers its cache) on a memo miss.
-    * Training is deterministic, so the codebook (K·dim values) is
-    * memoized for the session — the train-once contract of a fitted
-    * MLlib model.
+  /** Books from (ss, cluster, dim, c) rows, `c` a trained double or a
+    * stored DECIMAL(18,9).
     */
-  private[operators] def trainedCodebookOn(
-      spark: SparkSession, key: (String, String), base: => DataFrame): Codebook =
-    Kernels.memo("kmeans-codebook", key) {
-      import spark.implicits._
-      val b = base
-      var cb: Codebook = b.orderBy("vec_id").limit(K).as[(Long, Seq[Double])]
-        .collect()
-        .map { case (id, v) => (id, v.map(dec9).toArray) }
-        .sortBy(_._1)
+  private def collectBooks(cent: DataFrame): Books =
+    cent.select("ss", "cluster", "dim", "c").collect()
+      .groupBy(_.getLong(0))
+      .map { case (ss, rows) =>
+        ss -> rows.groupBy(_.getLong(1)).map { case (c, rs) =>
+          (c, rs.sortBy(_.getLong(2)).map(_.get(3) match {
+            case d: JBig => dec9(d)
+            case d: Double => dec9(d)
+          }))
+        }.toArray.sortBy(_._1)
+      }
+
+  /** The Lloyd trainer over `split` of the corpus, memoized under
+    * (`kind`, corpus key). Init is the first `k` corpus vectors by
+    * `vec_id` — a TakeOrdered, which on the dense-id full table selects
+    * exactly the `vec_id < k` rows the oracle's rank-form init CTE
+    * mirrors, and on a keep-filtered corpus the first `k` SURVIVORS —
+    * split like every other row. Training is deterministic, so the
+    * books are memoized for the session — the train-once contract of a
+    * fitted MLlib model.
+    */
+  private[operators] def train(kind: String, corpus: Corpus, k: Int,
+      split: DataFrame => DataFrame): Books =
+    Kernels.memo(kind, corpus.key) {
+      var books = collectBooks(split(corpus.vectors.orderBy("vec_id").limit(k))
+        .select(col("ss"), col("vec_id").as("cluster"),
+          posexplode(col("v")).as(Seq("pos", "c")))
+        .withColumn("dim", (col("pos") + 1).cast("long")))
       for (_ <- 1 until LloydIters)
-        cb = collectCodebook(recompute(assign(spark, b, cb)))
-      cb
+        books = collectBooks(recompute(assign(split(corpus.vectors), books)))
+      books
     }
 
-  private def trainedCodebook(spark: SparkSession, dir: String): Codebook =
-    trainedCodebookOn(spark, Kernels.inputKey(dir, "embeddings.parquet"),
-      embeddingBase(spark, dir))
+  /** The corpus's trained k-means codebook. */
+  private[operators] def codebook(corpus: Corpus): Books =
+    train("kmeans-codebook", corpus, K, oneSpace)
 
-  /** Top-`nProbe` nearest codebook cells for each of the first
-    * `nProbes` vectors — the probe-selection half of
-    * [[Similarity.annIvfKmeans]]: the same exact-decimal distance and
-    * lowest-cluster tie-break as [[assign]], keeping the `nProbe` best
-    * cells instead of only the argmin. Probe count is query-sized, so
-    * this is a filtered scan + tiny flatMap — no shuffle.
+  /** The corpus's FINAL assignment (vec_id, cluster, v), memoized under
+    * the codebook's key, so a corpus is trained once and assigned once
+    * regardless of entry point. The CACHED frame lives until the next
+    * Kernels.retireCaches: [[centroids]] re-aggregates it,
+    * [[clusterBalancedSample]] samples it and the IVF searches search
+    * it, paying the distributed assignment scan once, not per query.
     */
-  private[operators] def probeCells(
-      spark: SparkSession, dir: String, nProbes: Int, nProbe: Int): DataFrame =
-    probeCellsOf(spark, dir, trainedCodebook(spark, dir), nProbes, nProbe)
+  private[operators] def lastAssignment(corpus: Corpus): DataFrame =
+    Kernels.memoUntilRetire("kmeans-assign", corpus.key)(
+      assign(oneSpace(corpus.vectors), codebook(corpus)).drop("ss"))
 
-  /** [[probeCells]] against an EXPLICIT codebook — the serve path: a
-    * consumer session reads the trained codebook from a [[writeIndex]]
-    * artifact instead of retraining ([[codebookFromArtifact]]).
-    */
-  private[operators] def probeCellsOf(
-      spark: SparkSession, dir: String, cb: Codebook,
-      nProbes: Int, nProbe: Int): DataFrame =
-    probeCellsFromBase(spark,
-      Tables.embeddings(spark, dir)
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("v")),
-      cb, nProbes, nProbe)
+  /** [[lastAssignment]] of the full `embeddings` corpus. */
+  private[graft] def lastAssignment(spark: SparkSession, dir: String): DataFrame =
+    lastAssignment(embeddings(spark, dir))
 
-  /** [[probeCellsOf]] with the probe universe passed explicitly — the
-    * keep-filtered pipeline index probes only SURVIVING vectors, so
-    * its probe batch is `vec_id < nProbes` within its own corpus.
+  /** Top-`nProbe` nearest cells (probe_id, pcluster) of `cb` for each
+    * probe (`vec_id` < [[Similarity.NumProbes]]) of a (vec_id, v) frame.
     */
-  private[operators] def probeCellsFromBase(
-      spark: SparkSession, probeBase: DataFrame, cb: Codebook,
-      nProbes: Int, nProbe: Int): DataFrame = {
+  private[operators] def probeCells(probes: DataFrame, cb: Books, nProbe: Int): DataFrame =
+    nearest(oneSpace(probes.filter(col("vec_id") < Similarity.NumProbes)), cb, nProbe)
+      .select(col("vec_id").as("probe_id"), col("cluster").as("pcluster"))
+
+  /** Writes books as one single-file (ss, cluster, dim, c) table with
+    * `c` DECIMAL(18,9): the exact coordinates the kernel compares, so a
+    * serving session reproduces every distance bit for bit.
+    */
+  private[operators] def writeBooks(spark: SparkSession, books: Books, path: String): Unit = {
     import spark.implicits._
-    probeBase
-      .filter(col("vec_id") < nProbes)
-      .as[(Long, Seq[Double])]
-      .flatMap { case (id, v) =>
-        val xd = v.map(dec9).toArray
-        cb.map { case (c, cent) =>
-          require(xd.length == cent.length,
-            s"vec_id=$id dim ${xd.length} != codebook dim ${cent.length}")
-          var s = JBig.ZERO
-          var j = 0
-          while (j < cent.length) {
-            val diff = xd(j).subtract(cent(j))
-            s = s.add(diff.multiply(diff))
-            j += 1
-          }
-          (s.setScale(6, RoundingMode.HALF_UP), c)
-        }.sortWith { case ((d1, c1), (d2, c2)) =>
-          val cmp = d1.compareTo(d2); cmp < 0 || (cmp == 0 && c1 < c2)
-        }.take(nProbe).map { case (_, c) => (id, c) }.toSeq
-      }.toDF("probe_id", "pcluster")
+    books.toSeq.flatMap { case (ss, entries) =>
+        entries.toSeq.flatMap { case (c, coords) =>
+          coords.toSeq.zipWithIndex.map { case (x, i) => (ss, c, (i + 1).toLong, x.toPlainString) }
+        }
+      }
+      .toDF("ss", "cluster", "dim", "c_str")
+      .select(col("ss"), col("cluster"), col("dim"), col("c_str").cast("decimal(18,9)").as("c"))
+      .coalesce(1).write.mode("overwrite").parquet(path)
   }
 
-  /** Runs (or reuses) the Lloyd training and returns the FINAL
-    * assignment frame (vec_id, cluster, v), cached — [[centroids]]
-    * re-aggregates it, [[clusterBalancedSample]] samples it, and
-    * [[Similarity.annIvfKmeans]] searches it as the IVF index.
+  /** A [[writeBooks]] table back as books — no training, no memo.
+    * DECIMAL(18,9) round-trips parquet exactly, so these equal the
+    * training session's books.
     */
-  private[graft] def lastAssignment(spark: SparkSession, dir: String): DataFrame =
-    assignmentOn(spark, Kernels.inputKey(dir, "embeddings.parquet"),
-      embeddingBase(spark, dir))
-
-  /** [[lastAssignment]] over an explicit corpus frame, memoized under
-    * `key` — shares [[trainedCodebookOn]]'s memo key so a corpus is
-    * trained once and assigned once regardless of entry point. The
-    * CACHED frame lives until the next Kernels.retireCaches, so a query
-    * sequence of centroids-then-balanced-sample pays the distributed
-    * assignment scan once, not per query.
-    */
-  private[operators] def assignmentOn(
-      spark: SparkSession, key: (String, String), base: => DataFrame): DataFrame =
-    Kernels.memoUntilRetire("kmeans-assign", key) {
-      val b = base
-      assign(spark, b, trainedCodebookOn(spark, key, b))
-    }
+  private[operators] def readBooks(spark: SparkSession, path: String): Books =
+    collectBooks(spark.read.parquet(path))
 
   /** `kmeans_centroids`: the trained codebook after [[LloydIters]]
     * Lloyd rounds from the deterministic init, with each cluster's
@@ -235,7 +271,9 @@ object KMeansCodebook {
     * drops out (deterministically — no re-seeding).
     */
   def centroids(spark: SparkSession, dir: String): DataFrame =
-    recompute(lastAssignment(spark, dir)).orderBy("cluster", "dim")
+    recompute(oneSpace(lastAssignment(spark, dir)))
+      .select("cluster", "dim", "n_members", "c")
+      .orderBy("cluster", "dim")
 
   val BalancedQuota = 25
 
@@ -260,75 +298,6 @@ object KMeansCodebook {
     * `prefix ≤ threshold` keeps every row the full-hash rank would,
     * and the exact rank drops prefix-collision stragglers).
     */
-  /** Materializes the trained IVF half of the ANN index to `path` —
-    * the durable twin of the session memos, completing the
-    * train-once/probe-many production story ([[graft.operators.Bpe.writeMergeTable]]'s
-    * contract applied to the vector index):
-    *
-    *  - `path/coarse_codebook`: the K·dim trained centroids as
-    *    DECIMAL(18,9) (the exact coordinates the assignment argmin
-    *    uses, so a serving session reproduces distances bit-for-bit;
-    *    K·dim rows — the single file is deliberate);
-    *  - `path/assignment`: every vector's cell id, written PARTITIONED
-    *    BY cluster — the IVF storage layout: a probe's candidate read
-    *    touches only its probed cells' directories, so the scan cost
-    *    scales with nprobe/K of the corpus, not the corpus.
-    *
-    * Production builds run this once per corpus build; every consumer
-    * (a probe service, another JVM, tomorrow's session) reads the
-    * artifact instead of retraining — `ann_ivf_pq` served from it in a
-    * fresh session is value-equal (spec-pinned).
-    */
-  def writeIndex(spark: SparkSession, dir: String, path: String): Unit =
-    writeIndexOn(spark, Kernels.inputKey(dir, "embeddings.parquet"),
-      embeddingBase(spark, dir), path)
-
-  /** [[writeIndex]] for an explicit (key, corpus) — the coarse half of
-    * the keep-filtered [[graft.operators.ProductQuant.pipelineIndex]]
-    * artifact writes through here.
-    */
-  private[operators] def writeIndexOn(spark: SparkSession,
-      key: (String, String), base: => DataFrame, path: String): Unit = {
-    import spark.implicits._
-    val b = base
-    val cb = trainedCodebookOn(spark, key, b)
-    cb.toSeq.flatMap { case (c, coords) =>
-        coords.zipWithIndex.map { case (x, i) => (c, (i + 1).toLong, x.toPlainString) }
-      }
-      .toDF("cluster", "dim", "c_str")
-      .select(col("cluster"), col("dim"), col("c_str").cast("decimal(18,9)").as("c"))
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/coarse_codebook")
-    assignmentOn(spark, key, b)
-      .select(col("vec_id"), col("cluster"))
-      .write.mode("overwrite").partitionBy("cluster").parquet(s"$path/assignment")
-  }
-
-  /** Reads a [[writeIndex]] artifact back as DataFrames — (codebook,
-    * assignment), no training, no memo, serveable from any session
-    * that can read the path. The assignment's partition column comes
-    * back as the inferred partition type; it is re-cast to long so
-    * consumers see the training-session schema.
-    */
-  def indexFrom(spark: SparkSession, path: String): (DataFrame, DataFrame) = (
-    spark.read.parquet(s"$path/coarse_codebook").orderBy("cluster", "dim"),
-    spark.read.parquet(s"$path/assignment")
-      .withColumn("cluster", col("cluster").cast("long")))
-
-  /** The artifact's codebook in the exact in-memory form the
-    * assignment/probe kernels consume — scale-9 decimals, sorted by
-    * cluster then dim. DECIMAL(18,9) round-trips parquet exactly, so
-    * this equals the training session's [[trainedCodebook]].
-    */
-  private[operators] def codebookFromArtifact(
-      spark: SparkSession, path: String): Codebook =
-    spark.read.parquet(s"$path/coarse_codebook")
-      .select("cluster", "dim", "c").collect()
-      .groupBy(_.getLong(0))
-      .map { case (c, rows) =>
-        (c, rows.sortBy(_.getLong(1)).map(_.getDecimal(2).setScale(9)))
-      }
-      .toArray.sortBy(_._1)
-
   def clusterBalancedSample(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val assigned = lastAssignment(spark, dir)

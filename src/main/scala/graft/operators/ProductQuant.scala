@@ -1,12 +1,10 @@
 package graft.operators
 
-import java.math.{BigDecimal => JBig, RoundingMode}
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 
 import graft.Tables
+import KMeansCodebook.{Books, Corpus}
 
 /** Product quantization over the `embeddings` table (north star; the
   * reference has no similarity operators) — the memory-compression
@@ -15,32 +13,33 @@ import graft.Tables
   * each touched vector costs).
   *
   * The vector is split into [[SubDim]]-wide subspaces; each subspace
-  * gets its own k-means codebook ([[PqK]] entries, trained with the
-  * exact-decimal Lloyd kernel of [[KMeansCodebook]]); a vector is
-  * stored as M = dim/[[SubDim]] small codes — here 4 × 3 bits against
-  * 64 × 4-byte floats, a ~85× compression. Search is ASYMMETRIC
-  * distance computation (ADC): the probe stays exact, its distance to
-  * every codebook entry of every subspace is tabulated once
-  * (|probes| · M · [[PqK]] rows — query-sized), and a candidate's
-  * approximate distance is the sum of M table lookups on its codes.
+  * gets its own k-means codebook ([[PqK]] entries), trained by the one
+  * exact-decimal Lloyd kernel of [[KMeansCodebook]] with the subspace
+  * as its `ss` key; a vector is stored as M = dim/[[SubDim]] small
+  * codes — here 4 × 3 bits against 64 × 4-byte floats, a ~85×
+  * compression. Search is ASYMMETRIC distance computation (ADC): the
+  * probe stays exact, its distance to every codebook entry of every
+  * subspace is tabulated once (|probes| · M · [[PqK]] rows —
+  * query-sized), and a candidate's approximate distance is the sum of
+  * M table lookups on its codes.
   *
   * 100 TB shape: training and encoding are the [[KMeansCodebook]]
-  * contract (map-only assignment with the codebooks in the task
-  * closure, one combiner-friendly (subspace, cluster, dim) aggregate
-  * per Lloyd round — only codebook-sized data ever reaches the
-  * driver). The ADC search joins the corpus' code table against a
-  * BROADCAST distance table on (subspace, code) — the corpus is never
-  * shuffled for the join, and a row's M subspace entries are
-  * co-located (they come from the same scanned row), so the map-side
-  * combine collapses them before the per-probe rank exchange.
+  * contract (map-only assignment with the books in the task closure,
+  * one combiner-friendly (ss, cluster, dim) aggregate per Lloyd round —
+  * only books-sized data ever reaches the driver). The ADC search
+  * joins the corpus' code table against a BROADCAST distance table on
+  * (subspace, code) — the corpus is never shuffled for the join, and a
+  * row's M subspace entries are co-located (they come from the same
+  * scanned row), so the map-side combine collapses them before the
+  * per-probe rank exchange.
   *
-  * Determinism: identical to [[KMeansCodebook]] — DECIMAL(18,9)
-  * coordinates, squared-L2 rounded to 6dp, argmin ties to the lowest
-  * cluster id, means re-fixed to 6dp — so codes, distance tables and
-  * ADC sums replay bit-for-bit in the DuckDB oracle's CTE chain. The
-  * corpus vectors are unit-norm, making squared L2 (= 2 − 2·cos for
-  * unit vectors) rank exactly like cosine: `PipelineSpec` pins ADC
-  * recall against the float [[Similarity.annTopK]].
+  * Determinism: the kernel's — DECIMAL(18,9) coordinates, squared-L2
+  * rounded to 6dp, argmin ties to the lowest cluster id, means re-fixed
+  * to 6dp — so codes, distance tables and ADC sums replay bit-for-bit
+  * in the DuckDB oracle's CTE chain. The corpus vectors are unit-norm,
+  * making squared L2 (= 2 − 2·cos for unit vectors) rank exactly like
+  * cosine: `PipelineSpec` pins ADC recall against the float
+  * [[Similarity.annTopK]].
   */
 object ProductQuant {
 
@@ -51,22 +50,9 @@ object ProductQuant {
   /** Lloyd rounds after the deterministic first-[[PqK]]-vectors init. */
   val PqIters: Int = KMeansCodebook.LloydIters
 
-  private def dec9(d: Double): JBig =
-    JBig.valueOf(d).setScale(9, RoundingMode.HALF_UP)
-
-  /** codebooks per subspace: ss -> sorted (cluster, centroid coords). */
-  private type PqBooks = Map[Long, Array[(Long, Array[JBig])]]
-
-  /** (vec_id, ss, sub): each vector exploded into its M subvectors —
-    * a map-only transform; a row's subvectors stay in its partition.
-    */
-  private def subBase(spark: SparkSession, dir: String): DataFrame =
-    subBaseOf(Kernels.fanOut(
-      Tables.embeddings(spark, dir)
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))))
-
-  /** [[subBase]] over an explicit (vec_id, v) corpus frame — the
-    * keep-filtered [[pipelineIndex]] corpus enters here.
+  /** (vec_id, ss, v): each vector's M [[SubDim]]-wide slices, one
+    * subspace each — a map-only transform; a row's slices stay in its
+    * partition.
     */
   private def subBaseOf(base: DataFrame): DataFrame =
     base
@@ -75,150 +61,39 @@ object ProductQuant {
         explode(expr(s"sequence(0, size(v) div $SubDim - 1)")).as("ss"),
         col("v"))
       .select(col("vec_id"), col("ss").cast("long").as("ss"),
-        slice(col("v"), col("ss") * SubDim + 1, lit(SubDim)).as("sub"))
+        slice(col("v"), col("ss") * SubDim + 1, lit(SubDim)).as("v"))
 
-  /** Exact-decimal squared L2 between a dec9'd subvector and a
-    * codebook centroid, rounded to 6dp (the argmin/table contract).
+  /** The corpus's per-subspace books, memoized per corpus. */
+  private def books(corpus: Corpus): Books =
+    KMeansCodebook.train("pq-books", corpus, PqK, subBaseOf)
+
+  /** (vec_id, ss, code): every (vector, subspace) to its nearest entry. */
+  private def encoded(vectors: DataFrame, books: Books): DataFrame =
+    KMeansCodebook.assign(subBaseOf(vectors), books)
+      .select(col("vec_id"), col("ss"), col("cluster").as("code"))
+
+  /** The corpus's encoded form, cached until the next retire — under
+    * [[books]]' memo key: one training and one encoding pass per corpus
+    * regardless of entry point.
     */
-  private def d6(xd: Array[JBig], cent: Array[JBig], id: Long): JBig = {
-    require(xd.length == cent.length,
-      s"vec_id=$id subvector dim ${xd.length} != codebook dim ${cent.length}")
-    var s = JBig.ZERO
-    var j = 0
-    while (j < cent.length) {
-      val diff = xd(j).subtract(cent(j))
-      s = s.add(diff.multiply(diff))
-      j += 1
-    }
-    s.setScale(6, RoundingMode.HALF_UP)
-  }
-
-  /** Map-only encoding pass: every (vector, subspace) to its nearest
-    * codebook entry; the books ride the task closure (M·K·SubDim
-    * values — corpus-size-independent).
-    */
-  private def assign(spark: SparkSession, base: DataFrame, books: PqBooks): DataFrame = {
-    import spark.implicits._
-    base.as[(Long, Long, Seq[Double])].mapPartitions { it =>
-      it.map { case (id, ss, sub) =>
-        val xd = sub.map(dec9).toArray
-        var bestC = Long.MaxValue
-        var bestD: JBig = null
-        books(ss).foreach { case (c, cent) =>
-          val d = d6(xd, cent, id)
-          val cmp = if (bestD == null) -1 else d.compareTo(bestD)
-          if (cmp < 0 || (cmp == 0 && c < bestC)) { bestD = d; bestC = c }
-        }
-        (id, ss, bestC, sub)
-      }
-    }.toDF("vec_id", "ss", "code", "sub")
-  }
-
-  /** One combiner-friendly (ss, code, dim) aggregate recomputing every
-    * subspace codebook — M·K·SubDim output rows, never corpus-sized.
-    */
-  private def recompute(assigned: DataFrame): DataFrame =
-    assigned
-      .select(col("ss"), col("code"), posexplode(col("sub")).as(Seq("pos", "x")))
-      .groupBy(col("ss"), col("code"), (col("pos") + 1).cast("long").as("dim"))
-      .agg(count(lit(1)).as("n"), sum(col("x").cast("decimal(18,9)")).as("sx"))
-      .select(col("ss"), col("code"), col("dim"),
-        round(col("sx").cast("double") / col("n"), 6).as("c"))
-
-  private def collectBooks(cent: DataFrame): PqBooks =
-    cent.select("ss", "code", "dim", "c").collect()
-      .groupBy(_.getLong(0))
-      .map { case (ss, rows) =>
-        ss -> rows.groupBy(_.getLong(1)).map { case (c, rs) =>
-          (c, rs.sortBy(_.getLong(2)).map(r => dec9(r.getDouble(3))))
-        }.toArray.sortBy(_._1)
-      }
-
-  // Trained books and the encoded corpus are memoized per input
-  // fingerprint, mirroring KMeansCodebook's train-once contract; the
-  // codes cache retires with Kernels.retireCaches.
-  private def trainedBooks(spark: SparkSession, dir: String): PqBooks =
-    trainedBooksOn(spark, Kernels.inputKey(dir, "embeddings.parquet"),
-      subBase(spark, dir))
-
-  /** The per-subspace Lloyd trainer over an explicit exploded corpus
-    * (vec_id, ss, sub), memoized under `key`. Init is the first
-    * [[PqK]] corpus vectors by `vec_id` (a distinct-TakeOrdered — the
-    * id set is PqK values, driver-bounded), which on the dense-id full
-    * table is exactly the old `vec_id < PqK` filter; on a
-    * keep-filtered corpus it is the first PqK SURVIVORS, mirroring the
-    * oracle's rank-form init CTE.
-    */
-  private[operators] def trainedBooksOn(
-      spark: SparkSession, key: (String, String), base: => DataFrame): PqBooks =
-    Kernels.memo("pq-books", key) {
-      import spark.implicits._
-      val b = base
-      val initIds = b.select(col("vec_id")).distinct()
-        .orderBy("vec_id").limit(PqK).as[Long].collect().toSeq
-      var books: PqBooks = b.filter(col("vec_id").isin(initIds: _*))
-        .as[(Long, Long, Seq[Double])].collect()
-        .groupBy(_._2)
-        .map { case (ss, rows) =>
-          ss -> rows.map { case (id, _, sub) => (id, sub.map(dec9).toArray) }
-            .sortBy(_._1)
-        }
-      for (_ <- 1 until PqIters)
-        books = collectBooks(recompute(assign(spark, b, books)))
-      books
-    }
-
-  /** Final encoded corpus (vec_id, ss, code), cached per input. */
-  private def codesOf(spark: SparkSession, dir: String): DataFrame =
-    codesOfOn(spark, Kernels.inputKey(dir, "embeddings.parquet"),
-      subBase(spark, dir))
-
-  /** [[codesOf]] for an explicit (key, exploded corpus) — shares
-    * [[trainedBooksOn]]'s memo key: one training + one encoding pass
-    * per corpus regardless of entry point.
-    */
-  private def codesOfOn(
-      spark: SparkSession, key: (String, String), base: => DataFrame): DataFrame =
-    Kernels.memoUntilRetire("pq-codes", key) {
-      val b = base
-      assign(spark, b, trainedBooksOn(spark, key, b))
-        .select(col("vec_id"), col("ss"), col("code"))
-    }
+  private def codes(corpus: Corpus): DataFrame =
+    Kernels.memoUntilRetire("pq-codes", corpus.key)(
+      encoded(corpus.vectors, books(corpus)))
 
   /** `embedding_pq`: the encoded corpus — M codes per vector. */
   def encode(spark: SparkSession, dir: String): DataFrame =
-    codesOf(spark, dir).orderBy("vec_id", "ss")
+    codes(KMeansCodebook.embeddings(spark, dir)).orderBy("vec_id", "ss")
 
   /** The probes' ADC distance table (probe_id, ss, code, td): each
-    * probe's exact-decimal distance to every codebook entry of every
-    * subspace — |probes| · M · [[PqK]] rows, query-sized, always
-    * broadcast by consumers.
+    * probe's exact-decimal distance to every entry of every subspace —
+    * |probes| · M · [[PqK]] rows, query-sized, always broadcast by
+    * consumers.
     */
-  private def adcTable(spark: SparkSession, dir: String): DataFrame =
-    adcTableOf(spark, dir, trainedBooks(spark, dir))
-
-  /** [[adcTable]] against EXPLICIT books — the serve path reads them
-    * from a [[writeCodebooks]] artifact instead of retraining.
-    */
-  private def adcTableOf(
-      spark: SparkSession, dir: String, books: PqBooks): DataFrame =
-    adcTableFromBase(spark, subBase(spark, dir), books)
-
-  /** [[adcTableOf]] with the probe universe passed as an exploded
-    * corpus frame — the pipeline index tabulates only SURVIVING
-    * probes' distances.
-    */
-  private def adcTableFromBase(
-      spark: SparkSession, probeSubBase: DataFrame, books: PqBooks): DataFrame = {
-    import spark.implicits._
-    probeSubBase.filter(col("vec_id") < Similarity.NumProbes)
-      .as[(Long, Long, Seq[Double])]
-      .flatMap { case (id, ss, sub) =>
-        val xd = sub.map(dec9).toArray
-        books(ss).map { case (c, cent) => (id, ss, c, d6(xd, cent, id)) }
-      }
-      .toDF("probe_id", "ss", "code", "td")
-  }
+  private def adcTable(probes: DataFrame, books: Books): DataFrame =
+    KMeansCodebook.nearest(
+        subBaseOf(probes.filter(col("vec_id") < Similarity.NumProbes)), books, Int.MaxValue)
+      .select(col("vec_id").as("probe_id"), col("ss"), col("cluster").as("code"),
+        col("d").as("td"))
 
   /** Folds (probe_id, vec_id, ss-level td rows) into the top-`k` ADC
     * frame (probe_id, neighbor_id, adist, rnk) — shared by the
@@ -253,10 +128,10 @@ object ProductQuant {
     * the full code table. The per-probe distance table is query-sized
     * and BROADCAST; the corpus side contributes only its code rows.
     */
-  private def adcRanked(spark: SparkSession, dir: String, k: Int): DataFrame =
+  private def adcRanked(corpus: Corpus, k: Int): DataFrame =
     adcRank(
-      codesOf(spark, dir)
-        .join(broadcast(adcTable(spark, dir)), Seq("ss", "code")), k)
+      codes(corpus).join(broadcast(adcTable(corpus.scan, books(corpus))), Seq("ss", "code")),
+      k)
 
   /** `ann_pq`: ADC top-k — exact probes against the quantized corpus.
     * Standalone ADC recall on this corpus is modest (the planted
@@ -265,7 +140,7 @@ object ProductQuant {
     * [[annPqRerank]], which uses ADC only as the cheap shortlist.
     */
   def annPq(spark: SparkSession, dir: String): DataFrame =
-    adcRanked(spark, dir, Similarity.TopK)
+    adcRanked(KMeansCodebook.embeddings(spark, dir), Similarity.TopK)
       .orderBy("probe_id", "rnk")
 
   /** ADC shortlist width for the re-ranked query. */
@@ -280,32 +155,23 @@ object ProductQuant {
     * rows, not the whole table. Recall is gated in the spec (measured
     * 0.88 at sf0.001 vs 0.22 for raw ADC).
     */
-  def annPqRerank(spark: SparkSession, dir: String): DataFrame =
-    rerankExact(spark, dir,
-      adcRanked(spark, dir, Shortlist)
-        .select("probe_id", "neighbor_id"))
+  def annPqRerank(spark: SparkSession, dir: String): DataFrame = {
+    val corpus = KMeansCodebook.embeddings(spark, dir)
+    rerankExact(corpus.scan,
+      adcRanked(corpus, Shortlist).select("probe_id", "neighbor_id"))
+  }
 
   /** Exact-cosine re-rank of a query-sized (probe_id, neighbor_id)
-    * shortlist: only the shortlisted vectors' floats are fetched (a
-    * join of the tiny shortlist against the streamed corpus), so the
-    * full-precision read is |probes|·shortlist rows, never the table.
+    * shortlist against a (vec_id, v) frame: only the shortlisted
+    * vectors' floats are fetched (a join of the tiny shortlist against
+    * the streamed corpus), so the full-precision read is
+    * |probes|·shortlist rows, never the table.
     */
-  private def rerankExact(
-      spark: SparkSession, dir: String, short: DataFrame): DataFrame =
-    rerankExactOn(spark,
-      Kernels.fanOut(
-        Tables.embeddings(spark, dir)
-          .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))),
-      short)
-
-  /** [[rerankExact]] against an explicit (vec_id, v) corpus — the
-    * pipeline index reranks within the surviving corpus only.
-    */
-  private def rerankExactOn(
-      spark: SparkSession, base: DataFrame, short: DataFrame): DataFrame = {
+  private def rerankExact(scan: DataFrame, short: DataFrame): DataFrame = {
     import graft.functions.VectorFunctions.dot
     import graft.functions.TopKFunctions.topK
-    val emb = base
+    val spark = scan.sparkSession
+    val emb = Kernels.fanOut(scan)
       .withColumn("nrm", sqrt(dot(spark, col("v"), col("v"))))
     val probes = emb.filter(col("vec_id") < Similarity.NumProbes)
       .select(col("vec_id").as("probe_id"), col("v").as("pv"), col("nrm").as("pn"))
@@ -326,6 +192,20 @@ object ProductQuant {
       .orderBy("probe_id", "rnk")
   }
 
+  /** The IVFPQ search body shared by the trained ([[annIvfPq]]) and
+    * artifact-served ([[serveIndex]]) paths: candidates from the
+    * probed cells' code rows, ADC sum over the broadcast distance
+    * table, exact rerank of the shortlist over `scan`.
+    */
+  private def search(scan: DataFrame,
+      celledCodes: DataFrame, pcells: DataFrame, adc: DataFrame): DataFrame =
+    rerankExact(scan,
+      adcRank(
+        celledCodes
+          .join(broadcast(pcells), col("cluster") === col("pcluster"))
+          .join(broadcast(adc), Seq("probe_id", "ss", "code")), Shortlist)
+        .select("probe_id", "neighbor_id"))
+
   /** `ann_ivf_pq`: the COMPLETE production ANN index shape — the
     * FAISS IVFPQ composition of the three pieces this suite ships
     * separately: the trained IVF cells prune WHICH vectors a probe
@@ -335,17 +215,18 @@ object ProductQuant {
     * [[SubDim]]-subspace codebooks — code rows only, ~85× smaller
     * than floats), and the exact re-rank restores precision on the
     * [[Shortlist]]-deep survivors (full floats fetched for
-    * |probes|·shortlist rows only).
+    * |probes|·shortlist rows only). Cells and subspace codebooks are
+    * the same Lloyd kernel, keyed by subspace.
     *
     * 100 TB shape: the stored index is the codes table WITH the
     * vector's cell id alongside (the one-time build join below — in
     * production codes are written partitioned by cell, so a probe
-    * reads only its probed cells' files); the search itself is two
-    * BROADCAST joins (probe cells, ADC table) + one map-side-combined
-    * sum + a per-probe rank over candidates from 2 cells. Every stage
-    * replays engine-exactly (decimal distances, lowest-id ties), so
-    * the composed index is oracle-gated end to end; the spec pins
-    * recall vs the exact float top-k.
+    * reads only its probed cells' files, [[buildIndex]]); the search
+    * itself is two BROADCAST joins (probe cells, ADC table) + one
+    * map-side-combined sum + a per-probe rank over candidates from 2
+    * cells. Every stage replays engine-exactly (decimal distances,
+    * lowest-id ties), so the composed index is oracle-gated end to
+    * end; the spec pins recall vs the exact float top-k.
     */
   def annIvfPq(spark: SparkSession, dir: String): DataFrame =
     annIvfPq(spark, dir, Similarity.KmProbeCells)
@@ -367,132 +248,87 @@ object ProductQuant {
     * they don't, and the fixed data keeps the check deterministic.)
     */
   def annIvfPq(spark: SparkSession, dir: String, nprobe: Int): DataFrame = {
-    val celledCodes = codesOf(spark, dir)
-      .join(KMeansCodebook.lastAssignment(spark, dir).select("vec_id", "cluster"),
-        "vec_id")
-    val pcells = KMeansCodebook.probeCells(
-      spark, dir, Similarity.NumProbes, nprobe)
-    ivfPqSearch(spark, dir, celledCodes, pcells, adcTable(spark, dir))
+    val corpus = KMeansCodebook.embeddings(spark, dir)
+    search(corpus.scan,
+      codes(corpus)
+        .join(KMeansCodebook.lastAssignment(corpus).select("vec_id", "cluster"), "vec_id"),
+      KMeansCodebook.probeCells(corpus.scan, KMeansCodebook.codebook(corpus), nprobe),
+      adcTable(corpus.scan, books(corpus)))
   }
 
-  /** The IVFPQ search body shared by the trained ([[annIvfPq]]) and
-    * artifact-served ([[annIvfPqFrom]]) paths: candidates from the
-    * probed cells' code rows, ADC sum over the broadcast distance
-    * table, exact rerank of the shortlist.
-    */
-  private def ivfPqSearch(spark: SparkSession, dir: String,
-      celledCodes: DataFrame, pcells: DataFrame, adc: DataFrame): DataFrame =
-    ivfPqSearchOn(spark,
-      Kernels.fanOut(
-        Tables.embeddings(spark, dir)
-          .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))),
-      celledCodes, pcells, adc)
-
-  /** [[ivfPqSearch]] with the rerank corpus passed explicitly. */
-  private def ivfPqSearchOn(spark: SparkSession, rerankBase: DataFrame,
-      celledCodes: DataFrame, pcells: DataFrame, adc: DataFrame): DataFrame = {
-    val short = adcRank(
-      celledCodes
-        .join(broadcast(pcells), col("cluster") === col("pcluster"))
-        .join(broadcast(adc), Seq("probe_id", "ss", "code")), Shortlist)
-      .select("probe_id", "neighbor_id")
-    rerankExactOn(spark, rerankBase, short)
-  }
-
-  /** Materializes the PQ half of the ANN index to `path`, next to
-    * [[KMeansCodebook.writeIndex]]'s coarse half — together they ARE
-    * the durable index the `annIvfPq` docstring's production layout
-    * describes, now built rather than merely documented:
+  /** Materializes the COMPLETE durable IVF-PQ index of `corpus` under
+    * `root` — the durable twin of the session memos, completing the
+    * train-once/probe-many production story ([[Bpe.writeMergeTable]]'s
+    * contract applied to the vector index):
     *
-    *  - `path/pq_codebooks`: every subspace's K centroids as
-    *    DECIMAL(18,9) (M·[[PqK]]·[[SubDim]] rows — exact coordinates,
-    *    so a serving session's ADC tables replay bit-for-bit);
-    *  - `path/codes`: the encoded corpus (vec_id, ss, code) written
-    *    PARTITIONED BY its IVF cell — codes-partitioned-by-cell is the
-    *    production layout: a probe's ADC pass reads ONLY its probed
-    *    cells' directories (static partition pruning, plan-audited),
-    *    so at 100 TB the per-probe scan is nprobe/K of the code table,
-    *    which is itself ~85× smaller than the float corpus.
+    *  - `root/coarse_codebook` and `root/pq_codebooks`: the trained
+    *    cells and subspace books, [[KMeansCodebook.writeBooks]] tables
+    *    (exact DECIMAL(18,9) coordinates, so a serving session's probe
+    *    cells and ADC tables replay bit-for-bit);
+    *  - `root/assignment`: every vector's cell id, PARTITIONED BY
+    *    cluster;
+    *  - `root/codes`: the encoded corpus (vec_id, ss, code) PARTITIONED
+    *    BY its IVF cell — the production layout: a probe's ADC pass
+    *    reads ONLY its probed cells' directories (static partition
+    *    pruning, plan-audited), so at 100 TB the per-probe scan is
+    *    nprobe/K of the code table, which is itself ~85× smaller than
+    *    the float corpus.
     */
-  def writeCodebooks(spark: SparkSession, dir: String, path: String): Unit =
-    writeCodebooksOn(spark, Kernels.inputKey(dir, "embeddings.parquet"),
-      subBase(spark, dir),
-      KMeansCodebook.lastAssignment(spark, dir), path)
-
-  /** [[writeCodebooks]] for an explicit (key, exploded corpus, coarse
-    * assignment) — the keep-filtered pipeline artifact's PQ half.
-    */
-  private def writeCodebooksOn(spark: SparkSession, key: (String, String),
-      base: => DataFrame, coarseAssignment: DataFrame, path: String): Unit = {
-    import spark.implicits._
-    val b = base
-    trainedBooksOn(spark, key, b).toSeq.flatMap { case (ss, entries) =>
-        entries.toSeq.flatMap { case (c, coords) =>
-          coords.toSeq.zipWithIndex.map { case (x, i) =>
-            (ss, c, (i + 1).toLong, x.toPlainString) }
-        }
-      }
-      .toDF("ss", "code", "dim", "c_str")
-      .select(col("ss"), col("code"), col("dim"),
-        col("c_str").cast("decimal(18,9)").as("c"))
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/pq_codebooks")
-    codesOfOn(spark, key, b)
-      .join(coarseAssignment.select("vec_id", "cluster"), "vec_id")
-      .write.mode("overwrite").partitionBy("cluster").parquet(s"$path/codes")
+  private def buildIndex(spark: SparkSession, corpus: Corpus, root: String): Unit = {
+    KMeansCodebook.writeBooks(spark, KMeansCodebook.codebook(corpus), s"$root/coarse_codebook")
+    val cells = KMeansCodebook.lastAssignment(corpus).select("vec_id", "cluster")
+    cells.write.mode("overwrite").partitionBy("cluster").parquet(s"$root/assignment")
+    KMeansCodebook.writeBooks(spark, books(corpus), s"$root/pq_codebooks")
+    codes(corpus).join(cells, "vec_id")
+      .write.mode("overwrite").partitionBy("cluster").parquet(s"$root/codes")
   }
 
-  /** Reads a [[writeCodebooks]] artifact back as DataFrames —
-    * (pq_codebooks, celled codes) — from any session that can read the
-    * path; the codes' partition column is re-cast to long so consumers
-    * see the training-session schema.
-    */
-  def codebooksFrom(spark: SparkSession, path: String): (DataFrame, DataFrame) = (
-    spark.read.parquet(s"$path/pq_codebooks").orderBy("ss", "code", "dim"),
-    spark.read.parquet(s"$path/codes")
-      .withColumn("cluster", col("cluster").cast("long")))
-
-  /** The artifact's books in the in-memory form the ADC kernels
-    * consume — exact scale-9 decimals, equal to the training session's
-    * [[trainedBooks]] (DECIMAL(18,9) round-trips parquet exactly).
-    */
-  private def booksFromArtifact(spark: SparkSession, path: String): PqBooks =
-    spark.read.parquet(s"$path/pq_codebooks")
-      .select("ss", "code", "dim", "c").collect()
-      .groupBy(_.getLong(0))
-      .map { case (ss, rows) =>
-        ss -> rows.groupBy(_.getLong(1)).map { case (c, rs) =>
-          (c, rs.sortBy(_.getLong(2)).map(_.getDecimal(3).setScale(9)))
-        }.toArray.sortBy(_._1)
-      }
-
-  /** `ann_ivf_pq` SERVED from a durable index artifact
-    * ([[KMeansCodebook.writeIndex]] + [[writeCodebooks]] under one
-    * root) — the production read path: NO training, NO session memo,
-    * no dependence on the building session being alive. The serving
-    * session reads the coarse codebook (K·dim rows) and PQ books
-    * (M·K·SubDim rows) to the driver — bounded, index-metadata-sized,
-    * the same closure-shipping contract as training — and the probed
-    * cell ids (≤ nprobe·|probes| values) are pushed as a STATIC
-    * partition filter on the celled code table, so the candidate scan
+  /** The one IVF-PQ serve: `ann_ivf_pq` from [[buildIndex]] artifacts —
+    * the production read path: NO training, NO session memo, no
+    * dependence on the building session being alive. The coarse
+    * codebook (K·dim rows) and PQ books (M·K·SubDim rows) are read from
+    * the first root to the driver — bounded, index-metadata-sized, the
+    * same closure-shipping contract as training — and the probed cell
+    * ids (≤ nprobe·|probes| values) are pushed as a STATIC partition
+    * filter on every root's celled code table, so the candidate scan
     * reads only the probed cells' directories (PartitionFilters in the
-    * plan, audited). Value-equal to the trained [[annIvfPq]] from a
-    * fresh session (spec-pinned), because every stored coordinate is
-    * the exact decimal the training kernels used.
+    * plan, audited). Several roots are LAYERS of one store (an
+    * immutable trained base, then deltas): their code rows union, which
+    * changes which files hold a row, never the rows. Probes, ADC and
+    * rerank read `corpus.scan`. Value-equal to the trained [[annIvfPq]]
+    * from a fresh session (spec-pinned), because every stored
+    * coordinate is the exact decimal the training kernels used.
     */
-  /** Builds the COMPLETE durable index (coarse + PQ halves) under a
+  private def serveIndex(spark: SparkSession, corpus: Corpus,
+      roots: Seq[String], nprobe: Int): DataFrame = {
+    val pcells = KMeansCodebook.probeCells(corpus.scan,
+      KMeansCodebook.readBooks(spark, s"${roots.head}/coarse_codebook"), nprobe)
+    // probed cells: bounded driver-side collect (≤ K distinct values) —
+    // the static filter is what turns "scan the code table" into "read
+    // the probed cells' partition directories"
+    val probed = pcells.select("pcluster").distinct().collect().map(_.getLong(0))
+    // one read per root (multi-root partition discovery conflicts),
+    // pruned per root, then unioned by name
+    val codes = roots
+      .map(r => spark.read.parquet(s"$r/codes")
+        .filter(col("cluster").isin(probed: _*))
+        .withColumn("cluster", col("cluster").cast("long"))
+        .select("vec_id", "ss", "code", "cluster"))
+      .reduce(_ unionByName _)
+    search(corpus.scan, codes, pcells,
+      adcTable(corpus.scan, KMeansCodebook.readBooks(spark, s"${roots.head}/pq_codebooks")))
+  }
+
+  /** Builds the COMPLETE durable index of the full corpus under a
     * corpus-fingerprinted root in the JVM temp dir and returns the
     * root, writing at most once per (corpus, JVM) — the gate-facing
     * wrapper that lets the `ann_ivf_pq_served` query exercise the
     * whole write-then-read artifact path end to end under the oracle.
-    * Production pipelines call [[KMeansCodebook.writeIndex]] +
-    * [[writeCodebooks]] directly with a real warehouse path.
     */
-  def ensureIndexArtifact(spark: SparkSession, dir: String): String =
-    Kernels.buildStore("graft-ann-index", Kernels.inputKey(dir, "embeddings.parquet")) {
-      root =>
-        KMeansCodebook.writeIndex(spark, dir, root)
-        writeCodebooks(spark, dir, root)
-    }
+  def ensureIndexArtifact(spark: SparkSession, dir: String): String = {
+    val corpus = KMeansCodebook.embeddings(spark, dir)
+    Kernels.buildStore("graft-ann-index", corpus.key)(buildIndex(spark, corpus, _))
+  }
 
   // -------------------------------------------------------------------
   // Index MAINTENANCE under ingest — the missing refresh path between
@@ -501,13 +337,11 @@ object ProductQuant {
   // with the EXISTING books, and only their rows are appended to the
   // celled stores. The keep-list got exactly this in
   // Dedup.keepMaintain; the index now has its twin.
-
-  /** The history corpus (trains the index) under the `inc:` split. */
-  private def histVecBase(spark: SparkSession, dir: String): DataFrame =
-    Kernels.fanOut(
-      Tables.embeddings(spark, dir)
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-        .filter(!Dedup.isBatch(col("vec_id"))))
+  //
+  // EXACTNESS: given frozen codebooks, each vector's cell and codes are
+  // independent of every other vector, so the maintained store EQUALS
+  // the store of "train on history, encode the union corpus" — which
+  // is what the oracle replays.
 
   /** History-corpus memo key — distinct from the full-table keys so
     * the history-trained codebooks never collide with the full-corpus
@@ -518,67 +352,41 @@ object ProductQuant {
     (s"ann-maintain:${ek._1}", ek._2)
   }
 
-  /** Builds the history-trained durable index, then MAINTAINS it with
-    * the ingest batch: batch vectors are assigned to the frozen coarse
-    * cells ([[KMeansCodebook.assign]] with the ARTIFACT codebook — the
-    * exact decimals training used, so maintained assignment ==
-    * one-shot assignment bit-for-bit), PQ-encoded with the artifact
-    * books, and their (assignment, codes) rows APPENDED into the
-    * celled parquet layout. Nothing is retrained; no history row is
-    * rewritten; per-ingest cost is batch-sized map-only work plus an
-    * append of batch-sized partitions — the 100 TB maintenance story.
-    *
-    * EXACTNESS: given frozen codebooks, each vector's cell and codes
-    * are independent of every other vector, so the maintained store
-    * EQUALS the store of "train on history, encode the union corpus"
-    * — which is what the oracle replays.
+  /** The history corpus (trains the maintained index) under the `inc:`
+    * split, pinned per query thread.
     */
-  /** Trains on the HISTORY slice and writes the full celled artifact
-    * (cells, codebooks, history assignments + codes) to `root` — the
-    * build half of maintenance, shared by the batch query and the
-    * streaming twin.
-    */
-  private[graft] def writeHistoryTrainedIndex(
-      spark: SparkSession, dir: String, root: String): Unit = {
-    val key = maintKey(dir)
-    val hb = Kernels.cacheTracked(histVecBase(spark, dir))
-    KMeansCodebook.writeIndexOn(spark, key, hb, root)
-    writeCodebooksOn(spark, key, subBaseOf(hb),
-      KMeansCodebook.assignmentOn(spark, key, hb), root)
+  private def history(spark: SparkSession, dir: String): Corpus = {
+    def scan = KMeansCodebook.vectorsOf(Tables.embeddings(spark, dir))
+      .filter(!Dedup.isBatch(col("vec_id")))
+    new Corpus(maintKey(dir), scan, Kernels.cacheTracked(Kernels.fanOut(scan)))
   }
 
-  /** One ingest batch's frozen-codebook append into the maintained
-    * store at `root`: assign to the ARTIFACT coarse cells (the exact
-    * decimals training used, so maintained assignment == one-shot
-    * assignment bit-for-bit), PQ-encode with the artifact books,
-    * append only the batch's rows into the celled layout. Per-vector
+  /** One ingest batch's frozen-codebook append: codebooks are read from
+    * `codebookRoot` (the immutable trained BASE), rows are appended
+    * under `writeRoot` — the same dir for in-place maintenance, a
+    * separate DELTA layer for the streaming maintainer (the base is
+    * shared and never written; the serve path unions the layers — the
+    * LSM shape the compaction pass later folds flat). Batch vectors are
+    * assigned to the ARTIFACT coarse cells (the exact decimals training
+    * used, so maintained assignment == one-shot assignment
+    * bit-for-bit), PQ-encoded with the artifact books, and only the
+    * batch's rows are appended into the celled layout. Per-vector
     * independent given frozen codebooks, so appends commute — any
     * micro-batching of the same rows builds the same store.
-    */
-  private[graft] def appendBatchToIndex(batch: DataFrame, root: String): Unit =
-    appendBatchToIndex(batch, root, root)
-
-  /** The layered form: codebooks are read from `codebookRoot` (the
-    * immutable trained BASE), rows are appended under `writeRoot` —
-    * the same dir for in-place maintenance, a separate DELTA layer for
-    * the streaming maintainer (the base is shared and never written;
-    * the serve path unions the layers — the LSM shape the compaction
-    * pass later folds flat).
     */
   private[graft] def appendBatchToIndex(
       batch: DataFrame, codebookRoot: String, writeRoot: String): Unit = {
     val spark = batch.sparkSession
-    val b = batch
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
+    val b = KMeansCodebook.vectorsOf(batch)
     val bAssign = KMeansCodebook
-      .assign(spark, b, KMeansCodebook.codebookFromArtifact(spark, codebookRoot))
+      .assign(KMeansCodebook.oneSpace(b),
+        KMeansCodebook.readBooks(spark, s"$codebookRoot/coarse_codebook"))
       .select(col("vec_id"), col("cluster"))
       .localCheckpoint() // consumed twice (write + codes join); batch-sized
     try {
       bAssign.write.mode("append").partitionBy("cluster")
         .parquet(s"$writeRoot/assignment")
-      assign(spark, subBaseOf(b), booksFromArtifact(spark, codebookRoot))
-        .select(col("vec_id"), col("ss"), col("code"))
+      encoded(b, KMeansCodebook.readBooks(spark, s"$codebookRoot/pq_codebooks"))
         .join(bAssign, "vec_id")
         .write.mode("append").partitionBy("cluster").parquet(s"$writeRoot/codes")
     } finally {
@@ -595,40 +403,29 @@ object ProductQuant {
     * deltas over. Built once per (corpus, JVM); never written again.
     */
   private[graft] def ensureHistoryArtifact(spark: SparkSession, dir: String): String =
-    Kernels.buildStore("graft-ann-hist", maintKey(dir))(
-      writeHistoryTrainedIndex(spark, dir, _))
+    Kernels.buildStore("graft-ann-hist", maintKey(dir))(buildIndex(spark, history(spark, dir), _))
 
   /** [[annIvfPqFrom]] over a LAYERED store: codebooks and probe cells
     * from the immutable `base`, candidate codes from the UNION of the
     * base's and the delta's celled code tables. Row-identical to
-    * serving a single merged store — layering changes which files hold
-    * a row, never the rows.
+    * serving a single merged store.
     */
   private[graft] def annIvfPqFromLayers(
-      spark: SparkSession, dir: String, base: String, delta: String): DataFrame = {
-    val cb = KMeansCodebook.codebookFromArtifact(spark, base)
-    val pcells = KMeansCodebook.probeCellsOf(
-      spark, dir, cb, Similarity.NumProbes, Similarity.KmProbeCells)
-    val probed = pcells.select("pcluster").distinct().collect().map(_.getLong(0))
-    // one read per layer (multi-root partition discovery conflicts),
-    // pruned per layer, then unioned by name
-    val codes = Seq(s"$base/codes", s"$delta/codes")
-      .map(p => spark.read.parquet(p)
-        .filter(col("cluster").isin(probed: _*))
-        .withColumn("cluster", col("cluster").cast("long"))
-        .select("vec_id", "ss", "code", "cluster"))
-      .reduce(_ unionByName _)
-    ivfPqSearch(spark, dir, codes, pcells,
-      adcTableOf(spark, dir, booksFromArtifact(spark, base)))
-  }
+      spark: SparkSession, dir: String, base: String, delta: String): DataFrame =
+    serveIndex(spark, KMeansCodebook.embeddings(spark, dir), Seq(base, delta),
+      Similarity.KmProbeCells)
 
+  /** The history-trained index, then MAINTAINED with the ingest batch:
+    * [[appendBatchToIndex]] in place. Nothing is retrained; no history
+    * row is rewritten; per-ingest cost is batch-sized map-only work
+    * plus an append of batch-sized partitions — the 100 TB maintenance
+    * story.
+    */
   private[graft] def ensureMaintainedArtifact(spark: SparkSession, dir: String): String =
     Kernels.buildStore("graft-ann-maint", maintKey(dir)) { root =>
-      writeHistoryTrainedIndex(spark, dir, root)
-      // --- the maintenance step: frozen-codebook ingest of the batch
+      buildIndex(spark, history(spark, dir), root)
       appendBatchToIndex(
-        Tables.embeddings(spark, dir)
-          .filter(Dedup.isBatch(col("vec_id"))), root)
+        Tables.embeddings(spark, dir).filter(Dedup.isBatch(col("vec_id"))), root, root)
     }
 
   /** Compacts a maintained celled artifact into a self-contained twin
@@ -682,48 +479,18 @@ object ProductQuant {
   def annIvfPqMaintain(spark: SparkSession, dir: String): DataFrame =
     annIvfPqFrom(spark, dir, ensureMaintainedArtifact(spark, dir))
 
-  def annIvfPqFrom(spark: SparkSession, dir: String, path: String): DataFrame =
-    annIvfPqFrom(spark, dir, path, Similarity.KmProbeCells)
-
-  /** [[annIvfPqFrom]] with the nprobe knob exposed — the serve-time
-    * recall/latency trade ([[annIvfPq]]'s measured curve): a higher
-    * nprobe reads more cell directories, nothing is retrained or
-    * rewritten.
+  /** `ann_ivf_pq` served from the index artifact at `path`, with the
+    * nprobe knob exposed — the serve-time recall/latency trade
+    * ([[annIvfPq]]'s measured curve): a higher nprobe reads more cell
+    * directories, nothing is retrained or rewritten.
     */
-  def annIvfPqFrom(
-      spark: SparkSession, dir: String, path: String, nprobe: Int): DataFrame = {
-    val cb = KMeansCodebook.codebookFromArtifact(spark, path)
-    val pcells = KMeansCodebook.probeCellsOf(
-      spark, dir, cb, Similarity.NumProbes, nprobe)
-    // probed cells: bounded driver-side collect (≤ K distinct values) —
-    // the static filter is what turns "scan the code table" into "read
-    // the probed cells' partition directories"
-    val probed = pcells.select("pcluster").distinct().collect().map(_.getLong(0))
-    val codes = spark.read.parquet(s"$path/codes")
-      .filter(col("cluster").isin(probed: _*))
-      .withColumn("cluster", col("cluster").cast("long"))
-    ivfPqSearch(spark, dir, codes, pcells,
-      adcTableOf(spark, dir, booksFromArtifact(spark, path)))
-  }
+  def annIvfPqFrom(spark: SparkSession, dir: String, path: String,
+      nprobe: Int = Similarity.KmProbeCells): DataFrame =
+    serveIndex(spark, KMeansCodebook.embeddings(spark, dir), Seq(path), nprobe)
 
   // -------------------------------------------------------------------
   // FLAGSHIP #3 — `pipeline_index`: the corpus-to-index build+serve
   // chain a production vector store runs on every corpus release.
-
-  /** The index pipeline's corpus: embeddings of the documents the
-    * near-dup keep-list retains (vec_id ≡ doc_id in this schema) —
-    * duplicates never enter the index, so a probe can't burn its
-    * shortlist on n copies of one page. One broadcast-able semi-join
-    * (the keep-list is representative-per-cluster sized); the corpus
-    * side streams.
-    */
-  private def pipeBase(spark: SparkSession, dir: String): DataFrame =
-    Kernels.memoUntilRetire("pipe-base", pipeKey(dir))(
-      Kernels.fanOut(
-        Tables.embeddings(spark, dir)
-          .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-          .join(Dedup.keepIds(spark, dir).select(col("doc_id").as("vec_id")),
-            Seq("vec_id"), "left_semi")))
 
   /** Memo key for the keep-filtered corpus: distinct from the
     * full-table keys (so the two corpora never share a trained
@@ -736,39 +503,48 @@ object ProductQuant {
     (s"pipeline-index:${ek._1}", s"${ek._2}|${dk._2}")
   }
 
+  /** The index pipeline's corpus: embeddings of the documents the
+    * near-dup keep-list retains (vec_id ≡ doc_id in this schema) —
+    * duplicates never enter the index, so a probe can't burn its
+    * shortlist on n copies of one page. One broadcast-able semi-join
+    * (the keep-list is representative-per-cluster sized); the corpus
+    * side streams. Pinned until the next retire, and served from the
+    * same pinned frame.
+    */
+  private def pipeline(spark: SparkSession, dir: String): Corpus = {
+    def base = Kernels.memoUntilRetire("pipe-base", pipeKey(dir))(
+      Kernels.fanOut(
+        KMeansCodebook.vectorsOf(Tables.embeddings(spark, dir))
+          .join(Dedup.keepIds(spark, dir).select(col("doc_id").as("vec_id")),
+            Seq("vec_id"), "left_semi")))
+    new Corpus(pipeKey(dir), base, base)
+  }
+
   /** Builds the COMPLETE durable index over the keep-filtered corpus
-    * (coarse cells + assignment + PQ codebooks + celled codes — the
-    * [[KMeansCodebook.writeIndex]]/[[writeCodebooks]] layout) under a
-    * fingerprinted root, once per (corpus, JVM); returns the root.
+    * ([[buildIndex]]) under a fingerprinted root, once per (corpus,
+    * JVM); returns the root.
     */
   private[graft] def ensurePipelineArtifact(spark: SparkSession, dir: String): String = {
-    val key = pipeKey(dir)
-    Kernels.buildStore("graft-pipe-index", key) { root =>
-      val base = pipeBase(spark, dir)
-      KMeansCodebook.writeIndexOn(spark, key, base, root)
-      writeCodebooksOn(spark, key, subBaseOf(base),
-        KMeansCodebook.assignmentOn(spark, key, base), root)
-    }
+    val corpus = pipeline(spark, dir)
+    Kernels.buildStore("graft-pipe-index", corpus.key)(buildIndex(spark, corpus, _))
   }
 
   /** `pipeline_index` — FLAGSHIP #3, the index release pipeline as ONE
     * declarative chain: near-dup keep-list → surviving embeddings →
     * trained coarse cells + PQ codebooks over THAT corpus → durable
-    * parquet artifact ([[KMeansCodebook.writeIndex]] +
-    * [[writeCodebooks]] layout under one root) → one probe batch
-    * served FROM the artifact (top-[[Similarity.TopK]] per surviving
-    * probe, IVFPQ + exact rerank).
+    * parquet artifact ([[buildIndex]]) → one probe batch served FROM
+    * the artifact ([[serveIndex]]: top-[[Similarity.TopK]] per
+    * surviving probe, IVFPQ + exact rerank).
     *
     * Composition notes: stage 1 is [[Dedup.keepIds]] (the
     * representative set of the ngram-Jaccard near-dup components —
     * exactly what the durable keep-list artifact stores); training
-    * reuses the [[KMeansCodebook]]/[[trainedBooksOn]] kernels verbatim
-    * on the filtered corpus (init = first K/[[PqK]] SURVIVORS by id,
-    * the oracle's rank-form init); serving is the
-    * [[annIvfPqFrom]] read path — coarse codebook and PQ books to the
-    * driver (index-metadata-sized), probed cell ids as a static
-    * partition filter on the celled code table, ADC + exact rerank
-    * against surviving floats only.
+    * reuses the Lloyd kernel verbatim on the filtered corpus (init =
+    * first K/[[PqK]] SURVIVORS by id, the oracle's rank-form init);
+    * serving reads coarse codebook and PQ books to the driver
+    * (index-metadata-sized), probed cell ids as a static partition
+    * filter on the celled code table, ADC + exact rerank against
+    * surviving floats only.
     *
     * 100 TB shape: each stage is the production form already gated
     * separately — the keep-list is one edge-bucketed dedup pass, the
@@ -779,16 +555,7 @@ object ProductQuant {
     * only, train-once, served by readers that never retrain.
     */
   def pipelineIndex(spark: SparkSession, dir: String): DataFrame = {
-    val root = ensurePipelineArtifact(spark, dir)
-    val base = pipeBase(spark, dir)
-    val cb = KMeansCodebook.codebookFromArtifact(spark, root)
-    val pcells = KMeansCodebook.probeCellsFromBase(
-      spark, base, cb, Similarity.NumProbes, Similarity.KmProbeCells)
-    val probed = pcells.select("pcluster").distinct().collect().map(_.getLong(0))
-    val codes = spark.read.parquet(s"$root/codes")
-      .filter(col("cluster").isin(probed: _*))
-      .withColumn("cluster", col("cluster").cast("long"))
-    ivfPqSearchOn(spark, base, codes, pcells,
-      adcTableFromBase(spark, subBaseOf(base), booksFromArtifact(spark, root)))
+    val corpus = pipeline(spark, dir)
+    serveIndex(spark, corpus, Seq(ensurePipelineArtifact(spark, dir)), Similarity.KmProbeCells)
   }
 }

@@ -470,7 +470,7 @@ object Retrieval {
   /** Materializes the full-text search index to `path` — the
     * materialize-once product the [[bm25Search]]/[[tfidfSearch]]
     * docstrings promise (the
-    * [[graft.operators.KMeansCodebook.writeIndex]] contract applied to
+    * [[graft.operators.ProductQuant.buildIndex]] contract applied to
     * text):
     *
     *  - `path/postings`: (doc_id, term, tf, dl) — ONE tokenize pass
@@ -599,36 +599,24 @@ object Retrieval {
     * consumes only ranks, so the fused result is row-identical to the
     * in-session formulation — one oracle text covers both.
     */
-  def rrfFusion3(spark: SparkSession, dir: String): DataFrame = {
-    val bm = bm25SearchServed(spark, dir)
-      .select(col("query_id"), col("doc_id"), col("rnk").as("rnk_bm"))
-    val vs = tfidfSearchServed(spark, dir)
-      .select(col("query_id"), col("doc_id"), col("rnk").as("rnk_vsm"))
-    val ms = maxSimServed(spark, dir)
-      .select(col("query_id"), col("doc_id"), col("rnk").as("rnk_ms"))
-    bm.join(vs, Seq("query_id", "doc_id"), "full_outer")
-      .join(ms, Seq("query_id", "doc_id"), "full_outer")
-      .select(col("query_id"), col("doc_id"),
-        round(coalesce(lit(1.0) / (lit(RrfK) + col("rnk_bm")), lit(0.0)) +
-              coalesce(lit(1.0) / (lit(RrfK) + col("rnk_vsm")), lit(0.0)) +
-              coalesce(lit(1.0) / (lit(RrfK) + col("rnk_ms")), lit(0.0)), 6)
-          .as("rrf"))
-      .withColumn("rnk", row_number().over(
-        Window.partitionBy("query_id").orderBy(col("rrf").desc, col("doc_id")))
-        .cast("long"))
-      .filter(col("rnk") <= BmTopK)
-      .orderBy("query_id", "rnk")
-  }
+  def rrfFusion3(spark: SparkSession, dir: String): DataFrame =
+    rrfOver(bm25SearchServed(spark, dir), tfidfSearchServed(spark, dir),
+      maxSimServed(spark, dir))
 
-  private def rrfOver(bm25: DataFrame, tfidf: DataFrame): DataFrame = {
-    val bm = bm25
-      .select(col("query_id"), col("doc_id"), col("rnk").as("rnk_bm"))
-    val vs = tfidf
-      .select(col("query_id"), col("doc_id"), col("rnk").as("rnk_vsm"))
-    bm.join(vs, Seq("query_id", "doc_id"), "full_outer")
+  /** Reciprocal-rank fusion of any number of (query_id, doc_id, rnk)
+    * rankings: full-outer joins and the `1/(RrfK + rnk)` terms (0 where
+    * a ranking misses the doc) fold left to right, so the two- and
+    * three-ranker answers keep their summation order.
+    */
+  private def rrfOver(rankings: DataFrame*): DataFrame = {
+    val ranked = rankings.zipWithIndex.map { case (r, i) =>
+      r.select(col("query_id"), col("doc_id"), col("rnk").as(s"rnk_$i"))
+    }
+    ranked.reduce(_.join(_, Seq("query_id", "doc_id"), "full_outer"))
       .select(col("query_id"), col("doc_id"),
-        round(coalesce(lit(1.0) / (lit(RrfK) + col("rnk_bm")), lit(0.0)) +
-              coalesce(lit(1.0) / (lit(RrfK) + col("rnk_vsm")), lit(0.0)), 6)
+        round(ranked.indices
+          .map(i => coalesce(lit(1.0) / (lit(RrfK) + col(s"rnk_$i")), lit(0.0)))
+          .reduce(_ + _), 6)
           .as("rrf"))
       .withColumn("rnk", row_number().over(
         Window.partitionBy("query_id").orderBy(col("rrf").desc, col("doc_id")))

@@ -173,20 +173,39 @@ object Similarity {
     * window at all — the threshold filter rides the candidate join's
     * projection, exactly like the exact variant.
     */
-  def annRangeIvf(spark: SparkSession, dir: String): DataFrame = {
-    val corpus = KMeansCodebook.lastAssignment(spark, dir)
-      .withColumn("norm", sqrt(dot(spark, col("v"), col("v"))))
-    val probes = KMeansCodebook.probeCells(spark, dir, NumProbes, KmProbeCells).as("pc")
-      .join(corpus.as("pv"), col("pc.probe_id") === col("pv.vec_id"))
+  def annRangeIvf(spark: SparkSession, dir: String): DataFrame =
+    embeddingCellCandidates(spark, dir)
+      .filter(col("sim") >= RangeTau)
+      .orderBy("probe_id", "neighbor_id")
+
+  /** The trained-IVF candidate join: each probe of `pcells` (probe_id,
+    * pcluster) against every row of its probed cells in `cells`
+    * (vec_id, cluster, v, norm), as (probe_id, neighbor_id, sim). The
+    * probes (vectors looked up in `cells`) broadcast; candidates arrive
+    * through an equi-join on the cell, never a corpus-wide product.
+    */
+  private def cellCandidates(spark: SparkSession, pcells: DataFrame, cells: DataFrame): DataFrame = {
+    val probes = pcells.as("pc")
+      .join(cells.as("pv"), col("pc.probe_id") === col("pv.vec_id"))
       .select(col("pc.probe_id").as("vec_id"), col("pc.pcluster"),
         col("pv.v").as("v"), col("pv.norm").as("norm"))
     broadcast(probes).as("p")
-      .join(corpus.as("c"),
+      .join(cells.as("c"),
         col("p.pcluster") === col("c.cluster") && col("p.vec_id") =!= col("c.vec_id"))
       .select(col("p.vec_id").as("probe_id"), col("c.vec_id").as("neighbor_id"),
         cosine(spark).as("sim"))
-      .filter(col("sim") >= RangeTau)
-      .orderBy("probe_id", "neighbor_id")
+  }
+
+  /** [[cellCandidates]] over the trained cells of the `embeddings`
+    * corpus, each probe searching its [[KmProbeCells]] nearest cells.
+    */
+  private def embeddingCellCandidates(spark: SparkSession, dir: String): DataFrame = {
+    val corpus = KMeansCodebook.embeddings(spark, dir)
+    val cells = KMeansCodebook.lastAssignment(corpus)
+      .withColumn("norm", sqrt(dot(spark, col("v"), col("v"))))
+    cellCandidates(spark,
+      KMeansCodebook.probeCells(corpus.scan, KMeansCodebook.codebook(corpus), KmProbeCells),
+      cells)
   }
 
   /** `embedding_quantize`: symmetric per-vector int8 quantization —
@@ -337,27 +356,15 @@ object Similarity {
     * distances, ties to the lowest cluster), so the oracle replays the
     * index bit-for-bit; ranking contract as [[annTopK]].
     */
-  def annIvfKmeans(spark: SparkSession, dir: String): DataFrame = {
-    val corpus = KMeansCodebook.lastAssignment(spark, dir)
-      .withColumn("norm", sqrt(dot(spark, col("v"), col("v"))))
-    val probes = KMeansCodebook.probeCells(spark, dir, NumProbes, KmProbeCells).as("pc")
-      .join(corpus.as("pv"), col("pc.probe_id") === col("pv.vec_id"))
-      .select(col("pc.probe_id").as("vec_id"), col("pc.pcluster"),
-        col("pv.v").as("v"), col("pv.norm").as("norm"))
-    topKRanked(spark,
-      broadcast(probes).as("p")
-        .join(corpus.as("c"),
-          col("p.pcluster") === col("c.cluster") && col("p.vec_id") =!= col("c.vec_id"))
-        .select(col("p.vec_id").as("probe_id"), col("c.vec_id").as("neighbor_id"),
-          cosine(spark).as("sim")))
-  }
+  def annIvfKmeans(spark: SparkSession, dir: String): DataFrame =
+    topKRanked(spark, embeddingCellCandidates(spark, dir))
 
   /** `ann_image_search`: image content served through the trained ANN
     * machinery — the query that closes the loop the multimodal family
     * was built for: [[Multimodal.imageVectors]] pools each decoded
     * raster into a [[Multimodal.FeatureDim]]-dim vector (the
     * `mm_features` channels, densely assembled), a k-means codebook is
-    * trained ON THOSE vectors ([[KMeansCodebook.trainedCodebookOn]] —
+    * trained ON THOSE vectors ([[KMeansCodebook.codebook]] —
     * the same Lloyd trainer the embedding index uses, keyed to the
     * documents table), and image probes search only their
     * [[KmProbeCells]] nearest trained cells — search-images-by-image,
@@ -377,31 +384,23 @@ object Similarity {
     * ranking bit-for-bit.
     */
   def annImageSearch(spark: SparkSession, dir: String): DataFrame = {
-    val key = Kernels.inputKey(dir, "documents.parquet")
     // memoCache (not cacheTracked): only built inside the globally-
-    // memoized train/assign miss paths — the embeddingBase contract
-    def base = Kernels.memoCache(Kernels.fanOut(Multimodal.imageVectors(spark, dir)))
+    // memoized train/assign miss paths — the embeddings corpus contract
+    def images = Multimodal.imageVectors(spark, dir)
+    val corpus = new KMeansCodebook.Corpus(Kernels.inputKey(dir, "documents.parquet"),
+      images, Kernels.memoCache(Kernels.fanOut(images)))
     // probe cells read the MEMOIZED assignment frame (pinned by the
     // train/assign memo), not a fresh imageVectors pass — passing a new
     // payload-ingest frame here re-ran the full feature pipeline once
     // per serve just to pick probe cells. Zero-norm probes lose nothing:
     // they are excluded from the serve join below either way.
-    val assigned = KMeansCodebook.assignmentOn(spark, key, base)
-    val corpus = assigned
-      .withColumn("norm", sqrt(dot(spark, col("v"), col("v"))))
-      .filter(col("norm") > 0)
-    val cb = KMeansCodebook.trainedCodebookOn(spark, key, base)
-    val probes = KMeansCodebook.probeCellsFromBase(spark,
-        assigned.select("vec_id", "v"), cb, NumProbes, KmProbeCells).as("pc")
-      .join(corpus.as("pv"), col("pc.probe_id") === col("pv.vec_id"))
-      .select(col("pc.probe_id").as("vec_id"), col("pc.pcluster"),
-        col("pv.v").as("v"), col("pv.norm").as("norm"))
+    val assigned = KMeansCodebook.lastAssignment(corpus)
     topKRanked(spark,
-      broadcast(probes).as("p")
-        .join(corpus.as("c"),
-          col("p.pcluster") === col("c.cluster") && col("p.vec_id") =!= col("c.vec_id"))
-        .select(col("p.vec_id").as("probe_id"), col("c.vec_id").as("neighbor_id"),
-          cosine(spark).as("sim")))
+      cellCandidates(spark,
+        KMeansCodebook.probeCells(assigned.select("vec_id", "v"),
+          KMeansCodebook.codebook(corpus), KmProbeCells),
+        assigned.withColumn("norm", sqrt(dot(spark, col("v"), col("v"))))
+          .filter(col("norm") > 0)))
   }
 
   /** Beam width and fixed round count for [[annGraph]] — with mutual
@@ -498,11 +497,11 @@ object Similarity {
     def score(nodes: DataFrame): DataFrame = scoreAgainstProbes(spark, emb, probes, nodes)
     // entry node per trained cell: the minimum edge-incident id (the
     // assignment join is the graph-node-sized serve lookup, |cells| rows out)
+    val corpus = KMeansCodebook.embeddings(spark, dir)
     val entries = sym.select(col("a").as("vec_id")).distinct()
-      .join(KMeansCodebook.lastAssignment(spark, dir).select("vec_id", "cluster"),
-        "vec_id")
+      .join(KMeansCodebook.lastAssignment(corpus).select("vec_id", "cluster"), "vec_id")
       .groupBy("cluster").agg(min("vec_id").as("node"))
-    val starts = KMeansCodebook.probeCells(spark, dir, NumProbes, KmProbeCells)
+    val starts = KMeansCodebook.probeCells(corpus.scan, KMeansCodebook.codebook(corpus), KmProbeCells)
       .join(entries, col("pcluster") === col("cluster"))
       .select(col("probe_id"), col("node"))
     beamSearch(spark, emb, sym, probes, score(starts), beamWidth)

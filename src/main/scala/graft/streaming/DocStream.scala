@@ -223,13 +223,7 @@ object DocStream {
     // signature via the batch's typed byte-level kernel (stateless
     // mapPartitions — streaming-legal); the earlier declarative
     // 16×md5-per-shingle expression made this the slowest bench query
-    val bandStructs = (0 until Dedup.MinHashBands).map { b =>
-      struct(lit(b).as("band"), concat_ws("|",
-        (0 until Dedup.MinHashRows).map(r =>
-          element_at(col("sig"), Dedup.MinHashRows * b + r + 1)): _*)
-        .as("bkey"))
-    }
-    val batchBands = Dedup.minHashSigCarry(
+    val batchBands = Dedup.minHashSig(
       spark.readStream
         .schema(documentsSchema)
         .option("pathGlobFilter", "documents.parquet")
@@ -247,8 +241,7 @@ object DocStream {
         .select(col("doc_id"), col("sh"),
           sort_array(transform(col("sh"), s => xxhash64(s))).as("shh"),
           size(col("sh")).as("nsh")))
-      .select(col("doc_id"), col("shh"), col("nsh"),
-        explode(array(bandStructs: _*)).as("bk"))
+      .select(col("doc_id"), col("shh"), col("nsh"), Dedup.bandRows.as("bk"))
       .select(col("doc_id"), col("bk.band").as("band"), col("bk.bkey").as("bkey"),
         col("shh"), col("nsh"))
     val common = graft.functions.VectorFunctions
@@ -477,13 +470,9 @@ object DocStream {
     // exactly as in the standalone stream probe); shingle-less docs
     // keep NULL band keys, which never match a store row — the
     // expression form's `when(size > 0, …)` semantics
-    val bandKey = (b: Int) =>
-      when(col("nsh") > 0, concat_ws("|",
-        (0 until Dedup.MinHashRows).map(r =>
-          element_at(col("sig"), Dedup.MinHashRows * b + r + 1)): _*))
     val withBands = (0 until Dedup.MinHashBands)
-      .foldLeft(Dedup.minHashSigCarryIngest(batch)) { (df, b) =>
-        df.withColumn(s"bk$b", bandKey(b))
+      .foldLeft(Dedup.minHashSig(batch)) { (df, b) =>
+        df.withColumn(s"bk$b", when(col("nsh") > 0, Dedup.bandKey(b)))
       }
       .select((Seq("doc_id", "fp", "quality", "shh", "nsh") ++
         (0 until Dedup.MinHashBands).map(b => s"bk$b")).map(col): _*)

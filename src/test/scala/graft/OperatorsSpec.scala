@@ -2526,9 +2526,7 @@ class OperatorsSpec extends AnyFunSuite {
     // probes from the parquet alone and must produce the identical
     // ranked answer (exact decimals round-trip, so equality is exact,
     // not approximate)
-    val root = SparkTestSession.tmpDir("ann-index").resolve("index").toString
-    KMeansCodebook.writeIndex(spark, sf, root)
-    ProductQuant.writeCodebooks(spark, sf, root)
+    val root = ProductQuant.ensureIndexArtifact(spark, sf)
     val trained = ProductQuant.annIvfPq(spark, sf).collect().map(_.toSeq).toSeq
     Dedup.retireCaches()
     val fresh = spark.newSession()
@@ -2587,11 +2585,9 @@ class OperatorsSpec extends AnyFunSuite {
   }
 
   test("ann index artifact components are complete and cell-partitioned") {
-    val root = SparkTestSession.tmpDir("ann-index-parts").resolve("index").toString
-    KMeansCodebook.writeIndex(spark, sf, root)
-    ProductQuant.writeCodebooks(spark, sf, root)
-    val (cb, asg) = KMeansCodebook.indexFrom(spark, root)
-    val (books, codes) = ProductQuant.codebooksFrom(spark, root)
+    val root = ProductQuant.ensureIndexArtifact(spark, sf)
+    val Seq(cb, asg, books, codes) = Seq("coarse_codebook", "assignment", "pq_codebooks", "codes")
+      .map(t => spark.read.parquet(s"$root/$t"))
     // coarse codebook: K cells × 64 dims (a cell can drop only by
     // losing every member, which the fixed corpus doesn't do)
     assert(cb.count() == KMeansCodebook.K.toLong * 64)

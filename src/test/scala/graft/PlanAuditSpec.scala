@@ -1188,7 +1188,7 @@ class PlanAuditSpec extends AnyFunSuite {
         "input is the day x event_type aggregate"),
       ("Sketches.scala", """"event_type"""", 1,
         "input is histogram bins, not events"),
-      ("Retrieval.scala", """"query_id"""", 2,
+      ("Retrieval.scala", """"query_id"""", 1,
         "per-query fusion lists already top-k-bounded"),
       ("Bpe.scala", """"word"""", 1, "per-word positions (words are short)"),
       ("Bpe.scala", """"word", "pairh"""", 1, "per-(word,pair) runs within a word"),
@@ -1305,6 +1305,18 @@ class PlanAuditSpec extends AnyFunSuite {
       Seq("SparkSession.builder()", "autoBroadcastJoinThreshold", "setLogLevel(", "System.gc()"))
     assert(hits.isEmpty,
       s"session setup outside GraftSession — use deployment / step:\n${hits.mkString("\n")}")
+  }
+
+  test("Lloyd audit: only KMeans holds the exact-decimal coordinate fix and distance") {
+    // `KMeansCodebook` owns the one Lloyd kernel — the DECIMAL(18,9)
+    // fix, the exact squared-L2 distance, the books read — for the
+    // k-means cells and the PQ subspaces alike; a second copy (PQ held
+    // its own before) can drift from the oracle's replay, so the tokens
+    // that spell one may appear in no other source file
+    val hits = sourceHitsOutside("src/main/scala/graft/operators/KMeans.scala",
+      Seq("JBig.ZERO", "def dec9", ".setScale(9)"))
+    assert(hits.isEmpty,
+      s"exact-decimal kernel code outside KMeans — use the Lloyd kernel:\n${hits.mkString("\n")}")
   }
 
   test("orders_percentile_rank: two-level rank, no per-priority corpus window, one orders scan") {
