@@ -215,9 +215,15 @@ private final class Ledger(spark: SparkSession) {
       Option(stageOf.get(e.stageInfo.stageId)).foreach { t =>
         val si = e.stageInfo
         val ms = (for (a <- si.submissionTime; b <- si.completionTime) yield b - a).getOrElse(0L)
+        // AQE submits its query stages from a pool thread, so the call
+        // site names the pool (`withThreadLocalCaptured`), not the query:
+        // name such a stage by the plan scope of its last RDD instead
+        val name =
+          if (!si.name.contains("withThreadLocalCaptured")) si.name
+          else si.rddInfos.maxByOption(_.id).flatMap(_.scope).fold(si.name)(_.name)
         add(t, "stages", 1)
         add(t, "stage_ms", ms)
-        stages.computeIfAbsent(t, _ => new ConcurrentLinkedQueue()).add((ms, si.numTasks, si.name))
+        stages.computeIfAbsent(t, _ => new ConcurrentLinkedQueue()).add((ms, si.numTasks, name))
       }
     override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
       Option(stageOf.get(e.stageId)).foreach { t =>

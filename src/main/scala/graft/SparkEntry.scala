@@ -294,7 +294,7 @@ object SparkEntry {
     // continuous stream, bit-identical to the batch run (same oracle)
     "stream_pipeline_ingest" -> graft.streaming.DocStream.streamPipelineIngest _,
     "pipeline_index" -> ProductQuant.pipelineIndex _,
-    // Structured Streaming twins (drained via memory sink for the gate)
+    // Structured Streaming twins (drained into query-scoped files for the gate)
     "stream_hourly" -> graft.streaming.EventStream.hourlyRollup _,
     "stream_user_totals" -> graft.streaming.EventStream.userTotals _,
     "stream_windowed" -> graft.streaming.EventStream.windowedCounts _,

@@ -39,6 +39,7 @@ private[graft] object Kernels {
       scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.DataFrame]
     val checkpointIds =
       scala.collection.mutable.Map.empty[Int, org.apache.spark.SparkContext]
+    val dirs = scala.collection.mutable.ArrayBuffer.empty[String]
   }
 
   // Every live scope is ALSO tracked globally so retireCaches can
@@ -242,8 +243,9 @@ private[graft] object Kernels {
   }
 
   /** Blocking-unpersist one scope's tracked caches and checkpoint
-    * blocks. Async unpersist would leave SF-sized blocks resident
-    * while the NEXT query runs, defeating the point of retiring them.
+    * blocks, and delete its [[scopedStore]] dirs. Async unpersist would
+    * leave SF-sized blocks resident while the NEXT query runs,
+    * defeating the point of retiring them.
     */
   private def drainScope(s: Scope): Unit = s.synchronized {
     s.caches.foreach(_.unpersist(true))
@@ -252,6 +254,32 @@ private[graft] object Kernels {
       sc.getPersistentRDDs.get(id).foreach(_.unpersist(true))
     }
     s.checkpointIds.clear()
+    s.dirs.foreach { d =>
+      tempStores.synchronized { tempStores -= d }
+      rmTree(new java.io.File(d))
+    }
+    s.dirs.clear()
+  }
+
+  private val scopedIds = new java.util.concurrent.atomic.AtomicLong()
+
+  /** A fresh dir under java.io.tmpdir that lives until the calling
+    * thread's next retire: it is registered in the thread's scope, so
+    * [[retireCaches]] (or the dead-thread backstop) deletes it, and
+    * through [[registerTempStore]] (pid suffix, process-exit cleanup,
+    * dead-sibling sweep). A stream drain writes its result here and a
+    * per-call stream store keeps its state here, so the frames they
+    * return read these files lazily until the query retires.
+    */
+  def scopedStore(prefix: String): String = {
+    val root = registerTempStore(
+      s"${System.getProperty("java.io.tmpdir")}/$prefix-${scopedIds.incrementAndGet()}")
+    // a crashed JVM that had this pid may have left the same name
+    rmTree(new java.io.File(root))
+    java.nio.file.Files.createDirectories(java.nio.file.Path.of(root))
+    val s = scope.get
+    s.synchronized { s.dirs += root }
+    root
   }
 
   // ---- checkpoint-block bookkeeping ----
@@ -512,7 +540,7 @@ private[graft] object Kernels {
   }
 
   /** Recursive delete — the ONE implementation every temp-store
-    * cleanup path shares (shutdown hook, per-call stream stores).
+    * cleanup path shares (shutdown hook, [[scopedStore]] dirs).
     */
   private[graft] def rmTree(f: java.io.File): Unit = {
     if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rmTree))

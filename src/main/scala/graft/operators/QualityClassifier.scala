@@ -218,7 +218,7 @@ object QualityClassifier {
 
   /** The unordered scoring projection over a feature frame — shared
     * with the streaming twin (a streaming frame cannot sort; its
-    * memory-sink drain orders at the end).
+    * drain orders at the end).
     */
   private[graft] def scoreFrame(features: DataFrame, w: Array[Double]): DataFrame = {
     val z = marginOf(w)

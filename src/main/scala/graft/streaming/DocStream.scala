@@ -10,8 +10,8 @@ import graft.operators.{Dedup, Kernels, Multimodal, TextAnalysis}
 /** Streaming document-ingest operators (north star — the reference is
   * strictly batch, SURVEY.md §2.5). Same harness contract as
   * [[EventStream]]: file-stream source over the static parquet, drained
-  * through [[Streams]] (memory sink or per-batch store appends) for the
-  * oracle gate only.
+  * through [[Streams]] (result drains or per-batch store appends) for
+  * the oracle gate only.
   */
 object DocStream {
 
@@ -279,10 +279,9 @@ object DocStream {
       // dependent on the pair, so min() is just the value
       .groupBy("batch_id", "hist_id")
       .agg(min("jaccard").as("jaccard"))
-    try Streams.drain(pairs, OutputMode.Complete(),
+    Streams.drain(pairs, OutputMode.Complete(),
         Streams.stateWidth(spark) ++ Streams.HashJoins)
       .orderBy("batch_id", "hist_id")
-    finally Dedup.retireCaches()
   }
 
   /** `stream_incremental_semantic`: the INGEST-stream twin of
@@ -327,9 +326,8 @@ object DocStream {
         round(dot(spark, col("bv"), col("hv")) / (col("bn") * col("hn")), 6)
           .as("cosine"))
       .filter(col("cosine") >= Dedup.CosineDupThreshold)
-    try Streams.drain(pairs, OutputMode.Append())
+    Streams.drain(pairs, OutputMode.Append())
       .orderBy("batch_id", "hist_id")
-    finally Dedup.retireCaches()
   }
 
   /** The media ingest stream (doc_id, payload): newly-arriving
@@ -372,9 +370,8 @@ object DocStream {
     val history = Kernels.cacheTracked(Multimodal.historySigs(spark, dir, fam, mu))
     val pairs = Multimodal.incrementalPairs(fam,
       Multimodal.trainedSigs(payloadStream(spark, dir), fam, mu), history)
-    try Streams.drain(pairs, OutputMode.Complete(), Streams.stateWidth(spark))
+    Streams.drain(pairs, OutputMode.Complete(), Streams.stateWidth(spark))
       .orderBy("batch_id", "hist_id")
-    finally Dedup.retireCaches()
   }
 
   /** `stream_phash_incremental`: the ingest-stream twin of
@@ -512,7 +509,7 @@ object DocStream {
     * already-stored garbage.
     */
   /** The unstarted quality-gate stream — shared by [[streamQuality]]'s
-    * memory-sink oracle drain and the file-sink spec
+    * oracle drain and the file-sink spec
     * (`StreamingRecoverySpec`), which writes it through a REAL parquet
     * sink with checkpointing.
     */
@@ -602,18 +599,18 @@ object DocStream {
   }
 
   /** Runs the ingest stream over `dir`, appending each micro-batch
-    * into a fresh temp store; returns the store root.
+    * into a fresh [[Kernels.scopedStore]]; returns the store root.
     */
-  private def ingestSearchStore(spark: SparkSession, dir: String): java.nio.file.Path = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-stream-index")
+  private def ingestSearchStore(spark: SparkSession, dir: String): String = {
+    val root = Kernels.scopedStore("graft-stream-index")
     Streams.drainBatches(spark.readStream
       .schema(documentsSchema)
       .option("pathGlobFilter", "documents.parquet")
       .parquet(dir)
       .select(col("doc_id"), col("text"))) { (batch, _) =>
-      appendSearchBatch(batch, tmp.toString)
+      appendSearchBatch(batch, root)
     }
-    tmp
+    root
   }
 
   /** BM25 serve over a (postings, doclen) store —
@@ -644,15 +641,8 @@ object DocStream {
   }
 
   def streamSearchIndex(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = ingestSearchStore(spark, dir)
-    // the store is PER-CALL (random temp dir, unlike the fingerprinted
-    // ensure* memos), so it must not outlive the call: materialize the
-    // query-bounded serve result eagerly, then delete the store — the
-    // caller gets a checkpoint leaf with no dangling file dependency.
-    // finally: a serve-side failure must not leak the store either
-    try graft.operators.Kernels.trackedCheckpoint(
-      serveBm25(spark, s"$tmp/postings", s"$tmp/doclen"))
-    finally graft.operators.Kernels.rmTree(tmp.toFile)
+    val root = ingestSearchStore(spark, dir)
+    serveBm25(spark, s"$root/postings", s"$root/doclen")
   }
 
   /** Compacted-store file budget: postings are rewritten into this
@@ -711,11 +701,8 @@ object DocStream {
     * the same BM25 oracle gates it (spec-pinned file-count bound too).
     */
   def streamSearchIndexCompacted(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = ingestSearchStore(spark, dir)
-    try {
-      val (p, d) = compactSearchStore(spark, tmp.toString)
-      graft.operators.Kernels.trackedCheckpoint(serveBm25(spark, p, d))
-    } finally graft.operators.Kernels.rmTree(tmp.toFile)
+    val (p, d) = compactSearchStore(spark, ingestSearchStore(spark, dir))
+    serveBm25(spark, p, d)
   }
 
   /** `stream_ann_maintain`: the streaming twin of
@@ -742,22 +729,16 @@ object DocStream {
     // folded flat by the periodic compaction pass). Per-call cost is
     // the ingest itself, not a rebuild of the trained store.
     val base = ProductQuant.ensureHistoryArtifact(spark, dir)
-    val tmp = java.nio.file.Files.createTempDirectory("graft-stream-ann")
-    val delta = tmp.toString
-    // ingest + serve run inside the finally so a failure anywhere never
-    // leaks the delta; the serve result is an eager checkpoint leaf
-    try {
-      Streams.drainBatches(spark.readStream
-        .schema(embeddingsSchema)
-        .option("pathGlobFilter", "embeddings.parquet")
-        .parquet(dir)
-        .select(col("vec_id"), col("embedding"))
-        .filter(Dedup.isBatch(col("vec_id")))) { (batch, _) =>
-        ProductQuant.appendBatchToIndex(batch, base, delta)
-      }
-      Kernels.trackedCheckpoint(
-        ProductQuant.annIvfPqFromLayers(spark, dir, base, delta))
-    } finally Kernels.rmTree(tmp.toFile)
+    val delta = Kernels.scopedStore("graft-stream-ann")
+    Streams.drainBatches(spark.readStream
+      .schema(embeddingsSchema)
+      .option("pathGlobFilter", "embeddings.parquet")
+      .parquet(dir)
+      .select(col("vec_id"), col("embedding"))
+      .filter(Dedup.isBatch(col("vec_id")))) { (batch, _) =>
+      ProductQuant.appendBatchToIndex(batch, base, delta)
+    }
+    ProductQuant.annIvfPqFromLayers(spark, dir, base, delta)
   }
 
   /** `stream_media_keep`: the streaming twin of
@@ -782,28 +763,25 @@ object DocStream {
     val imgMu = Multimodal.historyImageMu(spark, dir)
     val audMu = Multimodal.historyMu(spark, dir, Multimodal.Audio)
     val vidMu = Multimodal.historyMu(spark, dir, Multimodal.Frame)
-    val tmp = java.nio.file.Files.createTempDirectory("graft-stream-mediakeep")
-    try {
-      Multimodal.mediaKeepHistoryStore(spark, dir, imgMu, audMu, vidMu)
-        .write.parquet(s"$tmp/keep_v0")
-      // Atomic, not a plain local var: the counter is written on the
-      // stream-execution thread (inside foreachBatch) and read on the
-      // caller thread after the drain returns — a captured plain
-      // var rides an unsynchronized ObjectRef, leaving visibility to
-      // incidental locking inside the streaming engine
-      val version = new java.util.concurrent.atomic.AtomicInteger(0)
-      Streams.drainBatches(payloadStream(spark, dir)) { (batch, _) =>
-        val v = version.get()
-        val sigs = Multimodal.mediaSigFrame(batch, imgMu, audMu, vidMu)
-        Multimodal.mergeMediaKeep(
-            spark.read.parquet(s"$tmp/keep_v$v"), sigs)
-          .write.parquet(s"$tmp/keep_v${v + 1}")
-        version.incrementAndGet()
-      }
-      Kernels.trackedCheckpoint(
-        spark.read.parquet(s"$tmp/keep_v${version.get()}")
-          .orderBy("modality", "keep_id"))
-    } finally Kernels.rmTree(tmp.toFile)
+    val tmp = Kernels.scopedStore("graft-stream-mediakeep")
+    Multimodal.mediaKeepHistoryStore(spark, dir, imgMu, audMu, vidMu)
+      .write.parquet(s"$tmp/keep_v0")
+    // Atomic, not a plain local var: the counter is written on the
+    // stream-execution thread (inside foreachBatch) and read on the
+    // caller thread after the drain returns — a captured plain
+    // var rides an unsynchronized ObjectRef, leaving visibility to
+    // incidental locking inside the streaming engine
+    val version = new java.util.concurrent.atomic.AtomicInteger(0)
+    Streams.drainBatches(payloadStream(spark, dir)) { (batch, _) =>
+      val v = version.get()
+      val sigs = Multimodal.mediaSigFrame(batch, imgMu, audMu, vidMu)
+      Multimodal.mergeMediaKeep(
+          spark.read.parquet(s"$tmp/keep_v$v"), sigs)
+        .write.parquet(s"$tmp/keep_v${v + 1}")
+      version.incrementAndGet()
+    }
+    spark.read.parquet(s"$tmp/keep_v${version.get()}")
+      .orderBy("modality", "keep_id")
   }
 
   /** `stream_media_keep_neardup`: the streaming twin of
@@ -875,166 +853,161 @@ object DocStream {
     val vidMu = Multimodal.historyMu(spark, dir, Multimodal.Frame)
     val (imgSig, audSig, vidSig) = Multimodal.mediaHistSigFrames(spark, dir)
     val isHist = !Dedup.isBatch(col("doc_id"))
-    val tmp = java.nio.file.Files.createTempDirectory("graft-stream-nkd")
+    val tmp = Kernels.scopedStore("graft-stream-nkd")
     val nkdMark = Kernels.phaseMarker()
-    try {
-      // image/audio state lives in DRIVER memory for the whole drain:
-      // the per-sig keep stores are ≤ 2^PhashBits rows by construction
-      // (a codebook, not a data pass — the same bounded-driver-product
-      // contract as the drain collect), so the fold holds them as
-      // maps. The previous parquet round-trip cost two write jobs plus
-      // two store re-reads per micro-batch for state only the next
-      // merge ever read. The fold ([[graft.operators.Multimodal.sigKeepFold]])
-      // is the commuting (min, sum)-per-sig monoid, so the
-      // any-micro-batching-drains-equal argument carries over
-      // unchanged. Seeded ONCE from the memoized history sig frames,
-      // on the caller thread.
-      def seedKeep(sig: DataFrame): scala.collection.mutable.Map[Long, (Long, Long)] =
-        scala.collection.mutable.Map.from(
-          sig.filter(isHist).groupBy("ph")
-            .agg(min("doc_id").as("keep_id"), count(lit(1)).as("n_members"))
-            .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))))
-      nkdMark("preamble(mus+sigframes)")
-      val imgKeep = seedKeep(imgSig)
-      val audKeep = seedKeep(audSig)
-      nkdMark("seeds")
-      // pre-force the video history label memo on the CALLER thread —
-      // otherwise the first micro-batch pays the heavy history
-      // component loop (and its thread-scoped intermediates) on the
-      // stream-execution thread, unlike the sig frames and mu values
-      // seeded above
-      val histLabels = Multimodal.vidHistLabels(spark, dir)
-      nkdMark("histLabels")
-      // processed batch ids, newest last. Replay-idempotent by
-      // construction (Spark's micro-batch retry contract): every disk
-      // write is keyed by batch id with overwrite, and the driver
-      // state (the two keep maps + this list) mutates only AFTER all
-      // of the batch's Spark jobs succeeded — a replayed batch either
-      // fully skips (id already folded) or cleanly overwrites its own
-      // partial output and folds once. Visibility: the CopyOnWrite
-      // list covers labelsAt()'s cross-thread reads of `processed`;
-      // the caller-thread reads of the plain keep MAPS at drain rest
-      // on the drain's await for the last batch, which takes the
-      // query's progress lock (the happens-before with the stream
-      // thread's batch bodies) — replacing that await with status
-      // polling would need an explicit fence for the maps.
-      val processed = new java.util.concurrent.CopyOnWriteArrayList[Long]()
-      // bids whose deferred contraction has been folded into a labels
-      // file, newest last — per-batch edge/sig writes accumulate
-      // between contractions (see [[VideoContractEvery]])
-      val contracted = new java.util.concurrent.CopyOnWriteArrayList[Long]()
-      def labelsAt(): DataFrame =
-        if (contracted.isEmpty) histLabels
-        else spark.read.parquet(s"$tmp/labels_b${contracted.get(contracted.size - 1)}")
-      def vidSigsAt(): DataFrame = {
-        import scala.jdk.CollectionConverters._
-        val hist = vidSig.filter(isHist)
-        if (processed.isEmpty) hist
-        else hist.unionByName(spark.read.parquet(
-          processed.asScala.toSeq.map(b => s"$tmp/vidsigs_b$b"): _*))
-      }
-      // batches processed since the last contraction. Confluence makes
-      // the contraction point free to move; the writes are all keyed
-      // by bid with overwrite, and `contracted` mutates only after the
-      // labels write succeeded — the same replay discipline as the
-      // keep-map folds.
-      def pendingBids(): Seq[Long] = {
-        import scala.jdk.CollectionConverters._
-        val last =
-          if (contracted.isEmpty) Long.MinValue
-          else contracted.get(contracted.size - 1)
-        processed.asScala.toSeq.filter(_ > last)
-      }
-      def contract(atBid: Long): Unit = {
-        val pend = pendingBids()
-        if (pend.nonEmpty) {
-          val newDocs = spark.read.parquet(pend.map(b => s"$tmp/vidsigs_b$b"): _*)
-            .select("doc_id").distinct()
-          val edges = spark.read.parquet(pend.map(b => s"$tmp/edges_b$b"): _*)
-          (Dedup.maintainLabels(labelsAt(), newDocs, edges)
-            .write.mode("overwrite").parquet(s"$tmp/labels_b$atBid"))
-          contracted.add(atBid)
-        }
-      }
-      // micro-batch bodies plan without AQE, where the static planner
-      // picks SortMergeJoin for the batch-x-store banded probes —
-      // sorting the store per batch; hash joins keep the exchanges but
-      // drop the sorts (the streamIncrementalMinHash drain's measured
-      // trick)
-      Streams.drainBatches(payloadStream(spark, srcDir, glob, filesPerTrigger),
-        Streams.HashJoins) { (batch, bid) =>
-        if (!processed.isEmpty && processed.get(processed.size - 1) >= bid) {
-          // replayed, fully-committed batch — skip (idempotence)
-        } else {
-          // per-sig aggregates collected first (bounded by the
-          // batch's present sigs) so the driver fold is a pure
-          // in-memory step AFTER every Spark job has succeeded
-          val payloads = Kernels.fanOut(batch)
-          val imgAgg = Multimodal.sigBatchAgg(
-            Multimodal.trainedSigs(payloads, Multimodal.Pixel, imgMu))
-          val audAgg = Multimodal.sigBatchAgg(
-            Multimodal.trainedSigs(payloads, Multimodal.Audio, audMu))
-          // the batch's frame sigs feed three consumers (two probe
-          // sides, the store write) — checkpoint so the decode
-          // kernel runs once per batch
-          val vidS = Multimodal.trainedSigs(payloads, Multimodal.Frame, vidMu)
-            .localCheckpoint()
-          // per-batch work stops at EDGES: the blast-radius probe
-          // (batch frames x accumulated store, banded — work
-          // proportional to the batch) plus within-batch pairs,
-          // written keyed by bid. The label contraction defers —
-          // see [[VideoContractEvery]].
-          (Multimodal.probePairs(Multimodal.Frame, vidS, vidSigsAt())
-            .select("doc_a", "doc_b")
-            .unionByName(Multimodal.sigPairs(Multimodal.Frame, vidS)
-              .select("doc_a", "doc_b"))
-            .write.mode("overwrite").parquet(s"$tmp/edges_b$bid"))
-          (vidS.write.mode("overwrite").parquet(s"$tmp/vidsigs_b$bid"))
-          // the batch's checkpoint blocks are dead once the writes
-          // are done — free them per batch instead of leaving one
-          // node-sized block PER MICRO-BATCH to the ContextCleaner
-          // (which only runs on driver GC)
-          Kernels.checkpointRddId(vidS).foreach { id =>
-            spark.sparkContext.getPersistentRDDs.get(id)
-              .foreach(_.unpersist(true))
-          }
-          // driver state LAST — pure in-memory, cannot fail midway
-          Multimodal.sigKeepFold(imgKeep, imgAgg)
-          Multimodal.sigKeepFold(audKeep, audAgg)
-          processed.add(bid)
-          // deferred contraction: fold accumulated edges into the
-          // label table once enough batches are pending (a replayed
-          // batch that died between the labels write and the
-          // `contracted` append simply re-contracts at the next
-          // point — confluent, and the write is keyed + overwrite)
-          if (pendingBids().size >= contractEvery) contract(bid)
-        }
-        // the label maintenance's component loop registers tracked
-        // caches/checkpoints in THIS (stream-execution) thread's
-        // scope; drain them per batch — the dead-thread backstop
-        // would otherwise hold them for the whole drain
-        Kernels.drainThreadScope()
-      }
-      nkdMark("drain")
-      // drain-time contraction of whatever is still pending — on the
-      // CALLER thread, so the component loop plans with AQE instead of
-      // the micro-batch static planner (the drain's await establishes
-      // the happens-before with the stream thread's writes)
+    // image/audio state lives in DRIVER memory for the whole drain:
+    // the per-sig keep stores are ≤ 2^PhashBits rows by construction
+    // (a codebook, not a data pass), so the fold holds them as maps. The previous parquet round-trip cost two write jobs plus
+    // two store re-reads per micro-batch for state only the next
+    // merge ever read. The fold ([[graft.operators.Multimodal.sigKeepFold]])
+    // is the commuting (min, sum)-per-sig monoid, so the
+    // any-micro-batching-drains-equal argument carries over
+    // unchanged. Seeded ONCE from the memoized history sig frames,
+    // on the caller thread.
+    def seedKeep(sig: DataFrame): scala.collection.mutable.Map[Long, (Long, Long)] =
+      scala.collection.mutable.Map.from(
+        sig.filter(isHist).groupBy("ph")
+          .agg(min("doc_id").as("keep_id"), count(lit(1)).as("n_members"))
+          .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))))
+    nkdMark("preamble(mus+sigframes)")
+    val imgKeep = seedKeep(imgSig)
+    val audKeep = seedKeep(audSig)
+    nkdMark("seeds")
+    // pre-force the video history label memo on the CALLER thread —
+    // otherwise the first micro-batch pays the heavy history
+    // component loop (and its thread-scoped intermediates) on the
+    // stream-execution thread, unlike the sig frames and mu values
+    // seeded above
+    val histLabels = Multimodal.vidHistLabels(spark, dir)
+    nkdMark("histLabels")
+    // processed batch ids, newest last. Replay-idempotent by
+    // construction (Spark's micro-batch retry contract): every disk
+    // write is keyed by batch id with overwrite, and the driver
+    // state (the two keep maps + this list) mutates only AFTER all
+    // of the batch's Spark jobs succeeded — a replayed batch either
+    // fully skips (id already folded) or cleanly overwrites its own
+    // partial output and folds once. Visibility: the CopyOnWrite
+    // list covers labelsAt()'s cross-thread reads of `processed`;
+    // the caller-thread reads of the plain keep MAPS at drain rest
+    // on the drain's await for the last batch, which takes the
+    // query's progress lock (the happens-before with the stream
+    // thread's batch bodies) — replacing that await with status
+    // polling would need an explicit fence for the maps.
+    val processed = new java.util.concurrent.CopyOnWriteArrayList[Long]()
+    // bids whose deferred contraction has been folded into a labels
+    // file, newest last — per-batch edge/sig writes accumulate
+    // between contractions (see [[VideoContractEvery]])
+    val contracted = new java.util.concurrent.CopyOnWriteArrayList[Long]()
+    def labelsAt(): DataFrame =
+      if (contracted.isEmpty) histLabels
+      else spark.read.parquet(s"$tmp/labels_b${contracted.get(contracted.size - 1)}")
+    def vidSigsAt(): DataFrame = {
       import scala.jdk.CollectionConverters._
-      processed.asScala.lastOption.foreach(contract)
-      nkdMark("contract")
-      def keepRows(m: scala.collection.mutable.Map[Long, (Long, Long)]) =
-        m.iterator.map { case (ph, (k, n)) => (ph, k, n) }.toArray
-      Kernels.trackedCheckpoint(
-        Multimodal.sigKeepComponentRows(spark, keepRows(imgKeep), "image")
-          .unionByName(
-            Multimodal.sigKeepComponentRows(spark, keepRows(audKeep), "audio"))
-          .unionByName(labelsAt()
-            .groupBy("cluster").agg(count(lit(1)).as("n_members"))
-            .select(lit("video").as("modality"),
-              col("cluster").as("keep_id"), col("n_members")))
-          .orderBy("modality", "keep_id"))
-    } finally Kernels.rmTree(tmp.toFile)
+      val hist = vidSig.filter(isHist)
+      if (processed.isEmpty) hist
+      else hist.unionByName(spark.read.parquet(
+        processed.asScala.toSeq.map(b => s"$tmp/vidsigs_b$b"): _*))
+    }
+    // batches processed since the last contraction. Confluence makes
+    // the contraction point free to move; the writes are all keyed
+    // by bid with overwrite, and `contracted` mutates only after the
+    // labels write succeeded — the same replay discipline as the
+    // keep-map folds.
+    def pendingBids(): Seq[Long] = {
+      import scala.jdk.CollectionConverters._
+      val last =
+        if (contracted.isEmpty) Long.MinValue
+        else contracted.get(contracted.size - 1)
+      processed.asScala.toSeq.filter(_ > last)
+    }
+    def contract(atBid: Long): Unit = {
+      val pend = pendingBids()
+      if (pend.nonEmpty) {
+        val newDocs = spark.read.parquet(pend.map(b => s"$tmp/vidsigs_b$b"): _*)
+          .select("doc_id").distinct()
+        val edges = spark.read.parquet(pend.map(b => s"$tmp/edges_b$b"): _*)
+        (Dedup.maintainLabels(labelsAt(), newDocs, edges)
+          .write.mode("overwrite").parquet(s"$tmp/labels_b$atBid"))
+        contracted.add(atBid)
+      }
+    }
+    // micro-batch bodies plan without AQE, where the static planner
+    // picks SortMergeJoin for the batch-x-store banded probes —
+    // sorting the store per batch; hash joins keep the exchanges but
+    // drop the sorts (the streamIncrementalMinHash drain's measured
+    // trick)
+    Streams.drainBatches(payloadStream(spark, srcDir, glob, filesPerTrigger),
+      Streams.HashJoins) { (batch, bid) =>
+      if (!processed.isEmpty && processed.get(processed.size - 1) >= bid) {
+        // replayed, fully-committed batch — skip (idempotence)
+      } else {
+        // per-sig aggregates collected first (bounded by the
+        // batch's present sigs) so the driver fold is a pure
+        // in-memory step AFTER every Spark job has succeeded
+        val payloads = Kernels.fanOut(batch)
+        val imgAgg = Multimodal.sigBatchAgg(
+          Multimodal.trainedSigs(payloads, Multimodal.Pixel, imgMu))
+        val audAgg = Multimodal.sigBatchAgg(
+          Multimodal.trainedSigs(payloads, Multimodal.Audio, audMu))
+        // the batch's frame sigs feed three consumers (two probe
+        // sides, the store write) — checkpoint so the decode
+        // kernel runs once per batch
+        val vidS = Multimodal.trainedSigs(payloads, Multimodal.Frame, vidMu)
+          .localCheckpoint()
+        // per-batch work stops at EDGES: the blast-radius probe
+        // (batch frames x accumulated store, banded — work
+        // proportional to the batch) plus within-batch pairs,
+        // written keyed by bid. The label contraction defers —
+        // see [[VideoContractEvery]].
+        (Multimodal.probePairs(Multimodal.Frame, vidS, vidSigsAt())
+          .select("doc_a", "doc_b")
+          .unionByName(Multimodal.sigPairs(Multimodal.Frame, vidS)
+            .select("doc_a", "doc_b"))
+          .write.mode("overwrite").parquet(s"$tmp/edges_b$bid"))
+        (vidS.write.mode("overwrite").parquet(s"$tmp/vidsigs_b$bid"))
+        // the batch's checkpoint blocks are dead once the writes
+        // are done — free them per batch instead of leaving one
+        // node-sized block PER MICRO-BATCH to the ContextCleaner
+        // (which only runs on driver GC)
+        Kernels.checkpointRddId(vidS).foreach { id =>
+          spark.sparkContext.getPersistentRDDs.get(id)
+            .foreach(_.unpersist(true))
+        }
+        // driver state LAST — pure in-memory, cannot fail midway
+        Multimodal.sigKeepFold(imgKeep, imgAgg)
+        Multimodal.sigKeepFold(audKeep, audAgg)
+        processed.add(bid)
+        // deferred contraction: fold accumulated edges into the
+        // label table once enough batches are pending (a replayed
+        // batch that died between the labels write and the
+        // `contracted` append simply re-contracts at the next
+        // point — confluent, and the write is keyed + overwrite)
+        if (pendingBids().size >= contractEvery) contract(bid)
+      }
+      // the label maintenance's component loop registers tracked
+      // caches/checkpoints in THIS (stream-execution) thread's
+      // scope; drain them per batch — the dead-thread backstop
+      // would otherwise hold them for the whole drain
+      Kernels.drainThreadScope()
+    }
+    nkdMark("drain")
+    // drain-time contraction of whatever is still pending — on the
+    // CALLER thread, so the component loop plans with AQE instead of
+    // the micro-batch static planner (the drain's await establishes
+    // the happens-before with the stream thread's writes)
+    import scala.jdk.CollectionConverters._
+    processed.asScala.lastOption.foreach(contract)
+    nkdMark("contract")
+    def keepRows(m: scala.collection.mutable.Map[Long, (Long, Long)]) =
+      m.iterator.map { case (ph, (k, n)) => (ph, k, n) }.toArray
+    Multimodal.sigKeepComponentRows(spark, keepRows(imgKeep), "image")
+      .unionByName(
+        Multimodal.sigKeepComponentRows(spark, keepRows(audKeep), "audio"))
+      .unionByName(labelsAt()
+        .groupBy("cluster").agg(count(lit(1)).as("n_members"))
+        .select(lit("video").as("modality"),
+          col("cluster").as("keep_id"), col("n_members")))
+      .orderBy("modality", "keep_id")
   }
 
   /** `stream_knn_maintain`: the streaming twin of
@@ -1052,29 +1025,22 @@ object DocStream {
     val mark = Kernels.phaseMarker()
     val hist = Graph.ensureKnnDirectedHistory(spark, dir, Dedup.IncBatchThreshold)
     mark("hist_artifact")
-    val tmp = java.nio.file.Files.createTempDirectory("graft-stream-knn")
-    try {
-      spark.read.parquet(hist).write.mode("overwrite")
-        .parquet(s"$tmp/lists_v0")
-      mark("seed_store")
-      // atomic for cross-thread visibility — the streamMediaKeep note
-      val version = new java.util.concurrent.atomic.AtomicInteger(0)
-      Streams.drainBatches(spark.readStream
-        .schema(embeddingsSchema)
-        .option("pathGlobFilter", "embeddings.parquet")
-        .parquet(dir)
-        .select(col("vec_id"))
-        .filter(Dedup.isBatch(col("vec_id")))) { (batch, _) =>
-        version.set(
-          Graph.appendBatchToKnn(batch, dir, tmp.toString, version.get()))
-      }
-      mark("drain")
-      val served = Kernels.trackedCheckpoint(
-        Graph.mutualFromDirected(
-          spark.read.parquet(s"$tmp/lists_v${version.get()}"))
-          .orderBy("vec_a", "vec_b"))
-      mark("mutual_serve")
-      served
-    } finally Kernels.rmTree(tmp.toFile)
+    val tmp = Kernels.scopedStore("graft-stream-knn")
+    spark.read.parquet(hist).write.mode("overwrite")
+      .parquet(s"$tmp/lists_v0")
+    mark("seed_store")
+    // atomic for cross-thread visibility — the streamMediaKeep note
+    val version = new java.util.concurrent.atomic.AtomicInteger(0)
+    Streams.drainBatches(spark.readStream
+      .schema(embeddingsSchema)
+      .option("pathGlobFilter", "embeddings.parquet")
+      .parquet(dir)
+      .select(col("vec_id"))
+      .filter(Dedup.isBatch(col("vec_id")))) { (batch, _) =>
+      version.set(Graph.appendBatchToKnn(batch, dir, tmp, version.get()))
+    }
+    mark("drain")
+    Graph.mutualFromDirected(spark.read.parquet(s"$tmp/lists_v${version.get()}"))
+      .orderBy("vec_a", "vec_b")
   }
 }

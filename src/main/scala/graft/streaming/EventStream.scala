@@ -34,8 +34,9 @@ case class KmvEstimate(event_type: String, n_rows: Long, est_users: Long)
   * declared over `readStream`, runnable unchanged against a live file/
   * Kafka source. For the oracle gate each runs against the static
   * events parquet via the file stream source and drains through
-  * [[Streams]], which returns the memory-sink rows — the memory sink is
-  * test-only; production would `writeStream` to a real sink. Results
+  * [[Streams]], which returns a scan of the batches it wrote into a
+  * query-scoped parquet dir; production would `writeStream` to a
+  * durable sink. Results
   * are identical to the batch twins (same partial-agg + shuffle plan
   * per micro-batch, state store between batches).
   */
@@ -528,20 +529,14 @@ object EventStream {
     */
   def streamSketchMaintain(spark: SparkSession, dir: String): DataFrame = {
     import graft.operators.{Kernels, Sketches}
-    val tmp = java.nio.file.Files.createTempDirectory("graft-stream-sketch")
-    // per-call store: ingest + serve run inside the finally so a
-    // failure anywhere never leaks the dir; the serve result is an
-    // eager checkpoint leaf with no dependency on the deleted store
-    try {
-      Streams.drainBatches(readEventsStream(spark, dir).select(col("ts"), col("user_id"))) {
-        (batch, _) =>
-          Sketches.dailyCmsGridsOf(batch)
-            .write.mode("append").partitionBy("day").parquet(s"$tmp/cms")
-      }
-      val merged = spark.read.parquet(s"$tmp/cms")
-        .groupBy("j", "b").agg(sum("cnt").as("cnt"))
-      graft.operators.Kernels.trackedCheckpoint(
-        Sketches.probeSketchTopK(spark, dir, merged))
-    } finally Kernels.rmTree(tmp.toFile)
+    val root = Kernels.scopedStore("graft-stream-sketch")
+    Streams.drainBatches(readEventsStream(spark, dir).select(col("ts"), col("user_id"))) {
+      (batch, _) =>
+        Sketches.dailyCmsGridsOf(batch)
+          .write.mode("append").partitionBy("day").parquet(s"$root/cms")
+    }
+    val merged = spark.read.parquet(s"$root/cms")
+      .groupBy("j", "b").agg(sum("cnt").as("cnt"))
+    Sketches.probeSketchTopK(spark, dir, merged)
   }
 }

@@ -1,9 +1,7 @@
 package graft.streaming
 
-import java.util.concurrent.atomic.AtomicLong
-
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode}
+import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.streaming.OutputMode
 
 /** The one place an operator runs a stream to completion. Every stream
   * operator in this package builds its frame and hands it here; the
@@ -11,8 +9,8 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode}
   * or running two at once, changes nothing:
   *
   *  - the query starts on the CALLER's session (its listeners see the
-  *    query's progress) under a unique sink name, with a checkpoint dir
-  *    created per drain and deleted on every exit path;
+  *    query's progress), with a checkpoint dir created per drain and
+  *    deleted on every exit path;
   *  - the conf overrides it is given (state-store width, hash joins in
   *    micro-batch plans) are set before `start()` — batch 0 plans at
   *    launch — and restored after `stop()`, to the pre-drain value or
@@ -21,17 +19,18 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode}
   *    never starts under the first one's overrides or restores the
   *    session to them. A non-stream query running beside a drain still
   *    plans under its overrides — Spark has no per-query SQL conf;
-  *  - a memory-sink drain resolves its sink table and drops the view
-  *    before returning; the resolved frame keeps reading the sink's
-  *    rows, and they go when the frame does.
+  *  - every sink is `foreachBatch`. A result drain writes each batch
+  *    into a [[graft.operators.Kernels.scopedStore]] dir and returns a
+  *    scan of it, so the rows live in files, never in driver memory.
+  *    The dir, like a per-call store an operator keeps there, lives
+  *    until the calling thread's next `retireCaches()`: consume the
+  *    frame before that retire.
   *
   * Every drain is `processAllAvailable` on a finite source: the stream
   * form is the production shape, the drain is how the oracle gate reads
   * it.
   */
 object Streams {
-
-  private val sinkIds = new AtomicLong()
 
   /** Override that sizes the drain's state stores to `expectedKeys`
     * ([[EventStream.statePartitionsFor]]). Read under the drain lock,
@@ -51,35 +50,32 @@ object Streams {
     */
   val HashJoins: Map[String, String] = Map("spark.sql.join.preferSortMergeJoin" -> "false")
 
-  /** Drains `ds` into a memory sink in `mode` and returns the sink's
-    * rows as a frame with no view behind it.
+  /** Drains `ds` in `mode` into a scoped parquet dir and returns a
+    * scan of it: Append and Update batches append, as a memory sink
+    * would keep them, and each Complete batch overwrites the last.
     */
   def drain(ds: Dataset[_], mode: OutputMode,
             confs: Map[String, String] = Map.empty): DataFrame = {
-    val sink = s"graft_drain_${sinkIds.incrementAndGet()}"
-    try {
-      run(ds.writeStream.outputMode(mode).format("memory").queryName(sink),
-        ds.sparkSession, confs)
-      ds.sparkSession.table(sink)
-    } finally ds.sparkSession.catalog.dropTempView(sink)
+    val root = graft.operators.Kernels.scopedStore("graft-stream-result")
+    val save = if (mode == OutputMode.Complete()) SaveMode.Overwrite else SaveMode.Append
+    drainBatches(ds.toDF(), confs, mode)((batch, _) => batch.write.mode(save).parquet(root))
+    ds.sparkSession.read.schema(ds.schema).parquet(root)
   }
 
-  /** Drains `df` in append mode through `f`, once per micro-batch with
-    * the batch id. `f` runs on the stream-execution thread.
+  /** Drains `df` in `mode` through `f`, once per micro-batch with the
+    * batch id. `f` runs on the stream-execution thread.
     */
-  def drainBatches(df: DataFrame, confs: Map[String, String] = Map.empty)(
-      f: (DataFrame, Long) => Unit): Unit =
-    run(df.writeStream.outputMode(OutputMode.Append()).foreachBatch(f),
-      df.sparkSession, confs)
-
-  private def run(writer: DataStreamWriter[_], spark: SparkSession,
-                  confs: Map[String, String]): Unit = {
+  def drainBatches(df: DataFrame, confs: Map[String, String] = Map.empty,
+                   mode: OutputMode = OutputMode.Append())(
+      f: (DataFrame, Long) => Unit): Unit = {
+    val spark = df.sparkSession
     val ckpt = java.nio.file.Files.createTempDirectory("graft-drain")
     try synchronized {
       val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
       try {
         confs.foreach { case (k, v) => spark.conf.set(k, v) }
-        val q = writer.option("checkpointLocation", ckpt.toString).start()
+        val q = df.writeStream.outputMode(mode).foreachBatch(f)
+          .option("checkpointLocation", ckpt.toString).start()
         try q.processAllAvailable() finally q.stop()
       } finally saved.foreach {
         case (k, Some(v)) => spark.conf.set(k, v)

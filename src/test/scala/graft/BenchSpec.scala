@@ -20,6 +20,12 @@ class BenchSpec extends AnyFunSuite {
       val row = full \ "layers" \ n
       assert((row \ k).extractOpt[Long].exists(_ >= 1), s"$n has no $k in its ledger row: $row")
     }
+    // AQE runs q1's query stages from its pool: each must carry a plan
+    // name, not the pool's call site
+    val slowest = (full \ "layers" \ "q1_pricing_summary" \ "slowest").children
+      .map(st => (st \ "stage").extract[String])
+    assert(slowest.nonEmpty && !slowest.exists(_.contains("CompletableFuture")),
+      s"a q1 stage is named after the AQE pool: $slowest")
     // the stream's micro-batches run on its own execution thread
     assert((full \ "layers" \ "stream_dedup" \ "batches").extractOpt[Long].exists(_ >= 1),
       s"no micro-batch attributed to stream_dedup: ${full \ "layers" \ "stream_dedup"}")

@@ -1244,32 +1244,51 @@ class PlanAuditSpec extends AnyFunSuite {
         s"stale allowlist entry: $f Window.partitionBy($k) x$n no longer matches the source")
   }
 
-  /** Lines under `src/main/scala` outside `helper` that contain any of
-    * `tokens`, as `path:line: text`.
+  /** Lines under `src/main/scala` outside the `helpers` that contain
+    * any of `tokens`, as `path:line: text`.
     */
-  private def sourceHitsOutside(helper: String, tokens: Seq[String]): Seq[String] = {
+  private def sourceHitsOutside(helpers: Seq[String], tokens: Seq[String]): Seq[String] = {
     import scala.jdk.CollectionConverters._
-    val own = java.nio.file.Path.of(helper)
+    val own = helpers.map(java.nio.file.Path.of(_))
     val sources = java.nio.file.Files.walk(java.nio.file.Path.of("src/main/scala"))
       .iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
-    assert(sources.contains(own), s"the audit must see the helper at $own")
+    own.foreach(h => assert(sources.contains(h), s"the audit must see the helper at $h"))
     for {
-      p <- sources if p != own
+      p <- sources if !own.contains(p)
       (line, i) <- java.nio.file.Files.readAllLines(p).asScala.zipWithIndex
       if tokens.exists(line.contains)
     } yield s"$p:${i + 1}: ${line.trim}"
   }
 
   test("stream-drain audit: only the drain helper starts, drains or re-confs a stream") {
-    // `Streams` owns what a drain leaves behind — the sink view, the
-    // checkpoint dir, the session confs — and serializes the overrides.
-    // A hand-copied drain (31 existed before the helper) skips at least
-    // one of those, so the tokens that start one may appear in no other
-    // source file.
-    val hits = sourceHitsOutside("src/main/scala/graft/streaming/Streams.scala",
-      Seq("processAllAvailable", """format("memory")""", "queryName(", "conf.set("))
+    // `Streams` owns what a drain leaves behind — the checkpoint dir,
+    // the session confs — and serializes the overrides. A hand-copied
+    // drain (31 existed before the helper) skips at least one of those,
+    // so the tokens that start one may appear in no other source file.
+    // The memory sink holds every result row on the driver, so no file
+    // may use it; and a temp dir made outside `Kernels.scopedStore` (or
+    // the drain's checkpoint) hand-rolls a second lifetime.
+    val streams = "src/main/scala/graft/streaming/Streams.scala"
+    val hits = sourceHitsOutside(Seq(streams),
+      Seq("processAllAvailable", "queryName(", "conf.set(")) ++
+      sourceHitsOutside(Nil, Seq("""format("memory")""")) ++
+      sourceHitsOutside(Seq(streams, "src/main/scala/graft/operators/Kernels.scala"),
+        Seq("createTempDirectory"))
     assert(hits.isEmpty,
-      s"drain or session-conf code outside the helper — go through Streams:\n${hits.mkString("\n")}")
+      s"drain, sink or temp-dir code outside the helpers — go through Streams:\n${hits.mkString("\n")}")
+  }
+
+  test("stream drains: stream_dedup and stream_sessionize results scan files, no LocalTableScan") {
+    // a drained result read from the driver is planned as a
+    // LocalTableScan whose rows ride every task; the scoped parquet dir
+    // is read by a file scan in the consumer's first stage instead
+    for (q <- Seq("stream_dedup", "stream_sessionize")) {
+      val df = SparkEntry.queries(q)(spark, sf)
+      val p = try { df.collect(); df.queryExecution.executedPlan.toString }
+        finally Dedup.retireCaches()
+      assert(p.contains("FileScan parquet") && !p.contains("LocalTableScan"),
+        s"$q's result must scan its drained files:\n$p")
+    }
   }
 
   test("memo audit: only Kernels locks or hooks a shared registry") {
@@ -1278,7 +1297,7 @@ class PlanAuditSpec extends AnyFunSuite {
     // until-retire entries. A hand-rolled `xMemo.synchronized {
     // getOrElseUpdate }` (29 existed before) builds under a shared lock,
     // so the tokens that start one may appear in no other source file.
-    val hits = sourceHitsOutside("src/main/scala/graft/operators/Kernels.scala",
+    val hits = sourceHitsOutside(Seq("src/main/scala/graft/operators/Kernels.scala"),
       Seq(".synchronized", "onRetire("))
     assert(hits.isEmpty,
       s"a lock or retire hook outside Kernels — go through Kernels.memo:\n${hits.mkString("\n")}")
@@ -1289,7 +1308,7 @@ class PlanAuditSpec extends AnyFunSuite {
     // every incremental query shares; a hand-copied md5("inc:" …) prefix
     // (34 existed before) can drift from it, so the token that builds
     // one may appear in no other source file
-    val hits = sourceHitsOutside("src/main/scala/graft/operators/Dedup.scala",
+    val hits = sourceHitsOutside(Seq("src/main/scala/graft/operators/Dedup.scala"),
       Seq("""lit("inc:")"""))
     assert(hits.isEmpty,
       s"an inc: split outside Dedup — use Dedup.split / Dedup.isBatch:\n${hits.mkString("\n")}")
@@ -1301,7 +1320,7 @@ class PlanAuditSpec extends AnyFunSuite {
     // broadcast conf, log level or retire-then-GC loop (23 lines existed
     // before) drifts from them, so the tokens may appear in no other
     // source file
-    val hits = sourceHitsOutside("src/main/scala/graft/GraftSession.scala",
+    val hits = sourceHitsOutside(Seq("src/main/scala/graft/GraftSession.scala"),
       Seq("SparkSession.builder()", "autoBroadcastJoinThreshold", "setLogLevel(", "System.gc()"))
     assert(hits.isEmpty,
       s"session setup outside GraftSession — use deployment / step:\n${hits.mkString("\n")}")
@@ -1313,7 +1332,7 @@ class PlanAuditSpec extends AnyFunSuite {
     // k-means cells and the PQ subspaces alike; a second copy (PQ held
     // its own before) can drift from the oracle's replay, so the tokens
     // that spell one may appear in no other source file
-    val hits = sourceHitsOutside("src/main/scala/graft/operators/KMeans.scala",
+    val hits = sourceHitsOutside(Seq("src/main/scala/graft/operators/KMeans.scala"),
       Seq("JBig.ZERO", "def dec9", ".setScale(9)"))
     assert(hits.isEmpty,
       s"exact-decimal kernel code outside KMeans — use the Lloyd kernel:\n${hits.mkString("\n")}")
