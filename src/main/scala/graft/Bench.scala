@@ -67,8 +67,13 @@ object Bench {
     val stores = mutable.Map.empty[String, (String, Double)]
     val failed = mutable.SortedSet.empty[String]
     val ledger = new Ledger(spark)
+    // memo hits and builds per kind: per rep in its ledger row, and over
+    // the whole run in the artifact's "memo" map (a memo builds once per
+    // session, so only the run total puts its build beside its hits)
+    val memoAtStart = Kernels.memoStats()
     def timedRun(name: String): Unit = {
       Kernels.phaseReset()
+      val memo0 = Kernels.memoStats()
       val token = ledger.open(name)
       val t0 = System.nanoTime()
       // A failed rep does NOT update the per-query min: a crashing query
@@ -77,7 +82,10 @@ object Bench {
         SparkEntry.queries(name)(spark, sfDir).count()
         (System.nanoTime() - t0) / 1e9
       }
-      val row = ledger.close(token)
+      val memo = memoMoved(memo0, Kernels.memoStats())
+      val row = JObject(ledger.close(token).obj ++ List(
+        "memo_hits" -> JObject(memo.map { case (k, d) => k -> JLong(d.hits) }),
+        "memo_builds" -> JObject(memo.map { case (k, d) => k -> JLong(d.builds) })))
       val marks = Kernels.phaseDrain()
       System.err.println(s"[bench] $name ${dt.fold("failed")(d => f"$d%.3fs")} phases: " +
         marks.map { case (t, s) => f"$t=$s%.2f" }.mkString(" ") + s" ledger: ${compact(render(row))}")
@@ -148,6 +156,9 @@ object Bench {
         "queries" -> obj(times)(dec),
         "phases" -> obj(phases)(ms => JObject(ms.toList.map { case (t, s) => t -> dec(s) })),
         "stores" -> obj(stores) { case (q, s) => JObject("query" -> JString(q), "sec" -> dec(s)) },
+        "memo" -> JObject(memoMoved(memoAtStart, Kernels.memoStats()).map { case (k, d) =>
+          k -> JObject("hits" -> JLong(d.hits), "builds" -> JLong(d.builds), "build_s" -> dec(d.buildSec))
+        }),
         "layers" -> obj(layers)(identity)) ++ tail)
       Files.writeString(artifact, compact(render(full)))
     } catch { case e: Exception => System.err.println(s"[bench] $artifact write failed: ${e.getMessage}") }
@@ -164,6 +175,16 @@ object Bench {
       if (line(in :+ n).length <= 1500) in :+ n else in
     })
   }
+
+  /** The memo kinds hit or built between two [[Kernels.memoStats]]
+    * snapshots, by kind, with the counts and build seconds in between.
+    */
+  private def memoMoved(before: Map[String, Kernels.MemoStat],
+      after: Map[String, Kernels.MemoStat]): List[(String, Kernels.MemoStat)] =
+    after.toList.sortBy(_._1).map { case (k, a) =>
+      val b = before.getOrElse(k, Kernels.MemoStat(0, 0, 0.0))
+      k -> Kernels.MemoStat(a.hits - b.hits, a.builds - b.builds, a.buildSec - b.buildSec)
+    }.filter { case (_, d) => d.hits + d.builds > 0 }
 }
 
 /** Per-query layer ledger from Spark's own listeners, attached for one

@@ -2,6 +2,9 @@ package graft.operators
 
 import java.math.{BigDecimal => JBig, RoundingMode}
 
+import scala.collection.mutable
+
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -23,13 +26,14 @@ import graft.Tables
   *
   * Execution shape per Lloyd round — the MLlib `KMeans` shape:
   *  1. the books (tiny, fixed size) are COLLECTED to the driver and
-  *     shipped inside the assignment task closure — the corpus itself
-  *     never moves for assignment, which runs as a map-only typed
-  *     kernel (argmin over the subspace's exact-decimal distances);
-  *  2. centroid recomputation is one combiner-friendly aggregate on
-  *     (ss, cluster, dim): partial sums on the map side mean the
-  *     exchange carries books-sized rows per map task, never a
-  *     corpus-sized shuffle.
+  *     shipped inside the task closure — the corpus itself never moves;
+  *  2. a round is ONE single-stage fold job ([[lloydRound]]): each task
+  *     assigns its rows by the same argmin [[assign]] uses and folds
+  *     exact per-(ss, cluster) member counts and coordinate sums, and
+  *     `treeAggregate` merges the books-sized partials on the driver —
+  *     no Catalyst plan, exchange or codegen per round. At scale the
+  *     fold adds a tree level, so the driver merges O(√partitions)
+  *     partials, never a corpus-sized result.
   * The only driver-side data is the books (independent of corpus
   * size) — the same contract as broadcasting MLlib cluster centers;
   * per-row work stays distributed.
@@ -126,25 +130,30 @@ object KMeansCodebook {
     s.setScale(6, RoundingMode.HALF_UP)
   }
 
+  /** The nearest of a subspace's `entries` to a fixed vector by [[d6]],
+    * ties to the lowest cluster id — the one argmin of [[assign]] and
+    * of every Lloyd round.
+    */
+  private def argmin(xd: Array[JBig], entries: Array[(Long, Array[JBig])], id: Long): Long = {
+    var bestC = Long.MaxValue
+    var bestD: JBig = null
+    entries.foreach { case (c, cent) =>
+      val d = d6(xd, cent, id)
+      val cmp = if (bestD == null) -1 else d.compareTo(bestD)
+      if (cmp < 0 || (cmp == 0 && c < bestC)) { bestD = d; bestC = c }
+    }
+    bestC
+  }
+
   /** Map-only assignment (vec_id, ss, cluster, v): each row to its
-    * subspace's nearest entry by [[d6]], ties to the lowest cluster id.
-    * The books ride the task closure.
+    * subspace's nearest entry by [[argmin]]. The books ride the task
+    * closure.
     */
   private[operators] def assign(rows: DataFrame, books: Books): DataFrame = {
     val spark = rows.sparkSession
     import spark.implicits._
     rowsOf(rows).mapPartitions { it =>
-      it.map { case (id, ss, v) =>
-        val xd = v.map(x => dec9(x)).toArray
-        var bestC = Long.MaxValue
-        var bestD: JBig = null
-        books(ss).foreach { case (c, cent) =>
-          val d = d6(xd, cent, id)
-          val cmp = if (bestD == null) -1 else d.compareTo(bestD)
-          if (cmp < 0 || (cmp == 0 && c < bestC)) { bestD = d; bestC = c }
-        }
-        (id, ss, bestC, v)
-      }
+      it.map { case (id, ss, v) => (id, ss, argmin(v.map(x => dec9(x)).toArray, books(ss), id), v) }
     }.toDF("vec_id", "ss", "cluster", "v")
   }
 
@@ -167,18 +176,50 @@ object KMeansCodebook {
     }.toDF("vec_id", "ss", "cluster", "d")
   }
 
-  /** One combiner-friendly aggregate: per-(ss, cluster, dim) member
-    * count and exact decimal coordinate sum; the mean divides as double
-    * and rounds to 6dp (order-independent — see [[Similarity.labelCentroids]]).
+  /** One cluster's members in a Lloyd fold: how many, and the exact
+    * sum of their fixed coordinates (decimal addition is exact, so the
+    * sum is order-independent).
     */
-  private def recompute(assigned: DataFrame): DataFrame =
-    assigned
-      .select(col("ss"), col("cluster"), posexplode(col("v")).as(Seq("pos", "x")))
-      .groupBy(col("ss"), col("cluster"), (col("pos") + 1).cast("long").as("dim"))
-      .agg(count(lit(1)).as("n_members"),
-           sum(col("x").cast("decimal(18,9)")).as("sx"))
-      .select(col("ss"), col("cluster"), col("dim"), col("n_members"),
-        round(col("sx").cast("double") / col("n_members"), 6).as("c"))
+  private final class Members(dim: Int) extends Serializable {
+    var n = 0L
+    val sx: Array[JBig] = Array.fill(dim)(JBig.ZERO)
+    def add(k: Long, xs: Array[JBig]): Members = {
+      n += k
+      for (j <- sx.indices) sx(j) = sx(j).add(xs(j))
+      this
+    }
+    /** Spark's `round(cast(sum as double) / n, 6)` per dim — `Decimal.toDouble`
+      * is `BigDecimal.doubleValue` (see [[Similarity.labelCentroids]]).
+      */
+    def means: Array[Double] = sx.map(s => Kernels.r6(s.doubleValue / n))
+  }
+
+  /** One Lloyd round as ONE single-stage fold job: each row goes to its
+    * subspace's nearest entry by [[argmin]], and each task folds the
+    * per-(ss, cluster) [[Members]]; `treeAggregate` merges the
+    * books-sized partials on the driver. Sorted by (ss, cluster); a
+    * cluster no row chose is absent — it drops out.
+    */
+  private def lloydRound(rows: RDD[(Long, Long, Seq[Double])], books: Books)
+      : Seq[((Long, Long), Members)] =
+    rows.treeAggregate(mutable.HashMap.empty[(Long, Long), Members])(
+      (acc, row) => {
+        val (id, ss, v) = row
+        val xd = v.map(x => dec9(x)).toArray
+        acc.getOrElseUpdate((ss, argmin(xd, books(ss), id)), new Members(xd.length)).add(1, xd)
+        acc
+      },
+      (a, b) => {
+        b.foreach { case (k, m) => a(k) = a.get(k).fold(m)(_.add(m.n, m.sx)) }
+        a
+      })
+      .toSeq.sortBy(_._1)
+
+  /** Books from a [[lloydRound]]'s means, re-fixed to DECIMAL(18,9). */
+  private def booksOf(round: Seq[((Long, Long), Members)]): Books =
+    round.groupBy(_._1._1).map { case (ss, es) =>
+      ss -> es.map { case ((_, c), m) => (c, m.means.map(x => dec9(x))) }.toArray
+    }
 
   /** Books from (ss, cluster, dim, c) rows, `c` a trained double or a
     * stored DECIMAL(18,9).
@@ -211,8 +252,9 @@ object KMeansCodebook {
         .select(col("ss"), col("vec_id").as("cluster"),
           posexplode(col("v")).as(Seq("pos", "c")))
         .withColumn("dim", (col("pos") + 1).cast("long")))
+      val rows = rowsOf(split(corpus.vectors)).rdd
       for (_ <- 1 until LloydIters)
-        books = collectBooks(recompute(assign(split(corpus.vectors), books)))
+        books = booksOf(lloydRound(rows, books))
       books
     }
 
@@ -223,9 +265,9 @@ object KMeansCodebook {
   /** The corpus's FINAL assignment (vec_id, cluster, v), memoized under
     * the codebook's key, so a corpus is trained once and assigned once
     * regardless of entry point. The CACHED frame lives until the next
-    * Kernels.retireCaches: [[centroids]] re-aggregates it,
-    * [[clusterBalancedSample]] samples it and the IVF searches search
-    * it, paying the distributed assignment scan once, not per query.
+    * Kernels.retireCaches: [[clusterBalancedSample]] samples it and the
+    * IVF searches search it, paying the distributed assignment scan
+    * once, not per query.
     */
   private[operators] def lastAssignment(corpus: Corpus): DataFrame =
     Kernels.memoUntilRetire("kmeans-assign", corpus.key)(
@@ -267,13 +309,20 @@ object KMeansCodebook {
 
   /** `kmeans_centroids`: the trained codebook after [[LloydIters]]
     * Lloyd rounds from the deterministic init, with each cluster's
-    * final member count. A cluster that loses every member simply
-    * drops out (deterministically — no re-seeding).
+    * final member count — one [[lloydRound]] fold of the corpus scan
+    * under the memoized codebook, sorted by (cluster, dim) on the
+    * driver. A cluster that loses every member simply drops out
+    * (deterministically — no re-seeding).
     */
-  def centroids(spark: SparkSession, dir: String): DataFrame =
-    recompute(oneSpace(lastAssignment(spark, dir)))
-      .select("cluster", "dim", "n_members", "c")
-      .orderBy("cluster", "dim")
+  def centroids(spark: SparkSession, dir: String): DataFrame = {
+    import spark.implicits._
+    val corpus = embeddings(spark, dir)
+    lloydRound(rowsOf(oneSpace(corpus.scan)).rdd, codebook(corpus))
+      .flatMap { case ((_, c), m) =>
+        m.means.zipWithIndex.map { case (x, j) => (c, (j + 1).toLong, m.n, x) }
+      }
+      .toDF("cluster", "dim", "n_members", "c")
+  }
 
   val BalancedQuota = 25
 

@@ -5,6 +5,13 @@ import org.apache.spark.sql.Dataset
 /** Shared helpers for the typed per-partition kernels. */
 private[graft] object Kernels {
 
+  /** Spark `round(double, 6)` semantics on the driver or in a typed
+    * kernel: shortest-repr BigDecimal, HALF_UP at scale 6 (== DuckDB
+    * `round(x, 6)`).
+    */
+  def r6(d: Double): Double =
+    java.math.BigDecimal.valueOf(d).setScale(6, java.math.RoundingMode.HALF_UP).doubleValue
+
   /** Fan a narrow input out to cluster parallelism — but ONLY when the
     * scan arrived under-partitioned (the local testdata is one parquet
     * file per table, which Spark reads as a single split at small SF).
@@ -439,6 +446,33 @@ private[graft] object Kernels {
       build: => org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
     memoIn(kind, key, untilRetire = true)(memoCache(build))
 
+  /** One memo kind's hits, builds and summed build seconds since the
+    * JVM started.
+    */
+  final case class MemoStat(hits: Long, builds: Long, buildSec: Double)
+
+  // concurrent counters per kind, so counting takes no lock beside
+  // the slot's own
+  private final class MemoCounter {
+    val hits, builds, buildNs = new java.util.concurrent.atomic.LongAdder()
+  }
+
+  private val memoCounts =
+    new java.util.concurrent.ConcurrentHashMap[String, MemoCounter]()
+
+  private def memoCounter(kind: String): MemoCounter =
+    memoCounts.computeIfAbsent(kind, _ => new MemoCounter)
+
+  /** A snapshot of every memo kind's [[MemoStat]] — [[memo]],
+    * [[memoUntilRetire]] and [[buildStore]] all count here.
+    */
+  def memoStats(): Map[String, MemoStat] = {
+    import scala.jdk.CollectionConverters._
+    memoCounts.asScala.map { case (kind, c) =>
+      kind -> MemoStat(c.hits.sum, c.builds.sum, c.buildNs.sum / 1e9)
+    }.toMap
+  }
+
   private def memoIn[T <: AnyRef](kind: String, key: (String, String),
       untilRetire: Boolean)(build: => T): T = {
     val (slot, superseded) = memos.synchronized {
@@ -452,7 +486,14 @@ private[graft] object Kernels {
     }
     superseded.foreach(release)
     slot.synchronized {
-      if (slot.value == null) slot.value = build
+      val c = memoCounter(kind)
+      if (slot.value != null) c.hits.increment()
+      else {
+        val t0 = System.nanoTime()
+        slot.value = build
+        c.builds.increment()
+        c.buildNs.add(System.nanoTime() - t0)
+      }
       slot.value.asInstanceOf[T]
     }
   }

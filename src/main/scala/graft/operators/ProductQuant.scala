@@ -24,9 +24,9 @@ import KMeansCodebook.{Books, Corpus}
   * M table lookups on its codes.
   *
   * 100 TB shape: training and encoding are the [[KMeansCodebook]]
-  * contract (map-only assignment with the books in the task closure,
-  * one combiner-friendly (ss, cluster, dim) aggregate per Lloyd round —
-  * only books-sized data ever reaches the driver). The ADC search
+  * contract (the books in the task closure, map-only assignment, one
+  * single-stage `treeAggregate` fold per Lloyd round — only books-sized
+  * data ever reaches the driver). The ADC search
   * joins the corpus' code table against a BROADCAST distance table on
   * (subspace, code) — the corpus is never shuffled for the join, and a
   * row's M subspace entries are co-located (they come from the same

@@ -2,7 +2,7 @@ package graft.operators
 
 import java.math.{BigDecimal => JBig, RoundingMode}
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -21,12 +21,13 @@ import graft.Tables
   * tier — spec-pinned) without any RNG or external labels.
   *
   * Execution shape per training step — the [[KMeansCodebook]] Lloyd
-  * idiom applied to batch gradient descent:
-  *  1. the weight vector (5 doubles) rides the task closure; the
-  *     margin/residual computation is MAP-ONLY over the cached
-  *     feature frame;
-  *  2. the gradient is ONE combiner-friendly aggregate (5 decimal
-  *     sums + nothing else crosses the exchange);
+  * idiom applied to batch gradient descent (MLlib's one
+  * `treeAggregate` per iteration):
+  *  1. the weight vector (5 doubles) rides the task closure;
+  *  2. the step is ONE single-stage fold job over the cached feature
+  *     frame: each task folds its rows' margin, residual and 5 exact
+  *     gradient sums, and `treeAggregate` merges the 5-long partials
+  *     on the driver — no Catalyst plan, exchange or codegen per step;
   *  3. the driver applies the update to the tiny weight vector.
   * Corpus never shuffles; per-step cost is one pass over 5 doubles ×
   * corpus. At 100 TB the trainer would subsample the label pass; the
@@ -45,9 +46,10 @@ import graft.Tables
   *    exactly-rounded arithmetic: no `exp`, whose last-ulp behavior
   *    is engine-specific;
   *  - per-row gradient contributions round to 6dp and sum as
-  *    DECIMAL(18,6) — order-independent (decimal addition is exact),
-  *    and the scaled-integer sum stays far below 2^53 so the final
-  *    cast to double is exact in both engines;
+  *    DECIMAL(18,6) scaled integers — order-independent (integer
+  *    addition is exact, and `Math.addExact` throws rather than wrap),
+  *    and the sum stays far below 2^53 so the final cast to double is
+  *    exact in both engines;
   *  - the update divides the decimal sum as double and re-rounds the
   *    weights to 6dp ([[KMeansCodebook]]'s centroid-mean contract);
   *  - class-imbalance is handled by 6dp-rounded inverse-frequency
@@ -58,6 +60,7 @@ import graft.Tables
   * gated by the same differential.
   */
 object QualityClassifier {
+  import Kernels.r6
 
   /** Full-batch gradient steps. 8 steps takes the balanced accuracy
     * from the 0.5 coin to ~0.84-0.86 at every tier (plateau — the
@@ -87,12 +90,6 @@ object QualityClassifier {
     * the convergence rate (measured).
     */
   val Center = 0.5
-
-  /** Spark `round(double, 6)` semantics on the driver: shortest-repr
-    * BigDecimal, HALF_UP at scale 6 (== DuckDB `round(x, 6)`).
-    */
-  private def r6(d: Double): Double =
-    JBig.valueOf(d).setScale(6, RoundingMode.HALF_UP).doubleValue
 
   /** Per-doc features + label, all 6dp-rounded doubles:
     * x1 = length band − 0.5, x2 = type/token diversity − 0.5,
@@ -125,8 +122,9 @@ object QualityClassifier {
   }
 
   /** The 6dp-rounded left-associated margin under explicit weights —
-    * shared by the trainer's gradient pass and both scorers so the
-    * association order (and so the exact double) is defined once.
+    * shared by both scorers so the association order (and so the exact
+    * double) is defined once; the trainer's [[addGradient]] replays the
+    * same IEEE operations in the same order.
     */
   private def marginOf(w: Array[Double]): Column =
     round(col("x1") * w(0) + col("x2") * w(1) + col("x3") * w(2) +
@@ -136,25 +134,50 @@ object QualityClassifier {
   private def linkOf(z: Column): Column =
     when(z <= SigLo, 0.0).when(z >= SigHi, 1.0).otherwise(z * 0.25 + 0.5)
 
+  /** One feature row's 5 gradient terms under `w`, added to `acc` as
+    * DECIMAL(18,6) unscaled longs — the Spark expressions
+    * `round(r * x, 6)` over [[marginOf]] and [[linkOf]], replayed in
+    * the same IEEE order. A row with a NULL feature has a NULL margin,
+    * so it adds nothing (it still counts in `n`); a row outside the
+    * active band `SigLo < z < SigHi` adds zero (the hard sigmoid's
+    * slope is 0 there).
+    */
+  private def addGradient(acc: Array[Long], r: Row, w: Array[Double],
+      cwp: Double, cwn: Double): Array[Long] = {
+    if (!(0 to 4).exists(r.isNullAt)) {
+      val x = Array(r.getDouble(0), r.getDouble(1), r.getDouble(2), r.getDouble(3), 1.0)
+      val y = r.getDouble(4)
+      val z = r6(x(0) * w(0) + x(1) * w(1) + x(2) * w(2) + x(3) * w(3) + w(4))
+      if (z > SigLo && z < SigHi) {
+        val res = (z * 0.25 + 0.5 - y) * (if (y == 1.0) cwp else cwn)
+        for (j <- 0 until 5)
+          acc(j) = Math.addExact(acc(j),
+            JBig.valueOf(r6(res * x(j))).setScale(6, RoundingMode.HALF_UP)
+              .unscaledValue.longValueExact)
+      }
+    }
+    acc
+  }
+
   // Training is deterministic, so the trained head (5 doubles) is
   // memoized per input fingerprint for the session — the same
   // train-once/reuse contract as the k-means codebook memo. Plain
   // doubles: nothing here for retireCaches to kill, so the memo
   // legitimately amortizes across gate queries.
   /** Runs (or reuses) the [[Steps]]-step training and returns the
-    * weight vector (w1..w4, bias). One cached feature pass + one
-    * bounded aggregate per step; only 5-double rows ever reach the
-    * driver.
+    * weight vector (w1..w4, bias): one fold of the cached feature
+    * frame for `n` and the positive count, then one fold per step;
+    * only 5-long partials ever reach the driver.
     */
   private[graft] def trainedWeights(spark: SparkSession, dir: String): Array[Double] =
     Kernels.memo("quality-weights", Kernels.inputKey(dir, "documents.parquet")) {
-      val f = Kernels.cacheTracked(featureFrame(spark, dir))
-      val head = f.agg(count(lit(1)).as("n"), sum(col("y")).as("npos")).collect()(0)
-      val n = head.getLong(0)
-      // sum(y) is NULL on an empty corpus — read it defensively so
-      // the require below stays the failure path (getDouble on the
-      // null would throw an opaque NPE before it)
-      val npos = if (head.isNullAt(1)) 0.0 else head.getDouble(1)
+      val rows = Kernels.cacheTracked(featureFrame(spark, dir))
+        .select("x1", "x2", "x3", "x4", "y").rdd
+      // y is the 0/1 label, never NULL: its count of 1s is sum(y)
+      val (n, nPos) = rows.treeAggregate((0L, 0L))(
+        (c, r) => (c._1 + 1, if (r.getDouble(4) == 1.0) c._2 + 1 else c._2),
+        (a, b) => (a._1 + b._1, a._2 + b._2))
+      val npos = nPos.toDouble
       // a single-class (or empty) corpus has no decision boundary to
       // learn — loud beats a silently degenerate all-one head
       require(npos > 0 && npos < n,
@@ -162,23 +185,13 @@ object QualityClassifier {
       val cwp = r6(n / (2.0 * npos))
       val cwn = r6(n / (2.0 * (n - npos)))
       var w = Array.fill(5)(0.0)
-      val zero = lit(java.math.BigDecimal.ZERO).cast("decimal(18,6)")
       for (_ <- 1 to Steps) {
-        val z = marginOf(w)
-        val p = linkOf(z)
-        val cw = when(col("y") === 1.0, cwp).otherwise(cwn)
-        val r = (p - col("y")) * cw
-        val active = z > SigLo && z < SigHi
-        // clamped rows contribute zero gradient (hard-sigmoid slope
-        // is 0 outside the linear band); coalesce guards the
-        // all-clamped corner against a null sum
-        def g(x: Column) = coalesce(
-          sum(when(active, round(r * x, 6)).otherwise(0.0).cast("decimal(18,6)")),
-          zero)
-        val row = f.agg(g(col("x1")), g(col("x2")), g(col("x3")), g(col("x4")),
-          g(lit(1.0))).collect()(0)
+        val wk = w
+        val g = rows.treeAggregate(new Array[Long](5))(
+          (acc, r) => addGradient(acc, r, wk, cwp, cwn),
+          (a, b) => { for (j <- 0 until 5) a(j) = Math.addExact(a(j), b(j)); a })
         w = Array.tabulate(5)(j =>
-          r6(w(j) - Eta * row.getDecimal(j).doubleValue / n))
+          r6(w(j) - Eta * JBig.valueOf(g(j), 6).doubleValue / n))
       }
       w
     }

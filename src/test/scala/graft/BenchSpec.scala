@@ -41,4 +41,21 @@ class BenchSpec extends AnyFunSuite {
     assert((again \ "drift_vs_prev" \ "prev_total").extractOpt[Double].contains(value), again)
     assert(spark.streams.listListeners().toSeq == listeners, "the ledger left a stream listener behind")
   }
+
+  test("bench run: memo builds and hits per rep and over the run") {
+    // a fresh copy of the embeddings is a fresh memo key: the first rep
+    // trains the codebook, the second serves it from the memo
+    val dir = SparkTestSession.tmpDir("graft-bench-memo")
+    java.nio.file.Files.copy(java.nio.file.Path.of(s"${SparkTestSession.Sf}/embeddings.parquet"),
+      dir.resolve("embeddings.parquet"))
+    val artifact = dir.resolve("bench_full.json")
+    Bench.run(spark, dir.toString, Seq("kmeans_centroids"), 2, artifact, write = true)
+    val full = parse(Files.readString(artifact))
+    val cb = full \ "memo" \ "kmeans-codebook"
+    assert((cb \ "builds").extractOpt[Long].contains(1L), s"one codebook build per run: ${full \ "memo"}")
+    assert((cb \ "hits").extractOpt[Long].exists(_ >= 1), s"the second rep must hit the memo: ${full \ "memo"}")
+    val row = full \ "layers" \ "kmeans_centroids"
+    assert(Seq("memo_hits", "memo_builds").forall(k => (row \ k).isInstanceOf[JObject]),
+      s"the ledger row carries the rep's memo counts: $row")
+  }
 }

@@ -3487,6 +3487,35 @@ class OperatorsSpec extends AnyFunSuite {
     assert(rows.map(_.toSeq).toSeq == again.map(_.toSeq).toSeq, "training must be deterministic")
   }
 
+  test("exactness pin: kmeans_centroids rows and the ann_ivf_pq PQ books, bit for bit") {
+    // the DuckDB oracle is not in tier-1, so a last-ulp drift in the
+    // Lloyd kernel would pass every other spec here; the digests are
+    // of the rows the oracle-verified aggregate kernel produced, one
+    // "cluster,dim,n_members,c" (resp. "ss,cluster,dim,c") line each
+    def sha(lines: Seq[String]): String =
+      java.security.MessageDigest.getInstance("SHA-256")
+        .digest(lines.mkString("\n").getBytes("UTF-8")).map("%02x".format(_)).mkString
+    val tiers = Seq(
+      sf -> ("0,1,66,-0.027929", "5606cfa1f8238491415a127002f4a9bfa913b4600858e58da763cb53fac6f82c"),
+      s"${new java.io.File(sf).getParent}/sf0.01" ->
+        ("0,1,53,0.020035", "09882646ce3a2aaae4808bd9d3eb364643253eca930f8b6e95c7512cf13b98ce"))
+    for ((dir, (head, digest)) <- tiers) {
+      val rows = KMeansCodebook.centroids(spark, dir).collect().toSeq.map(r =>
+        s"${r.getLong(0)},${r.getLong(1)},${r.getLong(2)},${java.lang.Double.toString(r.getDouble(3))}")
+      Dedup.retireCaches()
+      assert(rows.length == 512 && rows.head == head && sha(rows) == digest,
+        s"$dir centroids drifted: ${rows.length} rows, ${rows.take(3)}")
+    }
+    val root = ProductQuant.ensureIndexArtifact(spark, sf)
+    val books = spark.read.parquet(s"$root/pq_codebooks").collect().toSeq
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDecimal(3).toPlainString)).sorted
+      .map { case (ss, c, d, x) => s"$ss,$c,$d,$x" }
+    Dedup.retireCaches()
+    assert(books.length == 1024 && books.head == "0,0,1,-0.106891000" &&
+      sha(books) == "243e2aa35fcfbff70be957d829ffbed7224df56a37af51697c6f2c640182f9fc",
+      s"PQ books drifted: ${books.length} rows, ${books.take(3)}")
+  }
+
   test("kmv sketch: exact below k, bounded relative error above k") {
     val rows = Sketches.approxDistinctUsers(spark, sf).collect()
     assert(rows.nonEmpty)

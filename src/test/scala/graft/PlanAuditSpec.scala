@@ -13,6 +13,7 @@ import graft.operators._
   * a broadcastable dimension is a perf bug even when results match.)
   */
 class PlanAuditSpec extends AnyFunSuite {
+  import PlanAuditSpec.StageRun
   lazy val spark = SparkTestSession.spark
   val sf = SparkTestSession.Sf
 
@@ -1417,14 +1418,109 @@ class PlanAuditSpec extends AnyFunSuite {
       s"a window row_number formulation would sort every group's rows:\n${p.take(800)}")
   }
 
-  test("kmeans: centroid recompute partial-aggregates to (cluster, dim) map-side") {
+  /** The jobs this thread submits while `body` runs, each as its
+    * completed stages, in job-id order. A marker job flushes the
+    * listener bus: its end is delivered after every event before it.
+    */
+  private def jobsOf(body: => Unit): Seq[Seq[StageRun]] = {
+    import org.apache.spark.scheduler._
+    import scala.jdk.CollectionConverters._
+    val sc = spark.sparkContext
+    val (key, token) = ("graft.audit.jobs", java.util.UUID.randomUUID().toString)
+    val jobs = new java.util.concurrent.ConcurrentHashMap[Int, Seq[Int]]()
+    val stages = new java.util.concurrent.ConcurrentHashMap[Int, StageRun]()
+    val flushed = new java.util.concurrent.CountDownLatch(1)
+    val flushJob = new java.util.concurrent.atomic.AtomicInteger(-1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty(key)).foreach {
+          case `token` => jobs.put(e.jobId, e.stageIds)
+          case t if t == token + "/flush" => flushJob.set(e.jobId)
+          case _ =>
+        }
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
+        val si = e.stageInfo
+        stages.put(si.stageId, StageRun(
+          si.rddInfos.flatMap(r => r.name +: r.scope.map(_.name.take(40)).toSeq),
+          si.numTasks, si.taskMetrics.shuffleWriteMetrics.bytesWritten))
+      }
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        if (e.jobId == flushJob.get) flushed.countDown()
+    }
+    sc.addSparkListener(listener)
     try {
-      val p = plan(operators.KMeansCodebook.centroids(spark, sf))
-      assert(p.contains("partial_"),
-        s"per-(cluster, dim) sums must combine before the exchange:\n${p.take(800)}")
-      assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
-        s"assignment is a map-side kernel, never a corpus x codebook join:\n${p.take(800)}")
-    } finally Dedup.retireCaches() // centroids pins the exploded base frame
+      sc.setLocalProperty(key, token)
+      try body finally sc.setLocalProperty(key, token + "/flush")
+      sc.parallelize(Seq(1), 1).count()
+      assert(flushed.await(30, java.util.concurrent.TimeUnit.SECONDS), "listener bus never flushed")
+    } finally {
+      sc.setLocalProperty(key, null)
+      sc.removeSparkListener(listener)
+    }
+    jobs.asScala.toSeq.sortBy(_._1).map { case (_, ids) => ids.flatMap(id => Option(stages.get(id))) }
+  }
+
+  /** A recorded job over a table scan, cached or not — not the footer
+    * read of a schema inference, which every parquet read starts with.
+    */
+  private def scansFiles(job: Seq[StageRun]): Boolean =
+    job.exists(_.rdds.contains("FileScanRDD"))
+
+  test("kmeans_centroids: one fold job over the embeddings scan, no shuffle, no join") {
+    // each Lloyd round is one treeAggregate fold with the books in the
+    // closure: under a warm codebook memo the query is that fold alone
+    // — no aggregate plan, exchange or re-materialized assignment
+    try {
+      KMeansCodebook.centroids(spark, sf).collect() // warms the codebook memo
+      Dedup.retireCaches()
+      val dim = graft.Tables.embeddings(spark, sf)
+        .select(org.apache.spark.sql.functions.size(col("embedding"))).first().getInt(0)
+      val runs = for (_ <- 1 to 2) yield {
+        var rows = Array.empty[org.apache.spark.sql.Row]
+        var p = ""
+        val jobs = jobsOf {
+          val df = KMeansCodebook.centroids(spark, sf)
+          rows = df.collect()
+          p = df.queryExecution.executedPlan.toString
+        }
+        Dedup.retireCaches()
+        assert(jobs.count(scansFiles) == 1,
+          s"exactly one job may scan the embeddings: $jobs")
+        assert(jobs.filter(scansFiles).forall(_.length == 1), s"the fold is one stage: $jobs")
+        assert(jobs.flatten.forall(_.shuffleWrite == 0L), s"no job may shuffle: $jobs")
+        assert(!jobs.flatten.exists(_.rdds.exists(_.contains("Join"))) && !p.contains("Join"),
+          s"assignment is a map-side kernel, never a join:\n$p\n$jobs")
+        assert(rows.nonEmpty && rows.length <= KMeansCodebook.K * dim,
+          s"the fold returns books-sized rows, got ${rows.length}")
+        (jobs.length, jobs.map(_.length))
+      }
+      assert(runs.distinct.length == 1, s"job and stage counts must repeat: $runs")
+    } finally Dedup.retireCaches()
+  }
+
+  test("quality training: one fold job per step, each one stage with no shuffle") {
+    // a fresh memo key per run: a copy of the documents under a new dir
+    def freshDir(): String = {
+      val dir = SparkTestSession.tmpDir("graft-quality-audit")
+      java.nio.file.Files.walk(java.nio.file.Path.of(s"$sf/documents.parquet")).forEach { src =>
+        val dst = dir.resolve("documents.parquet")
+          .resolve(java.nio.file.Path.of(s"$sf/documents.parquet").relativize(src))
+        if (java.nio.file.Files.isDirectory(src)) java.nio.file.Files.createDirectories(dst)
+        else java.nio.file.Files.copy(src, dst)
+      }
+      dir.toString
+    }
+    val runs = for (_ <- 1 to 2) yield {
+      val dir = freshDir()
+      val jobs = try jobsOf(QualityClassifier.trainedWeights(spark, dir))
+        finally Dedup.retireCaches()
+      assert(jobs.count(scansFiles) == QualityClassifier.Steps + 1 && jobs.count(!scansFiles(_)) <= 1,
+        s"one label pass plus one fold per step, beside the schema read: $jobs")
+      assert(jobs.forall(_.length == 1), s"every job is one stage: $jobs")
+      assert(jobs.flatten.forall(_.shuffleWrite == 0L), s"no job may shuffle: $jobs")
+      (jobs.length, jobs.map(_.map(_.tasks)))
+    }
+    assert(runs.distinct.length == 1, s"job, stage and task counts must repeat: $runs")
   }
 
   test("multimodal kernels: map-only over a pruned scan, no joins at all") {
@@ -1551,4 +1647,11 @@ class PlanAuditSpec extends AnyFunSuite {
         s"the top-k cut must push the group limit below the exchange:\n${p.take(800)}")
     } finally Dedup.retireCaches()
   }
+}
+
+object PlanAuditSpec {
+  /** One completed stage of a recorded job: its RDDs' names and plan
+    * scopes, task count and shuffle-write bytes.
+    */
+  private final case class StageRun(rdds: Seq[String], tasks: Int, shuffleWrite: Long)
 }
