@@ -1738,7 +1738,7 @@ object SparkEntry {
          |    CAST(len(list_distinct(toks)) AS DOUBLE) AS n_dist,
          |    CAST(len(list_filter(toks, w -> list_contains($stopList, w))) AS DOUBLE) AS n_stop
          |  FROM t),
-         |f AS (
+         |f AS MATERIALIZED (
          |  SELECT doc_id,
          |    round(least(n_tok / 50.0, 1.0) - $Center, 6) AS x1,
          |    round(n_dist / greatest(n_tok, 1.0) - $Center, 6) AS x2,
@@ -1746,12 +1746,12 @@ object SparkEntry {
          |    round(least(CAST(n_chars AS DOUBLE) / 2000.0, 1.0) - $Center, 6) AS x4,
          |    CAST(CASE WHEN $qualityExprSql >= 0.5 THEN 1.0 ELSE 0.0 END AS DOUBLE) AS y
          |  FROM s),
-         |cw AS (
+         |cw AS MATERIALIZED (
          |  SELECT count(*) AS n,
          |    round(count(*) / (2.0 * sum(y)), 6) AS cwp,
          |    round(count(*) / (2.0 * (count(*) - sum(y))), 6) AS cwn
          |  FROM f),
-         |w0 AS (SELECT 0.0 AS w1, 0.0 AS w2, 0.0 AS w3, 0.0 AS w4, 0.0 AS wb)"""
+         |w0 AS MATERIALIZED (SELECT 0.0 AS w1, 0.0 AS w2, 0.0 AS w3, 0.0 AS w4, 0.0 AS wb)"""
         .stripMargin
     def gsum(xExpr: String, alias: String): String =
       s"coalesce(sum(CAST(CASE WHEN active THEN round(r * $xExpr, 6) ELSE 0.0 END" +
@@ -1772,7 +1772,7 @@ object SparkEntry {
          |      SELECT f.*, cw.cwp, cw.cwn,
          |        round(x1 * w1 + x2 * w2 + x3 * w3 + x4 * w4 + wb, 6) AS z
          |      FROM f, $pw, cw))),
-         |w$t AS (
+         |w$t AS MATERIALIZED (
          |  SELECT round(w1 - $Eta * CAST(s1 AS DOUBLE) / n, 6) AS w1,
          |         round(w2 - $Eta * CAST(s2 AS DOUBLE) / n, 6) AS w2,
          |         round(w3 - $Eta * CAST(s3 AS DOUBLE) / n, 6) AS w3,

@@ -450,13 +450,18 @@ object Graph {
     * production split, so the mix never binds there).
     */
   private[graft] def maintainedEdges(spark: SparkSession, idx: DataFrame,
-      hist: DataFrame, batchCells: DataFrame): DataFrame = {
-    val untouched = hist
-      .join(broadcast(batchCells), Seq("cluster", "sub"), "left_anti")
-    val recomputed = directedTopK(spark,
-      idx.join(broadcast(batchCells), Seq("cluster", "sub"), "left_semi"))
-    mutualFromDirected(untouched.unionByName(recomputed))
-  }
+      hist: DataFrame, batchCells: DataFrame): DataFrame =
+    mutualFromDirected(maintainedLists(spark, idx, hist, batchCells))
+
+  /** The directed lists after a batch touched `batchCells`: `lists`'
+    * rows of untouched cells verbatim, touched cells recomputed over
+    * their `members`.
+    */
+  private def maintainedLists(spark: SparkSession, members: DataFrame,
+      lists: DataFrame, batchCells: DataFrame): DataFrame =
+    lists.join(broadcast(batchCells), Seq("cluster", "sub"), "left_anti")
+      .unionByName(directedTopK(spark,
+        members.join(broadcast(batchCells), Seq("cluster", "sub"), "left_semi")))
 
   /** Mutual edges from a directed top-k list frame — the serve step
     * shared by the one-shot build, the batch maintainer, and the
@@ -471,19 +476,17 @@ object Graph {
   }
 
   /** One micro-batch of kNN-graph store maintenance — the streaming
-    * form of [[knnMaintain]]'s touched-cell recompute against a
-    * VERSIONED directed-list store on disk (a writer cannot overwrite
-    * the files it is reading, so each batch writes `lists_v{n+1}` from
-    * `lists_v{n}`; production uses per-cell partition overwrite).
-    * Membership for the recompute is history ∪ every batch vector SEEN
-    * so far (appended to the store's `seen` side-table), so a cell
-    * touched by several batches converges to its full membership at
-    * its last touch — which is why the drained store equals the
-    * one-shot build (spec-pinned with a two-batch split). Returns the
-    * new version number.
+    * form of [[knnMaintain]]'s touched-cell recompute
+    * ([[maintainedLists]]) against a versioned directed-list store
+    * ([[Store.next]] under batch `bid`, seeded by the history
+    * artifact). Membership for the recompute is history ∪ every batch
+    * vector SEEN so far (appended to the store's `seen` table), so a
+    * cell touched by several batches converges to its full membership
+    * at its last touch — which is why the drained store equals the
+    * one-shot build (spec-pinned with a two-batch split).
     */
-  private[graft] def appendBatchToKnn(batch: DataFrame, dir: String,
-      storeRoot: String, version: Int): Int = {
+  private[graft] def appendBatchToKnn(batch: DataFrame, bid: Long, dir: String,
+      storeRoot: String): Unit = {
     val spark = batch.sparkSession
     // function-scoped pin, NOT cacheTracked: this runs inside
     // foreachBatch on the STREAM-EXECUTION thread, whose per-thread
@@ -495,22 +498,27 @@ object Graph {
     val idx = Dedup.cappedCelledIndex(spark, dir)
       .select("vec_id", "cluster", "sub", "v", "norm").cache()
     try {
-      val bids = batch.select("vec_id").distinct()
-      bids.write.mode("append").parquet(s"$storeRoot/seen")
-      val seen = spark.read.parquet(s"$storeRoot/seen")
-      val batchCells = idx.join(bids, Seq("vec_id"), "left_semi")
+      val ids = batch.select("vec_id").distinct()
+      Store.append(storeRoot, "seen", bid)(ids)
+      val batchCells = idx.join(ids, Seq("vec_id"), "left_semi")
         .select("cluster", "sub").distinct()
       val members = idx.filter(!Dedup.isBatch(col("vec_id")))
-        .unionByName(idx.join(seen, Seq("vec_id"), "left_semi"))
-      val recomputed = directedTopK(spark,
-        members.join(broadcast(batchCells), Seq("cluster", "sub"), "left_semi"))
-      spark.read.parquet(s"$storeRoot/lists_v$version")
-        .join(broadcast(batchCells), Seq("cluster", "sub"), "left_anti")
-        .unionByName(recomputed)
-        .write.mode("overwrite").parquet(s"$storeRoot/lists_v${version + 1}")
-      version + 1
+        .unionByName(idx.join(Store.read(spark, storeRoot, "seen"), Seq("vec_id"), "left_semi"))
+      Store.next(spark, storeRoot, "lists", bid)(prev =>
+        maintainedLists(spark, members, prev.getOrElse(historyLists(spark, dir)), batchCells))
     } finally idx.unpersist(true)
   }
+
+  /** The directed lists a [[appendBatchToKnn]] store at `storeRoot`
+    * serves: its newest version, or the history artifact before the
+    * first batch.
+    */
+  private[graft] def knnStoreLists(spark: SparkSession, dir: String,
+      storeRoot: String): DataFrame =
+    Store.latest(spark, storeRoot, "lists").getOrElse(historyLists(spark, dir))
+
+  private def historyLists(spark: SparkSession, dir: String): DataFrame =
+    spark.read.parquet(ensureKnnDirectedHistory(spark, dir, Dedup.IncBatchThreshold))
 
   /** Vocabulary cap for the co-occurrence graph: top terms by
     * document frequency. Inactive on this corpus (|vocab| = 31) but

@@ -290,33 +290,33 @@ object ProductQuant {
     * the first root to the driver — bounded, index-metadata-sized, the
     * same closure-shipping contract as training — and the probed cell
     * ids (≤ nprobe·|probes| values) are pushed as a STATIC partition
-    * filter on every root's celled code table, so the candidate scan
-    * reads only the probed cells' directories (PartitionFilters in the
-    * plan, audited). Several roots are LAYERS of one store (an
-    * immutable trained base, then deltas): their code rows union, which
-    * changes which files hold a row, never the rows. Probes, ADC and
-    * rerank read `corpus.scan`. Value-equal to the trained [[annIvfPq]]
-    * from a fresh session (spec-pinned), because every stored
-    * coordinate is the exact decimal the training kernels used.
+    * filter on the celled code table, so the candidate scan reads only
+    * the probed cells' directories (PartitionFilters in the plan,
+    * audited). A `delta` is a second LAYER of the store (the
+    * [[appendBatchToIndex]] rows over the immutable trained `root`):
+    * its code rows union with the root's, which changes which files
+    * hold a row, never the rows. Probes, ADC and rerank read
+    * `corpus.scan`. Value-equal to the trained [[annIvfPq]] from a fresh
+    * session (spec-pinned), because every stored coordinate is the
+    * exact decimal the training kernels used.
     */
   private def serveIndex(spark: SparkSession, corpus: Corpus,
-      roots: Seq[String], nprobe: Int): DataFrame = {
+      root: String, delta: Option[String], nprobe: Int): DataFrame = {
     val pcells = KMeansCodebook.probeCells(corpus.scan,
-      KMeansCodebook.readBooks(spark, s"${roots.head}/coarse_codebook"), nprobe)
+      KMeansCodebook.readBooks(spark, s"$root/coarse_codebook"), nprobe)
     // probed cells: bounded driver-side collect (≤ K distinct values) —
     // the static filter is what turns "scan the code table" into "read
     // the probed cells' partition directories"
     val probed = pcells.select("pcluster").distinct().collect().map(_.getLong(0))
-    // one read per root (multi-root partition discovery conflicts),
-    // pruned per root, then unioned by name
-    val codes = roots
-      .map(r => spark.read.parquet(s"$r/codes")
-        .filter(col("cluster").isin(probed: _*))
+    // one read per layer, pruned per layer, then unioned by name
+    val codes = (spark.read.parquet(s"$root/codes") +:
+        delta.map(Store.read(spark, _, "codes")).toSeq)
+      .map(_.filter(col("cluster").isin(probed: _*))
         .withColumn("cluster", col("cluster").cast("long"))
         .select("vec_id", "ss", "code", "cluster"))
       .reduce(_ unionByName _)
     search(corpus.scan, codes, pcells,
-      adcTable(corpus.scan, KMeansCodebook.readBooks(spark, s"${roots.head}/pq_codebooks")))
+      adcTable(corpus.scan, KMeansCodebook.readBooks(spark, s"$root/pq_codebooks")))
   }
 
   /** Builds the COMPLETE durable index of the full corpus under a
@@ -362,33 +362,31 @@ object ProductQuant {
   }
 
   /** One ingest batch's frozen-codebook append: codebooks are read from
-    * `codebookRoot` (the immutable trained BASE), rows are appended
-    * under `writeRoot` — the same dir for in-place maintenance, a
-    * separate DELTA layer for the streaming maintainer (the base is
-    * shared and never written; the serve path unions the layers — the
-    * LSM shape the compaction pass later folds flat). Batch vectors are
-    * assigned to the ARTIFACT coarse cells (the exact decimals training
-    * used, so maintained assignment == one-shot assignment
-    * bit-for-bit), PQ-encoded with the artifact books, and only the
-    * batch's rows are appended into the celled layout. Per-vector
-    * independent given frozen codebooks, so appends commute — any
-    * micro-batching of the same rows builds the same store.
+    * `base` (the immutable trained artifact), the batch's rows are
+    * appended under batch `bid` into the DELTA layer at `delta` (the
+    * base is shared and never written; the serve path unions the
+    * layers — the LSM shape the compaction pass later folds flat).
+    * Batch vectors are assigned to the ARTIFACT coarse cells (the exact
+    * decimals training used, so maintained assignment == one-shot
+    * assignment bit-for-bit), PQ-encoded with the artifact books, and
+    * only the batch's rows are appended into the celled layout.
+    * Per-vector independent given frozen codebooks, so appends commute
+    * — any micro-batching of the same rows builds the same store.
     */
   private[graft] def appendBatchToIndex(
-      batch: DataFrame, codebookRoot: String, writeRoot: String): Unit = {
+      batch: DataFrame, bid: Long, base: String, delta: String): Unit = {
     val spark = batch.sparkSession
     val b = KMeansCodebook.vectorsOf(batch)
     val bAssign = KMeansCodebook
       .assign(KMeansCodebook.oneSpace(b),
-        KMeansCodebook.readBooks(spark, s"$codebookRoot/coarse_codebook"))
+        KMeansCodebook.readBooks(spark, s"$base/coarse_codebook"))
       .select(col("vec_id"), col("cluster"))
       .localCheckpoint() // consumed twice (write + codes join); batch-sized
     try {
-      bAssign.write.mode("append").partitionBy("cluster")
-        .parquet(s"$writeRoot/assignment")
-      encoded(b, KMeansCodebook.readBooks(spark, s"$codebookRoot/pq_codebooks"))
-        .join(bAssign, "vec_id")
-        .write.mode("append").partitionBy("cluster").parquet(s"$writeRoot/codes")
+      Store.append(delta, "assignment", bid, "cluster")(bAssign)
+      Store.append(delta, "codes", bid, "cluster")(
+        encoded(b, KMeansCodebook.readBooks(spark, s"$base/pq_codebooks"))
+          .join(bAssign, "vec_id"))
     } finally {
       // both consumers are done — free the checkpoint blocks NOW
       // (Dataset.unpersist is a no-op on checkpoints; a long stream of
@@ -412,53 +410,54 @@ object ProductQuant {
     */
   private[graft] def annIvfPqFromLayers(
       spark: SparkSession, dir: String, base: String, delta: String): DataFrame =
-    serveIndex(spark, KMeansCodebook.embeddings(spark, dir), Seq(base, delta),
+    serveIndex(spark, KMeansCodebook.embeddings(spark, dir), base, Some(delta),
       Similarity.KmProbeCells)
 
-  /** The history-trained index, then MAINTAINED with the ingest batch:
-    * [[appendBatchToIndex]] in place. Nothing is retrained; no history
-    * row is rewritten; per-ingest cost is batch-sized map-only work
-    * plus an append of batch-sized partitions — the 100 TB maintenance
-    * story.
+  /** The ingest batch's DELTA layer over the history-trained index
+    * ([[ensureHistoryArtifact]]): [[appendBatchToIndex]] as batch 0.
+    * Nothing is retrained; no history row is rewritten; per-ingest cost
+    * is batch-sized map-only work plus a write of batch-sized
+    * partitions — the 100 TB maintenance story.
     */
-  private[graft] def ensureMaintainedArtifact(spark: SparkSession, dir: String): String =
-    Kernels.buildStore("graft-ann-maint", maintKey(dir)) { root =>
-      buildIndex(spark, history(spark, dir), root)
-      appendBatchToIndex(
-        Tables.embeddings(spark, dir).filter(Dedup.isBatch(col("vec_id"))), root, root)
-    }
+  private[graft] def ensureMaintainedDelta(spark: SparkSession, dir: String): String =
+    Kernels.buildStore("graft-ann-maint", maintKey(dir))(appendBatchToIndex(
+      Tables.embeddings(spark, dir).filter(Dedup.isBatch(col("vec_id"))), 0,
+      ensureHistoryArtifact(spark, dir), _))
 
-  /** Compacts a maintained celled artifact into a self-contained twin
-    * at `root/compact` — the index's consolidation step: every ingest
-    * appends one batch-sized file set into each touched cluster
-    * directory, so a store under steady ingest accumulates files
-    * per-ingest forever (the same small-files death the search
-    * postings and sketch stores had). The rewrite repartitions each
-    * celled table on its partition column so every cluster directory
-    * holds ONE file — bounding the store at |clusters| files whatever
-    * the ingest cadence — while preserving the cluster layout the
-    * serve path's static probed-cell pruning rides. The two codebook
-    * tables are tiny single-file frames, rewritten so the compacted
-    * root serves standalone. Rows move, never change: served ==
-    * maintained, same oracle.
+  /** A celled table of the maintained index: the base layer's rows
+    * and the delta's.
     */
-  private[graft] def compactIndexStore(spark: SparkSession, root: String): String = {
-    val croot = s"$root/compact"
+  private[graft] def maintainedTable(spark: SparkSession, dir: String, t: String): DataFrame =
+    spark.read.parquet(s"${ensureHistoryArtifact(spark, dir)}/$t")
+      .unionByName(Store.read(spark, ensureMaintainedDelta(spark, dir), t))
+
+  /** Compacts the maintained layers into a self-contained index at
+    * `croot` — the index's consolidation step: every ingest writes one
+    * batch-sized file set into each touched cluster directory, so a
+    * store under steady ingest accumulates files per-ingest forever
+    * (the same small-files death the search postings had). The rewrite
+    * repartitions each celled table on its partition column so every
+    * cluster directory holds ONE file — bounding the store at
+    * |clusters| files whatever the ingest cadence — while preserving
+    * the cluster layout the serve path's static probed-cell pruning
+    * rides. The two codebook tables are tiny single-file frames,
+    * rewritten so the compacted root serves standalone. Rows move,
+    * never change: served == maintained, same oracle.
+    */
+  private def compactIndexStore(spark: SparkSession, dir: String, croot: String): Unit = {
     Seq("assignment", "codes").foreach { t =>
-      spark.read.parquet(s"$root/$t")
+      maintainedTable(spark, dir, t)
         .repartition(col("cluster"))
         .write.mode("overwrite").partitionBy("cluster").parquet(s"$croot/$t")
     }
     Seq("coarse_codebook", "pq_codebooks").foreach { t =>
-      spark.read.parquet(s"$root/$t")
+      spark.read.parquet(s"${ensureHistoryArtifact(spark, dir)}/$t")
         .coalesce(1).write.mode("overwrite").parquet(s"$croot/$t")
     }
-    croot
   }
 
   private[graft] def ensureCompactedIndex(spark: SparkSession, dir: String): String =
-    Kernels.memo("ann-compact", maintKey(dir))(
-      compactIndexStore(spark, ensureMaintainedArtifact(spark, dir)))
+    Kernels.buildStore("graft-ann-compact", maintKey(dir))(compactIndexStore(spark, dir, _))
 
   /** `ann_ivf_pq_compact`: the probe batch served from the COMPACTED
     * maintained index — [[annIvfPqFrom]] unchanged against the
@@ -470,14 +469,15 @@ object ProductQuant {
     annIvfPqFrom(spark, dir, ensureCompactedIndex(spark, dir))
 
   /** `ann_ivf_pq_maintain`: the probe batch served from the MAINTAINED
-    * index — history-trained codebooks, batch rows appended by
-    * [[ensureMaintainedArtifact]], the standard [[annIvfPqFrom]] serve
-    * path (static partition pruning over probed cells) against the
-    * union store. The oracle replays train-on-history +
-    * encode-the-union in SQL; maintained == that, exactly.
+    * index — history-trained codebooks, batch rows in the
+    * [[ensureMaintainedDelta]] layer, the layered serve (static
+    * partition pruning over probed cells in both layers). The oracle
+    * replays train-on-history + encode-the-union in SQL; maintained ==
+    * that, exactly.
     */
   def annIvfPqMaintain(spark: SparkSession, dir: String): DataFrame =
-    annIvfPqFrom(spark, dir, ensureMaintainedArtifact(spark, dir))
+    annIvfPqFromLayers(spark, dir, ensureHistoryArtifact(spark, dir),
+      ensureMaintainedDelta(spark, dir))
 
   /** `ann_ivf_pq` served from the index artifact at `path`, with the
     * nprobe knob exposed — the serve-time recall/latency trade
@@ -486,7 +486,7 @@ object ProductQuant {
     */
   def annIvfPqFrom(spark: SparkSession, dir: String, path: String,
       nprobe: Int = Similarity.KmProbeCells): DataFrame =
-    serveIndex(spark, KMeansCodebook.embeddings(spark, dir), Seq(path), nprobe)
+    serveIndex(spark, KMeansCodebook.embeddings(spark, dir), path, None, nprobe)
 
   // -------------------------------------------------------------------
   // FLAGSHIP #3 — `pipeline_index`: the corpus-to-index build+serve
@@ -556,6 +556,6 @@ object ProductQuant {
     */
   def pipelineIndex(spark: SparkSession, dir: String): DataFrame = {
     val corpus = pipeline(spark, dir)
-    serveIndex(spark, corpus, Seq(ensurePipelineArtifact(spark, dir)), Similarity.KmProbeCells)
+    serveIndex(spark, corpus, ensurePipelineArtifact(spark, dir), None, Similarity.KmProbeCells)
   }
 }

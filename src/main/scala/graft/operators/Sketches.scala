@@ -354,29 +354,26 @@ object Sketches {
     * [[heavyHittersServe]]'s oracle (spec-pinned too).
     */
   def heavyHittersDaily(spark: SparkSession, dir: String): DataFrame =
-    heavyHittersFromCms(spark, dir, s"${ensureSketchStore(spark, dir)}/cms")
+    heavyHittersFromCms(spark, dir, spark.read.parquet(s"${ensureSketchStore(spark, dir)}/cms"))
 
-  /** Shared CM serve body: cell-wise addition over the stored grids at
-    * `path` reassembles the global grid, then the shared probe/cut
-    * runs unchanged — one implementation behind the daily, compacted,
-    * and maintained serve twins.
+  /** Shared CM serve body: cell-wise addition over the stored `grids`
+    * reassembles the global grid, then the shared probe/cut runs
+    * unchanged — one implementation behind the daily, compacted,
+    * maintained and stream-maintained serve twins.
     */
-  private def heavyHittersFromCms(
-      spark: SparkSession, dir: String, path: String): DataFrame = {
-    val merged = spark.read.parquet(path)
-      .groupBy("j", "b").agg(sum("cnt").as("cnt"))
-    probeSketchTopK(spark, dir, merged)
-  }
+  private[graft] def heavyHittersFromCms(
+      spark: SparkSession, dir: String, grids: DataFrame): DataFrame =
+    probeSketchTopK(spark, dir, grids.groupBy("j", "b").agg(sum("cnt").as("cnt")))
 
   /** Shared KMV serve body: union the stored per-unit bottom-k
-    * sketches at `path` (collapsing users seen in several units),
-    * re-cut to the global bottom-k, estimate. The exact count rides
-    * for the gate's `rel_err` column only.
+    * `sketches` (collapsing users seen in several units), re-cut to
+    * the global bottom-k, estimate. The exact count rides for the
+    * gate's `rel_err` column only.
     */
   private def approxUsersFromKmv(
-      spark: SparkSession, dir: String, path: String): DataFrame = {
+      spark: SparkSession, dir: String, sketches: DataFrame): DataFrame = {
     import graft.functions.TopKFunctions.topK
-    val merged = spark.read.parquet(path)
+    val merged = sketches
       .select(explode(col("mins")).as("m"))
       .select((-col("m.score")).as("h"), col("m.id").as("user_id"))
       .distinct()
@@ -403,7 +400,7 @@ object Sketches {
     * store.
     */
   def approxUsersDaily(spark: SparkSession, dir: String): DataFrame =
-    approxUsersFromKmv(spark, dir, s"${ensureSketchStore(spark, dir)}/kmv")
+    approxUsersFromKmv(spark, dir, spark.read.parquet(s"${ensureSketchStore(spark, dir)}/kmv"))
 
   // -------------------------------------------------------------------
   // Store MAINTENANCE — the docstring's "ingest day N+1 is one new
@@ -419,7 +416,8 @@ object Sketches {
   private[graft] val IngestTailDays = 5
 
   /** Builds the daily store at `path` incrementally: one history
-    * build, then one day-sized append per ingest-tail day. The day
+    * build as batch 0, then one day-sized append per ingest-tail day,
+    * tail day i as batch i ([[Store.append]]). The day
     * list is a driver-side collect, and its bound is the CALENDAR,
     * not the data: one row per distinct event day, so a decade of
     * history is < 4,000 values no matter how many events each day
@@ -434,20 +432,23 @@ object Sketches {
       .orderBy("day").collect().map(_.getDate(0))
     require(days.length > IngestTailDays, s"need > $IngestTailDays days")
     val cut = days(days.length - IngestTailDays - 1)
-    val hist = ev.filter(to_date(col("ts")) <= lit(cut))
-    dailyCmsGridsOf(hist)
-      .write.mode("overwrite").partitionBy("day").parquet(s"$path/cms")
-    dailyKmvSketchesOf(hist)
-      .write.mode("overwrite").parquet(s"$path/kmv")
-    days.filter(_.after(cut)).foreach { d =>
-      // the ingest step: ONE day's events in, one day partition out
-      val dayEv = ev.filter(to_date(col("ts")) === lit(d))
-      dailyCmsGridsOf(dayEv)
-        .write.mode("append").partitionBy("day").parquet(s"$path/cms")
-      dailyKmvSketchesOf(dayEv)
-        .write.mode("append").parquet(s"$path/kmv")
+    def ingest(bid: Long, events: DataFrame): Unit = {
+      appendCmsBatch(events, bid, path)
+      Store.append(path, "kmv", bid)(dailyKmvSketchesOf(events))
+    }
+    ingest(0, ev.filter(to_date(col("ts")) <= lit(cut)))
+    // the ingest step: ONE day's events in, one day partition out
+    days.filter(_.after(cut)).zipWithIndex.foreach { case (d, i) =>
+      ingest(i + 1, ev.filter(to_date(col("ts")) === lit(d)))
     }
   }
+
+  /** One ingest batch's per-day CM grids, appended under batch `bid`
+    * into the `cms` table at `root` — the per-batch body of the
+    * maintained store and of its stream twin.
+    */
+  private[graft] def appendCmsBatch(events: DataFrame, bid: Long, root: String): Unit =
+    Store.append(root, "cms", bid, "day")(dailyCmsGridsOf(events))
 
   private[graft] def ensureMaintainedSketchStore(
       spark: SparkSession, dir: String): String =
@@ -461,7 +462,7 @@ object Sketches {
     */
   def heavyHittersMaintain(spark: SparkSession, dir: String): DataFrame =
     heavyHittersFromCms(spark, dir,
-      s"${ensureMaintainedSketchStore(spark, dir)}/cms")
+      Store.read(spark, ensureMaintainedSketchStore(spark, dir), "cms"))
 
   /** `events_approx_users_maintain`: the global distinct estimate from
     * the incrementally-built store's per-day KMV sketches — the
@@ -471,7 +472,7 @@ object Sketches {
     */
   def approxUsersMaintain(spark: SparkSession, dir: String): DataFrame =
     approxUsersFromKmv(spark, dir,
-      s"${ensureMaintainedSketchStore(spark, dir)}/kmv")
+      Store.read(spark, ensureMaintainedSketchStore(spark, dir), "kmv"))
 
   // -------------------------------------------------------------------
   // Store COMPACTION — the consolidation step an append-only store
@@ -536,7 +537,7 @@ object Sketches {
     * files to one file per week.
     */
   def heavyHittersCompact(spark: SparkSession, dir: String): DataFrame =
-    heavyHittersFromCms(spark, dir, s"${ensureCompactedStore(spark, dir)}/cms")
+    heavyHittersFromCms(spark, dir, spark.read.parquet(s"${ensureCompactedStore(spark, dir)}/cms"))
 
   /** `events_approx_users_compact`: the global distinct estimate from
     * the compacted weekly KMV sketches — same union + re-cut +
@@ -544,5 +545,5 @@ object Sketches {
     * of |days|. Exact columns ride for the gate only.
     */
   def approxUsersCompact(spark: SparkSession, dir: String): DataFrame =
-    approxUsersFromKmv(spark, dir, s"${ensureCompactedStore(spark, dir)}/kmv")
+    approxUsersFromKmv(spark, dir, spark.read.parquet(s"${ensureCompactedStore(spark, dir)}/kmv"))
 }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 import org.apache.spark.sql.types._
 
-import graft.operators.{Dedup, Kernels, Multimodal, TextAnalysis}
+import graft.operators.{Dedup, Kernels, Multimodal, Store, TextAnalysis}
 
 /** Streaming document-ingest operators (north star — the reference is
   * strictly batch, SURVEY.md §2.5). Same harness contract as
@@ -577,25 +577,23 @@ object DocStream {
     */
   /** One ingest batch's append into the search store at `root`:
     * tokenize, write the doc-length rows, aggregate the in-batch term
-    * frequencies, append the postings. Factored out of the stream's
-    * `foreachBatch` so the compaction spec can replay several ingests
-    * against one store without a streaming source that happens to
-    * split batches that way.
+    * frequencies, append the postings, both under batch `bid`.
+    * Factored out of the stream's `foreachBatch` so the compaction
+    * spec can replay several ingests against one store without a
+    * streaming source that happens to split batches that way.
     */
-  private[graft] def appendSearchBatch(batch: DataFrame, root: String): Unit = {
+  private[graft] def appendSearchBatch(batch: DataFrame, bid: Long, root: String): Unit = {
     val toked = batch
       .repartition(batch.sparkSession.sparkContext.defaultParallelism)
       .select(col("doc_id"),
         TextAnalysis.tokens(lower(col("text"))).as("toks"))
-    toked.select(col("doc_id"), size(col("toks")).cast("long").as("dl"))
-      .write.mode("append").parquet(s"$root/doclen")
-    toked
+    Store.append(root, "doclen", bid)(
+      toked.select(col("doc_id"), size(col("toks")).cast("long").as("dl")))
+    Store.append(root, "postings", bid)(toked
       .select(col("doc_id"), size(col("toks")).cast("long").as("dl"),
         explode(col("toks")).as("term"))
       .groupBy("doc_id", "dl", "term")
-      .agg(count(lit(1)).as("tf"))
-      .write.mode("append").parquet(s"$root/postings")
-    ()
+      .agg(count(lit(1)).as("tf")))
   }
 
   /** Runs the ingest stream over `dir`, appending each micro-batch
@@ -607,8 +605,8 @@ object DocStream {
       .schema(documentsSchema)
       .option("pathGlobFilter", "documents.parquet")
       .parquet(dir)
-      .select(col("doc_id"), col("text"))) { (batch, _) =>
-      appendSearchBatch(batch, root)
+      .select(col("doc_id"), col("text"))) { (batch, bid) =>
+      appendSearchBatch(batch, bid, root)
     }
     root
   }
@@ -624,26 +622,23 @@ object DocStream {
     * the doc-length table (NOT the postings: a token-less doc has no
     * postings but still counts toward N).
     */
-  private[graft] def serveBm25(
-      spark: SparkSession, postings: String, doclen: String): DataFrame = {
+  private[graft] def serveBm25(spark: SparkSession, root: String): DataFrame = {
     import graft.operators.Retrieval
     import spark.implicits._
     val qterms = Retrieval.Queries
       .flatMap { case (qid, t) => t.split(" ").map(w => (qid, w)) }
       .toDF("query_id", "term")
-    val stats = spark.read.parquet(doclen)
+    val stats = Store.read(spark, root, "doclen")
       .agg(count(lit(1)).as("n_docs"), sum("dl").as("total_tokens"))
-    val matchedTf = spark.read.parquet(postings)
+    val matchedTf = Store.read(spark, root, "postings")
       .join(broadcast(qterms.select("term").distinct()), Seq("term"), "leftsemi")
     val dfT = matchedTf.groupBy("term").agg(count(lit(1)).as("df"))
     val matched = matchedTf.join(broadcast(dfT), "term")
     Retrieval.bm25Score(matched, stats, qterms)
   }
 
-  def streamSearchIndex(spark: SparkSession, dir: String): DataFrame = {
-    val root = ingestSearchStore(spark, dir)
-    serveBm25(spark, s"$root/postings", s"$root/doclen")
-  }
+  def streamSearchIndex(spark: SparkSession, dir: String): DataFrame =
+    serveBm25(spark, ingestSearchStore(spark, dir))
 
   /** Compacted-store file budget: postings are rewritten into this
     * many term-hash buckets (term-sorted within each), doc lengths
@@ -663,31 +658,14 @@ object DocStream {
     * one bucket instead of every append. Doc lengths likewise. The
     * rewrite is one bounded shuffle of the store (NOT the corpus — at
     * 100 TB the store is the postings, already tf-aggregated), and the
-    * rewritten buckets REPLACE the appended fragments: each table is
-    * written to a `_c` sibling, then the original directory is removed
-    * and the sibling renamed into its place, so the store's documented
-    * location holds only the compacted files and the disk footprint
-    * never stays doubled. (A distributed filesystem deployment swaps
-    * via its own atomic-commit primitive; the local rename is that
-    * step's single-node form.) Returns the (postings, doclen) paths —
-    * the same locations the appends wrote.
+    * rewritten buckets REPLACE the appended fragments
+    * ([[Store.rewrite]]'s swap), so the disk footprint never stays
+    * doubled.
     */
-  private[graft] def compactSearchStore(
-      spark: SparkSession, root: String): (String, String) = {
-    spark.read.parquet(s"$root/postings")
-      .repartition(SearchStoreBuckets, col("term"))
-      .sortWithinPartitions("term", "doc_id")
-      .write.mode("overwrite").parquet(s"$root/postings_c")
-    spark.read.parquet(s"$root/doclen")
-      .repartition(SearchStoreBuckets, col("doc_id"))
-      .write.mode("overwrite").parquet(s"$root/doclen_c")
-    Seq("postings", "doclen").foreach { t =>
-      graft.operators.Kernels.rmTree(new java.io.File(s"$root/$t"))
-      require(new java.io.File(s"$root/${t}_c")
-          .renameTo(new java.io.File(s"$root/$t")),
-        s"compaction swap failed for $t")
-    }
-    (s"$root/postings", s"$root/doclen")
+  private[graft] def compactSearchStore(spark: SparkSession, root: String): Unit = {
+    Store.rewrite(spark, root, "postings")(
+      _.repartition(SearchStoreBuckets, col("term")).sortWithinPartitions("term", "doc_id"))
+    Store.rewrite(spark, root, "doclen")(_.repartition(SearchStoreBuckets, col("doc_id")))
   }
 
   /** `stream_bm25_compact`: the maintained search index COMPACTED
@@ -701,8 +679,9 @@ object DocStream {
     * the same BM25 oracle gates it (spec-pinned file-count bound too).
     */
   def streamSearchIndexCompacted(spark: SparkSession, dir: String): DataFrame = {
-    val (p, d) = compactSearchStore(spark, ingestSearchStore(spark, dir))
-    serveBm25(spark, p, d)
+    val root = ingestSearchStore(spark, dir)
+    compactSearchStore(spark, root)
+    serveBm25(spark, root)
   }
 
   /** `stream_ann_maintain`: the streaming twin of
@@ -735,8 +714,8 @@ object DocStream {
       .option("pathGlobFilter", "embeddings.parquet")
       .parquet(dir)
       .select(col("vec_id"), col("embedding"))
-      .filter(Dedup.isBatch(col("vec_id")))) { (batch, _) =>
-      ProductQuant.appendBatchToIndex(batch, base, delta)
+      .filter(Dedup.isBatch(col("vec_id")))) { (batch, bid) =>
+      ProductQuant.appendBatchToIndex(batch, bid, base, delta)
     }
     ProductQuant.annIvfPqFromLayers(spark, dir, base, delta)
   }
@@ -764,25 +743,22 @@ object DocStream {
     val audMu = Multimodal.historyMu(spark, dir, Multimodal.Audio)
     val vidMu = Multimodal.historyMu(spark, dir, Multimodal.Frame)
     val tmp = Kernels.scopedStore("graft-stream-mediakeep")
-    Multimodal.mediaKeepHistoryStore(spark, dir, imgMu, audMu, vidMu)
-      .write.parquet(s"$tmp/keep_v0")
-    // Atomic, not a plain local var: the counter is written on the
-    // stream-execution thread (inside foreachBatch) and read on the
-    // caller thread after the drain returns — a captured plain
-    // var rides an unsynchronized ObjectRef, leaving visibility to
-    // incidental locking inside the streaming engine
-    val version = new java.util.concurrent.atomic.AtomicInteger(0)
-    Streams.drainBatches(payloadStream(spark, dir)) { (batch, _) =>
-      val v = version.get()
-      val sigs = Multimodal.mediaSigFrame(batch, imgMu, audMu, vidMu)
-      Multimodal.mergeMediaKeep(
-          spark.read.parquet(s"$tmp/keep_v$v"), sigs)
-        .write.parquet(s"$tmp/keep_v${v + 1}")
-      version.incrementAndGet()
+    def hist = Multimodal.mediaKeepHistoryStore(spark, dir, imgMu, audMu, vidMu)
+    Streams.drainBatches(payloadStream(spark, dir)) { (batch, bid) =>
+      mergeKeepBatch(Multimodal.mediaSigFrame(batch, imgMu, audMu, vidMu), bid, tmp, hist)
     }
-    spark.read.parquet(s"$tmp/keep_v${version.get()}")
+    Store.latest(spark, tmp, "keep").getOrElse(hist)
       .orderBy("modality", "keep_id")
   }
+
+  /** One micro-batch's fingerprints `sigs` merged into the versioned
+    * keep store at `root` under batch `bid`; the first batch merges
+    * into the history store `hist`.
+    */
+  private[graft] def mergeKeepBatch(sigs: DataFrame, bid: Long, root: String,
+      hist: => DataFrame): Unit =
+    Store.next(sigs.sparkSession, root, "keep", bid)(prev =>
+      Multimodal.mergeMediaKeep(prev.getOrElse(hist), sigs))
 
   /** `stream_media_keep_neardup`: the streaming twin of
     * [[graft.operators.Multimodal.mediaKeepNearDupMaintain]] — NEAR-dup
@@ -848,6 +824,7 @@ object DocStream {
   private[graft] def streamMediaKeepNearDupFrom(
       spark: SparkSession, dir: String, srcDir: String, glob: String,
       filesPerTrigger: Option[Int], contractEvery: Int): DataFrame = {
+    import scala.jdk.CollectionConverters._
     val imgMu = Multimodal.historyMu(spark, dir, Multimodal.Pixel)
     val audMu = Multimodal.historyMu(spark, dir, Multimodal.Audio)
     val vidMu = Multimodal.historyMu(spark, dir, Multimodal.Frame)
@@ -882,52 +859,41 @@ object DocStream {
     nkdMark("histLabels")
     // processed batch ids, newest last. Replay-idempotent by
     // construction (Spark's micro-batch retry contract): every disk
-    // write is keyed by batch id with overwrite, and the driver
+    // write is a [[Store]] write keyed by batch id, and the driver
     // state (the two keep maps + this list) mutates only AFTER all
     // of the batch's Spark jobs succeeded — a replayed batch either
-    // fully skips (id already folded) or cleanly overwrites its own
+    // fully skips (id already folded) or cleanly rewrites its own
     // partial output and folds once. Visibility: the CopyOnWrite
-    // list covers labelsAt()'s cross-thread reads of `processed`;
-    // the caller-thread reads of the plain keep MAPS at drain rest
-    // on the drain's await for the last batch, which takes the
-    // query's progress lock (the happens-before with the stream
-    // thread's batch bodies) — replacing that await with status
-    // polling would need an explicit fence for the maps.
+    // list covers the cross-thread reads of `processed`; the
+    // caller-thread reads of the plain keep MAPS at drain rest on the
+    // drain's await for the query's end, whose latch is the
+    // happens-before with the stream thread's batch bodies —
+    // replacing that await with status polling would need an
+    // explicit fence for the maps.
     val processed = new java.util.concurrent.CopyOnWriteArrayList[Long]()
     // bids whose deferred contraction has been folded into a labels
-    // file, newest last — per-batch edge/sig writes accumulate
+    // version, newest last — per-batch edge/sig writes accumulate
     // between contractions (see [[VideoContractEvery]])
     val contracted = new java.util.concurrent.CopyOnWriteArrayList[Long]()
-    def labelsAt(): DataFrame =
-      if (contracted.isEmpty) histLabels
-      else spark.read.parquet(s"$tmp/labels_b${contracted.get(contracted.size - 1)}")
-    def vidSigsAt(): DataFrame = {
-      import scala.jdk.CollectionConverters._
+    def lastContracted: Long =
+      if (contracted.isEmpty) Long.MinValue else contracted.get(contracted.size - 1)
+    def vidSigsBefore(bid: Long): DataFrame = {
       val hist = vidSig.filter(isHist)
       if (processed.isEmpty) hist
-      else hist.unionByName(spark.read.parquet(
-        processed.asScala.toSeq.map(b => s"$tmp/vidsigs_b$b"): _*))
+      else hist.unionByName(Store.read(spark, tmp, "vidsigs", before = bid))
     }
-    // batches processed since the last contraction. Confluence makes
-    // the contraction point free to move; the writes are all keyed
-    // by bid with overwrite, and `contracted` mutates only after the
-    // labels write succeeded — the same replay discipline as the
-    // keep-map folds.
-    def pendingBids(): Seq[Long] = {
-      import scala.jdk.CollectionConverters._
-      val last =
-        if (contracted.isEmpty) Long.MinValue
-        else contracted.get(contracted.size - 1)
-      processed.asScala.toSeq.filter(_ > last)
-    }
+    // folds the batches processed since the last contraction into the
+    // labels version at `atBid`. Confluence makes the contraction point
+    // free to move; the writes are all keyed by bid, and `contracted`
+    // mutates only after the labels write succeeded — the same replay
+    // discipline as the keep-map folds.
     def contract(atBid: Long): Unit = {
-      val pend = pendingBids()
-      if (pend.nonEmpty) {
-        val newDocs = spark.read.parquet(pend.map(b => s"$tmp/vidsigs_b$b"): _*)
+      if (processed.asScala.exists(_ > lastContracted)) {
+        val newDocs = Store.read(spark, tmp, "vidsigs", after = lastContracted)
           .select("doc_id").distinct()
-        val edges = spark.read.parquet(pend.map(b => s"$tmp/edges_b$b"): _*)
-        (Dedup.maintainLabels(labelsAt(), newDocs, edges)
-          .write.mode("overwrite").parquet(s"$tmp/labels_b$atBid"))
+        val edges = Store.read(spark, tmp, "edges", after = lastContracted)
+        Store.next(spark, tmp, "labels", atBid)(prev =>
+          Dedup.maintainLabels(prev.getOrElse(histLabels), newDocs, edges))
         contracted.add(atBid)
       }
     }
@@ -959,12 +925,12 @@ object DocStream {
         // proportional to the batch) plus within-batch pairs,
         // written keyed by bid. The label contraction defers —
         // see [[VideoContractEvery]].
-        (Multimodal.probePairs(Multimodal.Frame, vidS, vidSigsAt())
-          .select("doc_a", "doc_b")
-          .unionByName(Multimodal.sigPairs(Multimodal.Frame, vidS)
-            .select("doc_a", "doc_b"))
-          .write.mode("overwrite").parquet(s"$tmp/edges_b$bid"))
-        (vidS.write.mode("overwrite").parquet(s"$tmp/vidsigs_b$bid"))
+        Store.append(tmp, "edges", bid)(
+          Multimodal.probePairs(Multimodal.Frame, vidS, vidSigsBefore(bid))
+            .select("doc_a", "doc_b")
+            .unionByName(Multimodal.sigPairs(Multimodal.Frame, vidS)
+              .select("doc_a", "doc_b")))
+        Store.append(tmp, "vidsigs", bid)(vidS)
         // the batch's checkpoint blocks are dead once the writes
         // are done — free them per batch instead of leaving one
         // node-sized block PER MICRO-BATCH to the ContextCleaner
@@ -981,8 +947,8 @@ object DocStream {
         // label table once enough batches are pending (a replayed
         // batch that died between the labels write and the
         // `contracted` append simply re-contracts at the next
-        // point — confluent, and the write is keyed + overwrite)
-        if (pendingBids().size >= contractEvery) contract(bid)
+        // point — confluent, and the write is keyed by bid)
+        if (processed.asScala.count(_ > lastContracted) >= contractEvery) contract(bid)
       }
       // the label maintenance's component loop registers tracked
       // caches/checkpoints in THIS (stream-execution) thread's
@@ -995,7 +961,6 @@ object DocStream {
     // CALLER thread, so the component loop plans with AQE instead of
     // the micro-batch static planner (the drain's await establishes
     // the happens-before with the stream thread's writes)
-    import scala.jdk.CollectionConverters._
     processed.asScala.lastOption.foreach(contract)
     nkdMark("contract")
     def keepRows(m: scala.collection.mutable.Map[Long, (Long, Long)]) =
@@ -1003,7 +968,7 @@ object DocStream {
     Multimodal.sigKeepComponentRows(spark, keepRows(imgKeep), "image")
       .unionByName(
         Multimodal.sigKeepComponentRows(spark, keepRows(audKeep), "audio"))
-      .unionByName(labelsAt()
+      .unionByName(Store.latest(spark, tmp, "labels").getOrElse(histLabels)
         .groupBy("cluster").agg(count(lit(1)).as("n_members"))
         .select(lit("video").as("modality"),
           col("cluster").as("keep_id"), col("n_members")))
@@ -1023,24 +988,21 @@ object DocStream {
   def streamKnnMaintain(spark: SparkSession, dir: String): DataFrame = {
     import graft.operators.Graph
     val mark = Kernels.phaseMarker()
-    val hist = Graph.ensureKnnDirectedHistory(spark, dir, Dedup.IncBatchThreshold)
+    // the history artifact is built on the caller thread, not in the
+    // first micro-batch
+    Graph.ensureKnnDirectedHistory(spark, dir, Dedup.IncBatchThreshold)
     mark("hist_artifact")
     val tmp = Kernels.scopedStore("graft-stream-knn")
-    spark.read.parquet(hist).write.mode("overwrite")
-      .parquet(s"$tmp/lists_v0")
-    mark("seed_store")
-    // atomic for cross-thread visibility — the streamMediaKeep note
-    val version = new java.util.concurrent.atomic.AtomicInteger(0)
     Streams.drainBatches(spark.readStream
       .schema(embeddingsSchema)
       .option("pathGlobFilter", "embeddings.parquet")
       .parquet(dir)
       .select(col("vec_id"))
-      .filter(Dedup.isBatch(col("vec_id")))) { (batch, _) =>
-      version.set(Graph.appendBatchToKnn(batch, dir, tmp, version.get()))
+      .filter(Dedup.isBatch(col("vec_id")))) { (batch, bid) =>
+      Graph.appendBatchToKnn(batch, bid, dir, tmp)
     }
     mark("drain")
-    Graph.mutualFromDirected(spark.read.parquet(s"$tmp/lists_v${version.get()}"))
+    Graph.mutualFromDirected(Graph.knnStoreLists(spark, dir, tmp))
       .orderBy("vec_a", "vec_b")
   }
 }

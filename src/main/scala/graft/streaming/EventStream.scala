@@ -518,7 +518,8 @@ object EventStream {
     * streaming state, this one maintains the on-disk daily sketch
     * store under streaming ingest: each micro-batch builds its own
     * per-day partial grids (bounded: ≤ 256 counters per day touched)
-    * and APPENDS them as day-partitioned rows. A day split across
+    * and APPENDS them as day-partitioned rows under its batch id
+    * ([[graft.operators.Store.append]]). A day split across
     * micro-batches leaves several partial rows per (day, j, b) — the
     * serve-time merge sums cells anyway, and counter addition is
     * associative over ANY partition of the events, so the drained
@@ -528,15 +529,11 @@ object EventStream {
     * maintenance.
     */
   def streamSketchMaintain(spark: SparkSession, dir: String): DataFrame = {
-    import graft.operators.{Kernels, Sketches}
+    import graft.operators.{Kernels, Sketches, Store}
     val root = Kernels.scopedStore("graft-stream-sketch")
     Streams.drainBatches(readEventsStream(spark, dir).select(col("ts"), col("user_id"))) {
-      (batch, _) =>
-        Sketches.dailyCmsGridsOf(batch)
-          .write.mode("append").partitionBy("day").parquet(s"$root/cms")
+      (batch, bid) => Sketches.appendCmsBatch(batch, bid, root)
     }
-    val merged = spark.read.parquet(s"$root/cms")
-      .groupBy("j", "b").agg(sum("cnt").as("cnt"))
-    Sketches.probeSketchTopK(spark, dir, merged)
+    Sketches.heavyHittersFromCms(spark, dir, Store.read(spark, root, "cms"))
   }
 }

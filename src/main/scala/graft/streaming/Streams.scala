@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
-import org.apache.spark.sql.streaming.OutputMode
+import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 
 /** The one place an operator runs a stream to completion. Every stream
   * operator in this package builds its frame and hands it here; the
@@ -26,9 +26,9 @@ import org.apache.spark.sql.streaming.OutputMode
   *    until the calling thread's next `retireCaches()`: consume the
   *    frame before that retire.
   *
-  * Every drain is `processAllAvailable` on a finite source: the stream
-  * form is the production shape, the drain is how the oracle gate reads
-  * it.
+  * Every drain is an `AvailableNow` run on a finite source, awaited to
+  * its own end: the stream form is the production shape, the drain is
+  * how the oracle gate reads it.
   */
 object Streams {
 
@@ -74,9 +74,12 @@ object Streams {
       val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
       try {
         confs.foreach { case (k, v) => spark.conf.set(k, v) }
+        // the query ends by itself once the source is drained; a stop
+        // while its thread winds down cancels a finished job group
         val q = df.writeStream.outputMode(mode).foreachBatch(f)
+          .trigger(Trigger.AvailableNow())
           .option("checkpointLocation", ckpt.toString).start()
-        try q.processAllAvailable() finally q.stop()
+        try q.awaitTermination() finally if (q.isActive) q.stop()
       } finally saved.foreach {
         case (k, Some(v)) => spark.conf.set(k, v)
         case (k, None) => spark.conf.unset(k)

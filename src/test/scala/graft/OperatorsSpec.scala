@@ -560,19 +560,16 @@ class OperatorsSpec extends AnyFunSuite {
     // at their second recompute, so the drained mutual graph equals
     // the full rebuild (the property the streaming twin relies on)
     val oneShot = Graph.mutualKnn(spark, sf).collect().map(_.toSeq).toSeq
-    val hist = Graph.ensureKnnDirectedHistory(spark, sf, Dedup.IncBatchThreshold)
     val tmp = java.nio.file.Files.createTempDirectory("graft-knn-store-spec")
     try {
-      spark.read.parquet(hist).write.mode("overwrite").parquet(s"$tmp/lists_v0")
       val split = substring(md5(concat(lit("inc:"), col("vec_id").cast("string"))), 1, 1)
       val batch = Tables.embeddings(spark, sf).select(col("vec_id"))
         .filter(split < Dedup.IncBatchThreshold)
       val half1 = batch.filter(col("vec_id") % 2 === 0)
       val half2 = batch.filter(col("vec_id") % 2 =!= 0)
-      val v1 = Graph.appendBatchToKnn(half1, sf, tmp.toString, 0)
-      val v2 = Graph.appendBatchToKnn(half2, sf, tmp.toString, v1)
-      val drained = Graph.mutualFromDirected(
-          spark.read.parquet(s"$tmp/lists_v$v2"))
+      Graph.appendBatchToKnn(half1, 0, sf, tmp.toString)
+      Graph.appendBatchToKnn(half2, 1, sf, tmp.toString)
+      val drained = Graph.mutualFromDirected(Graph.knnStoreLists(spark, sf, tmp.toString))
         .orderBy("vec_a", "vec_b").collect().map(_.toSeq).toSeq
       Dedup.retireCaches()
       assert(drained.nonEmpty && drained == oneShot,
@@ -584,7 +581,7 @@ class OperatorsSpec extends AnyFunSuite {
       val rebuiltServe = Similarity.annGraph(spark, sf).collect().map(_.toSeq).toSeq
       Dedup.retireCaches()
       val drainedServe = Similarity.annGraphOver(spark, sf,
-          spark.read.parquet(s"$tmp/lists_v$v2")
+          Graph.knnStoreLists(spark, sf, tmp.toString)
             .select(col("src"), col("dst"), col("sim"))
             .transform(Graph.mutualFromDirected))
         .collect().map(_.toSeq).toSeq
@@ -3619,20 +3616,19 @@ class OperatorsSpec extends AnyFunSuite {
 
   test("ANN index maintenance: maintained store covers every vector exactly once, batch rows appended") {
     import org.apache.spark.sql.functions._
-    // the maintained artifact = history-trained stores + the ingest
-    // batch assigned/encoded with the FROZEN codebooks and appended.
+    // the maintained index = history-trained stores + a delta of the
+    // ingest batch assigned/encoded with the FROZEN codebooks.
     // Coverage must be exact: every corpus vector appears once in the
     // assignment and once per subspace in the codes — a maintenance
     // bug would double-write batch rows (dup vec_ids) or skip them
-    val root = ProductQuant.ensureMaintainedArtifact(spark, sf)
     val n = Tables.embeddings(spark, sf).count()
     val dim = Tables.embeddings(spark, sf)
       .select(size(col("embedding"))).head().getInt(0)
     val nSub = dim / ProductQuant.SubDim
-    val assign = spark.read.parquet(s"$root/assignment")
+    val assign = ProductQuant.maintainedTable(spark, sf, "assignment")
     assert(assign.count() == n && assign.select("vec_id").distinct().count() == n,
       "one assignment row per corpus vector")
-    val codes = spark.read.parquet(s"$root/codes")
+    val codes = ProductQuant.maintainedTable(spark, sf, "codes")
     assert(codes.count() == n * nSub &&
       codes.select("vec_id").distinct().count() == n,
       s"one code per (vector, subspace): expected ${n * nSub}")

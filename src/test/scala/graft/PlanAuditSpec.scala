@@ -91,15 +91,16 @@ class PlanAuditSpec extends AnyFunSuite {
 
   test("maintained ANN index serve: appended batch rows land in pruned cell partitions") {
     // maintenance must not degrade the serve plan: batch rows were
-    // APPENDED into the celled layout, so the probed-cell static
-    // partition filter prunes exactly as on the train-once artifact —
-    // if appends landed outside the partition scheme, the scan would
-    // fall back to reading every directory
-    val root = ProductQuant.ensureMaintainedArtifact(spark, sf)
-    val p = plan(ProductQuant.annIvfPqFrom(spark, sf, root))
+    // APPENDED into the celled layout (under their batch id), so the
+    // probed-cell static partition filter prunes both layers exactly as
+    // on the train-once artifact — if appends landed outside the
+    // partition scheme, the scan would fall back to reading every
+    // directory
+    val p = plan(ProductQuant.annIvfPqMaintain(spark, sf))
     Dedup.retireCaches()
-    assert(p.contains("PartitionFilters: [") && p.contains("cluster"),
-      s"probed-cell filter must prune the maintained code partitions:\n${p.take(900)}")
+    val pruned = "PartitionFilters: \\[[^\\]]*cluster".r.findAllIn(p).size
+    assert(pruned >= 2,
+      s"probed-cell filter must prune both maintained code layers (saw $pruned):\n${p.take(900)}")
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
       "every serve stage must stay an equi-join")
     assert(p.contains("BroadcastExchange"),
@@ -116,7 +117,7 @@ class PlanAuditSpec extends AnyFunSuite {
       md5(concat(lit("inc:"), col("vec_id").cast("string"))), 1, 1) <
       Dedup.IncBatchThreshold
     ProductQuant.appendBatchToIndex(
-      Tables.embeddings(spark, sf).filter(isBatch), base, delta)
+      Tables.embeddings(spark, sf).filter(isBatch), 0, base, delta)
     val served = ProductQuant.annIvfPqFromLayers(spark, sf, base, delta)
     val p = plan(served)
     // BOTH layer scans must carry the probed-cell static partition
@@ -125,11 +126,11 @@ class PlanAuditSpec extends AnyFunSuite {
     assert(pruned >= 2, s"both layer scans must prune by cell (saw $pruned):\n${p.take(900)}")
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"))
     // layering must be invisible to the answer: same rows as the
-    // single merged maintained store
+    // single merged (compacted) store
     val layered = served.collect().map(_.toSeq)
-    val maintained = ProductQuant.annIvfPqMaintain(spark, sf).collect().map(_.toSeq)
+    val merged = ProductQuant.annIvfPqCompact(spark, sf).collect().map(_.toSeq)
     Dedup.retireCaches()
-    assert(layered.nonEmpty && layered.toSeq == maintained.toSeq,
+    assert(layered.nonEmpty && layered.toSeq == merged.toSeq,
       "base+delta serve must equal the merged-store serve row-for-row")
   }
 
@@ -1271,7 +1272,8 @@ class PlanAuditSpec extends AnyFunSuite {
     // the drain's checkpoint) hand-rolls a second lifetime.
     val streams = "src/main/scala/graft/streaming/Streams.scala"
     val hits = sourceHitsOutside(Seq(streams),
-      Seq("processAllAvailable", "queryName(", "conf.set(")) ++
+      Seq("processAllAvailable", "awaitTermination", "AvailableNow", "queryName(",
+        "conf.set(")) ++
       sourceHitsOutside(Nil, Seq("""format("memory")""")) ++
       sourceHitsOutside(Seq(streams, "src/main/scala/graft/operators/Kernels.scala"),
         Seq("createTempDirectory"))
@@ -1290,6 +1292,19 @@ class PlanAuditSpec extends AnyFunSuite {
       assert(p.contains("FileScan parquet") && !p.contains("LocalTableScan"),
         s"$q's result must scan its drained files:\n$p")
     }
+  }
+
+  test("store audit: only Store appends, versions or swaps a maintained table") {
+    // `Store` owns the on-disk layout of every table written after its
+    // build: rows keyed by batch id, so a replayed batch rewrites its
+    // own rows. A raw append (8 existed before) duplicates a replayed
+    // batch, and a hand-kept version counter or per-batch file name
+    // (`keep_v<n>`, `edges_b<bid>`) or rename swap is a second layout,
+    // so the tokens that write one may appear in no other source file
+    val hits = sourceHitsOutside(Seq("src/main/scala/graft/operators/Store.scala"),
+      Seq("""mode("append")""", "AtomicInteger", "renameTo(", "_v$", "_b$"))
+    assert(hits.isEmpty,
+      s"a maintained-table write outside Store — use Store.append / next / rewrite:\n${hits.mkString("\n")}")
   }
 
   test("memo audit: only Kernels locks or hooks a shared registry") {

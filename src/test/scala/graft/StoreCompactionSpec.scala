@@ -30,15 +30,15 @@ class StoreCompactionSpec extends AnyFunSuite {
     // the store accumulates one small-file set per batch — the
     // append-forever shape compaction exists to fix
     val docs = Tables.documents(spark, sf).select("doc_id", "text")
-    Seq(0L -> 160L, 160L -> 320L, 320L -> Long.MaxValue).foreach {
-      case (lo, hi) =>
+    Seq(0L -> 160L, 160L -> 320L, 320L -> Long.MaxValue).zipWithIndex.foreach {
+      case ((lo, hi), bid) =>
         DocStream.appendSearchBatch(
-          docs.filter(col("doc_id") >= lo && col("doc_id") < hi), root)
+          docs.filter(col("doc_id") >= lo && col("doc_id") < hi), bid, root)
     }
     val before = partFiles(s"$root/postings")
     assert(before > DocStream.SearchStoreBuckets,
       s"three appended batches must exceed the bucket budget (saw $before files)")
-    val serveDf = DocStream.serveBm25(spark, s"$root/postings", s"$root/doclen")
+    val serveDf = DocStream.serveBm25(spark, root)
     // the store serve shares bm25's window-free df contract: df is a
     // partial-aggregated groupBy(term).count over the matched postings,
     // broadcast-joined back — never a per-term count window whose
@@ -50,11 +50,11 @@ class StoreCompactionSpec extends AnyFunSuite {
     val served = serveDf.collect().map(_.toSeq).toSet
     // row capture must precede compaction: the swap REPLACES the
     // appended originals in place
-    val rowsBefore = spark.read.parquet(s"$root/postings")
+    val rowsBefore = Store.read(spark, root, "postings")
       .collect().map(_.toSeq).toSet
-    val (p, d) = DocStream.compactSearchStore(spark, root)
-    assert(p == s"$root/postings" && d == s"$root/doclen",
-      "the swap must leave the compacted files at the store's documented location")
+    DocStream.compactSearchStore(spark, root)
+    // the swap leaves the compacted files at the store's location
+    val (p, d) = (s"$root/postings", s"$root/doclen")
     assert(!new java.io.File(s"$root/postings_c").exists(),
       "the _c staging dir must be gone after the swap — no doubled footprint")
     assert(partFiles(p) <= DocStream.SearchStoreBuckets && partFiles(p) < before,
@@ -62,17 +62,18 @@ class StoreCompactionSpec extends AnyFunSuite {
     assert(partFiles(d) <= DocStream.SearchStoreBuckets)
     // row-preservation, not just serve-equality: the rewrite must move
     // every posting and invent none
-    val rowsAfter = spark.read.parquet(p).collect().map(_.toSeq).toSet
+    val rowsAfter = Store.read(spark, root, "postings").collect().map(_.toSeq).toSet
     assert(rowsAfter == rowsBefore, "compaction must preserve the exact posting rows")
-    val servedC = DocStream.serveBm25(spark, p, d).collect().map(_.toSeq).toSet
+    val servedC = DocStream.serveBm25(spark, root).collect().map(_.toSeq).toSet
     assert(servedC == served, "serving from the compacted store must be bit-identical")
   }
 
   test("index-store compaction: one file per cluster dir, pruning layout intact, identical serve") {
-    val root = ProductQuant.ensureMaintainedArtifact(spark, sf)
-    // the maintained store holds ≥ 2 file sets per touched cluster dir
-    // (history build + batch append); compaction must bound it at one
-    val before = partFiles(s"$root/codes")
+    val base = ProductQuant.ensureHistoryArtifact(spark, sf)
+    val delta = ProductQuant.ensureMaintainedDelta(spark, sf)
+    // the maintained store holds a file set per touched cluster dir in
+    // each layer; compaction must bound it at one
+    val before = partFiles(s"$base/codes") + partFiles(s"$delta/codes")
     val croot = ProductQuant.ensureCompactedIndex(spark, sf)
     val clusters = spark.read.parquet(s"$croot/codes")
       .select("cluster").distinct().count()
@@ -82,13 +83,14 @@ class StoreCompactionSpec extends AnyFunSuite {
       spark.read.parquet(s"$croot/assignment").select("cluster").distinct().count())
     // layout preserved: the same cluster partition values exist, so the
     // probed-cell static filter prunes identically
-    val dirsBefore = spark.read.parquet(s"$root/codes")
+    val codes = ProductQuant.maintainedTable(spark, sf, "codes")
+    val dirsBefore = codes
       .select("cluster").distinct().collect().map(_.get(0).toString).toSet
     val dirsAfter = spark.read.parquet(s"$croot/codes")
       .select("cluster").distinct().collect().map(_.get(0).toString).toSet
     assert(dirsAfter == dirsBefore)
     // row preservation and serve equality
-    val rowsBefore = spark.read.parquet(s"$root/codes")
+    val rowsBefore = codes
       .select("vec_id", "ss", "code", "cluster").collect().map(_.toSeq).toSet
     val rowsAfter = spark.read.parquet(s"$croot/codes")
       .select("vec_id", "ss", "code", "cluster").collect().map(_.toSeq).toSet

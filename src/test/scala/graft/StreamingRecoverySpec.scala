@@ -4,7 +4,8 @@ import java.nio.file.{Files, Path}
 
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, StreamingQueryListener, StreamingQueryProgress}
+import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, StreamingQuery,
+  StreamingQueryListener, StreamingQueryProgress, Trigger}
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -23,6 +24,16 @@ class StreamingRecoverySpec extends AnyFunSuite {
 
   private def tmpDir(prefix: String): Path = SparkTestSession.tmpDir(prefix)
 
+  /** Runs `w` over what its source holds now and waits for the query's
+    * own end, as a drain does: stopping a query whose thread is still
+    * winding down cancels a finished job group and logs a warning.
+    */
+  private def runToEnd(w: DataStreamWriter[Row]): StreamingQuery = {
+    val q = w.trigger(Trigger.AvailableNow()).start()
+    try q.awaitTermination() finally if (q.isActive) q.stop()
+    q
+  }
+
   test("stateful aggregation resumes from checkpoint across a restart") {
     import spark.implicits._
     val in = tmpDir("graft-stream-in")
@@ -35,9 +46,9 @@ class StreamingRecoverySpec extends AnyFunSuite {
         .option("pathGlobFilter", "*.parquet").parquet(in.toString)
         .groupBy("user_id")
         .agg(count(lit(1)).as("n"), sum("value").as("total"))
-      agg.writeStream.outputMode(OutputMode.Complete())
+      runToEnd(agg.writeStream.outputMode(OutputMode.Complete())
         .option("checkpointLocation", ckpt.toString)
-        .format("memory").queryName(name).start()
+        .format("memory").queryName(name))
     }
 
     // the file-stream source lists plain FILES (the testdata layout);
@@ -53,8 +64,7 @@ class StreamingRecoverySpec extends AnyFunSuite {
 
     val batchA = (1L to 40L).map(i => (i % 5, i)).toDF("user_id", "value")
     writeFile(batchA, "a.parquet")
-    val q1 = startQuery("recovery_phase1")
-    try q1.processAllAvailable() finally q1.stop()
+    startQuery("recovery_phase1")
     val afterA = spark.table("recovery_phase1").collect()
       .map(r => (r.getAs[Long]("user_id"), r.getAs[Long]("n"), r.getAs[Long]("total"))).toSet
 
@@ -62,8 +72,7 @@ class StreamingRecoverySpec extends AnyFunSuite {
     val batchB = (41L to 100L).map(i => (i % 5, i)).toDF("user_id", "value")
     writeFile(batchB, "b.parquet")
 
-    val q2 = startQuery("recovery_phase2")
-    try q2.processAllAvailable() finally q2.stop()
+    startQuery("recovery_phase2")
     val afterB = spark.table("recovery_phase2").collect()
       .map(r => (r.getAs[Long]("user_id"), r.getAs[Long]("n"), r.getAs[Long]("total"))).toSet
 
@@ -122,12 +131,12 @@ class StreamingRecoverySpec extends AnyFunSuite {
       val src = spark.readStream.schema(schema)
         .option("pathGlobFilter", "*.parquet").parquet(in.toString)
       val (errors, purchases) = sides(src)
-      errors.withWatermark("e_ts", "1 hour")
+      runToEnd(errors.withWatermark("e_ts", "1 hour")
         .join(purchases.withWatermark("p_ts", "1 hour"), joinCond)
         .select("error_id", "purchase_id")
         .writeStream.outputMode(OutputMode.Append())
         .option("checkpointLocation", ckpt.toString)
-        .format("parquet").option("path", out.toString).start()
+        .format("parquet").option("path", out.toString))
     }
     val base = 1704067200L
     def t(min: Long) = new java.sql.Timestamp((base + min * 60) * 1000L)
@@ -136,8 +145,7 @@ class StreamingRecoverySpec extends AnyFunSuite {
     val purchases = (for { u <- 1L to 5L; i <- 0L to 1L }
       yield (u * 100 + i, "p", u, t(u + i * 4))).toDF("id", "kind", "user_id", "ts")
     writeFile(purchases, "a.parquet")
-    val q1 = startQuery()
-    try q1.processAllAvailable() finally q1.stop()
+    startQuery()
     assert(spark.read.schema("error_id BIGINT, purchase_id BIGINT")
       .parquet(out.toString).count() == 0,
       "tranche A is purchases only — nothing can match yet")
@@ -145,8 +153,7 @@ class StreamingRecoverySpec extends AnyFunSuite {
     val errors = (1L to 5L).map(u => (u * 1000, "e", u, t(u + 6)))
       .toDF("id", "kind", "user_id", "ts")
     writeFile(errors, "b.parquet")
-    val q2 = startQuery()
-    try q2.processAllAvailable() finally q2.stop()
+    startQuery()
     val got = spark.read.parquet(out.toString).collect()
       .map(r => (r.getAs[Long]("error_id"), r.getAs[Long]("purchase_id"))).toSet
     val (be, bp) = sides(purchases.unionByName(errors))
@@ -186,14 +193,10 @@ class StreamingRecoverySpec extends AnyFunSuite {
       val dedup =
         if (withinWatermark) src.dropDuplicatesWithinWatermark("k")
         else src.dropDuplicates("k")
-      val q = dedup.select("k").writeStream
-        .outputMode(OutputMode.Append()).format("memory").queryName(name).start()
-      try {
-        q.processAllAvailable() // sees whatever eras are on disk when called
-        val rows = spark.table(name).count()
-        val state = q.lastProgress.stateOperators(0).numRowsTotal
-        (rows, state)
-      } finally q.stop()
+      // sees whatever eras are on disk when started
+      val q = runToEnd(dedup.select("k").writeStream
+        .outputMode(OutputMode.Append()).format("memory").queryName(name))
+      (spark.table(name).count(), q.lastProgress.stateOperators(0).numRowsTotal)
     }
     writeFile(era("a", 0), "a.parquet")
     writeFile(era("b", 1), "b.parquet")
@@ -217,12 +220,10 @@ class StreamingRecoverySpec extends AnyFunSuite {
     // test-only" caveat with the sink a deployment actually uses.
     val out = tmpDir("graft-fsink-out")
     val ckpt = tmpDir("graft-fsink-ckpt")
-    val q = graft.streaming.DocStream.qualityStreamFrame(spark, SparkTestSession.Sf)
+    runToEnd(graft.streaming.DocStream.qualityStreamFrame(spark, SparkTestSession.Sf)
       .writeStream.outputMode(OutputMode.Append())
       .option("checkpointLocation", ckpt.toString)
-      .format("parquet").option("path", out.toString)
-      .start()
-    try q.processAllAvailable() finally q.stop()
+      .format("parquet").option("path", out.toString))
     val got = spark.read.parquet(out.toString).collect()
       .map(r => (r.getAs[Long]("doc_id"), r.getAs[Double]("quality"))).toSet
     val want = graft.operators.TextAnalysis.qualityScore(spark, SparkTestSession.Sf)

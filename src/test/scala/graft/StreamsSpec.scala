@@ -92,7 +92,13 @@ class StreamsSpec extends AnyFunSuite {
     for ((name, op) <- Seq[(String, (org.apache.spark.sql.SparkSession, String) => DataFrame)](
         "stream_user_totals" -> EventStream.userTotals,
         "stream_hourly" -> EventStream.hourlyRollup,
-        "stream_bm25_index" -> DocStream.streamSearchIndex)) {
+        "stream_bm25_index" -> DocStream.streamSearchIndex,
+        "stream_bm25_compact" -> DocStream.streamSearchIndexCompacted,
+        "stream_ann_maintain" -> DocStream.streamAnnMaintain,
+        "stream_sketch_maintain" -> EventStream.streamSketchMaintain,
+        "stream_knn_maintain" -> DocStream.streamKnnMaintain,
+        "stream_media_keep" -> DocStream.streamMediaKeep,
+        "stream_media_keep_neardup" -> DocStream.streamMediaKeepNearDup)) {
       val before = drainDirs()
       val df = op(spark, SparkTestSession.Sf)
       val own = drainDirs() -- before
