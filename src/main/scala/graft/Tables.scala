@@ -4,18 +4,56 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, LongType, TimestampNTZType, TimestampType}
 
+import graft.operators.Kernels
+
 /** Loaders for the driver-generated parquet testdata (TESTDATA.md).
+  * [[parquet]] is also the one read of every store and artifact path.
   *
   * All queries take the scale-factor directory as a parameter so the same
   * code runs on sf0.001 (smoke), sf0.01 (oracle), sf0.1 (bench) — and, at
   * production scale, on any parquet-backed table location. Reads go through
-  * `spark.read.parquet` so Catalyst gets column pruning and filter pushdown
-  * at the scan (verified in specs via `.explain("formatted")`:
-  * `PushedFilters` / `ReadSchema`).
+  * [[parquet]], a file-source read, so Catalyst gets column pruning and
+  * filter pushdown at the scan (verified in specs via
+  * `.explain("formatted")`: `PushedFilters` / `ReadSchema`).
+  *
+  * A parquet read with no schema infers one, and the inference is a
+  * one-task job that reads a footer before the query's own jobs — on
+  * every read, since file sources keep no schema between reads. So each
+  * path's schema is inferred once per process and memoized (memo kind
+  * `parquet-schema`), then handed to the reader. The memo is keyed on
+  * the path's file stamp ([[Kernels.inputKey]]: name, length and mtime
+  * of every file under it), so a table rewritten in place infers again,
+  * and on the session confs that change what inference returns, so two
+  * sessions that read one file differently each get their own schema.
   */
 object Tables {
+  /** The confs that change an inferred parquet schema: the eight
+    * `ParquetToSparkSchemaConverter` reads, schema merging (which
+    * footers are read) and partition-column type inference.
+    */
+  private val SchemaConfs = {
+    import org.apache.spark.sql.internal.SQLConf._
+    Seq(PARQUET_BINARY_AS_STRING, PARQUET_INT96_AS_TIMESTAMP, CASE_SENSITIVE,
+      PARQUET_INFER_TIMESTAMP_NTZ_ENABLED, LEGACY_PARQUET_NANOS_AS_LONG,
+      PARQUET_FIELD_ID_READ_ENABLED, PARQUET_IGNORE_VARIANT_ANNOTATION,
+      PARQUET_READER_RESPECT_UNKNOWN_TYPE_ANNOTATION, PARQUET_SCHEMA_MERGING_ENABLED,
+      PARTITION_COLUMN_TYPE_INFERENCE).map(_.key)
+  }
+
+  /** `spark.read.parquet(path)` under the path's memoized schema: a warm
+    * read lists the files and runs no job.
+    */
+  def parquet(spark: SparkSession, path: String): DataFrame = {
+    val (name, stamp) = Kernels.inputKey(path)
+    val confs = SchemaConfs.map(k => s"$k=${spark.conf.getOption(k).getOrElse("")}")
+    val schema = Kernels.memo("parquet-schema", (name, (stamp +: confs).mkString("|"))) {
+      spark.read.parquet(path).schema
+    }
+    spark.read.schema(schema).parquet(path)
+  }
+
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    parquet(spark, s"$dir/$name.parquet")
 
   def region(s: SparkSession, d: String): DataFrame    = table(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = table(s, d, "nation")
@@ -50,9 +88,10 @@ object Tables {
       case _                => df
     }
 
-  /** The `ts` type as stored in the file (footer-only read) — the
-    * stream reader needs it up front because a file stream source
-    * requires a user-supplied schema.
+  /** The `ts` type as stored in the file (the memoized schema, so a
+    * footer read only on the path's first read) — the stream reader
+    * needs it up front because a file stream source requires a
+    * user-supplied schema.
     */
   private[graft] def eventsRawTsType(s: SparkSession, d: String): DataType =
     table(s, d, "events").schema("ts").dataType

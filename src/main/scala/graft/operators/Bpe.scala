@@ -161,7 +161,7 @@ object Bpe {
     * in training order, the [[mergeTable]] contract.
     */
   def mergeTableFrom(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path).orderBy("round")
+    Tables.parquet(spark, path).orderBy("round")
 
   /** Training-loop probe (not a query): runs `rounds` merge rounds and
     * returns, per round, the analyzed-plan node count of the round's

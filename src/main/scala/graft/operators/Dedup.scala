@@ -467,7 +467,7 @@ object Dedup {
     * with one semi-join against this frame.
     */
   def keepListFrom(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path).orderBy("doc_id")
+    Tables.parquet(spark, path).orderBy("doc_id")
 
   /** The incremental MERGE core behind [[keepMaintain]] — the
     * [[graft.operators.Relational.cdcMerge]] upsert shape applied to the dedup
@@ -648,7 +648,7 @@ object Dedup {
     * full recompute), spec-pinned cross-session.
     */
   def keepMaintainFrom(spark: SparkSession, dir: String, path: String): DataFrame = {
-    val histLabels = spark.read.parquet(s"$path/labels")
+    val histLabels = Tables.parquet(spark, s"$path/labels")
     val docs = Tables.documents(spark, dir).select("doc_id")
     val batchDocs = docs.filter(isBatch(col("doc_id")))
     val batchEdges = ngramPairs(spark, dir).select("doc_a", "doc_b")
@@ -1049,7 +1049,7 @@ object Dedup {
     * precedent; the reference's own intermediate-file design).
     */
   private[graft] def cappedCelledIndex(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(ensureCelledIndexStore(spark, dir))
+    Tables.parquet(spark, ensureCelledIndexStore(spark, dir))
 
   /** The celled index materialized to a fingerprinted durable
     * artifact, one build per (corpus, JVM). Keyed to the FULL

@@ -263,7 +263,7 @@ object Graph {
     */
   def commonNeighbors(spark: SparkSession, dir: String): DataFrame = {
     val edges = Kernels.cacheTracked(
-      spark.read.parquet(ensureKnnEdges(spark, dir))
+      graft.Tables.parquet(spark, ensureKnnEdges(spark, dir))
         .select("vec_a", "vec_b"))
     val sym = edges.select(col("vec_a").as("src"), col("vec_b").as("dst"))
       .union(edges.select(col("vec_b").as("src"), col("vec_a").as("dst")))
@@ -304,7 +304,7 @@ object Graph {
     // stored edges: a parquet leaf, so the loop's lineage never reaches
     // the kNN candidate machinery (and the build is shared with every
     // other graph consumer via the artifact memo)
-    val edges = spark.read.parquet(ensureKnnEdges(spark, dir))
+    val edges = graft.Tables.parquet(spark, ensureKnnEdges(spark, dir))
       .select(col("vec_a").as("doc_a"), col("vec_b").as("doc_b"))
     val docs = graft.Tables.embeddings(spark, dir)
       .select(col("vec_id").as("doc_id"))
@@ -405,7 +405,7 @@ object Graph {
     */
   def knnMaintain(spark: SparkSession, dir: String,
       thresh: String = Dedup.IncBatchThreshold): DataFrame =
-    spark.read.parquet(ensureMaintainedKnnEdges(spark, dir, thresh))
+    graft.Tables.parquet(spark, ensureMaintainedKnnEdges(spark, dir, thresh))
       .orderBy("vec_a", "vec_b")
 
   /** The maintained mutual-edge frame materialized to a fingerprinted
@@ -437,7 +437,7 @@ object Graph {
       .select("vec_id", "cluster", "sub", "v", "norm"))
     val batchCells = idx.filter(Dedup.split(col("vec_id")) < thresh)
       .select("cluster", "sub").distinct()
-    val hist = spark.read.parquet(ensureKnnDirectedHistory(spark, dir, thresh))
+    val hist = graft.Tables.parquet(spark, ensureKnnDirectedHistory(spark, dir, thresh))
     maintainedEdges(spark, idx, hist, batchCells)
   }
 
@@ -518,7 +518,7 @@ object Graph {
     Store.latest(spark, storeRoot, "lists").getOrElse(historyLists(spark, dir))
 
   private def historyLists(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(ensureKnnDirectedHistory(spark, dir, Dedup.IncBatchThreshold))
+    graft.Tables.parquet(spark, ensureKnnDirectedHistory(spark, dir, Dedup.IncBatchThreshold))
 
   /** Vocabulary cap for the co-occurrence graph: top terms by
     * document frequency. Inactive on this corpus (|vocab| = 31) but
@@ -553,7 +553,7 @@ object Graph {
     */
   def textRank(spark: SparkSession, dir: String): DataFrame =
     textRankOn(spark,
-      spark.read.parquet(ensureIncidence(spark, dir)),
+      graft.Tables.parquet(spark, ensureIncidence(spark, dir)),
       TextRankVocab)
 
   /** The distinct (doc_id, term) incidence materialized once per

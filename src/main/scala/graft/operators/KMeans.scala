@@ -72,7 +72,9 @@ object KMeansCodebook {
 
   /** One corpus the kernel indexes. `key` names the memo entries of its
     * codebook, books, assignment and codes; `scan` is its unpinned
-    * (vec_id, v) frame, which probes, ADC tables and reranks read;
+    * (vec_id, v) frame, which probes, ADC tables and reranks read (each
+    * access reads the table again, which under the memoized schema of
+    * `Tables.parquet` costs a file listing, not a job);
     * `vectors` is the frame training and assignment read, under the
     * corpus's own pin. `vectors` is built on first use, so a memo hit
     * pins nothing.
@@ -305,7 +307,7 @@ object KMeansCodebook {
     * training session's books.
     */
   private[operators] def readBooks(spark: SparkSession, path: String): Books =
-    collectBooks(spark.read.parquet(path))
+    collectBooks(Tables.parquet(spark, path))
 
   /** `kmeans_centroids`: the trained codebook after [[LloydIters]]
     * Lloyd rounds from the deterministic init, with each cluster's

@@ -653,11 +653,13 @@ private[graft] object Kernels {
     * one kind (the embeddings and the image codebook) from replacing
     * each other.
     */
-  def inputKey(dir: String, table: String): (String, String) = {
+  def inputKey(dir: String, table: String): (String, String) = inputKey(s"$dir/$table")
+
+  /** [[inputKey]] of one parquet path, a file or a directory tree. */
+  def inputKey(path: String): (String, String) = {
     def walk(f: java.io.File): Seq[String] =
       if (f.isDirectory) f.listFiles().sortBy(_.getName).toSeq.flatMap(walk)
       else Seq(s"${f.getName}:${f.length}:${f.lastModified}")
-    val path = s"$dir/$table"
     (path, walk(new java.io.File(path)).mkString("|"))
   }
 }

@@ -1495,7 +1495,7 @@ object Multimodal {
     */
   private[graft] def mediaKeepNearDupArtifact(
       spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(ensureMediaKeepNearDupStore(spark, dir))
+    Tables.parquet(spark, ensureMediaKeepNearDupStore(spark, dir))
 
   /** `mm_media_keep_neardup_served`: the keep-list served from the
     * durable artifact — same rows as [[mediaKeepNearDup]] (shared

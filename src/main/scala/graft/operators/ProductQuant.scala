@@ -309,7 +309,7 @@ object ProductQuant {
     // the probed cells' partition directories"
     val probed = pcells.select("pcluster").distinct().collect().map(_.getLong(0))
     // one read per layer, pruned per layer, then unioned by name
-    val codes = (spark.read.parquet(s"$root/codes") +:
+    val codes = (Tables.parquet(spark, s"$root/codes") +:
         delta.map(Store.read(spark, _, "codes")).toSeq)
       .map(_.filter(col("cluster").isin(probed: _*))
         .withColumn("cluster", col("cluster").cast("long"))
@@ -428,7 +428,7 @@ object ProductQuant {
     * and the delta's.
     */
   private[graft] def maintainedTable(spark: SparkSession, dir: String, t: String): DataFrame =
-    spark.read.parquet(s"${ensureHistoryArtifact(spark, dir)}/$t")
+    Tables.parquet(spark, s"${ensureHistoryArtifact(spark, dir)}/$t")
       .unionByName(Store.read(spark, ensureMaintainedDelta(spark, dir), t))
 
   /** Compacts the maintained layers into a self-contained index at
@@ -451,7 +451,7 @@ object ProductQuant {
         .write.mode("overwrite").partitionBy("cluster").parquet(s"$croot/$t")
     }
     Seq("coarse_codebook", "pq_codebooks").foreach { t =>
-      spark.read.parquet(s"${ensureHistoryArtifact(spark, dir)}/$t")
+      Tables.parquet(spark, s"${ensureHistoryArtifact(spark, dir)}/$t")
         .coalesce(1).write.mode("overwrite").parquet(s"$croot/$t")
     }
   }

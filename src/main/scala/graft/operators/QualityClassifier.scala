@@ -281,7 +281,7 @@ object QualityClassifier {
     * head once, before the stream starts).
     */
   private[graft] def storedHead(spark: SparkSession, dir: String): Array[Double] = {
-    val stored = spark.read.parquet(ensureWeightStore(spark, dir))
+    val stored = Tables.parquet(spark, ensureWeightStore(spark, dir))
       .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
     Array(stored("x1_len"), stored("x2_diversity"), stored("x3_stop"),
       stored("x4_chars"), stored("bias"))

@@ -442,8 +442,8 @@ object Retrieval {
     // compute at vocabulary grain and the occurrences join only the
     // broadcast sim table
     maxSimScore(spark,
-      spark.read.parquet(s"$root/doctoks"),
-      spark.read.parquet(s"$root/tokvecs"),
+      Tables.parquet(spark, s"$root/doctoks"),
+      Tables.parquet(spark, s"$root/tokvecs"),
       Queries)
   }
 
@@ -538,11 +538,11 @@ object Retrieval {
     val qterms = Queries
       .flatMap { case (qid, q) => q.split(" ").map(t => (qid, t)) }
       .toDF("query_id", "term")
-    val qdf = spark.read.parquet(s"$root/df")
+    val qdf = Tables.parquet(spark, s"$root/df")
       .join(broadcast(qterms.select("term").distinct()), Seq("term"), "leftsemi")
-    val matched = spark.read.parquet(s"$root/postings")
+    val matched = Tables.parquet(spark, s"$root/postings")
       .join(broadcast(qdf), "term")
-    bm25Score(matched, spark.read.parquet(s"$root/stats"), qterms)
+    bm25Score(matched, Tables.parquet(spark, s"$root/stats"), qterms)
   }
 
   /** `tfidf_search_served`: the VSM twin from the same artifact — the
@@ -557,16 +557,16 @@ object Retrieval {
       .flatMap { case (qid, q) => q.split(" ").map(t => (qid, t)) }
       .groupBy(identity).map { case ((qid, t), g) => (qid, t, g.size.toLong) }
       .toSeq.toDF("query_id", "term", "tfq")
-    val stats = spark.read.parquet(s"$root/stats")
-    val qdf = spark.read.parquet(s"$root/df")
+    val stats = Tables.parquet(spark, s"$root/stats")
+    val qdf = Tables.parquet(spark, s"$root/df")
       .join(broadcast(qtf.select("term").distinct()), Seq("term"), "leftsemi")
-    val w = spark.read.parquet(s"$root/postings")
+    val w = Tables.parquet(spark, s"$root/postings")
       .join(broadcast(qdf), "term")
       .crossJoin(broadcast(stats))
       .select(col("doc_id"), col("term"),
         (col("tf").cast("double") *
           log(col("n_docs").cast("double") / col("df"))).as("w"))
-    tfidfScore(w, spark.read.parquet(s"$root/norms"), qtf, qdf, stats)
+    tfidfScore(w, Tables.parquet(spark, s"$root/norms"), qtf, qdf, stats)
   }
 
   def rrfFusion(spark: SparkSession, dir: String): DataFrame =

@@ -442,7 +442,7 @@ object Similarity {
   def annGraph(spark: SparkSession, dir: String,
       beamWidth: Int = BeamWidth): DataFrame =
     annGraphOver(spark, dir,
-      spark.read.parquet(Graph.ensureKnnEdges(spark, dir)), beamWidth)
+      Tables.parquet(spark, Graph.ensureKnnEdges(spark, dir)), beamWidth)
 
   /** `ann_graph_maintain`: the SAME beam serve over the incrementally
     * MAINTAINED mutual-kNN edges ([[Graph.knnMaintain]]'s merge of
@@ -468,7 +468,7 @@ object Similarity {
     // in-session trackedCheckpoint bought (the symmetrized union reads
     // the frame twice, then every beam round joins it).
     annGraphOver(spark, dir,
-      spark.read.parquet(Graph.ensureMaintainedKnnEdges(spark, dir)))
+      Tables.parquet(spark, Graph.ensureMaintainedKnnEdges(spark, dir)))
 
   /** [[annGraph]]'s serve over an EXPLICIT mutual-edge frame — shared
     * by the artifact path, the maintained path, and the spec's
@@ -538,7 +538,7 @@ object Similarity {
     // exchanges of the corpus-sized sides
     val emb = Kernels.sizedKeyedCacheSorted(
       withNorm(spark, Tables.embeddings(spark, dir)), col("vec_id"))
-    val edges = spark.read.parquet(Graph.ensureKnnEdges(spark, dir))
+    val edges = Tables.parquet(spark, Graph.ensureKnnEdges(spark, dir))
     val sym = Kernels.sizedKeyedCacheSorted(
       edges.select(col("vec_a").as("a"), col("vec_b").as("b"))
         .union(edges.select(col("vec_b").as("a"), col("vec_a").as("b"))),

@@ -354,7 +354,7 @@ object Sketches {
     * [[heavyHittersServe]]'s oracle (spec-pinned too).
     */
   def heavyHittersDaily(spark: SparkSession, dir: String): DataFrame =
-    heavyHittersFromCms(spark, dir, spark.read.parquet(s"${ensureSketchStore(spark, dir)}/cms"))
+    heavyHittersFromCms(spark, dir, Tables.parquet(spark, s"${ensureSketchStore(spark, dir)}/cms"))
 
   /** Shared CM serve body: cell-wise addition over the stored `grids`
     * reassembles the global grid, then the shared probe/cut runs
@@ -400,7 +400,7 @@ object Sketches {
     * store.
     */
   def approxUsersDaily(spark: SparkSession, dir: String): DataFrame =
-    approxUsersFromKmv(spark, dir, spark.read.parquet(s"${ensureSketchStore(spark, dir)}/kmv"))
+    approxUsersFromKmv(spark, dir, Tables.parquet(spark, s"${ensureSketchStore(spark, dir)}/kmv"))
 
   // -------------------------------------------------------------------
   // Store MAINTENANCE — the docstring's "ingest day N+1 is one new
@@ -505,12 +505,12 @@ object Sketches {
   def compactSketchStore(spark: SparkSession, root: String): String = {
     import graft.functions.TopKFunctions.topK
     val croot = s"$root/compact"
-    spark.read.parquet(s"$root/cms")
+    Tables.parquet(spark, s"$root/cms")
       .withColumn("week", date_trunc("week", col("day")).cast("date"))
       .groupBy("week", "j", "b").agg(sum("cnt").as("cnt"))
       .repartition(col("week"))
       .write.mode("overwrite").partitionBy("week").parquet(s"$croot/cms")
-    spark.read.parquet(s"$root/kmv")
+    Tables.parquet(spark, s"$root/kmv")
       .withColumn("week", date_trunc("week", col("day")).cast("date"))
       .select(col("week"), explode(col("mins")).as("m"))
       .select(col("week"), (-col("m.score")).as("h"), col("m.id").as("user_id"))
@@ -537,7 +537,7 @@ object Sketches {
     * files to one file per week.
     */
   def heavyHittersCompact(spark: SparkSession, dir: String): DataFrame =
-    heavyHittersFromCms(spark, dir, spark.read.parquet(s"${ensureCompactedStore(spark, dir)}/cms"))
+    heavyHittersFromCms(spark, dir, Tables.parquet(spark, s"${ensureCompactedStore(spark, dir)}/cms"))
 
   /** `events_approx_users_compact`: the global distinct estimate from
     * the compacted weekly KMV sketches — same union + re-cut +
@@ -545,5 +545,5 @@ object Sketches {
     * of |days|. Exact columns ride for the gate only.
     */
   def approxUsersCompact(spark: SparkSession, dir: String): DataFrame =
-    approxUsersFromKmv(spark, dir, spark.read.parquet(s"${ensureCompactedStore(spark, dir)}/kmv"))
+    approxUsersFromKmv(spark, dir, Tables.parquet(spark, s"${ensureCompactedStore(spark, dir)}/kmv"))
 }

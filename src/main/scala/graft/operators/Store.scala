@@ -2,6 +2,8 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.Tables
+
 /** The on-disk layout of every table written after its build. Rows sit
   * under `root/table/bid=<n>`, keyed by the batch that wrote them, so a
   * re-executed batch (`foreachBatch` is at-least-once) rewrites its own
@@ -32,7 +34,7 @@ object Store {
     */
   def read(spark: SparkSession, root: String, table: String,
       after: Long = Long.MinValue, before: Long = Long.MaxValue): DataFrame = {
-    val all = spark.read.parquet(dir(root, table))
+    val all = Tables.parquet(spark, dir(root, table))
     all.filter(all("bid") > after && all("bid") < before).drop("bid")
   }
 
@@ -48,13 +50,13 @@ object Store {
   def next(spark: SparkSession, root: String, table: String, bid: Long)(
       f: Option[DataFrame] => DataFrame): Unit = {
     val prev = bids(root, table).filter(_ < bid).lastOption
-      .map(b => spark.read.parquet(bidDir(root, table, b)))
+      .map(b => Tables.parquet(spark, bidDir(root, table, b)))
     f(prev).write.mode("overwrite").parquet(bidDir(root, table, bid))
   }
 
   /** The newest version of `table`, or None before the first batch. */
   def latest(spark: SparkSession, root: String, table: String): Option[DataFrame] =
-    bids(root, table).lastOption.map(b => spark.read.parquet(bidDir(root, table, b)))
+    bids(root, table).lastOption.map(b => Tables.parquet(spark, bidDir(root, table, b)))
 
   /** Compacts an appended `table` to `f` of its rows: written to a `_c`
     * sibling under the newest bid, then swapped into the table's place,

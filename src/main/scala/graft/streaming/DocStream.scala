@@ -216,7 +216,7 @@ object DocStream {
     // (the band index never reads the shingle arrays) beats caching
     // full rows — materializing the cache cost a whole-table pass of
     // the array payload that a one-batch drain reads back only once
-    val store = spark.read.parquet(Dedup.ensureBandStore(spark, dir))
+    val store = graft.Tables.parquet(spark, Dedup.ensureBandStore(spark, dir))
     val toksLower = filter(
       split(lower(col("text")), TextAnalysis.TokenSplitRe), t => length(t) > 0)
     val splitOf = Dedup.split(col("doc_id"))
@@ -438,7 +438,7 @@ object DocStream {
       .filter(col("split") >= Dedup.IncBatchThreshold)
       .select("fp").distinct()
     val bandStore = Kernels.cacheTracked(
-      spark.read.parquet(Dedup.ensureBandStore(spark, dir)))
+      graft.Tables.parquet(spark, Dedup.ensureBandStore(spark, dir)))
 
     val (lenScore, diversity, stopScore) = TextAnalysis.qualityParts(col("toks"))
     val toksLower = filter(

@@ -54,6 +54,9 @@ class BenchSpec extends AnyFunSuite {
     val cb = full \ "memo" \ "kmeans-codebook"
     assert((cb \ "builds").extractOpt[Long].contains(1L), s"one codebook build per run: ${full \ "memo"}")
     assert((cb \ "hits").extractOpt[Long].exists(_ >= 1), s"the second rep must hit the memo: ${full \ "memo"}")
+    val ps = full \ "memo" \ "parquet-schema"
+    assert((ps \ "hits").extractOpt[Long].exists(_ >= 1),
+      s"a re-read of the embeddings must hit the schema memo: ${full \ "memo"}")
     val row = full \ "layers" \ "kmeans_centroids"
     assert(Seq("memo_hits", "memo_builds").forall(k => (row \ k).isInstanceOf[JObject]),
       s"the ledger row carries the rep's memo counts: $row")

@@ -1476,7 +1476,8 @@ class PlanAuditSpec extends AnyFunSuite {
   }
 
   /** A recorded job over a table scan, cached or not — not the footer
-    * read of a schema inference, which every parquet read starts with.
+    * read of a schema inference, which a path's first read in the
+    * process starts with ([[Tables.parquet]] memoizes the schema).
     */
   private def scansFiles(job: Seq[StageRun]): Boolean =
     job.exists(_.rdds.contains("FileScanRDD"))
@@ -1501,6 +1502,7 @@ class PlanAuditSpec extends AnyFunSuite {
         Dedup.retireCaches()
         assert(jobs.count(scansFiles) == 1,
           s"exactly one job may scan the embeddings: $jobs")
+        assert(jobs.length == 1, s"a warm query is the fold alone, with no footer read: $jobs")
         assert(jobs.filter(scansFiles).forall(_.length == 1), s"the fold is one stage: $jobs")
         assert(jobs.flatten.forall(_.shuffleWrite == 0L), s"no job may shuffle: $jobs")
         assert(!jobs.flatten.exists(_.rdds.exists(_.contains("Join"))) && !p.contains("Join"),
@@ -1530,12 +1532,73 @@ class PlanAuditSpec extends AnyFunSuite {
       val jobs = try jobsOf(QualityClassifier.trainedWeights(spark, dir))
         finally Dedup.retireCaches()
       assert(jobs.count(scansFiles) == QualityClassifier.Steps + 1 && jobs.count(!scansFiles(_)) <= 1,
-        s"one label pass plus one fold per step, beside the schema read: $jobs")
+        s"one label pass plus one fold per step, beside the fresh dir's schema read: $jobs")
       assert(jobs.forall(_.length == 1), s"every job is one stage: $jobs")
       assert(jobs.flatten.forall(_.shuffleWrite == 0L), s"no job may shuffle: $jobs")
       (jobs.length, jobs.map(_.map(_.tasks)))
     }
     assert(runs.distinct.length == 1, s"job, stage and task counts must repeat: $runs")
+  }
+
+  test("schema memo: a warm table read runs no job") {
+    Tables.orders(spark, sf).schema // the path's first read infers once
+    val jobs = jobsOf(Tables.orders(spark, sf).schema)
+    assert(jobs.isEmpty, s"a second orders read must reuse the memoized schema: $jobs")
+  }
+
+  test("schema memo: a table rewritten in place is read back with its new schema") {
+    import spark.implicits._
+    val path = SparkTestSession.tmpDir("graft-schema-rewrite").resolve("t").toString
+    Seq(1L, 2L).toDF("a").write.parquet(path)
+    assert(Tables.parquet(spark, path).schema.fieldNames.toSeq == Seq("a"))
+    Seq("x").toDF("b").write.mode("overwrite").parquet(path)
+    val again = Tables.parquet(spark, path)
+    assert(again.schema.fieldNames.toSeq == Seq("b"), s"stale schema: ${again.schema}")
+    assert(again.as[String].collect().toSeq == Seq("x"))
+  }
+
+  test("schema memo: one file read under two values of an inference conf gets each schema") {
+    // a non-Spark writer: a Spark-written footer carries Spark's own
+    // schema, which inference prefers over the conf
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    val schema = org.apache.parquet.schema.MessageTypeParser
+      .parseMessageType("message m { required binary b; }")
+    val path = SparkTestSession.tmpDir("graft-schema-conf").resolve("b.parquet").toString
+    val w = ExampleParquetWriter.builder(new org.apache.hadoop.fs.Path(path)).withType(schema).build()
+    try w.write(new SimpleGroupFactory(schema).newGroup().append("b", "x")) finally w.close()
+    val key = "spark.sql.parquet.binaryAsString"
+    def typeUnder(v: String) = {
+      val prev = spark.conf.getOption(key)
+      spark.conf.set(key, v)
+      try Tables.parquet(spark, path).schema("b").dataType
+      finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    }
+    val types = Seq("false", "true", "false").map(typeUnder)
+    assert(types == Seq(org.apache.spark.sql.types.BinaryType,
+      org.apache.spark.sql.types.StringType, org.apache.spark.sql.types.BinaryType), types)
+  }
+
+  test("schema memo: a partitioned Store table keeps the uncached read's columns") {
+    import spark.implicits._
+    val root = SparkTestSession.tmpDir("graft-schema-store").toString
+    for (bid <- 1L to 2L)
+      Store.append(root, "t", bid, "cluster")(
+        Seq((bid * 10, bid % 2, "v")).toDF("id", "cluster", "s"))
+    val plain = spark.read.parquet(s"$root/t")
+    val memoized = Tables.parquet(spark, s"$root/t")
+    assert(memoized.schema == plain.schema, s"${memoized.schema} != ${plain.schema}")
+    assert(memoized.collect().toSet == plain.collect().toSet)
+    assert(Store.read(spark, root, "t").columns.toSeq == plain.drop("bid").columns.toSeq)
+  }
+
+  test("parquet-read audit: only Tables reads a parquet path") {
+    // `Tables.parquet` hands every read its memoized schema; a plain
+    // `spark.read.parquet` (39 existed before) infers it again with a
+    // footer-read job, so the token may appear in no other source file
+    val hits = sourceHitsOutside(Seq("src/main/scala/graft/Tables.scala"), Seq("read.parquet("))
+    assert(hits.isEmpty,
+      s"a parquet read outside Tables — use Tables.parquet:\n${hits.mkString("\n")}")
   }
 
   test("multimodal kernels: map-only over a pruned scan, no joins at all") {
