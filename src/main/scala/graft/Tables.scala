@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, LongType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, TimestampType}
 
 import graft.operators.Kernels
 
@@ -25,6 +25,12 @@ import graft.operators.Kernels
   * of every file under it), so a table rewritten in place infers again,
   * and on the session confs that change what inference returns, so two
   * sessions that read one file differently each get their own schema.
+  *
+  * One source, one body: [[stream]] is the only stream source. It reads
+  * a table under that same memoized schema, so no stream operator keeps
+  * a hand-written schema, and each stream twin runs its batch
+  * operator's body over it — the batch query over the static split,
+  * the stream over the micro-batches.
   */
 object Tables {
   /** The confs that change an inferred parquet schema: the eight
@@ -40,20 +46,41 @@ object Tables {
       PARTITION_COLUMN_TYPE_INFERENCE).map(_.key)
   }
 
+  /** The memoized schema of one parquet path. */
+  private def schemaOf(spark: SparkSession, path: String): StructType = {
+    val (name, stamp) = Kernels.inputKey(path)
+    val confs = SchemaConfs.map(k => s"$k=${spark.conf.getOption(k).getOrElse("")}")
+    Kernels.memo("parquet-schema", (name, (stamp +: confs).mkString("|"))) {
+      spark.read.parquet(path).schema
+    }
+  }
+
   /** `spark.read.parquet(path)` under the path's memoized schema: a warm
     * read lists the files and runs no job.
     */
-  def parquet(spark: SparkSession, path: String): DataFrame = {
-    val (name, stamp) = Kernels.inputKey(path)
-    val confs = SchemaConfs.map(k => s"$k=${spark.conf.getOption(k).getOrElse("")}")
-    val schema = Kernels.memo("parquet-schema", (name, (stamp +: confs).mkString("|"))) {
-      spark.read.parquet(path).schema
-    }
-    spark.read.schema(schema).parquet(path)
-  }
+  def parquet(spark: SparkSession, path: String): DataFrame =
+    spark.read.schema(schemaOf(spark, path)).parquet(path)
 
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
     parquet(spark, s"$dir/$name.parquet")
+
+  /** The one stream source: `spark.readStream` over table `name` of
+    * `dir` under the same memoized schema as its batch read, so a
+    * stream sees exactly the columns and types [[table]] does (a file
+    * stream source needs its schema up front). `files` points the
+    * source at other (dir, glob) files holding the table's rows, and
+    * `filesPerTrigger` caps the files per micro-batch — a spec drives a
+    * multi-file copy of a table one file per trigger.
+    */
+  def stream(spark: SparkSession, dir: String, name: String,
+             files: Option[(String, String)] = None,
+             filesPerTrigger: Option[Int] = None): DataFrame = {
+    val (src, glob) = files.getOrElse((dir, s"$name.parquet"))
+    val reader = spark.readStream.schema(schemaOf(spark, s"$dir/$name.parquet"))
+      .option("pathGlobFilter", glob) // a file stream source reads a dir
+    filesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n.toString))
+    reader.parquet(src)
+  }
 
   def region(s: SparkSession, d: String): DataFrame    = table(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = table(s, d, "nation")
@@ -87,14 +114,6 @@ object Tables {
       case TimestampNTZType => df.withColumn("ts", col("ts").cast(TimestampType))
       case _                => df
     }
-
-  /** The `ts` type as stored in the file (the memoized schema, so a
-    * footer read only on the path's first read) — the stream reader
-    * needs it up front because a file stream source requires a
-    * user-supplied schema.
-    */
-  private[graft] def eventsRawTsType(s: SparkSession, d: String): DataType =
-    table(s, d, "events").schema("ts").dataType
 
   def events(s: SparkSession, d: String): DataFrame =
     normalizeEventTs(table(s, d, "events"))

@@ -485,12 +485,11 @@ object Corpus {
       .withColumn("rk", row_number().over(Window.partitionBy("fp").orderBy("doc_id")))
       .filter(col("rk") === 1)
       .join(Dedup.keepIds(spark, dir), Seq("doc_id"), "left_semi")
-    val (lenScore, diversity, stopScore) = TextAnalysis.qualityParts(col("toks"))
     val scored = surv
       .withColumn("toks", TextAnalysis.tokens(col("text")))
       .select(col("doc_id"), col("source"),
         size(col("toks")).cast("long").as("n_tokens"),
-        round((lenScore + diversity + stopScore) / lit(3.0), 4).as("quality"))
+        TextAnalysis.quality(col("toks")).as("quality"))
     scored
       .filter(col("quality") >= TrainQualityMin)
       .filter(isBench >= BenchSplitThreshold) // bench split never trains
@@ -542,31 +541,69 @@ object Corpus {
     * against the historical fingerprint store → near-dup probe of the
     * historical MinHash band store → quality gate, emitting the
     * accepted new documents with their in-batch duplicate count and
-    * quality score.
-    *
-    * Composition notes: the exact stage is [[Dedup.incremental]] (the
-    * cache-free formulation composes cleanly; the bloom-accelerated
-    * twin is the drop-in deployment swap, proven bit-identical by its
-    * own oracle); the near-dup stage anti-joins the batch on
-    * [[Dedup.incrementalMinHash]]'s batch ids (band-collision verified
-    * J ≥ 0.3 against history only — batch-internal near-dups are
-    * [[Dedup.minHashLsh]]'s job on the batch alone); the quality gate
-    * shares [[TextAnalysis.qualityScore]]'s exact expression. 100 TB
-    * shape: every stage is the incremental (batch-sized) form — the
-    * corpus-sized store contributes one distinct-fingerprint side and
-    * one band store, both pre-materialized tables in production.
+    * quality score. One body ([[ingestOf]]) serves this query over the
+    * static batch split and the ingest stream
+    * ([[graft.streaming.DocStream.streamPipelineIngest]]) over its
+    * micro-batches. 100 TB shape: every stage is the incremental
+    * (batch-sized) form — the corpus-sized store contributes one
+    * distinct-fingerprint side and one band store, both
+    * pre-materialized tables in production.
     */
-  def ingest(spark: SparkSession, dir: String): DataFrame = {
-    val survivors = Dedup.incremental(spark, dir)
-    val nearDup = Dedup.incrementalMinHash(spark, dir)
-      .select(col("batch_id").as("doc_id")).distinct()
-    val quality = TextAnalysis.qualityScore(spark, dir)
-      .select(col("doc_id"), col("quality"))
-    survivors.join(nearDup, Seq("doc_id"), "left_anti")
-      .join(quality, "doc_id")
-      .filter(col("quality") >= TrainQualityMin)
-      .select(col("doc_id"), col("fp"), col("n_batch_dups"), col("quality"))
+  def ingest(spark: SparkSession, dir: String): DataFrame =
+    ingestOf(Kernels.fanOut(Dedup.ingestSplit(Tables.documents(spark, dir))),
+      Dedup.historyFps(spark, dir), Dedup.bandStore(spark, dir))
       .orderBy("doc_id")
+
+  /** The ingest body, in its streaming-legal shape — batch rows
+    * (doc_id, text) → (doc_id, fp, n_batch_dups, quality):
+    *  - quality, fingerprint and MinHash signatures are per-row
+    *    projections ([[Dedup.signed]]) riding the batch scan;
+    *  - exact dedup is an anti join on the history fingerprints
+    *    ([[Dedup.incremental]]'s store);
+    *  - the near-dup probe is FOUR anti joins, one per band, each an
+    *    equi-join on that band's key with the exact Jaccard
+    *    (`graft_overlap` on the hashed shingle sets, ≥ 0.3) as the
+    *    residual condition — "drop the doc if ANY band collides and
+    *    verifies" ([[Dedup.incrementalMinHash]]'s verdict), probing the
+    *    band store the way production probes a bucketed-by-bkey table;
+    *    shingle-less docs keep NULL band keys, which never match;
+    *  - the one aggregation folds each surviving fingerprint to its
+    *    first doc (with that doc's quality) and its in-batch count, and
+    *    the quality gate filters the folded rows — in a stream, its
+    *    state is bounded by the batch's distinct fingerprints.
+    * Both dedup stages drop whole fingerprint groups: same fp ⟹ same
+    * lowercased letter tokens ⟹ same shingles, bands and Jaccard. So
+    * each group's count and first doc equal the stage-by-stage
+    * composition's, and the gate reads that first doc's quality as the
+    * composition does.
+    */
+  private[graft] def ingestOf(batch: DataFrame, historyFps: DataFrame,
+      bandStore: DataFrame): DataFrame = {
+    val rows = batch
+      .select(col("doc_id"), col("text"),
+        md5(TextAnalysis.normalizedText(col("text"))).as("fp"),
+        TextAnalysis.tokens(col("text")).as("toks")) // tokens once (no CSE)
+      .select(col("doc_id"), col("text"), col("fp"),
+        TextAnalysis.quality(col("toks")).as("quality"))
+    val withBands = (0 until Dedup.MinHashBands)
+      .foldLeft(Dedup.signed(rows)) { (df, b) =>
+        df.withColumn(s"bk$b", when(col("nsh") > 0, Dedup.bandKey(b)))
+      }
+      .drop("sig")
+    val nearDeduped = (0 until Dedup.MinHashBands)
+      .foldLeft(withBands.join(historyFps, Seq("fp"), "left_anti")) { (df, b) =>
+        val jaccard = Dedup.jaccard(batch.sparkSession,
+          col("shh"), col("nsh"), col(s"h$b.h_shh"), col(s"h$b.h_nsh"))
+        df.join(bandStore.filter(col("band") === b).as(s"h$b"),
+          col(s"bk$b") === col(s"h$b.bkey") && jaccard >= 0.3, "left_anti")
+      }
+    nearDeduped
+      .groupBy("fp")
+      .agg(min(struct(col("doc_id"), col("quality"))).as("first"),
+        count(lit(1)).as("n_batch_dups"))
+      .filter(col("first.quality") >= TrainQualityMin)
+      .select(col("first.doc_id").as("doc_id"), col("fp"), col("n_batch_dups"),
+        col("first.quality").as("quality"))
   }
 
   /** Per-(source, lang) corpus composition: doc counts, token and char

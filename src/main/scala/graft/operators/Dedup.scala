@@ -31,15 +31,12 @@ object Dedup {
   // returned DataFrame is lazy — the cache must survive until the
   // caller's action). Contract PER THREAD (the registry is
   // thread-scoped, see [[Kernels]]): BUILD one dedup pipeline, EXECUTE
-  // its action, then call [[retireCaches]] (Bench/Verify do) — or
-  // simply build the next dedup on the same thread, which retires the
-  // previous generation as a fallback. Building two dedup pipelines on
-  // one thread before running either silently drops the first's caches
-  // (correct but slow: Spark recomputes); concurrent queries on
-  // separate threads are isolated.
-  private def cacheTracked(df: DataFrame): DataFrame = Kernels.cacheTracked(df)
+  // its action, then call [[retireCaches]] (Bench/Verify do). No
+  // operator retires on entry: that would drain the caller's own pins
+  // in the middle of its query. Concurrent queries on separate threads
+  // are isolated.
 
-  /** Unpersist every cache the calling thread's last builder pinned
+  /** Unpersist every cache the calling thread's builders pinned
     * (thread-scoped registry shared with other operators via
     * [[Kernels.retireCaches]]). Call after the consuming action
     * completes; otherwise the (SF-sized) exploded shingle frames stay
@@ -47,10 +44,12 @@ object Dedup {
     * every later query (measured 2-4x on the bench tail in round 2).
     */
   def retireCaches(): Unit = Kernels.retireCaches()
-  private def retirePreviousCaches(): Unit = retireCaches()
 
   /** Distinct word n-gram shingles of a token array; a doc shorter than
-    * n tokens contributes its whole text as one shingle.
+    * n tokens contributes its whole text as one shingle. Every
+    * operator runs [[withShingles]]'s typed loop instead; this
+    * declarative form states the same semantics as the DuckDB oracle's
+    * expression, and the shingle spec pins it.
     */
   def shingles(toks: Column, n: Int): Column = {
     val grams = transform(
@@ -61,39 +60,41 @@ object Dedup {
       .otherwise(array().cast("array<string>"))
   }
 
-  /** Shingle computation runs as a typed `mapPartitions` pass: the
-    * Column formulation ([[shingles]], kept for composition/tests)
-    * chains three interpreted higher-order functions per row and
-    * dominated the dedup wall time (measured 10-200s at sf0.1 vs <1s
-    * here); a compiled per-partition loop with a precompiled regex is
-    * the right engine-side kernel for this shape. Semantics identical:
-    * lowercase letter-run tokens, distinct 3-grams, whole-text
-    * fallback for short docs.
+  /** Replaces `text` with its shingle array `sh`, carrying every other
+    * column through: a typed `mapPartitions` pass. The Column
+    * formulation ([[shingles]]) chains three interpreted higher-order
+    * functions per row and dominated the dedup wall time (measured
+    * 10-200s at sf0.1 vs <1s here); a compiled per-partition loop with
+    * a precompiled regex is the right engine-side kernel for this
+    * shape. Semantics identical: lowercase letter-run tokens, distinct
+    * 3-grams, whole-text fallback for short docs. Stateless, so legal
+    * in a streaming plan.
     */
-  private def docShingles(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    // small single-file inputs arrive as ONE scan partition; fan the
-    // CPU-bound kernel out to the cluster (cheap round-robin of ids+text)
-    Kernels.fanOut(
-      Tables.documents(spark, dir)
-        .select(col("doc_id"), col("text")))
-      .as[(Long, String)]
-      .mapPartitions { it =>
-        val re = java.util.regex.Pattern.compile("[^\\p{L}]+")
-        it.map { case (id, text) =>
-          // Locale.ROOT: default-locale lowercasing (tr-TR dotless-ı)
-          // would diverge from the oracle's locale-independent lower()
-          val toks = re.split(text.toLowerCase(java.util.Locale.ROOT)).filter(_.nonEmpty)
-          val sh =
-            if (toks.length >= 3)
-              toks.sliding(3).map(_.mkString(" ")).toArray.distinct
-            else if (toks.nonEmpty) Array(toks.mkString(" "))
-            else Array.empty[String]
-          (id, sh)
-        }
+  private[graft] def withShingles(df: DataFrame): DataFrame = {
+    val textAt = df.schema.fieldIndex("text")
+    val carried = df.schema.indices.filter(_ != textAt)
+    val out = StructType(carried.map(df.schema(_))).add("sh", ArrayType(StringType))
+    df.mapPartitions { it =>
+      val re = java.util.regex.Pattern.compile("[^\\p{L}]+")
+      it.map { r =>
+        // Locale.ROOT: default-locale lowercasing (tr-TR dotless-ı)
+        // would diverge from the oracle's locale-independent lower()
+        val toks = re.split(r.getString(textAt).toLowerCase(java.util.Locale.ROOT))
+          .filter(_.nonEmpty)
+        val sh =
+          if (toks.length >= 3) toks.sliding(3).map(_.mkString(" ")).toArray.distinct
+          else if (toks.nonEmpty) Array(toks.mkString(" "))
+          else Array.empty[String]
+        Row.fromSeq(carried.map(r.get) :+ sh.toSeq)
       }
-      .toDF("doc_id", "sh")
+    }(Encoders.row(out))
   }
+
+  /** (doc_id, sh) of every document, the kernel fanned out: small
+    * single-file inputs arrive as ONE scan partition.
+    */
+  private def docShingles(spark: SparkSession, dir: String): DataFrame =
+    withShingles(Kernels.fanOut(Tables.documents(spark, dir).select(col("doc_id"), col("text"))))
 
   /** Exact-Jaccard verification of candidate (doc_a, doc_b) pairs
     * against the full shingle sets, shared by [[ngramJaccard]] and
@@ -174,21 +175,36 @@ object Dedup {
     * the store dwarfs the batch is a bloom filter of store
     * fingerprints broadcast ahead of the anti join — same plan shape
     * with a map-side pre-filter, lossy only toward EXTRA anti-join
-    * work, never toward false drops.
+    * work, never toward false drops. The ingest stream runs the same
+    * body ([[firstSeen]]) over its micro-batches.
     */
-  def incremental(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(spark, dir)
-      .select(col("doc_id"),
-        md5(TextAnalysis.normalizedText(col("text"))).as("fp"),
-        split(col("doc_id")).as("split"))
-    val batch = docs.filter(col("split") < IncBatchThreshold)
-    val history = docs.filter(col("split") >= IncBatchThreshold)
-    batch.join(history.select("fp").distinct(), Seq("fp"), "left_anti")
+  def incremental(spark: SparkSession, dir: String): DataFrame =
+    firstSeen(ingestSplit(Tables.documents(spark, dir)), historyFps(spark, dir))
+      .orderBy("doc_id")
+
+  /** The new-ingest rows (doc_id, text) of a documents frame, static or
+    * streaming: the batch side of the [[split]].
+    */
+  private[graft] def ingestSplit(docs: DataFrame): DataFrame =
+    docs.filter(isBatch(col("doc_id"))).select(col("doc_id"), col("text"))
+
+  /** The history's distinct content fingerprints: the static store
+    * side of every exact incremental probe.
+    */
+  private[graft] def historyFps(spark: SparkSession, dir: String): DataFrame =
+    Tables.documents(spark, dir).filter(!isBatch(col("doc_id")))
+      .select(md5(TextAnalysis.normalizedText(col("text"))).as("fp")).distinct()
+
+  /** The body of [[incremental]] and its stream twin: batch rows
+    * (doc_id, text) anti-join the history fingerprints and fold to
+    * each first-seen fingerprint with its in-batch duplicate count.
+    */
+  private[graft] def firstSeen(batch: DataFrame, history: DataFrame): DataFrame =
+    batch.select(col("doc_id"), md5(TextAnalysis.normalizedText(col("text"))).as("fp"))
+      .join(history, Seq("fp"), "left_anti")
       .groupBy("fp")
       .agg(min("doc_id").as("doc_id"), count(lit(1)).as("n_batch_dups"))
       .select(col("doc_id"), col("fp"), col("n_batch_dups"))
-      .orderBy("doc_id")
-  }
 
   /** `dedup_incremental_bloom`: [[incremental]] with the accelerator
     * its docstring names, BUILT — a bloom filter over store
@@ -217,14 +233,13 @@ object Dedup {
     */
   def incrementalBloom(spark: SparkSession, dir: String): DataFrame = {
     import graft.functions.BloomFunctions
-    retirePreviousCaches()
     val docs = Tables.documents(spark, dir)
       .select(col("doc_id"),
         md5(TextAnalysis.normalizedText(col("text"))).as("fp"),
         split(col("doc_id")).as("split"))
     val batch = docs.filter(col("split") < IncBatchThreshold)
     // cached: feeds the bloom build AND the anti-join right side
-    val store = cacheTracked(docs.filter(col("split") >= IncBatchThreshold)
+    val store = Kernels.cacheTracked(docs.filter(col("split") >= IncBatchThreshold)
       .select("fp").distinct())
     // filter-sized driver value (the codebook contract), shipped back
     // into the probe as a binary literal so might_contain codegens
@@ -254,6 +269,16 @@ object Dedup {
 
   /** Span k-gram length for [[spanDedup]] (word tokens). */
   val SpanK = 8
+
+  /** The span-gram column [[spanDedup]] and its stream twin share: md5
+    * of each [[SpanK]]-token window of `toks`, in start order; empty
+    * below [[SpanK]] tokens.
+    */
+  private[graft] def spanGrams(toks: Column): Column =
+    when(size(toks) >= SpanK,
+      transform(sequence(lit(1), size(toks) - (SpanK - 1)),
+        i => md5(concat_ws(" ", slice(toks, i, lit(SpanK))))))
+      .otherwise(array().cast("array<string>"))
 
   /** `dedup_spans`: SPAN-level exact dedup — remove duplicated
     * [[SpanK]]-token spans from documents while keeping the corpus-wide
@@ -286,11 +311,7 @@ object Dedup {
     val docs = Tables.documents(spark, dir)
       .select(col("doc_id"), toksLower.as("toks"))
     val grams = docs
-      .select(col("doc_id"), posexplode(
-        when(size(col("toks")) >= k,
-          transform(sequence(lit(1), size(col("toks")) - (k - 1)),
-            i => md5(concat_ws(" ", slice(col("toks"), i, lit(k))))))
-          .otherwise(array().cast("array<string>"))).as(Seq("i", "fp")))
+      .select(col("doc_id"), posexplode(spanGrams(col("toks"))).as(Seq("i", "fp")))
       .select(col("doc_id"), (col("i") + 1).cast("long").as("s"), col("fp"))
     val dupStats = grams.groupBy("fp")
       .agg(count(lit(1)).as("cnt"),
@@ -343,9 +364,8 @@ object Dedup {
   // package-private so the plan audit inspects the BUILDER's join plan
   // (the public query serves the materialized checkpoint once built)
   private[graft] def buildNgramPairs(spark: SparkSession, dir: String): DataFrame = {
-    retirePreviousCaches()
     // cached: feeds the df-agg + prefix build AND the verify join sides
-    val shArr = cacheTracked(docShingles(spark, dir))
+    val shArr = Kernels.cacheTracked(docShingles(spark, dir))
     val ex = shArr.select(col("doc_id"), explode(col("sh")).as("s"))
     // global shingle document frequency: combiner-friendly, |vocab| rows
     val dfreq = ex.groupBy("s").agg(count(lit(1)).as("df"))
@@ -359,7 +379,7 @@ object Dedup {
     val prefixLen = (n - floor((n * 3 + 9) / 10) + 2).cast("int")
     // cached: the self-join's two sides carry distinct attribute ids, so
     // without a cache each side re-runs the explode+df-join+sort pipeline
-    val prefix = cacheTracked(ex.join(dfreq, "s")
+    val prefix = Kernels.cacheTracked(ex.join(dfreq, "s")
       .groupBy("doc_id")
       .agg(array_sort(collect_list(struct(col("df"), col("s")))).as("sorted"))
       .select(col("doc_id"), size(col("sorted")).as("nsh"),
@@ -663,7 +683,7 @@ object Dedup {
     * a boilerplate-ridden copy of the same article collide, keep the
     * clean one.
     *
-    * Shape: quality is the map-only [[TextAnalysis.qualityParts]]
+    * Shape: quality is the map-only [[TextAnalysis.quality]]
     * expression riding the document scan; the label frame (memoized
     * per corpus) joins it on doc_id and ONE combiner-friendly
     * aggregate picks the argmax via `max(struct(quality, -doc_id))` —
@@ -673,11 +693,8 @@ object Dedup {
     */
   def keepBest(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
-      .select(col("doc_id"), graft.operators.TextAnalysis.tokens(col("text")).as("toks"))
-    val (lenScore, diversity, stopScore) =
-      graft.operators.TextAnalysis.qualityParts(col("toks"))
-    val quality = docs.select(col("doc_id"),
-      round((lenScore + diversity + stopScore) / lit(3.0), 4).as("quality"))
+      .select(col("doc_id"), TextAnalysis.tokens(col("text")).as("toks"))
+    val quality = docs.select(col("doc_id"), TextAnalysis.quality(col("toks")).as("quality"))
     clusterLabels(spark, dir)
       .join(quality, "doc_id")
       .groupBy("cluster")
@@ -756,12 +773,12 @@ object Dedup {
     // materialization bypasses AQE coalescing, so the distinct would
     // otherwise pin `spark.sql.shuffle.partitions` near-empty
     // partitions that every round-0 stage inherits.
-    val nodes = cacheTracked(sym.select(col("doc_a").as("doc_id")).distinct()
+    val nodes = Kernels.cacheTracked(sym.select(col("doc_a").as("doc_id")).distinct()
       .repartition(sym.rdd.getNumPartitions, col("doc_id")))
     // labelsCache is the round's MATERIALIZED frame (cached for round
     // 0, localCheckpoint'ed — i.e. also lineage-cut — for every round
     // after); labels is the 2-column view of it the next round consumes
-    var labelsCache = cacheTracked(nodes.select(col("doc_id"), col("doc_id").as("label")))
+    var labelsCache = Kernels.cacheTracked(nodes.select(col("doc_id"), col("doc_id").as("label")))
     var labels = labelsCache
     // localCheckpoint persistence is RDD-level: Dataset.unpersist is a
     // NO-OP on a checkpointed frame (the CacheManager has no entry), so
@@ -785,7 +802,7 @@ object Dedup {
       // the round's cache and counts changes — no second join+count job
       // (col("label") inside the select is the INPUT label, i.e. the
       // previous round's — the alias doesn't shadow within one select)
-      val stepped = cacheTracked(
+      val stepped = Kernels.cacheTracked(
         labels.join(prop, col("doc_id") === col("pid"), "left")
           .select(col("doc_id"),
             least(col("label"), coalesce(col("nlabel"), col("label"))).as("label"),
@@ -920,14 +937,36 @@ object Dedup {
     explode(array((0 until MinHashBands).map(b =>
       struct(lit(b).as("band"), bandKey(b).as("bkey"))): _*))
 
-  /** One (doc_id, band, bkey) row per band of every signed doc: the LSH
-    * index rows both the full-corpus join and the incremental band
-    * store are built from.
+  /** One (doc_id, carried…, band, bkey) row per band of every signed
+    * doc: the LSH index rows both the full-corpus join and the
+    * incremental band store are built from.
     */
-  private def minHashBands(sigs: DataFrame): DataFrame =
+  private def minHashBands(sigs: DataFrame, carried: String*): DataFrame = {
+    val keep = ("doc_id" +: carried).map(col)
     sigs.filter(col("sig").isNotNull)
-      .select(col("doc_id"), bandRows.as("bk"))
-      .select(col("doc_id"), col("bk.band").as("band"), col("bk.bkey").as("bkey"))
+      .select(keep :+ bandRows.as("bk"): _*)
+      .select(keep :+ col("bk.band").as("band") :+ col("bk.bkey").as("bkey"): _*)
+  }
+
+  /** The signing kernel of every MinHash ingest path: (doc_id, text,
+    * carried…) → (doc_id, carried…, sig, shh, nsh) — the typed shingle
+    * loop ([[withShingles]]), the sorted xxhash64 shingle set the
+    * exact-Jaccard verify reads (`shh`, `nsh`) and the [[minHashSig]]
+    * signature, NULL for a shingle-less doc. Map-only and stateless:
+    * the batch queries run it over a fanned-out scan, the streams over
+    * a repartitioned micro-batch.
+    */
+  private[graft] def signed(docs: DataFrame): DataFrame =
+    minHashSig(withShingles(docs)
+      .withColumn("shh", sort_array(transform(col("sh"), s => xxhash64(s))))
+      .withColumn("nsh", size(col("sh"))))
+
+  /** [[signed]]'s band rows: one (doc_id, band, bkey, shh, nsh) row per
+    * band of every signed doc of (doc_id, text) — what the history band
+    * store holds and what each incremental probe sends against it.
+    */
+  private[graft] def bandRowsOf(docs: DataFrame): DataFrame =
+    minHashBands(signed(docs.select(col("doc_id"), col("text"))), "shh", "nsh")
 
   /** MinHash signature + banded LSH + exact-Jaccard verification.
     *
@@ -940,11 +979,10 @@ object Dedup {
     * band-collisions — the whole point vs. the O(n²) alternative.
     */
   def minHashLsh(spark: SparkSession, dir: String): DataFrame = {
-    retirePreviousCaches()
     // shArr and bands each feed two join sides; cache so the shingle +
     // signature pipeline runs once, not four times (4x wall measured)
-    val shArr = cacheTracked(docShingles(spark, dir))
-    val bands = cacheTracked(minHashBands(minHashSig(shArr)))
+    val shArr = Kernels.cacheTracked(docShingles(spark, dir))
+    val bands = Kernels.cacheTracked(minHashBands(minHashSig(shArr)))
     val cand = bands.as("x")
       .join(bands.as("y"), Seq("band", "bkey"))
       .filter(col("x.doc_id") < col("y.doc_id"))
@@ -965,43 +1003,62 @@ object Dedup {
     * smaller than the corpus).
     *
     * 100 TB shape: the batch/history split rides the scan (predicate on
-    * doc_id only; each doc is shingled and signed exactly once on one
-    * side); signatures are the map-only kernel; the store side reduces
-    * to (band, bkey, doc_id) rows — in production a pre-materialized,
-    * bucketed-by-bkey table that only APPENDS each ingest, here derived
-    * inline to stay self-contained; the probe join is batch-bands ×
+    * doc_id only); the batch is shingled and signed by the map-only
+    * kernel ([[bandRowsOf]]); the store side is the durable band store
+    * ([[ensureBandStore]]) — in production a bucketed-by-bkey table
+    * that only APPENDS each ingest; the probe join is batch-bands ×
     * store collisions only. History-history pairs are never generated —
     * the store is already deduplicated by construction.
     */
-  def incrementalMinHash(spark: SparkSession, dir: String): DataFrame = {
-    retirePreviousCaches()
-    val shArr = cacheTracked(docShingles(spark, dir))
-    val bands = cacheTracked(minHashBands(minHashSig(shArr))
-      .withColumn("split", split(col("doc_id"))))
-    val cand = bands.filter(col("split") < IncBatchThreshold).as("x")
-      .join(bands.filter(col("split") >= IncBatchThreshold).as("y"), Seq("band", "bkey"))
-      .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
-    verifyJaccard(shArr, cand).distinct()
-      .select(col("doc_a").as("batch_id"), col("doc_b").as("hist_id"), col("jaccard"))
+  def incrementalMinHash(spark: SparkSession, dir: String): DataFrame =
+    minHashProbe(bandRowsOf(Kernels.fanOut(ingestSplit(Tables.documents(spark, dir)))),
+      bandStore(spark, dir))
       .orderBy("batch_id", "hist_id")
+
+  /** The band-store probe of [[incrementalMinHash]] and its stream
+    * twin: batch band rows ([[bandRowsOf]]) equi-join the store's band
+    * index on (band, bkey), and each candidate joins ONE verify payload
+    * row of its history doc — every doc carries all [[MinHashBands]]
+    * band rows, so `band = 0` selects exactly one, a pushed-down scan
+    * predicate where a dropDuplicates(hist_id) would shuffle every
+    * stored shingle array to throw 3 of 4 copies away — keeping exact
+    * Jaccard ≥ 0.3. Multi-band collisions re-emit the same (pair,
+    * jaccard); the fold is the streaming-legal `distinct` (jaccard is a
+    * function of the pair, so min() is just the value).
+    */
+  private[graft] def minHashProbe(bands: DataFrame, store: DataFrame): DataFrame =
+    bands
+      .join(store.select("band", "bkey", "hist_id"), Seq("band", "bkey"))
+      .join(store.filter(col("band") === 0).select("hist_id", "h_shh", "h_nsh"), Seq("hist_id"))
+      .select(col("doc_id").as("batch_id"), col("hist_id"),
+        jaccard(bands.sparkSession, col("shh"), col("nsh"), col("h_shh"), col("h_nsh"))
+          .as("jaccard"))
+      .filter(col("jaccard") >= 0.3)
+      .groupBy("batch_id", "hist_id")
+      .agg(min("jaccard").as("jaccard"))
+
+  /** Exact Jaccard, rounded to 6dp as the oracle rounds it, of two
+    * sorted hashed shingle sets with their sizes: a batch doc's
+    * (`shh`, `nsh`) against a stored history doc's.
+    */
+  private[graft] def jaccard(spark: SparkSession, shh: Column, nsh: Column,
+      hShh: Column, hNsh: Column): Column = {
+    val common = graft.functions.VectorFunctions.overlap(spark, shh, hShh).cast("double")
+    round(common / ((nsh + hNsh).cast("double") - common), 6)
   }
 
-  /** Static sides of the STREAMING ingest twin
-    * ([[graft.streaming.DocStream.streamPipelineIngest]]): the
-    * historical split's MinHash band store carrying the hashed shingle
-    * set the Jaccard verify reads — in production a pre-materialized
-    * table bucketed by bkey that only appends per ingest (see
-    * [[incrementalMinHash]]); derived inline here to stay
-    * self-contained.
+  /** The history's MinHash band store (hist_id, band, bkey, h_shh,
+    * h_nsh), read from its durable artifact ([[ensureBandStore]]).
     */
+  private[graft] def bandStore(spark: SparkSession, dir: String): DataFrame =
+    Tables.parquet(spark, ensureBandStore(spark, dir))
+
   /** The band store MATERIALIZED to a fingerprinted durable artifact,
-    * built once per (corpus, JVM) — what the docstrings' "in
-    * production a pre-materialized table that only appends per
-    * ingest" means, made real for the streaming consumers: the stream
-    * twins read the artifact instead of re-deriving the history
-    * shingle + signature pipeline on every call. (The batch
-    * incremental queries keep deriving inline per their docstrings —
-    * they gate the derivation itself.)
+    * built once per (corpus, JVM) — what "in production a
+    * pre-materialized table that only appends per ingest" means, made
+    * real: every incremental MinHash probe, batch and stream, reads the
+    * artifact instead of re-deriving the history shingle + signature
+    * pipeline on every call.
     */
   private[graft] def ensureBandStore(spark: SparkSession, dir: String): String =
     Kernels.buildStore("graft-band-store", Kernels.inputKey(dir, "documents.parquet"))(
@@ -1022,19 +1079,11 @@ object Dedup {
         .option("maxRecordsPerFile", 16384)
         .parquet(_))
 
-  private[graft] def historyBandStore(spark: SparkSession, dir: String): DataFrame = {
-    val shArr = docShingles(spark, dir)
-      .withColumn("split", split(col("doc_id")))
-      .filter(col("split") >= IncBatchThreshold)
-      .select("doc_id", "sh")
-    val hashed = shArr.select(col("doc_id"),
-      sort_array(transform(col("sh"), s => xxhash64(s))).as("h_shh"),
-      size(col("sh")).as("h_nsh"))
-    minHashBands(minHashSig(shArr))
-      .join(hashed, "doc_id")
-      .select(col("doc_id").as("hist_id"),
-        col("band"), col("bkey"), col("h_shh"), col("h_nsh"))
-  }
+  private[graft] def historyBandStore(spark: SparkSession, dir: String): DataFrame =
+    bandRowsOf(Kernels.fanOut(Tables.documents(spark, dir)
+        .filter(!isBatch(col("doc_id"))).select(col("doc_id"), col("text"))))
+      .select(col("doc_id").as("hist_id"), col("band"), col("bkey"),
+        col("shh").as("h_shh"), col("nsh").as("h_nsh"))
 
   /** The capped celled embedding index (vec_id, cluster, sub, v, norm)
     * — the trained cells + [[capCells]] sub-split + precomputed norms,
@@ -1323,16 +1372,24 @@ object Dedup {
     * [[incrementalMinHash]]'s (batch_id, hist_id, score) shape.
     */
   def incrementalSemantic(spark: SparkSession, dir: String): DataFrame = {
+    val idx = cappedCelledIndex(spark, dir)
+    semanticProbe(idx.filter(isBatch(col("vec_id"))), idx).orderBy("batch_id", "hist_id")
+  }
+
+  /** The body of [[incrementalSemantic]] and its stream twin: batch
+    * rows of the celled index (vec_id, cluster, sub, v, norm) join the
+    * history rows of `idx` in the same (cluster, sub) and keep exact
+    * cosine ≥ [[CosineDupThreshold]].
+    */
+  private[graft] def semanticProbe(batch: DataFrame, idx: DataFrame): DataFrame = {
     import graft.functions.VectorFunctions.dot
-    val a = cappedCelledIndex(spark, dir).withColumn("split", split(col("vec_id")))
-    a.filter(col("split") < IncBatchThreshold).as("a")
-      .join(a.filter(col("split") >= IncBatchThreshold).as("b"),
+    batch.as("a")
+      .join(idx.filter(!isBatch(col("vec_id"))).as("b"),
         col("a.cluster") === col("b.cluster") && col("a.sub") === col("b.sub"))
       .select(col("a.vec_id").as("batch_id"), col("b.vec_id").as("hist_id"),
-        round(dot(spark, col("a.v"), col("b.v")) / (col("a.norm") * col("b.norm")), 6)
-          .as("cosine"))
+        round(dot(batch.sparkSession, col("a.v"), col("b.v")) /
+          (col("a.norm") * col("b.norm")), 6).as("cosine"))
       .filter(col("cosine") >= CosineDupThreshold)
-      .orderBy("batch_id", "hist_id")
   }
 
   val HyperplaneBits = 16
@@ -1372,8 +1429,7 @@ object Dedup {
     */
   def embeddingNearDupLsh(spark: SparkSession, dir: String): DataFrame = {
     import graft.functions.VectorFunctions.dot
-    retirePreviousCaches()
-    val emb = cacheTracked(
+    val emb = Kernels.cacheTracked(
       Kernels.fanOut(
         Tables.embeddings(spark, dir)
           .select(col("vec_id"), col("embedding").cast("array<double>").as("v")))
@@ -1439,7 +1495,6 @@ object Dedup {
     * key, not a different algorithm.
     */
   def simHashPairs(spark: SparkSession, dir: String): DataFrame = {
-    retirePreviousCaches()
     val bands = simHashBandRows(spark, dir, withSplit = false)
     val hamming = (bit_count(col("x.h1").bitwiseXOR(col("y.h1")))
       + bit_count(col("x.h2").bitwiseXOR(col("y.h2")))).cast("long")
@@ -1463,7 +1518,7 @@ object Dedup {
     val base = simHashSignatures(spark, dir)
       .withColumn("h1", conv(substring(col("simhash"), 1, 32), 2, 10).cast("long"))
       .withColumn("h2", conv(substring(col("simhash"), 33, 32), 2, 10).cast("long"))
-    val sigs = cacheTracked(
+    val sigs = Kernels.cacheTracked(
       if (withSplit) base.withColumn("split", split(col("doc_id"))) else base)
     val bandStructs = (0 until SimHashBands).map { b =>
       struct(lit(b).as("band"),
@@ -1490,7 +1545,6 @@ object Dedup {
     * history-history pairs are never generated.
     */
   def incrementalSimHash(spark: SparkSession, dir: String): DataFrame = {
-    retirePreviousCaches()
     val bands = simHashBandRows(spark, dir, withSplit = true)
     val hamming = (bit_count(col("x.h1").bitwiseXOR(col("y.h1")))
       + bit_count(col("x.h2").bitwiseXOR(col("y.h2")))).cast("long")

@@ -250,9 +250,11 @@ private[graft] object Kernels {
   }
 
   /** Blocking-unpersist one scope's tracked caches and checkpoint
-    * blocks, and delete its [[scopedStore]] dirs. Async unpersist would
-    * leave SF-sized blocks resident while the NEXT query runs,
-    * defeating the point of retiring them.
+    * blocks, and delete its [[scopedStore]] dirs together with the memo
+    * entries keyed on a path under them (a `parquet-schema` entry of a
+    * deleted dir could never hit again). Async unpersist would leave
+    * SF-sized blocks resident while the NEXT query runs, defeating the
+    * point of retiring them.
     */
   private def drainScope(s: Scope): Unit = s.synchronized {
     s.caches.foreach(_.unpersist(true))
@@ -264,6 +266,9 @@ private[graft] object Kernels {
     s.dirs.foreach { d =>
       tempStores.synchronized { tempStores -= d }
       rmTree(new java.io.File(d))
+      memos.synchronized {
+        memos.filterInPlace { case ((_, name), _) => name != d && !name.startsWith(s"$d/") }
+      }
     }
     s.dirs.clear()
   }
@@ -405,6 +410,10 @@ private[graft] object Kernels {
   }
 
   private val memos = scala.collection.mutable.Map.empty[(String, String), MemoSlot]
+
+  /** The names (key._1) of one memo kind's live entries. */
+  private[graft] def memoNames(kind: String): Seq[String] =
+    memos.synchronized { memos.keys.collect { case (`kind`, name) => name }.toSeq }
 
   /** The Datasets a memo value holds: itself, or a tuple's elements. */
   private def datasetsOf(v: AnyRef): Seq[Dataset[_]] = v match {

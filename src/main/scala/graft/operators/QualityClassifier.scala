@@ -117,7 +117,7 @@ object QualityClassifier {
       round(stopScore - Center, 6).as("x3"),
       round(least(col("n_chars").cast("double") / lit(2000.0), lit(1.0)) - Center, 6)
         .as("x4"),
-      when(round((lenScore + diversity + stopScore) / lit(3.0), 4) >= 0.5, 1.0)
+      when(TextAnalysis.quality(col("toks")) >= 0.5, 1.0)
         .otherwise(0.0).as("y"))
   }
 

@@ -283,7 +283,7 @@ object Sampling {
     * (clean data early, the standard curriculum/annealing recipe),
     * hash-shuffled within a band so a band is not source- or
     * id-ordered. Composes the shared quality expression
-    * ([[TextAnalysis.qualityParts]] — bit-identical to
+    * ([[TextAnalysis.quality]] — bit-identical to
     * `quality_score`) with [[exportShuffle]]'s shard/pos contract:
     * same per-shard windows (scale: |corpus|/shards rows each, never a
     * global sort), same deterministic md5 order, so a trainer reading
@@ -295,11 +295,9 @@ object Sampling {
   def exportCurriculum(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
       .select(col("doc_id"), TextAnalysis.tokens(col("text")).as("toks"))
-    val (lenScore, diversity, stopScore) = TextAnalysis.qualityParts(col("toks"))
     val h = saltedHash("cur", col("doc_id"))
     val q = docs
-      .select(col("doc_id"),
-        round((lenScore + diversity + stopScore) / lit(3.0), 4).as("quality"))
+      .select(col("doc_id"), TextAnalysis.quality(col("toks")).as("quality"))
       .withColumn("band",
         least(floor(col("quality") * CurriculumBands).cast("long"),
           lit(CurriculumBands - 1)))

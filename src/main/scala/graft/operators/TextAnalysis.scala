@@ -121,7 +121,7 @@ object TextAnalysis {
         round(lenScore, 4).as("len_score"),
         round(diversity, 4).as("diversity"),
         round(stopScore, 4).as("stop_score"),
-        round((lenScore + diversity + stopScore) / lit(3.0), 4).as("quality"))
+        quality(col("toks")).as("quality"))
       .orderBy("doc_id")
   }
 
@@ -204,11 +204,10 @@ object TextAnalysis {
   def qualityBins(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
       .select(col("doc_id"), tokens(col("text")).as("toks"))
-    val (lenScore, diversity, stopScore) = qualityParts(col("toks"))
     // cached: q feeds the decile-boundary build AND the final bin
     // assignment — uncached, the corpus would tokenize + score TWICE
     val q = graft.operators.Kernels.cacheTracked(docs.select(col("doc_id"),
-        round((lenScore + diversity + stopScore) / lit(3.0), 4).as("quality"))
+        quality(col("toks")).as("quality"))
       .withColumn("qi", round(col("quality") * 10000, 0).cast("long")))
     // cumulative counts over the qi grid (≤ 10001 rows) as a TWO-LEVEL
     // distributed prefix sum, so no unpartitioned window ever plans:
@@ -243,9 +242,9 @@ object TextAnalysis {
   }
 
   /** The three component scores over a materialized token array —
-    * shared by [[qualityScore]] and the streaming quality filter
-    * ([[graft.streaming.DocStream.streamQuality]]) so batch and stream
-    * compute bit-identical values.
+    * shared by [[quality]], [[qualityScore]]'s component columns and the
+    * classifier features, so batch and stream compute bit-identical
+    * values.
     */
   def qualityParts(toks: Column): (Column, Column, Column) = {
     val nTok = size(toks).cast("double")
@@ -254,6 +253,15 @@ object TextAnalysis {
     val stopHits = size(filter(toks, t => t.isin(StopwordsEn: _*))).cast("double")
     val stopScore = least(stopHits / greatest(nTok, lit(1.0)) * lit(5.0), lit(1.0))
     (lenScore, diversity, stopScore)
+  }
+
+  /** The closed-form quality score in [0,1] over a materialized token
+    * array: the mean of [[qualityParts]] rounded to 4dp — the one
+    * expression every quality gate, batch or stream, computes.
+    */
+  def quality(toks: Column): Column = {
+    val (lenScore, diversity, stopScore) = qualityParts(toks)
+    round((lenScore + diversity + stopScore) / lit(3.0), 4)
   }
 
   val StopwordsEn: Seq[String] =

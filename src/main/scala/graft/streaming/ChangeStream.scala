@@ -3,7 +3,6 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 import graft.operators.Relational
 
@@ -17,11 +16,6 @@ import graft.operators.Relational
   * for the oracle gate only.
   */
 object ChangeStream {
-
-  private val ordersSchema = StructType(Seq(
-    StructField("o_orderkey", LongType), StructField("o_custkey", LongType),
-    StructField("o_orderstatus", StringType), StructField("o_totalprice", DoubleType),
-    StructField("o_orderdate", TimestampType), StructField("o_orderpriority", StringType)))
 
   /** One micro-batch of maintenance: compact the batch to its latest
     * change per key (the window runs on a BOUNDED batch, never on the
@@ -83,9 +77,7 @@ object ChangeStream {
     */
   def streamCdcMerge(spark: SparkSession, dir: String): DataFrame = {
     var target = graft.operators.Kernels.trackedCheckpoint(baseStore(spark, dir))
-    val changes = Relational.cdcChangeLog(
-      spark.readStream.schema(ordersSchema)
-        .option("pathGlobFilter", "orders.parquet").parquet(dir))
+    val changes = Relational.cdcChangeLog(graft.Tables.stream(spark, dir, "orders"))
     // the merge's exchanges are batch-sized: give them the state width
     Streams.drainBatches(changes, Streams.stateWidth(spark)) { (batch, _) =>
       // the new store materializes eagerly FROM the old one, so the

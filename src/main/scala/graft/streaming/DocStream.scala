@@ -3,7 +3,6 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
-import org.apache.spark.sql.types._
 
 import graft.operators.{Dedup, Kernels, Multimodal, Store, TextAnalysis}
 
@@ -12,13 +11,32 @@ import graft.operators.{Dedup, Kernels, Multimodal, Store, TextAnalysis}
   * [[EventStream]]: file-stream source over the static parquet, drained
   * through [[Streams]] (result drains or per-batch store appends) for
   * the oracle gate only.
+  *
+  * One source, one body: every operator here reads its table through
+  * [[graft.Tables.stream]], and each ingest twin runs its batch
+  * operator's body over the micro-batches — the body the batch query
+  * runs over the static split ([[graft.operators.Dedup.firstSeen]],
+  * [[graft.operators.Dedup.minHashProbe]],
+  * [[graft.operators.Dedup.semanticProbe]],
+  * [[graft.operators.Corpus.ingestOf]], the media
+  * [[graft.operators.Multimodal.incrementalPairs]]). Only the source
+  * preparation differs: a batch query fans its scan out with
+  * [[Kernels.fanOut]], which reads `ds.rdd` and so cannot take a
+  * stream, and a stream repartitions its micro-batch explicitly.
   */
 object DocStream {
 
-  private val documentsSchema = StructType(Seq(
-    StructField("doc_id", LongType), StructField("text", StringType),
-    StructField("lang", StringType), StructField("source", StringType),
-    StructField("n_chars", LongType)))
+  /** The new-ingest rows (doc_id, text) of the documents stream. */
+  private def newDocs(spark: SparkSession, dir: String): DataFrame =
+    Dedup.ingestSplit(graft.Tables.stream(spark, dir, "documents"))
+
+  /** `df` spread over the session's parallelism: the file source
+    * delivers ONE input partition per file, which would run per-doc
+    * kernels single-threaded (an explicit repartition is
+    * streaming-legal and independent of the state-sized shuffle conf).
+    */
+  private def spread(df: DataFrame): DataFrame =
+    df.repartition(df.sparkSession.sparkContext.defaultParallelism)
 
   /** Streaming exact dedup on continuous ingest: the content
     * fingerprint (same md5-of-normalized-text as [[graft.operators.Dedup.exact]])
@@ -35,10 +53,7 @@ object DocStream {
     * uniqueness for a dedup horizon.
     */
   def streamDedup(spark: SparkSession, dir: String): DataFrame = {
-    val fps = spark.readStream
-      .schema(documentsSchema)
-      .option("pathGlobFilter", "documents.parquet") // file source needs a dir
-      .parquet(dir)
+    val fps = graft.Tables.stream(spark, dir, "documents")
       .select(md5(TextAnalysis.normalizedText(col("text"))).as("fp"))
       .dropDuplicates("fp")
     Streams.drain(fps, OutputMode.Append(), Streams.stateWidth(spark))
@@ -72,10 +87,7 @@ object DocStream {
     * batch distinct.
     */
   def streamDedupWatermark(spark: SparkSession, dir: String): DataFrame = {
-    val fps = spark.readStream
-      .schema(documentsSchema)
-      .option("pathGlobFilter", "documents.parquet")
-      .parquet(dir)
+    val fps = graft.Tables.stream(spark, dir, "documents")
       .select(md5(TextAnalysis.normalizedText(col("text"))).as("fp"),
         timestamp_seconds(lit(WatermarkBaseEpoch)
           + col("doc_id") % WatermarkSpanSecs).as("ts"))
@@ -94,33 +106,18 @@ object DocStream {
     * fingerprint store of the existing corpus per micro-batch — the
     * store is a TABLE maintained by previous ingests, never shuffled
     * into stream state — and a streaming aggregation keeps each
-    * first-seen batch fingerprint with its in-batch duplicate count.
+    * first-seen batch fingerprint with its in-batch duplicate count —
+    * the batch query's own body ([[graft.operators.Dedup.firstSeen]]).
     * This is the production ingest topology for exact dedup: state is
     * bounded by the BATCH's fingerprints (the aggregation), while the
     * arbitrarily-large store stays on the static side. Complete-mode
     * output equals the batch query bit-for-bit, so the SAME oracle
     * gates both.
     */
-  def streamIncrementalDedup(spark: SparkSession, dir: String): DataFrame = {
-    val fpOf = md5(TextAnalysis.normalizedText(col("text")))
-    val splitOf = Dedup.split(col("doc_id"))
-    val store = graft.Tables.documents(spark, dir)
-      .select(fpOf.as("fp"), splitOf.as("split"))
-      .filter(col("split") >= Dedup.IncBatchThreshold)
-      .select("fp").distinct()
-    val batch = spark.readStream
-      .schema(documentsSchema)
-      .option("pathGlobFilter", "documents.parquet")
-      .parquet(dir)
-      .select(col("doc_id"), fpOf.as("fp"), splitOf.as("split"))
-      .filter(col("split") < Dedup.IncBatchThreshold)
-    val deduped = batch.join(store, Seq("fp"), "left_anti")
-      .groupBy("fp")
-      .agg(min("doc_id").as("doc_id"), count(lit(1)).as("n_batch_dups"))
-      .select(col("doc_id"), col("fp"), col("n_batch_dups"))
-    Streams.drain(deduped, OutputMode.Complete(), Streams.stateWidth(spark))
+  def streamIncrementalDedup(spark: SparkSession, dir: String): DataFrame =
+    Streams.drain(Dedup.firstSeen(newDocs(spark, dir), Dedup.historyFps(spark, dir)),
+        OutputMode.Complete(), Streams.stateWidth(spark))
       .orderBy("doc_id")
-  }
 
   /** `stream_dedup_spans`: the INGEST-stream twin of
     * [[graft.operators.Dedup.spanDedup]], closing the last batch-only
@@ -129,7 +126,8 @@ object DocStream {
     * [[streamIncrementalDedup]] stream-STATIC topology, span-level: the
     * store is a table of the history's distinct gram fingerprints
     * (bucketed-by-fp in production, never stream state), the stream
-    * side explodes grams map-side, left-joins the store, and one
+    * side explodes grams map-side (the batch operator's gram column,
+    * [[graft.operators.Dedup.spanGrams]]), left-joins the store, and one
     * bounded streaming aggregation folds each doc's hits back into a
     * span report: n_spans probed, n_dup_spans already in history, and
     * the sorted start positions — the mask a downstream writer applies
@@ -146,32 +144,17 @@ object DocStream {
     * split, so the DuckDB replay gates it exactly.
     */
   def streamSpanDedup(spark: SparkSession, dir: String): DataFrame = {
-    val k = Dedup.SpanK
     val toksOf = TextAnalysis.tokens(lower(col("text")))
-    val splitOf = Dedup.split(col("doc_id"))
-    def gramsOf(toks: org.apache.spark.sql.Column) =
-      when(size(toks) >= k,
-        transform(sequence(lit(1), size(toks) - (k - 1)),
-          i => md5(concat_ws(" ", slice(toks, i, lit(k))))))
-        .otherwise(array().cast("array<string>"))
     val store = graft.Tables.documents(spark, dir)
-      .select(toksOf.as("toks"), splitOf.as("split"))
-      .filter(col("split") >= Dedup.IncBatchThreshold)
-      .select(explode(gramsOf(col("toks"))).as("fp"))
+      .filter(!Dedup.isBatch(col("doc_id")))
+      .select(toksOf.as("toks"))
+      .select(explode(Dedup.spanGrams(col("toks"))).as("fp"))
       .distinct()
       .withColumn("hit", lit(true))
-    val batchGrams = spark.readStream
-      .schema(documentsSchema)
-      .option("pathGlobFilter", "documents.parquet")
-      .parquet(dir)
-      .select(col("doc_id"), col("text"), splitOf.as("split"))
-      .filter(col("split") < Dedup.IncBatchThreshold)
-      // one input partition per file would run the tokenize + gram
-      // explode single-threaded (see streamIncrementalMinHash)
-      .repartition(spark.sparkContext.defaultParallelism)
+    val batchGrams = spread(newDocs(spark, dir))
       .select(col("doc_id"), toksOf.as("toks"))
       .select(col("doc_id"), size(col("toks")).cast("long").as("n_tokens"),
-        posexplode_outer(gramsOf(col("toks"))).as(Seq("i", "fp")))
+        posexplode_outer(Dedup.spanGrams(col("toks"))).as(Seq("i", "fp")))
       .select(col("doc_id"), col("n_tokens"),
         (col("i") + 1).cast("long").as("s"), col("fp"))
     val report = batchGrams
@@ -186,103 +169,37 @@ object DocStream {
       .orderBy("doc_id")
   }
 
-  private val embeddingsSchema = StructType(Seq(
-    StructField("vec_id", LongType),
-    StructField("embedding", ArrayType(FloatType)),
-    StructField("label", IntegerType)))
-
   /** `stream_incremental_minhash`: the INGEST-stream twin of
     * [[graft.operators.Dedup.incrementalMinHash]], completing the
-    * streaming incremental family for near-dups (exact and spans were
-    * covered; the band-store probe was batch-only). Newly-arriving
-    * documents compute shingles + MinHash bands map-side (the
-    * declarative twins of the batch kernels — bit-identical, the
-    * [[streamPipelineIngest]] contract), probe the HISTORICAL band
-    * store per micro-batch — a stream-STATIC equi-join on (band,
-    * bkey); the store is a bucketed table in production, never stream
-    * state — and verify collisions with the exact hashed-shingle
-    * Jaccard inline in the join's projection. The only STATE is the
-    * per-pair fold (a band collision can emit the same pair up to
-    * 4×), bounded by the BATCH's verified pair count — orders of
-    * magnitude below the corpus. Complete-mode output equals the
-    * batch query bit-for-bit, so the SAME oracle gates both.
+    * streaming incremental family for near-dups: newly-arriving
+    * documents are shingled and signed map-side by the batch query's
+    * band-row kernel ([[graft.operators.Dedup.bandRowsOf]] — the typed
+    * shingle loop and signature kernel, stateless `mapPartitions`) and
+    * probe the HISTORICAL band store per micro-batch through the batch
+    * query's own probe ([[graft.operators.Dedup.minHashProbe]]) — a
+    * stream-STATIC equi-join on (band, bkey) against the durable store
+    * artifact, never stream state. The only STATE is the probe's
+    * per-pair fold (a band collision can emit the same pair up to 4×),
+    * bounded by the BATCH's verified pair count. Complete-mode output
+    * equals the batch query bit-for-bit, so the SAME oracle gates both.
+    *
+    * The store is read, not cached: each probe projects a different
+    * slim slice, and parquet column pruning at the scan beats caching
+    * full rows. No broadcast hints: the store is CORPUS-sized in
+    * production, and hinting the BATCH side broadcast measured SLOWER —
+    * building the candidate broadcast serializes the two store scans
+    * instead of pipelining them. The join strategy matters though: the
+    * micro-batch planner (no AQE in streaming) picks SortMergeJoin,
+    * which SORTS the store's band index and array payload per batch;
+    * [[Streams.HashJoins]] around the drain keeps the same exchanges
+    * but drops both corpus-side sorts.
     */
-  def streamIncrementalMinHash(spark: SparkSession, dir: String): DataFrame = {
-    // the DURABLE band-store artifact (built once per corpus/JVM, the
-    // production pre-materialized table): the drain's per-batch probes
-    // read stored rows, never re-run the history shingle + signature
-    // pipeline. Deliberately NOT cached: each probe below projects a
-    // different slim slice, and parquet column pruning at the scan
-    // (the band index never reads the shingle arrays) beats caching
-    // full rows — materializing the cache cost a whole-table pass of
-    // the array payload that a one-batch drain reads back only once
-    val store = graft.Tables.parquet(spark, Dedup.ensureBandStore(spark, dir))
-    val toksLower = filter(
-      split(lower(col("text")), TextAnalysis.TokenSplitRe), t => length(t) > 0)
-    val splitOf = Dedup.split(col("doc_id"))
-    // signature via the batch's typed byte-level kernel (stateless
-    // mapPartitions — streaming-legal); the earlier declarative
-    // 16×md5-per-shingle expression made this the slowest bench query
-    val batchBands = Dedup.minHashSig(
-      spark.readStream
-        .schema(documentsSchema)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(dir)
-        .select(col("doc_id"), col("text"), splitOf.as("split"))
-        .filter(col("split") < Dedup.IncBatchThreshold)
-        // the file source delivers ONE input partition per file, which
-        // would run the shingle + signature kernels single-threaded; an
-        // explicit repartition (streaming-legal, independent of the
-        // state-sized shuffle conf) restores batch parallelism for the
-        // per-doc compute
-        .repartition(spark.sparkContext.defaultParallelism)
-        .withColumn("sh", Dedup.shingles(toksLower, 3))
-        .filter(size(col("sh")) > 0) // shingle-less docs have no signature
-        .select(col("doc_id"), col("sh"),
-          sort_array(transform(col("sh"), s => xxhash64(s))).as("shh"),
-          size(col("sh")).as("nsh")))
-      .select(col("doc_id"), col("shh"), col("nsh"), Dedup.bandRows.as("bk"))
-      .select(col("doc_id"), col("bk.band").as("band"), col("bk.bkey").as("bkey"),
-        col("shh"), col("nsh"))
-    val common = graft.functions.VectorFunctions
-      .overlap(spark, col("shh"), col("h_shh")).cast("double")
-    val sz = (col("nsh") + col("h_nsh")).cast("double")
-    // the static side joins in two SLIM stages — the band index (3
-    // small columns) finds candidates, then ONE verify payload row per
-    // history doc joins by id (carrying the hashed shingle arrays
-    // through the ×4 band explode instead quadrupled the join payload
-    // for nothing). No broadcast hints: the store is CORPUS-sized in
-    // production (a bucketed table whose shuffle the bucketing
-    // pre-pays; the batch side is the small side either way), a store
-    // broadcast would cap the design at driver memory, and hinting the
-    // BATCH side broadcast measured SLOWER — building the candidate
-    // broadcast serializes the two store scans instead of pipelining
-    // them. The join strategy matters though: the micro-batch planner
-    // (no AQE in streaming) picks SortMergeJoin, which SORTS the
-    // store's band index and array payload per batch; preferring
-    // hash joins (set around the drain below) keeps the same
-    // exchanges but drops both corpus-side sorts.
-    val pairs = batchBands
-      .join(store.select("band", "bkey", "hist_id"), Seq("band", "bkey"))
-      // one verify-payload row per history doc: every doc carries all
-      // MinHashBands band rows, so `band = 0` selects exactly one — a
-      // PUSHED-DOWN scan predicate, where a dropDuplicates(hist_id)
-      // would shuffle every stored shingle array just to throw 3 of
-      // every 4 copies away
-      .join(store.filter(col("band") === 0)
-        .select("hist_id", "h_shh", "h_nsh"), Seq("hist_id"))
-      .select(col("doc_id").as("batch_id"), col("hist_id"),
-        round(common / (sz - common), 6).as("jaccard"))
-      .filter(col("jaccard") >= 0.3)
-      // multi-band collisions re-emit the same (pair, jaccard): the fold
-      // is the streaming `distinct()` — jaccard is functionally
-      // dependent on the pair, so min() is just the value
-      .groupBy("batch_id", "hist_id")
-      .agg(min("jaccard").as("jaccard"))
-    Streams.drain(pairs, OutputMode.Complete(),
-        Streams.stateWidth(spark) ++ Streams.HashJoins)
+  def streamIncrementalMinHash(spark: SparkSession, dir: String): DataFrame =
+    Streams.drain(
+        Dedup.minHashProbe(Dedup.bandRowsOf(spread(newDocs(spark, dir))),
+          Dedup.bandStore(spark, dir)),
+        OutputMode.Complete(), Streams.stateWidth(spark) ++ Streams.HashJoins)
       .orderBy("batch_id", "hist_id")
-  }
 
   /** `stream_incremental_semantic`: the INGEST-stream twin of
     * [[graft.operators.Dedup.incrementalSemantic]] — the last
@@ -295,8 +212,10 @@ object DocStream {
     * OWN row in that index (a stream-static join on vec_id — the
     * ingest job that maintains the index assigned the batch vector its
     * cell in the same pass, so the probe reads the assignment rather
-    * than recomputing it) then equi-joins history candidates on
-    * (cluster, sub) with the exact cosine ≥ threshold inline. Fully
+    * than recomputing it) then runs the batch query's own probe
+    * ([[graft.operators.Dedup.semanticProbe]]: one equi-join of
+    * history candidates on (cluster, sub), exact cosine ≥ threshold
+    * inline). Fully
     * STATELESS — two stream-static joins, no aggregation: each batch
     * vector arrives in exactly one micro-batch and its cell membership
     * is unique, so append-mode emission is already duplicate-free.
@@ -304,29 +223,12 @@ object DocStream {
     * both.
     */
   def streamIncrementalSemantic(spark: SparkSession, dir: String): DataFrame = {
-    import graft.functions.VectorFunctions.dot
-    val splitOf = Dedup.split(col("vec_id"))
-    val idx = Kernels.cacheTracked(
-      Dedup.cappedCelledIndex(spark, dir).withColumn("split", splitOf))
-    val history = idx.filter(col("split") >= Dedup.IncBatchThreshold)
-      .select(col("vec_id").as("hist_id"), col("cluster"), col("sub"),
-        col("v").as("hv"), col("norm").as("hn"))
-    val batchIdx = idx.filter(col("split") < Dedup.IncBatchThreshold)
-      .select(col("vec_id"), col("cluster"), col("sub"),
-        col("v").as("bv"), col("norm").as("bn"))
-    val pairs = spark.readStream
-      .schema(embeddingsSchema)
-      .option("pathGlobFilter", "embeddings.parquet")
-      .parquet(dir)
+    val idx = Kernels.cacheTracked(Dedup.cappedCelledIndex(spark, dir))
+    val batch = graft.Tables.stream(spark, dir, "embeddings")
       .select(col("vec_id"))
-      .filter(splitOf < Dedup.IncBatchThreshold)
-      .join(batchIdx, "vec_id")
-      .join(history, Seq("cluster", "sub"))
-      .select(col("vec_id").as("batch_id"), col("hist_id"),
-        round(dot(spark, col("bv"), col("hv")) / (col("bn") * col("hn")), 6)
-          .as("cosine"))
-      .filter(col("cosine") >= Dedup.CosineDupThreshold)
-    Streams.drain(pairs, OutputMode.Append())
+      .filter(Dedup.isBatch(col("vec_id")))
+      .join(idx.filter(Dedup.isBatch(col("vec_id"))), "vec_id")
+    Streams.drain(Dedup.semanticProbe(batch, idx), OutputMode.Append())
       .orderBy("batch_id", "hist_id")
   }
 
@@ -334,20 +236,16 @@ object DocStream {
     * documents on the batch side of the [[graft.operators.Dedup.split]],
     * synthesized into container payloads by the batch ingest's own
     * [[graft.operators.Multimodal.payloadOf]] — the one streaming source
-    * of the media twins. `glob` and `filesPerTrigger` let a spec drive
-    * a multi-file copy of the corpus one file per trigger.
+    * of the media twins. `files` and `filesPerTrigger` let a spec drive
+    * a multi-file copy of the corpus one file per trigger
+    * ([[graft.Tables.stream]]).
     */
-  private def payloadStream(spark: SparkSession, srcDir: String,
-      glob: String = "documents.parquet",
-      filesPerTrigger: Option[Int] = None): DataFrame = {
-    val reader = spark.readStream
-      .schema(documentsSchema)
-      .option("pathGlobFilter", glob)
-    filesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n.toString))
-    reader.parquet(srcDir)
+  private def payloadStream(spark: SparkSession, dir: String,
+      files: Option[(String, String)] = None,
+      filesPerTrigger: Option[Int] = None): DataFrame =
+    graft.Tables.stream(spark, dir, "documents", files, filesPerTrigger)
       .filter(Dedup.isBatch(col("doc_id")))
       .select(col("doc_id"), Multimodal.payloadOf(col("text")).as("payload"))
-  }
 
   /** A media near-dup stream twin: newly-arriving media probes the
     * HISTORICAL signatures per micro-batch. The history's trained
@@ -399,101 +297,22 @@ object DocStream {
     streamProbe(spark, dir, Multimodal.Frame)
 
   /** STREAMING FLAGSHIP — [[graft.operators.Corpus.ingest]] run as a
-    * continuous stream: the full per-batch ingest composition (quality
-    * gate → exact dedup vs the historical fingerprint store → MinHash
-    * near-dup probe vs the historical band store → first-seen batch
-    * aggregation) with every stage in its streaming-legal shape, and
-    * the result bit-identical to the batch composition, so the SAME
-    * oracle gates both.
-    *
-    * Why each stage is stateless (the whole design):
-    *  - quality + fingerprint + MinHash signatures are per-row
-    *    projections (the declarative [[graft.operators.Dedup.shingles]]
-    *    twin of the batch kernel) — they ride the micro-batch scan;
-    *  - exact dedup is a stream-STATIC anti join on the fp store;
-    *  - the near-dup probe is FOUR stream-static anti joins, one per
-    *    band, each an equi-join on that band's key with the exact
-    *    Jaccard (`graft_overlap` on the hashed shingle sets, ≥ 0.3) as
-    *    the residual condition — an anti join per band is exactly "drop
-    *    the doc if ANY band collides and verifies", and the band store
-    *    is probed the way production probes a bucketed-by-bkey table;
-    *  - the only STATE is the final first-seen aggregation, bounded by
-    *    the batch's distinct fingerprints (as [[streamIncrementalDedup]]).
-    *
-    * Pre-agg filter placement is safe because every dropped row's fp
-    * group drops WITH it: same fp ⟹ same normalized text ⟹ same
-    * letter-run tokens ⟹ same shingles, quality, bands and Jaccard —
-    * so per-group counts (`n_batch_dups`) are unchanged, which is what
-    * makes the batch oracle replay the stream bit-for-bit.
+    * continuous stream: the batch query's own body
+    * ([[graft.operators.Corpus.ingestOf]] — quality gate, exact dedup
+    * vs the historical fingerprint store, MinHash near-dup probe vs the
+    * historical band store, first-seen aggregation), which is
+    * streaming-legal by construction: every stage is a per-row
+    * projection or a stream-STATIC anti join, and the only STATE is the
+    * final first-seen aggregation, bounded by the batch's distinct
+    * fingerprints (as [[streamIncrementalDedup]]). The result equals
+    * the batch query, so the SAME oracle gates both.
     */
-  def streamPipelineIngest(spark: SparkSession, dir: String): DataFrame = {
-    import graft.operators.Corpus
-    val fpOf = md5(TextAnalysis.normalizedText(col("text")))
-    val splitOf = Dedup.split(col("doc_id"))
-    // static sides — in production: materialized store tables appended
-    // per ingest; cached because four band probes (and every
-    // micro-batch) re-read them
-    val fpStore = graft.Tables.documents(spark, dir)
-      .select(fpOf.as("fp"), splitOf.as("split"))
-      .filter(col("split") >= Dedup.IncBatchThreshold)
-      .select("fp").distinct()
-    val bandStore = Kernels.cacheTracked(
-      graft.Tables.parquet(spark, Dedup.ensureBandStore(spark, dir)))
-
-    val (lenScore, diversity, stopScore) = TextAnalysis.qualityParts(col("toks"))
-    val toksLower = filter(
-      split(lower(col("text")), TextAnalysis.TokenSplitRe), t => length(t) > 0)
-
-    val batch = spark.readStream
-      .schema(documentsSchema)
-      .option("pathGlobFilter", "documents.parquet")
-      .parquet(dir)
-      .select(col("doc_id"), col("text"), fpOf.as("fp"), splitOf.as("split"))
-      .filter(col("split") < Dedup.IncBatchThreshold)
-      // restore batch parallelism for the per-doc compute (the file
-      // source yields one input partition per file) — the
-      // streamIncrementalMinHash lesson
-      .repartition(spark.sparkContext.defaultParallelism)
-      .withColumn("toks", TextAnalysis.tokens(col("text")))
-      .withColumn("quality",
-        round((lenScore + diversity + stopScore) / lit(3.0), 4))
-      .filter(col("quality") >= Corpus.TrainQualityMin)
-      .withColumn("sh", Dedup.shingles(toksLower, 3))
-      .withColumn("shh", sort_array(transform(col("sh"), s => xxhash64(s))))
-      .withColumn("nsh", size(col("sh")))
-      .select("doc_id", "fp", "quality", "sh", "shh", "nsh")
-    // signatures in the typed kernel (reused digest — the declarative
-    // 16×md5-per-shingle expression was the measured bottleneck here,
-    // exactly as in the standalone stream probe); shingle-less docs
-    // keep NULL band keys, which never match a store row — the
-    // expression form's `when(size > 0, …)` semantics
-    val withBands = (0 until Dedup.MinHashBands)
-      .foldLeft(Dedup.minHashSig(batch)) { (df, b) =>
-        df.withColumn(s"bk$b", when(col("nsh") > 0, Dedup.bandKey(b)))
-      }
-      .select((Seq("doc_id", "fp", "quality", "shh", "nsh") ++
-        (0 until Dedup.MinHashBands).map(b => s"bk$b")).map(col): _*)
-
-    val exactDeduped = withBands.join(fpStore, Seq("fp"), "left_anti")
-    val nearDeduped = (0 until Dedup.MinHashBands).foldLeft(exactDeduped) { (df, b) =>
-      val hb = bandStore.filter(col("band") === b).as(s"h$b")
-      val common = graft.functions.VectorFunctions
-        .overlap(spark, col("shh"), col(s"h$b.h_shh")).cast("double")
-      val sz = (col("nsh") + col(s"h$b.h_nsh")).cast("double")
-      df.join(hb,
-        col(s"bk$b") === col(s"h$b.bkey") &&
-          round(common / (sz - common), 6) >= 0.3,
-        "left_anti")
-    }
-    val result = nearDeduped
-      .groupBy("fp")
-      .agg(min("doc_id").as("doc_id"), count(lit(1)).as("n_batch_dups"),
-        min("quality").as("quality"))
-      .select("doc_id", "fp", "n_batch_dups", "quality")
-
-    Streams.drain(result, OutputMode.Complete(), Streams.stateWidth(spark))
+  def streamPipelineIngest(spark: SparkSession, dir: String): DataFrame =
+    Streams.drain(
+        graft.operators.Corpus.ingestOf(spread(newDocs(spark, dir)),
+          Dedup.historyFps(spark, dir), Dedup.bandStore(spark, dir)),
+        OutputMode.Complete(), Streams.stateWidth(spark))
       .orderBy("doc_id")
-  }
 
   val QualityThreshold = 0.5
 
@@ -514,15 +333,10 @@ object DocStream {
     * sink with checkpointing.
     */
   private[graft] def qualityStreamFrame(spark: SparkSession, dir: String): DataFrame = {
-    val toks = TextAnalysis.tokens(col("text"))
-    val (lenScore, diversity, stopScore) = TextAnalysis.qualityParts(col("toks"))
-    spark.readStream
-      .schema(documentsSchema)
-      .option("pathGlobFilter", "documents.parquet")
-      .parquet(dir)
-      .select(col("doc_id"), toks.as("toks")) // materialize tokens once (no CSE)
-      .select(col("doc_id"),
-        round((lenScore + diversity + stopScore) / lit(3.0), 4).as("quality"))
+    graft.Tables.stream(spark, dir, "documents")
+      // materialize tokens once (no CSE)
+      .select(col("doc_id"), TextAnalysis.tokens(col("text")).as("toks"))
+      .select(col("doc_id"), TextAnalysis.quality(col("toks")).as("quality"))
       .filter(col("quality") >= QualityThreshold)
   }
 
@@ -547,12 +361,8 @@ object DocStream {
   def streamQualityClassifier(spark: SparkSession, dir: String): DataFrame = {
     import graft.operators.QualityClassifier
     val head = QualityClassifier.storedHead(spark, dir)
-    val stream = spark.readStream
-      .schema(documentsSchema)
-      .option("pathGlobFilter", "documents.parquet")
-      .parquet(dir)
     val scored = QualityClassifier.scoreFrame(
-      QualityClassifier.featuresOf(stream), head)
+      QualityClassifier.featuresOf(graft.Tables.stream(spark, dir, "documents")), head)
     Streams.drain(scored, OutputMode.Append())
       .orderBy("doc_id")
   }
@@ -601,10 +411,7 @@ object DocStream {
     */
   private def ingestSearchStore(spark: SparkSession, dir: String): String = {
     val root = Kernels.scopedStore("graft-stream-index")
-    Streams.drainBatches(spark.readStream
-      .schema(documentsSchema)
-      .option("pathGlobFilter", "documents.parquet")
-      .parquet(dir)
+    Streams.drainBatches(graft.Tables.stream(spark, dir, "documents")
       .select(col("doc_id"), col("text"))) { (batch, bid) =>
       appendSearchBatch(batch, bid, root)
     }
@@ -709,10 +516,7 @@ object DocStream {
     // the ingest itself, not a rebuild of the trained store.
     val base = ProductQuant.ensureHistoryArtifact(spark, dir)
     val delta = Kernels.scopedStore("graft-stream-ann")
-    Streams.drainBatches(spark.readStream
-      .schema(embeddingsSchema)
-      .option("pathGlobFilter", "embeddings.parquet")
-      .parquet(dir)
+    Streams.drainBatches(graft.Tables.stream(spark, dir, "embeddings")
       .select(col("vec_id"), col("embedding"))
       .filter(Dedup.isBatch(col("vec_id")))) { (batch, bid) =>
       ProductQuant.appendBatchToIndex(batch, bid, base, delta)
@@ -902,7 +706,7 @@ object DocStream {
     // sorting the store per batch; hash joins keep the exchanges but
     // drop the sorts (the streamIncrementalMinHash drain's measured
     // trick)
-    Streams.drainBatches(payloadStream(spark, srcDir, glob, filesPerTrigger),
+    Streams.drainBatches(payloadStream(spark, dir, Some((srcDir, glob)), filesPerTrigger),
       Streams.HashJoins) { (batch, bid) =>
       if (!processed.isEmpty && processed.get(processed.size - 1) >= bid) {
         // replayed, fully-committed batch — skip (idempotence)
@@ -993,10 +797,7 @@ object DocStream {
     Graph.ensureKnnDirectedHistory(spark, dir, Dedup.IncBatchThreshold)
     mark("hist_artifact")
     val tmp = Kernels.scopedStore("graft-stream-knn")
-    Streams.drainBatches(spark.readStream
-      .schema(embeddingsSchema)
-      .option("pathGlobFilter", "embeddings.parquet")
-      .parquet(dir)
+    Streams.drainBatches(graft.Tables.stream(spark, dir, "embeddings")
       .select(col("vec_id"))
       .filter(Dedup.isBatch(col("vec_id")))) { (batch, bid) =>
       Graph.appendBatchToKnn(batch, bid, dir, tmp)

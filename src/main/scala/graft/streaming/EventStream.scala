@@ -3,7 +3,6 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-import org.apache.spark.sql.types._
 
 /** Per-user running totals kept in the streaming state store (money in
   * integer cents: exact and independent of value arrival order).
@@ -31,9 +30,9 @@ case class KmvEstimate(event_type: String, n_rows: Long, est_users: Long)
   *
   * The reference is strictly batch (SURVEY.md §2.5: no streaming), so
   * these are north-star capability extensions: the same queries
-  * declared over `readStream`, runnable unchanged against a live file/
-  * Kafka source. For the oracle gate each runs against the static
-  * events parquet via the file stream source and drains through
+  * declared over a stream source, runnable unchanged against a live
+  * file/Kafka source. For the oracle gate each runs against the static
+  * events parquet via [[graft.Tables.stream]] and drains through
   * [[Streams]], which returns a scan of the batches it wrote into a
   * query-scoped parquet dir; production would `writeStream` to a
   * durable sink. Results
@@ -42,28 +41,16 @@ case class KmvEstimate(event_type: String, n_rows: Long, est_users: Long)
   */
 object EventStream {
 
-  /** Stream twin of [[graft.Tables.events]]: a file stream source needs
-    * its schema up front, so probe the parquet footer for the actual
-    * `ts` encoding (raw nanos long / TIMESTAMP_NTZ micros / TIMESTAMP
-    * micros — the driver has regenerated the file across all three) and
-    * normalize through the SAME type dispatch as the batch loader. A
+  /** Stream twin of [[graft.Tables.events]]: the events stream source
+    * under the file's own schema ([[graft.Tables.stream]]), normalized
+    * through the SAME `ts` type dispatch as the batch loader. A
     * hardcoded schema here once turned a driver-side nanos→micros
     * re-encode into silently-1000×-early event times (every window,
-    * watermark and session gap wrong, no error) — the footer probe +
-    * shared normalizer is the fix, pinned by `EventsEncodingSpec`.
+    * watermark and session gap wrong, no error) — the shared schema
+    * memo + shared normalizer is the fix, pinned by `EventsEncodingSpec`.
     */
-  private[graft] def readEventsStream(spark: SparkSession, dir: String): DataFrame = {
-    val tsType = graft.Tables.eventsRawTsType(spark, dir)
-    val schema = StructType(Seq(
-      StructField("event_id", LongType), StructField("ts", tsType),
-      StructField("user_id", LongType), StructField("event_type", StringType),
-      StructField("value", DoubleType), StructField("props", StringType)))
-    graft.Tables.normalizeEventTs(
-      spark.readStream
-        .schema(schema)
-        .option("pathGlobFilter", "events.parquet") // file source needs a dir
-        .parquet(dir))
-  }
+  private[graft] def readEventsStream(spark: SparkSession, dir: String): DataFrame =
+    graft.Tables.normalizeEventTs(graft.Tables.stream(spark, dir, "events"))
 
   /** Target state-store keys per stateful shuffle partition. Each
     * partition owns a state-store instance with per-batch checkpoint

@@ -281,6 +281,37 @@ class KernelsScopeSpec extends AnyFunSuite {
     }
   }
 
+  test("a dedup operator leaves the caller's pins on its thread alone") {
+    import spark.implicits._
+    // no operator retires on entry: a frame the caller pinned before the
+    // call is part of the caller's query and stays cached through the
+    // operator's build and action, until the caller's own retire
+    val mine = Kernels.cacheTracked((1 to 10).toDF("z"))
+    assert(mine.count() == 10)
+    graft.operators.Dedup.minHashLsh(spark, SparkTestSession.Sf).count()
+    assert(mine.storageLevel != StorageLevel.NONE,
+      "Dedup.minHashLsh unpersisted a frame its caller pinned")
+    Kernels.retireCaches()
+    assert(mine.storageLevel == StorageLevel.NONE, "the caller's retire must drop its pin")
+  }
+
+  test("retire drops the memo entries of the scoped dirs it deletes") {
+    // stream_bm25_index reads its per-call store through Tables.parquet,
+    // which memoizes each path's schema; the retire that deletes the
+    // store's dir must take those entries with it
+    def entries = Kernels.memoNames("parquet-schema")
+      .filter(_.contains("/graft-stream-index-")).toSet
+    val before = entries
+    for (call <- 1 to 2) {
+      graft.streaming.DocStream.streamSearchIndex(spark, SparkTestSession.Sf).collect()
+      val live = entries -- before
+      assert(live.nonEmpty, s"call $call read no store path through the schema memo")
+      Kernels.retireCaches()
+      assert((entries & live).isEmpty,
+        s"call $call's retire left memo entries of its deleted dir: ${entries & live}")
+    }
+  }
+
   test("bloom sizing clamps to the session's runtime maxNumBits") {
     import graft.functions.BloomFunctions
     val maxBits = spark.conf

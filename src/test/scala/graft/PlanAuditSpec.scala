@@ -1601,6 +1601,16 @@ class PlanAuditSpec extends AnyFunSuite {
       s"a parquet read outside Tables — use Tables.parquet:\n${hits.mkString("\n")}")
   }
 
+  test("stream-source audit: only Tables opens a stream source") {
+    // `Tables.stream` reads a table under its batch read's memoized
+    // schema; a `readStream` elsewhere needs a hand-written schema (14
+    // sites and 4 such schemas existed before), and one events schema
+    // once read event times 1000x too early with no error
+    val hits = sourceHitsOutside(Seq("src/main/scala/graft/Tables.scala"), Seq("readStream"))
+    assert(hits.isEmpty,
+      s"a stream source outside Tables — use Tables.stream:\n${hits.mkString("\n")}")
+  }
+
   test("multimodal kernels: map-only over a pruned scan, no joins at all") {
     // features / resize-exec / frame-bytes are one decode-kernel pass
     // per payload: the plan must be scan -> synth -> mapPartitions ->
