@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-import graft.functions.{DotProduct, OverlapCount, TopKByScore}
+import graft.functions.{DotProduct, ExactDecimalRule, OverlapCount, TopKByScore}
 
 /** The library's `SparkSessionExtensions` entry point — the deployment
   * surface for clusters: `--conf spark.sql.extensions=graft.GraftExtensions`
@@ -15,6 +15,13 @@ import graft.functions.{DotProduct, OverlapCount, TopKByScore}
   * [[graft.functions.VectorFunctions.dot]] keeps its idempotent
   * runtime registration as a fallback so ad-hoc sessions built without
   * the conf still work.
+  *
+  * It also installs [[graft.functions.ExactDecimalRule]], which computes
+  * double→decimal casts, decimal products and batch decimal sums on
+  * longs. The rule is result-identical (it falls back to Spark's own
+  * expression wherever it cannot prove the same result, nulls and
+  * errors included), so it is not a knob: no conf turns it off, and
+  * every session built through [[GraftSession]] plans with it.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -49,5 +56,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       (exprs: Seq[Expression]) =>
         org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(
           exprs(0), exprs(1))))
+    ext.injectOptimizerRule(_ => ExactDecimalRule)
   }
 }

@@ -14,7 +14,10 @@ import org.apache.spark.sql.SparkSession
   *  - session timezone pinned UTC — the NTZ-encoding normalization and
   *    every date_trunc/window boundary depend on it matching DuckDB.
   *  - `graft.GraftExtensions` — registers the codegen'd SQL functions
-  *    (graft_dot, graft_overlap, graft_topk) queries assume exist.
+  *    (graft_dot, graft_overlap, graft_topk) queries assume exist, and
+  *    the exact-decimal optimizer rule. The rule is result-identical to
+  *    Spark's decimal casts, products and sums, so it is not a knob:
+  *    only the time a money query takes depends on it.
   *
   * Every `main` runs on [[deployment]] and wraps each query in
   * [[step]]; tests and the benchmark harness build through [[builder]]

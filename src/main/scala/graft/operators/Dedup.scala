@@ -355,10 +355,10 @@ object Dedup {
   // product consumed by two query families (the pair listing and the
   // component loop) — memoized per input and localCheckpoint'ed so the
   // session pays the prefix-filtered join once, and the builder's
-  // SF-sized caches retire the moment the checkpoint materializes.
+  // SF-sized caches are released the moment the checkpoint materializes.
   private def ngramPairs(spark: SparkSession, dir: String): DataFrame =
     Kernels.memo("dedup-pairs", Kernels.inputKey(dir, "documents.parquet")) {
-      val out = buildNgramPairs(spark, dir).localCheckpoint(); retireCaches(); out
+      Kernels.releasing(buildNgramPairs(spark, dir).localCheckpoint())
     }
 
   // package-private so the plan audit inspects the BUILDER's join plan
@@ -446,12 +446,10 @@ object Dedup {
       // twin).
       val edges = ngramPairs(spark, dir).select(col("doc_a"), col("doc_b"))
       val docs = Tables.documents(spark, dir).select(col("doc_id"))
-      val labels = clustersFromEdges(docs, edges).localCheckpoint()
       // the checkpoint is the materializing action: the loop's own
       // caches are dead weight from here on — free them immediately
       // instead of waiting for the caller's retirement
-      retireCaches()
-      labels
+      Kernels.releasing(clustersFromEdges(docs, edges).localCheckpoint())
     }
 
   /** The dedup END PRODUCT: one row per SURVIVING document — each
@@ -637,8 +635,8 @@ object Dedup {
     val histEdges = edges.filter(!isBatch(col("doc_a")) && !isBatch(col("doc_b")))
     // materialized + lineage-cut: the base state is an input to the
     // merge, not part of its plan (production reads it from parquet)
-    val histLabels = clustersFromEdges(histDocs, histEdges).localCheckpoint()
-    retireCaches() // the history component loop's caches are dead now
+    // the history component loop's caches are dead once it is checkpointed
+    val histLabels = Kernels.releasing(clustersFromEdges(histDocs, histEdges).localCheckpoint())
     val batchDocs = docs.filter(isBatch(col("doc_id")))
     val batchEdges = edges.filter(isBatch(col("doc_a")) || isBatch(col("doc_b")))
     (histLabels, batchDocs, batchEdges)

@@ -34,10 +34,11 @@ private[graft] object Kernels {
   // Tracked-cache registry, scoped PER CALLING THREAD (≈ per query:
   // every query builds its pipeline, runs its action and retires on
   // one thread — Verify/Bench/the streaming wrappers all do). The
-  // scope boundary is what makes mid-query retires safe under
-  // concurrency: Dedup.splitState drains ITS OWN loop's caches between
-  // building the base state and the merge; with a global registry that
-  // drop would unpersist a concurrently-running query's pinned frames.
+  // scope boundary is what makes mid-query releases safe under
+  // concurrency: Dedup.splitState releases ITS OWN loop's caches
+  // ([[releasing]]) between building the base state and the merge;
+  // with a global registry that drop would unpersist a
+  // concurrently-running query's pinned frames.
   // Contract per scope unchanged: BUILD one pipeline, EXECUTE its
   // action, then retire (Bench/Verify call Dedup.retireCaches after
   // every query).
@@ -238,14 +239,30 @@ private[graft] object Kernels {
     // until-retire entries leave before their caches drain — both are
     // global, and one without the other either orphans pinned blocks or
     // leaves a memo of unpersisted frames. An entry still building is
-    // kept: its build registers its cache after this drain (a build may
-    // itself retire, as Dedup's pair build does).
+    // kept: its build registers its cache after this drain.
     memos.synchronized {
       memos.filterInPlace { case (_, s) => !s.untilRetire || s.value == null }
     }
     memoCaches.synchronized {
       memoCaches.foreach(_.unpersist(true))
       memoCaches.clear()
+    }
+  }
+
+  /** Runs `build` in a scope of its own and drains that scope when the
+    * build returns or throws: a memo build that materializes its
+    * product (an eager checkpoint) releases the caches, checkpoint
+    * blocks and dirs it pinned on the way, and nothing the calling
+    * query pinned, nor any memo.
+    */
+  def releasing[T](build: => T): T = {
+    val outer = scope.get
+    val own = new Scope
+    scope.set(own)
+    try build
+    finally {
+      scope.set(outer)
+      drainScope(own)
     }
   }
 

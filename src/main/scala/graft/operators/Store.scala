@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.{LongType, StructType}
 
 import graft.Tables
 
@@ -30,11 +31,17 @@ object Store {
       .parquet(bidDir(root, table, bid))
 
   /** The rows of `table` from the batches with bids strictly between
-    * `after` and `before`; its partition columns stay prunable.
+    * `after` and `before`; its partition columns stay prunable. A
+    * caller that knows the `schema` its batches were written with (the
+    * batch frame's) passes it, and the read runs no footer-read job;
+    * otherwise the path's schema is inferred once ([[Tables.parquet]]).
     */
   def read(spark: SparkSession, root: String, table: String,
-      after: Long = Long.MinValue, before: Long = Long.MaxValue): DataFrame = {
-    val all = Tables.parquet(spark, dir(root, table))
+      after: Long = Long.MinValue, before: Long = Long.MaxValue,
+      schema: Option[StructType] = None): DataFrame = {
+    val path = dir(root, table)
+    val all = schema.fold(Tables.parquet(spark, path))(s =>
+      spark.read.schema(s.add("bid", LongType)).parquet(path))
     all.filter(all("bid") > after && all("bid") < before).drop("bid")
   }
 
@@ -61,12 +68,13 @@ object Store {
   /** Compacts an appended `table` to `f` of its rows: written to a `_c`
     * sibling under the newest bid, then swapped into the table's place,
     * so later batches append beside it. Run it between drains: a replay
-    * of the newest bid would replace every compacted row.
+    * of the newest bid would replace every compacted row. `schema` is
+    * [[read]]'s.
     */
-  def rewrite(spark: SparkSession, root: String, table: String)(
-      f: DataFrame => DataFrame): Unit = {
+  def rewrite(spark: SparkSession, root: String, table: String,
+      schema: Option[StructType] = None)(f: DataFrame => DataFrame): Unit = {
     val staged = s"${dir(root, table)}_c"
-    f(read(spark, root, table)).write.mode("overwrite")
+    f(read(spark, root, table, schema = schema)).write.mode("overwrite")
       .parquet(s"$staged/bid=${bids(root, table).last}")
     Kernels.rmTree(new java.io.File(dir(root, table)))
     require(new java.io.File(staged).renameTo(new java.io.File(dir(root, table))),

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
+import org.apache.spark.sql.types.StructType
 
 import graft.operators.{Dedup, Kernels, Multimodal, Store, TextAnalysis}
 
@@ -392,30 +393,35 @@ object DocStream {
     * spec can replay several ingests against one store without a
     * streaming source that happens to split batches that way.
     */
-  private[graft] def appendSearchBatch(batch: DataFrame, bid: Long, root: String): Unit = {
+  private[graft] def appendSearchBatch(batch: DataFrame, bid: Long, root: String): Unit =
+    searchTables(batch).foreach { case (table, rows) => Store.append(root, table, bid)(rows) }
+
+  /** The (table, rows) pairs one batch of (doc_id, text) appends. */
+  private def searchTables(batch: DataFrame): Seq[(String, DataFrame)] = {
     val toked = batch
       .repartition(batch.sparkSession.sparkContext.defaultParallelism)
       .select(col("doc_id"),
         TextAnalysis.tokens(lower(col("text"))).as("toks"))
-    Store.append(root, "doclen", bid)(
-      toked.select(col("doc_id"), size(col("toks")).cast("long").as("dl")))
-    Store.append(root, "postings", bid)(toked
-      .select(col("doc_id"), size(col("toks")).cast("long").as("dl"),
-        explode(col("toks")).as("term"))
-      .groupBy("doc_id", "dl", "term")
-      .agg(count(lit(1)).as("tf")))
+    Seq(
+      "doclen" -> toked.select(col("doc_id"), size(col("toks")).cast("long").as("dl")),
+      "postings" -> toked
+        .select(col("doc_id"), size(col("toks")).cast("long").as("dl"),
+          explode(col("toks")).as("term"))
+        .groupBy("doc_id", "dl", "term")
+        .agg(count(lit(1)).as("tf")))
   }
 
   /** Runs the ingest stream over `dir`, appending each micro-batch
-    * into a fresh [[Kernels.scopedStore]]; returns the store root.
+    * into a fresh [[Kernels.scopedStore]]; returns the store root and
+    * each table's schema as every batch writes it (the batch body over
+    * the stream source), so reading the store infers nothing.
     */
-  private def ingestSearchStore(spark: SparkSession, dir: String): String = {
+  private def ingestSearchStore(spark: SparkSession, dir: String)
+      : (String, Map[String, StructType]) = {
     val root = Kernels.scopedStore("graft-stream-index")
-    Streams.drainBatches(graft.Tables.stream(spark, dir, "documents")
-      .select(col("doc_id"), col("text"))) { (batch, bid) =>
-      appendSearchBatch(batch, bid, root)
-    }
-    root
+    val docs = graft.Tables.stream(spark, dir, "documents").select(col("doc_id"), col("text"))
+    Streams.drainBatches(docs) { (batch, bid) => appendSearchBatch(batch, bid, root) }
+    (root, searchTables(docs).map { case (table, rows) => table -> rows.schema }.toMap)
   }
 
   /** BM25 serve over a (postings, doclen) store —
@@ -427,25 +433,29 @@ object DocStream {
     * OVER (PARTITION BY term)` window, whose single-task partition
     * buffer a stopword term would blow up at scale), corpus stats from
     * the doc-length table (NOT the postings: a token-less doc has no
-    * postings but still counts toward N).
+    * postings but still counts toward N). `schemas` holds the tables'
+    * write schemas when the caller knows them ([[Store.read]]).
     */
-  private[graft] def serveBm25(spark: SparkSession, root: String): DataFrame = {
+  private[graft] def serveBm25(spark: SparkSession, root: String,
+      schemas: Map[String, StructType] = Map.empty): DataFrame = {
     import graft.operators.Retrieval
     import spark.implicits._
     val qterms = Retrieval.Queries
       .flatMap { case (qid, t) => t.split(" ").map(w => (qid, w)) }
       .toDF("query_id", "term")
-    val stats = Store.read(spark, root, "doclen")
+    val stats = Store.read(spark, root, "doclen", schema = schemas.get("doclen"))
       .agg(count(lit(1)).as("n_docs"), sum("dl").as("total_tokens"))
-    val matchedTf = Store.read(spark, root, "postings")
+    val matchedTf = Store.read(spark, root, "postings", schema = schemas.get("postings"))
       .join(broadcast(qterms.select("term").distinct()), Seq("term"), "leftsemi")
     val dfT = matchedTf.groupBy("term").agg(count(lit(1)).as("df"))
     val matched = matchedTf.join(broadcast(dfT), "term")
     Retrieval.bm25Score(matched, stats, qterms)
   }
 
-  def streamSearchIndex(spark: SparkSession, dir: String): DataFrame =
-    serveBm25(spark, ingestSearchStore(spark, dir))
+  def streamSearchIndex(spark: SparkSession, dir: String): DataFrame = {
+    val (root, schemas) = ingestSearchStore(spark, dir)
+    serveBm25(spark, root, schemas)
+  }
 
   /** Compacted-store file budget: postings are rewritten into this
     * many term-hash buckets (term-sorted within each), doc lengths
@@ -469,10 +479,12 @@ object DocStream {
     * ([[Store.rewrite]]'s swap), so the disk footprint never stays
     * doubled.
     */
-  private[graft] def compactSearchStore(spark: SparkSession, root: String): Unit = {
-    Store.rewrite(spark, root, "postings")(
+  private[graft] def compactSearchStore(spark: SparkSession, root: String,
+      schemas: Map[String, StructType] = Map.empty): Unit = {
+    Store.rewrite(spark, root, "postings", schemas.get("postings"))(
       _.repartition(SearchStoreBuckets, col("term")).sortWithinPartitions("term", "doc_id"))
-    Store.rewrite(spark, root, "doclen")(_.repartition(SearchStoreBuckets, col("doc_id")))
+    Store.rewrite(spark, root, "doclen", schemas.get("doclen"))(
+      _.repartition(SearchStoreBuckets, col("doc_id")))
   }
 
   /** `stream_bm25_compact`: the maintained search index COMPACTED
@@ -486,9 +498,9 @@ object DocStream {
     * the same BM25 oracle gates it (spec-pinned file-count bound too).
     */
   def streamSearchIndexCompacted(spark: SparkSession, dir: String): DataFrame = {
-    val root = ingestSearchStore(spark, dir)
-    compactSearchStore(spark, root)
-    serveBm25(spark, root)
+    val (root, schemas) = ingestSearchStore(spark, dir)
+    compactSearchStore(spark, root, schemas)
+    serveBm25(spark, root, schemas)
   }
 
   /** `stream_ann_maintain`: the streaming twin of

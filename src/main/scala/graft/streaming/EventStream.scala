@@ -106,14 +106,16 @@ object EventStream {
   /** Streaming hourly rollup, complete mode (the streaming twin of
     * Events.hourlyRollup — same result set once drained).
     */
-  def hourlyRollup(spark: SparkSession, dir: String): DataFrame = {
-    val agg = readEventsStream(spark, dir)
+  def hourlyRollup(spark: SparkSession, dir: String): DataFrame =
+    Streams.drain(hourlyAggregate(spark, dir), OutputMode.Complete(), Streams.stateWidth(spark))
+      .orderBy("hour", "event_type")
+
+  /** [[hourlyRollup]]'s undrained stream: the state operator's plan. */
+  private[graft] def hourlyAggregate(spark: SparkSession, dir: String): DataFrame =
+    readEventsStream(spark, dir)
       .groupBy(date_trunc("hour", col("ts")).as("hour"), col("event_type"))
       .agg(count(lit(1)).as("n_events"),
            sum(col("value").cast("decimal(18,2)")).cast("double").as("total_value"))
-    Streams.drain(agg, OutputMode.Complete(), Streams.stateWidth(spark))
-      .orderBy("hour", "event_type")
-  }
 
   /** Arbitrary stateful aggregation with `mapGroupsWithState`: running
     * per-user totals kept in the state store across micro-batches.

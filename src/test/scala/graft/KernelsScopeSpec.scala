@@ -295,15 +295,31 @@ class KernelsScopeSpec extends AnyFunSuite {
     assert(mine.storageLevel == StorageLevel.NONE, "the caller's retire must drop its pin")
   }
 
+  test("a dedup memo build releases only what it pinned") {
+    // a fresh copy of the corpus is a new memo key, so the pair and label
+    // builds run inside this call and release their own caches there
+    val dir = SparkTestSession.tmpDir("graft-dedup-release")
+    java.nio.file.Files.copy(
+      java.nio.file.Path.of(SparkTestSession.Sf, "documents.parquet"),
+      dir.resolve("documents.parquet"))
+    val mine = Kernels.cacheTracked(spark.range(10).toDF("z"))
+    assert(mine.count() == 10)
+    graft.operators.Dedup.clusters(spark, dir.toString).count()
+    assert(mine.storageLevel != StorageLevel.NONE,
+      "a Dedup memo build unpersisted a frame its caller pinned")
+    Kernels.retireCaches()
+    assert(mine.storageLevel == StorageLevel.NONE, "the caller's retire must drop its pin")
+  }
+
   test("retire drops the memo entries of the scoped dirs it deletes") {
-    // stream_bm25_index reads its per-call store through Tables.parquet,
-    // which memoizes each path's schema; the retire that deletes the
-    // store's dir must take those entries with it
+    // stream_sketch_maintain reads its per-call store through
+    // Tables.parquet, which memoizes each path's schema; the retire that
+    // deletes the store's dir must take those entries with it
     def entries = Kernels.memoNames("parquet-schema")
-      .filter(_.contains("/graft-stream-index-")).toSet
+      .filter(_.contains("/graft-stream-sketch-")).toSet
     val before = entries
     for (call <- 1 to 2) {
-      graft.streaming.DocStream.streamSearchIndex(spark, SparkTestSession.Sf).collect()
+      graft.streaming.EventStream.streamSketchMaintain(spark, SparkTestSession.Sf).collect()
       val live = entries -- before
       assert(live.nonEmpty, s"call $call read no store path through the schema memo")
       Kernels.retireCaches()

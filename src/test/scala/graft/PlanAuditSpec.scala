@@ -437,6 +437,84 @@ class PlanAuditSpec extends AnyFunSuite {
     assert(p.contains("partial_"), "map-side partial aggregation expected")
   }
 
+  test("exact decimals: the money queries plan no double→decimal cast and no decimal Sum") {
+    import org.apache.spark.sql.catalyst.expressions.Cast
+    import org.apache.spark.sql.catalyst.expressions.aggregate.Sum
+    import org.apache.spark.sql.types.{DecimalType, DoubleType}
+    for (name <- Seq("q1_pricing_summary", "q3_shipping_priority", "rollup_orders")) {
+      val optimized = SparkEntry.queries(name)(spark, sf).queryExecution.optimizedPlan
+      val exprs = optimized.flatMap(_.expressions).flatMap(_.collect { case e => e })
+      val casts = exprs.collect {
+        case c @ Cast(child, _: DecimalType, _, _) if child.dataType == DoubleType => c
+      }
+      val sums = exprs.collect { case s: Sum if s.child.dataType.isInstanceOf[DecimalType] => s }
+      assert(casts.isEmpty, s"$name keeps double→decimal casts: ${casts.take(3)}")
+      assert(sums.isEmpty, s"$name keeps decimal sums: ${sums.take(3)}")
+      assert(exprs.exists(_.isInstanceOf[graft.functions.LongDecimalSum]),
+        s"$name sums nothing on longs:\n$optimized")
+    }
+  }
+
+  test("exact decimals: q1's scan and partial aggregate stay in one codegen stage") {
+    import org.apache.spark.sql.catalyst.expressions.aggregate.Partial
+    import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+    import org.apache.spark.sql.execution.{ColumnarToRowExec, FileSourceScanExec, InputAdapter,
+      SparkPlan, WholeStageCodegenExec}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.aggregate.HashAggregateExec
+    import graft.functions.{ExactDecimalMultiply, ExactDoubleToDecimal, LongDecimalSum}
+    // an expression that falls back to interpretation splits the stage
+    for (c <- Seq(classOf[ExactDoubleToDecimal], classOf[ExactDecimalMultiply], classOf[LongDecimalSum]))
+      assert(!classOf[CodegenFallback].isAssignableFrom(c), s"${c.getSimpleName} is CodegenFallback")
+    val df = Relational.q1PricingSummary(spark, sf)
+    df.collect()
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => nodes(q.plan)
+      case _ => p.children.flatMap(nodes)
+    })
+    // one stage's operators: down to, not past, its input boundaries
+    def fused(p: SparkPlan): Seq[SparkPlan] =
+      p +: (p match { case _: InputAdapter => Nil; case _ => p.children.flatMap(fused) })
+    val stages = nodes(df.queryExecution.executedPlan).collect { case w: WholeStageCodegenExec => fused(w.child) }
+    val partial = stages.find(_.exists {
+      case h: HashAggregateExec => h.aggregateExpressions.exists(_.mode == Partial)
+      case _ => false
+    })
+    assert(partial.isDefined, s"no codegen stage holds the partial aggregate:\n${plan(df)}")
+    assert(partial.get.exists {
+      case c: ColumnarToRowExec => c.exists(_.isInstanceOf[FileSourceScanExec])
+      case _ => false
+    }, s"the scan is not in the partial aggregate's stage:\n${plan(df)}")
+    assert(partial.get.exists(_.expressions.exists(_.exists(_.isInstanceOf[LongDecimalSum]))),
+      s"the partial aggregate does not sum on longs:\n${plan(df)}")
+  }
+
+  test("exact decimals: stream_hourly's state operator keeps Spark's Sum") {
+    import org.apache.spark.sql.catalyst.expressions.aggregate.Sum
+    import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
+    import org.apache.spark.sql.execution.aggregate.HashAggregateExec
+    import org.apache.spark.sql.execution.streaming.operators.stateful.StateStoreSaveExec
+    import org.apache.spark.sql.streaming.Trigger
+    import org.apache.spark.sql.types.DecimalType
+    val ckpt = SparkTestSession.tmpDir("graft-hourly-plan")
+    val q = graft.streaming.EventStream.hourlyAggregate(spark, sf).writeStream
+      .outputMode("complete").format("noop").trigger(Trigger.AvailableNow())
+      .option("checkpointLocation", ckpt.toString).start()
+    try q.awaitTermination() finally q.stop()
+    val executed = q.asInstanceOf[StreamingQueryWrapper].streamingQuery.lastExecution.executedPlan
+    val saves = executed.collect { case s: StateStoreSaveExec => s }
+    assert(saves.nonEmpty, s"no state operator:\n$executed")
+    val fns = executed.collect { case h: HashAggregateExec => h }
+      .flatMap(_.aggregateExpressions.map(_.aggregateFunction))
+    assert(fns.exists(_.isInstanceOf[Sum]), s"the stateful aggregate lost Spark's Sum: $fns")
+    assert(!fns.exists(_.isInstanceOf[graft.functions.LongDecimalSum]),
+      "a streaming aggregate's buffer is its state schema: it must keep Spark's Sum")
+    // the stored rows still carry Sum's decimal buffer
+    assert(saves.head.child.output.exists(a => a.name == "sum" && a.dataType == DecimalType(28, 2)),
+      s"state schema changed: ${saves.head.child.output}")
+  }
+
   test("q6: every predicate reaches the parquet scan; one partial-agg pass") {
     val p = plan(Relational.q6ForecastRevenue(spark, sf))
     assert(p.contains("PushedFilters:") && p.contains("l_quantity") &&
