@@ -1440,7 +1440,7 @@ object SparkEntry {
     // can only bind on corpora the DuckDB oracle never runs against.
     // MATERIALIZED is load-bearing: DuckDB inlines plain CTEs, and
     // l$i references s$i twice — inlined, the plan grows ~3x per round
-    // (3^16 copies), the exact blowup the Spark loop's localCheckpoint
+    // (3^16 copies), the exact blowup the Spark loop's Kernels.cut
     // cuts. Materializing each round keeps the oracle plan linear.
     val lpRounds = (1 to 16).map { i =>
       val prev = s"l${i - 1}"

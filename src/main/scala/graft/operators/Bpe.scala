@@ -57,25 +57,24 @@ object Bpe {
 
   /** One merge round: returns (rebuilt symbols, the 1-row best pair).
     *
-    * The best pair is `localCheckpoint`ed (eager, 1 row) before the
+    * The best pair is cut (eager, 1 row) before the
     * cross-join back: `p` (and through it `syms`) would otherwise be
     * embedded TWICE in the round's plan — once under `best`, once under
     * `m` — and with rounds nesting that doubling compounds to ~2^R
     * copies of the tokenize+count subtree (the r3 `dedup_clusters`
     * lineage bug in miniature; at a real tokenizer's 32k merges it's a
-    * scale-killer). The caller checkpoints the rebuilt symbols, so
+    * scale-killer). The caller cuts the rebuilt symbols, so
     * every round starts from a materialized vocab-sized frame and the
     * plan depth stays CONSTANT per round.
     */
   private def oneRound(syms: DataFrame): (DataFrame, DataFrame) = {
     val wpos = Window.partitionBy("word").orderBy("pos")
     val p = syms.withColumn("nxt", lead(col("sym"), 1).over(wpos))
-    val best = p.filter(col("nxt").isNotNull)
+    val best = Kernels.cut(p.filter(col("nxt").isNotNull)
       .groupBy(col("sym").as("s1"), col("nxt").as("s2"))
       .agg(sum("cnt").as("total"))
       .orderBy(col("total").desc, col("s1"), col("s2"))
-      .limit(1)
-      .localCheckpoint()
+      .limit(1))
     val m = p.crossJoin(broadcast(best))
       .withColumn("pairh",
         col("sym") === col("s1") && col("nxt").isNotNull && col("nxt") === col("s2"))
@@ -98,22 +97,40 @@ object Bpe {
   // Trained state (final symbols + merge rules) is memoized per corpus
   // fingerprint — `bpe_vocab_encode` and `bpe_merge_table` are two
   // views of ONE training run and must not re-derive it (the
-  // KMeansCodebook.train pattern). The memo holds only
-  // localCheckpoint-backed vocab-sized frames, so keeping it for the
-  // session costs |vocab| rows, not corpus. Checkpoint blocks belong to
-  // the SparkContext that made them: sessions of one live context share
-  // the memo, and once that context stops its entry counts as absent
-  // (Kernels.memo), so a new context retrains instead of serving frames
-  // whose blocks are gone.
+  // KMeansCodebook.train pattern). The memo holds only cut
+  // vocab-sized frames, so keeping it for the session costs |vocab|
+  // rows, not corpus, and it frees them when a new fingerprint
+  // supersedes it. Cut blocks belong to the SparkContext that made
+  // them: sessions of one live context share the memo, and once that
+  // context stops its entry counts as absent (Kernels.memo), so a new
+  // context retrains instead of serving frames whose blocks are gone.
   /** Final symbol frame + the per-round merge rules. */
   private def train(spark: SparkSession, dir: String): (DataFrame, Seq[DataFrame]) =
     Kernels.memo("bpe-train", Kernels.inputKey(dir, "documents.parquet")) {
+      trained(spark, dir, Rounds)
+    }
+
+  /** The training loop: `rounds` merge rounds over the vocabulary,
+    * returning the final symbols and each round's best pair. Each
+    * round's rebuilt symbols are cut (eager), which bounds lineage
+    * depth and runs the round's shuffle once for both queries; the
+    * intermediate rounds' cuts are freed when the loop returns.
+    *
+    * `probe` sees (round, analyzed-plan node count of the round's
+    * REBUILT frame): the lineage-depth contract made observable. Every
+    * round starts from the previous round's cut, so the count must stay
+    * CONSTANT from round 2 on — growth is exactly the ~2^R plan
+    * compounding the cut exists to prevent (spec-asserted at 16
+    * rounds).
+    */
+  private[graft] def trained(spark: SparkSession, dir: String, rounds: Int,
+      probe: (Int, Int) => Unit = (_, _) => ()): (DataFrame, Seq[DataFrame]) =
+    Kernels.releasing {
       var syms = charSyms(vocab(spark, dir))
-      val merges = (1 to Rounds).map { _ =>
+      val merges = (1 to rounds).map { r =>
         val (next, best) = oneRound(syms)
-        // materialize each round's output: bounds lineage depth AND
-        // runs the per-round shuffle exactly once across both queries
-        syms = next.localCheckpoint()
+        probe(r, next.queryExecution.analyzed.collect { case n => n }.size)
+        syms = Kernels.cut(next)
         best
       }
       (syms, merges)
@@ -146,7 +163,7 @@ object Bpe {
 
   /** Materializes the trained merge table to `path` as parquet — the
     * DURABLE half of the memoization story. The training memo only
-    * caches within the training context (localCheckpoint blocks die
+    * caches within the training context (cut blocks die
     * with it); production pipelines train once in a build job, write
     * this artifact, and every consumer — a 100 TB encode job, a fresh
     * session, another JVM — reads the parquet instead of retraining.
@@ -162,26 +179,4 @@ object Bpe {
     */
   def mergeTableFrom(spark: SparkSession, path: String): DataFrame =
     Tables.parquet(spark, path).orderBy("round")
-
-  /** Training-loop probe (not a query): runs `rounds` merge rounds and
-    * returns, per round, the analyzed-plan node count of the round's
-    * REBUILT frame and its wall-clock seconds. The node count is the
-    * lineage-depth contract made observable: every round starts from
-    * the previous round's localCheckpoint, so the count must stay
-    * CONSTANT from round 2 on — growth here is exactly the ~2^R plan
-    * compounding the checkpoint cut exists to prevent (spec-asserted
-    * at 16 rounds).
-    */
-  private[graft] def roundProbe(
-      spark: SparkSession, dir: String, rounds: Int): Seq[(Int, Double)] = {
-    var syms = charSyms(vocab(spark, dir))
-    (1 to rounds).map { _ =>
-      val t0 = System.nanoTime()
-      val (next, best) = oneRound(syms)
-      val nodes = next.queryExecution.analyzed.collect { case n => n }.size
-      syms = next.localCheckpoint() // eager: forces the round's work
-      best.count()
-      (nodes, (System.nanoTime() - t0) / 1e9)
-    }
-  }
 }

@@ -353,12 +353,12 @@ object Dedup {
 
   // Like the label frame below, the VERIFIED pair set is a per-corpus
   // product consumed by two query families (the pair listing and the
-  // component loop) — memoized per input and localCheckpoint'ed so the
+  // component loop) — memoized per input and cut so the
   // session pays the prefix-filtered join once, and the builder's
   // SF-sized caches are released the moment the checkpoint materializes.
   private def ngramPairs(spark: SparkSession, dir: String): DataFrame =
     Kernels.memo("dedup-pairs", Kernels.inputKey(dir, "documents.parquet")) {
-      Kernels.releasing(buildNgramPairs(spark, dir).localCheckpoint())
+      Kernels.releasing(Kernels.cut(buildNgramPairs(spark, dir)))
     }
 
   // package-private so the plan audit inspects the BUILDER's join plan
@@ -422,7 +422,7 @@ object Dedup {
   // materializes ONCE per ingest and every consumer reads (clusters,
   // keep-list, the training-set composition) — so it is memoized per
   // input like the k-means codebook (keyed on table path + file fingerprint,
-  // see Kernels.inputKey) and localCheckpoint'ed: lineage-free, blocks
+  // see Kernels.inputKey) and cut: lineage-free, blocks
   // pinned by the memo reference, so it survives the per-query cache
   // retirement that drops the builder's own intermediates. Without the
   // memo, dedup_clusters, dedup_keep and pipeline_training_set each
@@ -442,14 +442,14 @@ object Dedup {
       // ngramJaccard standalone). The pair set is the dedup OUTPUT —
       // orders of magnitude smaller than the corpus — so
       // checkpointing it is cheap at any scale (production: a
-      // reliable checkpoint dir; localCheckpoint is the single-node
+      // reliable checkpoint dir; Kernels.cut is the single-node
       // twin).
       val edges = ngramPairs(spark, dir).select(col("doc_a"), col("doc_b"))
       val docs = Tables.documents(spark, dir).select(col("doc_id"))
       // the checkpoint is the materializing action: the loop's own
       // caches are dead weight from here on — free them immediately
       // instead of waiting for the caller's retirement
-      Kernels.releasing(clustersFromEdges(docs, edges).localCheckpoint())
+      Kernels.releasing(Kernels.cut(clustersFromEdges(docs, edges)))
     }
 
   /** The dedup END PRODUCT: one row per SURVIVING document — each
@@ -636,7 +636,7 @@ object Dedup {
     // materialized + lineage-cut: the base state is an input to the
     // merge, not part of its plan (production reads it from parquet)
     // the history component loop's caches are dead once it is checkpointed
-    val histLabels = Kernels.releasing(clustersFromEdges(histDocs, histEdges).localCheckpoint())
+    val histLabels = Kernels.releasing(Kernels.cut(clustersFromEdges(histDocs, histEdges)))
     val batchDocs = docs.filter(isBatch(col("doc_id")))
     val batchEdges = edges.filter(isBatch(col("doc_a")) || isBatch(col("doc_b")))
     (histLabels, batchDocs, batchEdges)
@@ -747,8 +747,8 @@ object Dedup {
   /** Per-round probe hook (spec-only): called with (round, analyzed
     * plan node count of the round's label frame, changed count). The
     * node count is the lineage-cut contract made observable — constant
-    * from round 1 on, because each round ends in a localCheckpoint
-    * (same probe shape as [[Bpe.roundProbe]], which would have caught
+    * from round 1 on, because each round ends in a cut (the probe
+    * shape of [[Bpe.trained]], which would have caught
     * the round-9 regression where cache-without-checkpoint grew the
     * plan ~4x per round to 2 GiB plan strings).
     */
@@ -774,21 +774,13 @@ object Dedup {
     val nodes = Kernels.cacheTracked(sym.select(col("doc_a").as("doc_id")).distinct()
       .repartition(sym.rdd.getNumPartitions, col("doc_id")))
     // labelsCache is the round's MATERIALIZED frame (cached for round
-    // 0, localCheckpoint'ed — i.e. also lineage-cut — for every round
-    // after); labels is the 2-column view of it the next round consumes
+    // 0, cut for every round after); labels is the 2-column view of it
+    // the next round consumes. Each round frees the PREVIOUS round's
+    // cut ([[Kernels.free]]) — without this the loop accumulates one
+    // node-sized materialized frame PER ROUND. The last round's cut
+    // stays alive for the caller, whose retire frees it.
     var labelsCache = Kernels.cacheTracked(nodes.select(col("doc_id"), col("doc_id").as("label")))
     var labels = labelsCache
-    // localCheckpoint persistence is RDD-level: Dataset.unpersist is a
-    // NO-OP on a checkpointed frame (the CacheManager has no entry), so
-    // each round reads its checkpoint's RDD id off the frame's own plan
-    // leaf (Kernels.checkpointRddId — precise even with concurrent
-    // persists in the session) and frees the PREVIOUS round's blocks by
-    // id. Without this the loop accumulates one node-sized materialized
-    // frame PER ROUND. The last round's frame stays alive for the
-    // caller and is registered with Kernels, so retireCaches frees it
-    // deterministically at end of query.
-    var prevCkptId: Option[Int] = None
-    val sc = docs.sparkSession.sparkContext
     var changed = 1L
     var iter = 0
     while (changed > 0 && iter < 50) {
@@ -821,26 +813,18 @@ object Dedup {
       // does not truncate it — Catalyst re-analyzes the full tree on
       // every action, which goes exponential (2 GiB plan strings by
       // round ~10 — this hung the round-9 gates on the chain-shaped
-      // kNN graph). localCheckpoint is eager, so one job both
-      // materializes the round and resets the plan to a leaf; the
-      // change count then reads the cached blocks. Same discipline as
-      // [[Graph.pageRank]], except every round because of the 4x (vs
-      // pageRank's linear) growth rate.
-      // loopCheckpoint, not trackedCheckpoint: the checkpoint must ALSO
-      // sever the inherited plan STATISTICS — localCheckpoint copies the
-      // round plan's estimated stats onto the new leaf, and this loop's
-      // self-join then squares sizeInBytes round over round; past ~20
-      // rounds the BigInt estimate carries millions of digits and the
-      // driver spends MINUTES per round multiplying statistics
-      // (measured: media near-dup components at sf0.1 — see
-      // Kernels.loopCheckpoint)
+      // kNN graph). The cut resets the plan to a leaf. Same discipline
+      // as [[Graph.pageRank]], except every round because of the 4x
+      // (vs pageRank's linear) growth rate.
       // eager = false: the convergence count below is the round's
       // first action and scans EVERY partition, so it both counts and
-      // materializes the checkpoint — one job per round instead of a
-      // checkpoint job followed by a count job (measured ~25% off the
-      // drain-time blast-radius contraction, where per-round job
-      // overhead dominates the tiny frames)
-      val (next, ckptId) = Kernels.loopCheckpoint(stepped.as("a")
+      // materializes the cut — one job per round instead of a cut job
+      // followed by a count job (measured ~25% off the drain-time
+      // blast-radius contraction, where per-round job overhead
+      // dominates the tiny frames). The lazy cut also drops the
+      // inherited plan statistics this self-join would square round
+      // over round ([[Kernels.cut]]).
+      val next = Kernels.cut(stepped.as("a")
         .join(stepped.select(col("doc_id").as("jid"), col("label").as("jlabel")).as("j"),
           col("a.label") === col("j.jid"), "left")
         .select(col("a.doc_id").as("doc_id"),
@@ -851,8 +835,7 @@ object Dedup {
       changed = next.filter(col("chg")).count()
       stepped.unpersist(true)
       labelsCache.unpersist(true) // effective for the round-0 cache only
-      prevCkptId.foreach(id => Kernels.releaseCheckpoint(sc, id))
-      prevCkptId = ckptId
+      Kernels.free(labelsCache)
       labelsCache = next
       labels = next.select(col("doc_id"), col("label"))
       iter += 1
@@ -1266,7 +1249,7 @@ object Dedup {
       .withColumn("h", md5(concat(lit("sd:"), col("vec_id").cast("string"))))
       .withColumn("band",
         conv(substring(col("h"), 1, CapCellBandHexChars), 16, 10).cast("long"))
-    val offs = Kernels.trackedCheckpoint(
+    val offs = Kernels.cut(
       withH.groupBy("cluster", "band").agg(count(lit(1)).as("bc"))
         .withColumn("pre", coalesce(
           sum("bc").over(Window.partitionBy("cluster").orderBy("band")

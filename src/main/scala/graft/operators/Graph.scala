@@ -52,7 +52,7 @@ object Graph {
     * fraction of the corpus; singletons' rank is the closed-form
     * teleport constant and needs no iteration). Each round is one
     * equi-join of the edge list against the node-sized rank frame plus
-    * one combiner-friendly sum per destination; rank frames localCheckpoint
+    * one combiner-friendly sum per destination; rank frames are cut
     * per round, so the plan stays flat at any round count (the
     * [[Bpe]] depth-probe contract). The driver sees only the node
     * COUNT, never node data.
@@ -87,7 +87,7 @@ object Graph {
     */
   private def powerIteration(sym: DataFrame, iters: Int,
       empty: String): (DataFrame, DataFrame) = {
-    val deg = Kernels.trackedCheckpoint(
+    val deg = Kernels.cut(
       sym.groupBy("src").agg(sum("w").as("wd"))
         .select(col("src").as("node"), col("wd")))
     val n = deg.count()
@@ -95,7 +95,7 @@ object Graph {
     val teleport = PrResid / n.toDouble
     // the rank frame carries its own key name (pid) so each round's
     // join against the static edge/degree frames can never alias
-    var pr = Kernels.trackedCheckpoint(
+    var pr = Kernels.cut(
       deg.select(col("node").as("pid"), lit(r12(1.0 / n.toDouble)).as("pr")))
     for (i <- 1 to iters) {
       val next = sym
@@ -113,7 +113,7 @@ object Graph {
       // any round count while not paying an eager checkpoint job per
       // round (on node-sized frames job launch, not compute, is what a
       // checkpoint costs)
-      pr = if (i % 3 == 0 || i == iters) Kernels.trackedCheckpoint(next) else next
+      pr = if (i % 3 == 0 || i == iters) Kernels.cut(next) else next
     }
     (pr, deg)
   }
@@ -290,7 +290,7 @@ object Graph {
     * clusters. Reuses the [[Dedup.clustersFromEdges]] hash-to-min
     * loop: O(log diameter) pointer-jump rounds over the EDGE-INCIDENT
     * nodes only, one shuffle join + combiner min per round, each
-    * round's labels localCheckpoint'ed IN the loop so lineage stays
+    * round's labels cut IN the loop so lineage stays
     * one round deep (the pointer jump references the previous round
     * four times, so anything short of a per-round cut grows the
     * logical plan geometrically — the round-9 lesson). The edge list

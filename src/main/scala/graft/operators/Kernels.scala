@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.execution.LogicalRDD
 
 /** Shared helpers for the typed per-partition kernels. */
 private[graft] object Kernels {
@@ -45,7 +46,7 @@ private[graft] object Kernels {
   private final class Scope {
     val caches =
       scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.DataFrame]
-    val checkpointIds =
+    val cuts =
       scala.collection.mutable.Map.empty[Int, org.apache.spark.SparkContext]
     val dirs = scala.collection.mutable.ArrayBuffer.empty[String]
   }
@@ -201,20 +202,9 @@ private[graft] object Kernels {
     pinned
   }
 
-  /** Drain ONLY the calling thread's scope — the per-micro-batch free
-    * for `foreachBatch` bodies: a stream-execution thread accumulates
-    * tracked caches and checkpoint ids (e.g. the label-maintenance
-    * component loop's rounds) for the WHOLE drain otherwise, since the
-    * dead-thread backstop only reclaims them on a later retire from
-    * another thread. Unlike [[retireCaches]] this touches neither the
-    * global memo caches nor the [[memoUntilRetire]] entries — the
-    * stream's seeded history memos must survive the batch.
-    */
-  def drainThreadScope(): Unit = drainScope(scope.get)
-
   /** Drain the CALLING THREAD's scope: blocking-unpersist its tracked
-    * caches and checkpoint blocks, then drop every built
-    * [[memoUntilRetire]] entry with the global memo caches. Those stay
+    * caches and cuts, then drop every built [[memoUntilRetire]] entry
+    * with the global memo caches. Those stay
     * global because a memo dropped spuriously just rebuilds, while a
     * memo OUTLIVING its cache silently recomputes uncached every use —
     * the cheap direction is over-clearing. Another thread's pinned
@@ -240,9 +230,12 @@ private[graft] object Kernels {
     // global, and one without the other either orphans pinned blocks or
     // leaves a memo of unpersisted frames. An entry still building is
     // kept: its build registers its cache after this drain.
-    memos.synchronized {
-      memos.filterInPlace { case (_, s) => !s.untilRetire || s.value == null }
+    val dropped = memos.synchronized {
+      val gone = memos.filter { case (_, s) => s.untilRetire && s.value != null }
+      memos --= gone.keys
+      gone.values
     }
+    dropped.foreach(release)
     memoCaches.synchronized {
       memoCaches.foreach(_.unpersist(true))
       memoCaches.clear()
@@ -250,24 +243,42 @@ private[graft] object Kernels {
   }
 
   /** Runs `build` in a scope of its own and drains that scope when the
-    * build returns or throws: a memo build that materializes its
-    * product (an eager checkpoint) releases the caches, checkpoint
-    * blocks and dirs it pinned on the way, and nothing the calling
-    * query pinned, nor any memo.
+    * build returns or throws: a build that materializes its product
+    * releases the caches, cuts and dirs it pinned on the way, and
+    * nothing the calling query pinned, nor any memo. The cuts the
+    * returned value holds pass to the enclosing scope instead.
     */
   def releasing[T](build: => T): T = {
     val outer = scope.get
     val own = new Scope
     scope.set(own)
-    try build
-    finally {
+    try {
+      val v = build
+      val held = take(own, v)
+      outer.synchronized { outer.cuts ++= held }
+      v
+    } finally {
       scope.set(outer)
       drainScope(own)
     }
   }
 
-  /** Blocking-unpersist one scope's tracked caches and checkpoint
-    * blocks, and delete its [[scopedStore]] dirs together with the memo
+  /** `f` bound to the calling thread's scope: wherever it runs (a
+    * `foreachBatch` body runs on the stream-execution thread), what it
+    * caches, cuts or dirs belongs to the caller, and the caller's
+    * retire frees it.
+    */
+  def inCallerScope[A, B, C](f: (A, B) => C): (A, B) => C = {
+    val caller = scope.get
+    (a, b) => {
+      val prev = scope.get
+      scope.set(caller)
+      try f(a, b) finally scope.set(prev)
+    }
+  }
+
+  /** Blocking-unpersist one scope's tracked caches and cuts, and
+    * delete its [[scopedStore]] dirs together with the memo
     * entries keyed on a path under them (a `parquet-schema` entry of a
     * deleted dir could never hit again). Async unpersist would leave
     * SF-sized blocks resident while the NEXT query runs, defeating the
@@ -276,10 +287,8 @@ private[graft] object Kernels {
   private def drainScope(s: Scope): Unit = s.synchronized {
     s.caches.foreach(_.unpersist(true))
     s.caches.clear()
-    s.checkpointIds.foreach { case (id, sc) =>
-      sc.getPersistentRDDs.get(id).foreach(_.unpersist(true))
-    }
-    s.checkpointIds.clear()
+    s.cuts.foreach { case (id, sc) => unpersistRdd(sc, id) }
+    s.cuts.clear()
     s.dirs.foreach { d =>
       tempStores.synchronized { tempStores -= d }
       rmTree(new java.io.File(d))
@@ -311,107 +320,75 @@ private[graft] object Kernels {
     root
   }
 
-  // ---- checkpoint-block bookkeeping ----
-  // localCheckpoint persistence is RDD-level: Dataset.unpersist is a
-  // NO-OP on a checkpointed frame (the CacheManager has no entry).
-  // Loops that checkpoint per round free the PREVIOUS round by RDD id
-  // as they go; each query's last live checkpoints register in its
-  // thread scope so retireCaches frees them deterministically instead
-  // of leaving node-sized MEMORY_AND_DISK blocks to ContextCleaner GC.
+  // ---- the lineage cut ----
+  // Every materialized intermediate is a `cut`, and every cut has ONE
+  // owner that frees its blocks: the scope it is made in, the enclosing
+  // scope when a [[releasing]] block returns it, or the memo whose value
+  // holds it. Dataset.unpersist is a no-op on a cut (its persistence is
+  // RDD-level, with no CacheManager entry), so owners free by RDD id.
 
-  /** The checkpoint RDD id read directly from the checkpointed frame's
-    * own plan leaf — precise attribution. (A persistent-RDD-registry
-    * diff around the checkpoint misattributes any concurrent persist
-    * in the session, and freeing a misattributed CHECKPOINT is
-    * unrecoverable data loss: there is no lineage to recompute.)
-    */
-  def checkpointRddId(df: Dataset[_]): Option[Int] =
-    df.queryExecution.analyzed.collectFirst {
-      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.id
-    }
-
-  /** Eager localCheckpoint whose blocks [[retireCaches]] will free. */
-  def trackedCheckpoint(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    val ck = df.localCheckpoint()
-    checkpointRddId(ck).foreach { id =>
-      val s = scope.get
-      s.synchronized { s.checkpointIds(id) = ck.sparkSession.sparkContext }
-    }
-    ck
-  }
-
-  /** [[trackedCheckpoint]] for UNBOUNDED-round iterative loops, with
-    * the inherited plan STATISTICS severed. Spark 4's `localCheckpoint`
-    * copies the child plan's ESTIMATED statistics onto the new
-    * `LogicalRDD` leaf (`LogicalRDD.rewriteStatsAndConstraints`), so a
-    * loop that joins its own previous checkpoint compounds the
-    * `sizeInBytes` estimate every round — each round's self-join
-    * SQUARES it, the next checkpoint inherits the square, and by round
-    * ~20 the BigInt carries millions of digits: the driver burns
-    * minutes per round just COMPUTING and MULTIPLYING statistics
-    * (measured on the media near-dup components at sf0.1:
-    * 0.6 s/round at round 12 → 43 s at round 21 → 167 s at round 22,
-    * main thread pinned in `BigInteger.multiplyToomCook3`).
-    * Re-wrapping the checkpointed RDD in a fresh DataFrame resets the
-    * leaf to `defaultSizeInBytes`, so round estimates stay flat.
-    * Bounded-round loops (beam search, PageRank) keep the plain
-    * [[trackedCheckpoint]] — a handful of compoundings is harmless and
-    * the inherited sizes can inform broadcast choices; in the
-    * label-propagation loops the node-sized frame's Row round-trip is
-    * noise next to a single stats pass.
+  /** The one lineage cut: a `localCheckpoint` of `df` owned by the
+    * calling scope.
     *
-    * Returns the frame AND the PERSISTED checkpoint RDD id (the
-    * re-wrap's own plan leaf is the unpersisted Row conversion, so
-    * [[checkpointRddId]] on the returned frame would misattribute —
-    * callers release rounds by this id).
-    *
-    * `eager = false` marks the checkpoint LAZILY: the blocks persist
-    * when the caller's next action computes the frame, fusing the
-    * round's materialization into that action — one Spark job per
-    * round instead of two (the component loop's convergence count is
-    * exactly such an action and scans every partition, so the
-    * materialization is still complete and the lineage still
-    * truncates). Callers whose next touch might be PARTIAL (a
-    * take/limit) must keep `eager = true` or the unscanned partitions
-    * stay unmaterialized.
+    * `eager = false` is the convergence loop's cut: its blocks persist
+    * when the round's next action computes the frame, fusing the
+    * round's materialization into that action (use it only when that
+    * action scans every partition — a count, not a take), and it
+    * drops the statistics the round would inherit. Spark's
+    * `localCheckpoint` copies the child plan's estimated statistics
+    * onto the new leaf, so a loop that joins its own previous cut
+    * compounds `sizeInBytes` every round: each self-join squares it,
+    * and by round ~20 the BigInt estimate carries millions of digits
+    * and the driver spends minutes per round multiplying it (measured
+    * on the media near-dup components at sf0.1: 0.6 s/round at round
+    * 12, 167 s at round 22). The lazy cut's fresh leaf over the same
+    * blocks reads `defaultSizeInBytes`. An eager cut keeps its
+    * estimate: a bounded loop (PageRank's rank frames, the beam rounds)
+    * compounds it only a few times, and a small estimate is what lets
+    * a degree or rank frame be broadcast — resetting those cuts too,
+    * or every cut over a cut, measured up to 9 more stages per query.
     */
-  def loopCheckpoint(df: org.apache.spark.sql.DataFrame, eager: Boolean = true)
-      : (org.apache.spark.sql.DataFrame, Option[Int]) = {
+  def cut(df: org.apache.spark.sql.DataFrame, eager: Boolean = true)
+      : org.apache.spark.sql.DataFrame = {
     val ck = df.localCheckpoint(eager)
-    val id = checkpointRddId(ck)
-    id.foreach { i =>
-      val s = scope.get
-      s.synchronized { s.checkpointIds(i) = ck.sparkSession.sparkContext }
-    }
-    (ck.sparkSession.createDataFrame(ck.rdd, ck.schema), id)
-  }
-
-  /** Free one checkpoint's blocks by id (no-op if already gone). */
-  def releaseCheckpoint(sc: org.apache.spark.SparkContext, id: Int): Unit = {
-    sc.getPersistentRDDs.get(id).foreach(_.unpersist(true))
+    val leaf = ck.queryExecution.analyzed.asInstanceOf[LogicalRDD]
     val s = scope.get
-    s.synchronized { s.checkpointIds.remove(id) }
-    ()
+    s.synchronized { s.cuts(leaf.rdd.id) = leaf.rdd.sparkContext }
+    if (eager) ck
+    else {
+      val session = ck.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      new org.apache.spark.sql.classic.Dataset[org.apache.spark.sql.Row](session,
+        LogicalRDD(leaf.output, leaf.rdd)(session), org.apache.spark.sql.Encoders.row(ck.schema))
+    }
   }
 
-  /** Register an ALREADY-checkpointed frame's blocks in the CALLING
-    * thread's scope — for stores built on another thread (e.g. inside
-    * `foreachBatch`, which runs on the stream-execution thread) whose
-    * lifetime belongs to the query thread that will retire them. The
-    * builder thread uses a plain `localCheckpoint` and the query
-    * thread adopts the final artifact.
+  /** Frees `df` now when it is a cut the calling scope owns: a loop
+    * frees its previous round once the next one is materialized. Any
+    * other frame, and a cut that another scope or a memo owns, is left
+    * alone, and so are the cuts `df` reads.
     */
-  def adoptCheckpoint(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    checkpointRddId(df).foreach { id =>
+  def free(df: Dataset[_]): Unit = df.queryExecution.analyzed match {
+    case r: LogicalRDD =>
       val s = scope.get
-      s.synchronized { s.checkpointIds(id) = df.sparkSession.sparkContext }
-    }
-    df
+      s.synchronized(s.cuts.remove(r.rdd.id)).foreach(unpersistRdd(_, r.rdd.id))
+    case _ =>
   }
+
+  /** The RDD ids of the cut leaves in the plans of `v`'s Datasets. */
+  private[graft] def cutIds(v: Any): Seq[Int] = datasetsOf(v).flatMap {
+    _.queryExecution.analyzed.collectLeaves().collect { case r: LogicalRDD => r.rdd.id }
+  }.distinct
+
+  /** Takes the cuts `from` owns that `v` holds out of `from`. */
+  private def take(from: Scope, v: Any): Seq[(Int, org.apache.spark.SparkContext)] =
+    from.synchronized(cutIds(v).flatMap(id => from.cuts.remove(id).map(id -> _)))
+
+  private def unpersistRdd(sc: org.apache.spark.SparkContext, id: Int): Unit =
+    sc.getPersistentRDDs.get(id).foreach(_.unpersist(true))
 
   // ---- the memo registry ----
   // Every per-corpus product an operator reuses across queries (trained
-  // books, checkpointed signature frames, durable store roots) lives in
+  // books, cut signature frames, durable store roots) lives in
   // ONE registry keyed (kind, key._1); the entry holds the input
   // fingerprint key._2. The registry lock only looks up or replaces a
   // slot; the build runs under the slot's own monitor, so two callers
@@ -419,11 +396,13 @@ private[graft] object Kernels {
   // retireCaches — never wait on a build.
 
   /** One memo entry: the fingerprint it serves and its value, null until
-    * built. A build that throws leaves it null, so the next caller
-    * builds again with its own closure.
+    * built, with the cuts the value holds that its build made (or took
+    * from the calling scope). A build that throws leaves it null, so
+    * the next caller builds again with its own closure.
     */
   private final class MemoSlot(val fp: String, val untilRetire: Boolean) {
     @volatile var value: AnyRef = null
+    @volatile var cuts: Seq[(Int, org.apache.spark.SparkContext)] = Nil
   }
 
   private val memos = scala.collection.mutable.Map.empty[(String, String), MemoSlot]
@@ -432,30 +411,28 @@ private[graft] object Kernels {
   private[graft] def memoNames(kind: String): Seq[String] =
     memos.synchronized { memos.keys.collect { case (`kind`, name) => name }.toSeq }
 
-  /** The Datasets a memo value holds: itself, or a tuple's elements. */
-  private def datasetsOf(v: AnyRef): Seq[Dataset[_]] = v match {
+  /** The Datasets a value holds: itself, or the elements of its
+    * tuples and collections, at any depth.
+    */
+  private def datasetsOf(v: Any): Seq[Dataset[_]] = v match {
     case d: Dataset[_] => Seq(d)
-    case p: Product => p.productIterator.collect { case d: Dataset[_] => d }.toSeq
+    case i: Iterable[_] => i.toSeq.flatMap(datasetsOf)
+    case p: Product => p.productIterator.toSeq.flatMap(datasetsOf)
     case _ => Nil
   }
 
   // a value whose frames belong to a stopped context can never be
-  // served again (checkpoint blocks die with their context)
+  // served again (cut blocks die with their context)
   private def stopped(s: MemoSlot): Boolean =
     datasetsOf(s.value).exists(_.sparkSession.sparkContext.isStopped)
 
-  /** Free a superseded value's blocks: a checkpointed frame by its own
-    * RDD id (a deeper LogicalRDD leaf belongs to another memo), a
-    * cached one by unpersist. Driver values and store roots only leave
-    * the map.
+  /** Free a dropped entry's blocks: the cuts it owns by RDD id, a
+    * cached frame by unpersist. Driver values and store roots only
+    * leave the map.
     */
-  private def release(v: AnyRef): Unit = datasetsOf(v).foreach { d =>
-    d.queryExecution.analyzed match {
-      case r: org.apache.spark.sql.execution.LogicalRDD =>
-        d.sparkSession.sparkContext.getPersistentRDDs.get(r.rdd.id)
-          .foreach(_.unpersist(true))
-      case _ => d.unpersist(true)
-    }
+  private def release(s: MemoSlot): Unit = {
+    s.cuts.foreach { case (id, sc) => unpersistRdd(sc, id) }
+    datasetsOf(s.value).foreach(_.unpersist(true))
   }
 
   /** Session-lifetime memo of `build` under `key` = (name, fingerprint),
@@ -507,7 +484,7 @@ private[graft] object Kernels {
         case old =>
           val s = new MemoSlot(key._2, untilRetire)
           memos((kind, key._1)) = s
-          (s, old.filterNot(stopped).flatMap(o => Option(o.value)))
+          (s, old.filterNot(stopped))
       }
     }
     superseded.foreach(release)
@@ -516,7 +493,9 @@ private[graft] object Kernels {
       if (slot.value != null) c.hits.increment()
       else {
         val t0 = System.nanoTime()
-        slot.value = build
+        val v = build
+        slot.cuts = take(scope.get, v)
+        slot.value = v
         c.builds.increment()
         c.buildNs.add(System.nanoTime() - t0)
       }

@@ -90,15 +90,15 @@ object Multimodal {
   // mm_audio_neardup, mm_media_keep AND the keep-list; the per-frame
   // clip signatures feed video near-dup, scene cuts, keyframes,
   // mm_media_keep, the keep-list and (via mediaKeep) pack_media. Keyed
-  // on table path + file fingerprint (Kernels.inputKey) and localCheckpoint'ed
-  // — lineage-free, blocks pinned by the memo reference, surviving the
+  // on table path + file fingerprint (Kernels.inputKey) and cut
+  // ([[Kernels.cut]]) — lineage-free, blocks pinned by the memo reference, surviving the
   // per-query cache retirement that drops each builder's own
   // intermediates. Frames are ≤ one row per doc (K per clip) — the
   // bounded-artifact bar.
   private def memoSig(spark: SparkSession, dir: String, kind: String)(
       build: => DataFrame): DataFrame =
     Kernels.memo(s"sig:$kind", Kernels.inputKey(dir, "documents.parquet"))(
-      build.localCheckpoint())
+      Kernels.cut(build))
 
   /** Synthesize a real container payload around a media body: the byte
     * format is chosen by body length (n%3 → BMP / binary PPM / RIFF,
@@ -1472,7 +1472,7 @@ object Multimodal {
     * corpus fingerprint to a fingerprint-keyed parquet root (the
     * [[graft.operators.Graph.ensureKnnDirectedHistory]] /
     * [[graft.operators.Dedup.ensureBandStore]] store contract). The
-    * localCheckpoint memo above amortizes recomputation; THIS is the
+    * cut memo above amortizes recomputation; THIS is the
     * published-TABLE shape — production ships the keep-list as a table
     * every downstream consumer reads, and the serve path is a bare
     * parquet scan with no derivation in the plan (no signature chains,
@@ -1754,15 +1754,14 @@ object Multimodal {
     // history labels) is a memoized per-corpus artifact
     // ([[vidHistLabels]] — a durable table in production), NOT part of
     // this query's plan or cache scope; only the batch blast radius is
-    // derived per run. The batch nodes/edges checkpoint-cut so the
-    // merge loop starts from leaves, and adopt into this query's scope
-    // so the end-of-query retire frees them (never the memo's blocks).
-    val batchNodes = Kernels.adoptCheckpoint(
-      vidSig.select("doc_id").distinct()
-        .filter(Dedup.isBatch(col("doc_id"))).localCheckpoint())
-    val batchEdges = Kernels.adoptCheckpoint(
+    // derived per run. The batch nodes/edges are cut so the merge loop
+    // starts from leaves; this query's retire frees them (never the
+    // memo's blocks).
+    val batchNodes = Kernels.cut(
+      vidSig.select("doc_id").distinct().filter(Dedup.isBatch(col("doc_id"))))
+    val batchEdges = Kernels.cut(
       probePairs(Frame, vidSig.filter(Dedup.isBatch(col("doc_id"))), vidSig)
-        .select("doc_a", "doc_b").localCheckpoint())
+        .select("doc_a", "doc_b"))
     val hist = vidHistLabels(spark, dir)
     mark("vid_hist_labels")
     val vid = Dedup.maintainKeep(hist, batchNodes, batchEdges)

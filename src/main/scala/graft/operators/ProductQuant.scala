@@ -377,22 +377,19 @@ object ProductQuant {
       batch: DataFrame, bid: Long, base: String, delta: String): Unit = {
     val spark = batch.sparkSession
     val b = KMeansCodebook.vectorsOf(batch)
-    val bAssign = KMeansCodebook
+    val bAssign = Kernels.cut(KMeansCodebook
       .assign(KMeansCodebook.oneSpace(b),
         KMeansCodebook.readBooks(spark, s"$base/coarse_codebook"))
-      .select(col("vec_id"), col("cluster"))
-      .localCheckpoint() // consumed twice (write + codes join); batch-sized
+      .select(col("vec_id"), col("cluster"))) // consumed twice (write + codes join); batch-sized
     try {
       Store.append(delta, "assignment", bid, "cluster")(bAssign)
       Store.append(delta, "codes", bid, "cluster")(
         encoded(b, KMeansCodebook.readBooks(spark, s"$base/pq_codebooks"))
           .join(bAssign, "vec_id"))
     } finally {
-      // both consumers are done — free the checkpoint blocks NOW
-      // (Dataset.unpersist is a no-op on checkpoints; a long stream of
-      // batches would otherwise stack one batch-sized frame per call)
-      Kernels.checkpointRddId(bAssign)
-        .foreach(Kernels.releaseCheckpoint(spark.sparkContext, _))
+      // both consumers are done — free the cut NOW: a long stream of
+      // batches would otherwise stack one batch-sized frame per call
+      Kernels.free(bAssign)
     }
   }
 

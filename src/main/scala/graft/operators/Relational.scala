@@ -670,7 +670,7 @@ object Relational {
     // the checkpoint the orders scan + aggregation re-executes per
     // reference (plan-audited: the final plan scans orders exactly
     // once, for the join-back)
-    val cnt = Kernels.trackedCheckpoint(
+    val cnt = Kernels.cut(
       o.groupBy("o_orderpriority", "o_totalprice")
         .agg(count(lit(1)).as("c"))
         .withColumn("band",

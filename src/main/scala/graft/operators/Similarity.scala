@@ -433,7 +433,7 @@ object Similarity {
     * bounds each expansion) and the embedding table (the score join
     * touches only newly-visited nodes); the per-cell entry table is
     * |cells|-sized. No corpus-sized shuffle in any round; rounds are
-    * fixed; each round's visited frame is localCheckpoint'ed so the
+    * fixed; each round's visited frame is cut ([[Kernels.cut]]) so the
     * multi-reference round plan stays one round deep (the pointer-jump
     * lesson). Recall vs the exact top-k is spec-pinned with a floor;
     * the loss comes from the k-cut, mutual pruning and the beam cut —
@@ -465,7 +465,7 @@ object Similarity {
     // read, future analytics) reads stored edges instead of re-running
     // the touched-cell recompute per query. The parquet leaf also
     // gives the serve plan the multi-reference property the previous
-    // in-session trackedCheckpoint bought (the symmetrized union reads
+    // in-session cut bought (the symmetrized union reads
     // the frame twice, then every beam round joins it).
     annGraphOver(spark, dir,
       Tables.parquet(spark, Graph.ensureMaintainedKnnEdges(spark, dir)))
@@ -626,7 +626,7 @@ object Similarity {
   private def beamSearch(spark: SparkSession, emb: DataFrame, sym: DataFrame,
       probes: DataFrame, starts: DataFrame, beamWidth: Int): DataFrame = {
     def score(nodes: DataFrame): DataFrame = scoreAgainstProbes(spark, emb, probes, nodes)
-    var visited = Kernels.trackedCheckpoint(starts)
+    var visited = Kernels.cut(starts)
     for (round <- 1 to BeamRounds) {
       val beam = visited
         .withColumn("rnk", row_number().over(
@@ -643,7 +643,7 @@ object Similarity {
       // a cut every SECOND round bounds it at ~9x (fine for 4 rounds)
       // while halving the eager checkpoint jobs (A/B'd at sf0.1)
       visited = if (round % 2 == 0 || round == BeamRounds)
-        Kernels.trackedCheckpoint(next) else next
+        Kernels.cut(next) else next
     }
     visited
       .filter(col("node") =!= col("probe_id"))

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.operators.Relational
+import graft.operators.{Kernels, Relational}
 
 /** Streaming change-data-capture maintenance (north star — the
   * reference is strictly batch, SURVEY.md §2.5): the per-micro-batch
@@ -71,27 +71,21 @@ object ChangeStream {
     * is merged into the maintained store by [[mergeBatch]]; the final
     * store (minus tombstones) must equal the one-shot batch
     * [[graft.operators.Relational.cdcMerge]] — same oracle. The store
-    * is `localCheckpoint`ed after every batch: lineage stays one batch
+    * is cut ([[Kernels.cut]]) after every batch: lineage stays one batch
     * deep instead of growing by a full merge plan per micro-batch (the
     * streaming analogue of the dedup-clusters loop fix, SURVEY §2.8).
     */
   def streamCdcMerge(spark: SparkSession, dir: String): DataFrame = {
-    var target = graft.operators.Kernels.trackedCheckpoint(baseStore(spark, dir))
+    var target = Kernels.cut(baseStore(spark, dir))
     val changes = Relational.cdcChangeLog(graft.Tables.stream(spark, dir, "orders"))
     // the merge's exchanges are batch-sized: give them the state width
     Streams.drainBatches(changes, Streams.stateWidth(spark)) { (batch, _) =>
       // the new store materializes eagerly FROM the old one, so the
-      // previous batch's checkpoint blocks can be freed right after
-      // (unpersist is a no-op on checkpoints — free by RDD id).
-      // Plain localCheckpoint here: foreachBatch runs on the
-      // stream-execution thread, and the tracked-cache registry is
-      // scoped per thread — the QUERY thread adopts the final
-      // store below so its retireCaches frees it.
-      val prevId = graft.operators.Kernels.checkpointRddId(target)
-      target = mergeBatch(target, batch).localCheckpoint()
-      prevId.foreach(graft.operators.Kernels
-        .releaseCheckpoint(spark.sparkContext, _))
+      // previous batch's cut is freed right after
+      val prev = target
+      target = Kernels.cut(mergeBatch(target, batch))
+      Kernels.free(prev)
     }
-    finish(graft.operators.Kernels.adoptCheckpoint(target))
+    finish(target)
   }
 }

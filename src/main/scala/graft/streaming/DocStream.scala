@@ -3,7 +3,6 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
-import org.apache.spark.sql.types.StructType
 
 import graft.operators.{Dedup, Kernels, Multimodal, Store, TextAnalysis}
 
@@ -412,16 +411,13 @@ object DocStream {
   }
 
   /** Runs the ingest stream over `dir`, appending each micro-batch
-    * into a fresh [[Kernels.scopedStore]]; returns the store root and
-    * each table's schema as every batch writes it (the batch body over
-    * the stream source), so reading the store infers nothing.
+    * into a fresh [[Kernels.scopedStore]]; returns the store root.
     */
-  private def ingestSearchStore(spark: SparkSession, dir: String)
-      : (String, Map[String, StructType]) = {
+  private def ingestSearchStore(spark: SparkSession, dir: String): String = {
     val root = Kernels.scopedStore("graft-stream-index")
     val docs = graft.Tables.stream(spark, dir, "documents").select(col("doc_id"), col("text"))
     Streams.drainBatches(docs) { (batch, bid) => appendSearchBatch(batch, bid, root) }
-    (root, searchTables(docs).map { case (table, rows) => table -> rows.schema }.toMap)
+    root
   }
 
   /** BM25 serve over a (postings, doclen) store —
@@ -433,29 +429,25 @@ object DocStream {
     * OVER (PARTITION BY term)` window, whose single-task partition
     * buffer a stopword term would blow up at scale), corpus stats from
     * the doc-length table (NOT the postings: a token-less doc has no
-    * postings but still counts toward N). `schemas` holds the tables'
-    * write schemas when the caller knows them ([[Store.read]]).
+    * postings but still counts toward N).
     */
-  private[graft] def serveBm25(spark: SparkSession, root: String,
-      schemas: Map[String, StructType] = Map.empty): DataFrame = {
+  private[graft] def serveBm25(spark: SparkSession, root: String): DataFrame = {
     import graft.operators.Retrieval
     import spark.implicits._
     val qterms = Retrieval.Queries
       .flatMap { case (qid, t) => t.split(" ").map(w => (qid, w)) }
       .toDF("query_id", "term")
-    val stats = Store.read(spark, root, "doclen", schema = schemas.get("doclen"))
+    val stats = Store.read(spark, root, "doclen")
       .agg(count(lit(1)).as("n_docs"), sum("dl").as("total_tokens"))
-    val matchedTf = Store.read(spark, root, "postings", schema = schemas.get("postings"))
+    val matchedTf = Store.read(spark, root, "postings")
       .join(broadcast(qterms.select("term").distinct()), Seq("term"), "leftsemi")
     val dfT = matchedTf.groupBy("term").agg(count(lit(1)).as("df"))
     val matched = matchedTf.join(broadcast(dfT), "term")
     Retrieval.bm25Score(matched, stats, qterms)
   }
 
-  def streamSearchIndex(spark: SparkSession, dir: String): DataFrame = {
-    val (root, schemas) = ingestSearchStore(spark, dir)
-    serveBm25(spark, root, schemas)
-  }
+  def streamSearchIndex(spark: SparkSession, dir: String): DataFrame =
+    serveBm25(spark, ingestSearchStore(spark, dir))
 
   /** Compacted-store file budget: postings are rewritten into this
     * many term-hash buckets (term-sorted within each), doc lengths
@@ -479,11 +471,10 @@ object DocStream {
     * ([[Store.rewrite]]'s swap), so the disk footprint never stays
     * doubled.
     */
-  private[graft] def compactSearchStore(spark: SparkSession, root: String,
-      schemas: Map[String, StructType] = Map.empty): Unit = {
-    Store.rewrite(spark, root, "postings", schemas.get("postings"))(
+  private[graft] def compactSearchStore(spark: SparkSession, root: String): Unit = {
+    Store.rewrite(spark, root, "postings")(
       _.repartition(SearchStoreBuckets, col("term")).sortWithinPartitions("term", "doc_id"))
-    Store.rewrite(spark, root, "doclen", schemas.get("doclen"))(
+    Store.rewrite(spark, root, "doclen")(
       _.repartition(SearchStoreBuckets, col("doc_id")))
   }
 
@@ -498,9 +489,9 @@ object DocStream {
     * the same BM25 oracle gates it (spec-pinned file-count bound too).
     */
   def streamSearchIndexCompacted(spark: SparkSession, dir: String): DataFrame = {
-    val (root, schemas) = ingestSearchStore(spark, dir)
-    compactSearchStore(spark, root, schemas)
-    serveBm25(spark, root, schemas)
+    val root = ingestSearchStore(spark, dir)
+    compactSearchStore(spark, root)
+    serveBm25(spark, root)
   }
 
   /** `stream_ann_maintain`: the streaming twin of
@@ -722,7 +713,11 @@ object DocStream {
       Streams.HashJoins) { (batch, bid) =>
       if (!processed.isEmpty && processed.get(processed.size - 1) >= bid) {
         // replayed, fully-committed batch — skip (idempotence)
-      } else {
+      } else Kernels.releasing {
+        // per-batch frees: the batch's sig cut and the label
+        // maintenance's caches and round cuts go when the body ends,
+        // not at the query's retire — one node-sized block per
+        // micro-batch otherwise
         // per-sig aggregates collected first (bounded by the
         // batch's present sigs) so the driver fold is a pure
         // in-memory step AFTER every Spark job has succeeded
@@ -732,10 +727,9 @@ object DocStream {
         val audAgg = Multimodal.sigBatchAgg(
           Multimodal.trainedSigs(payloads, Multimodal.Audio, audMu))
         // the batch's frame sigs feed three consumers (two probe
-        // sides, the store write) — checkpoint so the decode
-        // kernel runs once per batch
-        val vidS = Multimodal.trainedSigs(payloads, Multimodal.Frame, vidMu)
-          .localCheckpoint()
+        // sides, the store write) — cut so the decode kernel runs
+        // once per batch
+        val vidS = Kernels.cut(Multimodal.trainedSigs(payloads, Multimodal.Frame, vidMu))
         // per-batch work stops at EDGES: the blast-radius probe
         // (batch frames x accumulated store, banded — work
         // proportional to the batch) plus within-batch pairs,
@@ -747,14 +741,6 @@ object DocStream {
             .unionByName(Multimodal.sigPairs(Multimodal.Frame, vidS)
               .select("doc_a", "doc_b")))
         Store.append(tmp, "vidsigs", bid)(vidS)
-        // the batch's checkpoint blocks are dead once the writes
-        // are done — free them per batch instead of leaving one
-        // node-sized block PER MICRO-BATCH to the ContextCleaner
-        // (which only runs on driver GC)
-        Kernels.checkpointRddId(vidS).foreach { id =>
-          spark.sparkContext.getPersistentRDDs.get(id)
-            .foreach(_.unpersist(true))
-        }
         // driver state LAST — pure in-memory, cannot fail midway
         Multimodal.sigKeepFold(imgKeep, imgAgg)
         Multimodal.sigKeepFold(audKeep, audAgg)
@@ -766,11 +752,6 @@ object DocStream {
         // point — confluent, and the write is keyed by bid)
         if (processed.asScala.count(_ > lastContracted) >= contractEvery) contract(bid)
       }
-      // the label maintenance's component loop registers tracked
-      // caches/checkpoints in THIS (stream-execution) thread's
-      // scope; drain them per batch — the dead-thread backstop
-      // would otherwise hold them for the whole drain
-      Kernels.drainThreadScope()
     }
     nkdMark("drain")
     // drain-time contraction of whatever is still pending — on the

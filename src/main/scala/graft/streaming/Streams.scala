@@ -63,7 +63,10 @@ object Streams {
   }
 
   /** Drains `df` in `mode` through `f`, once per micro-batch with the
-    * batch id. `f` runs on the stream-execution thread.
+    * batch id. `f` runs on the stream-execution thread, in the CALLER's
+    * [[graft.operators.Kernels]] scope: what a body caches or cuts
+    * belongs to the calling query and its retire frees it. A body that
+    * frees its work per batch wraps it in `Kernels.releasing`.
     */
   def drainBatches(df: DataFrame, confs: Map[String, String] = Map.empty,
                    mode: OutputMode = OutputMode.Append())(
@@ -76,7 +79,8 @@ object Streams {
         confs.foreach { case (k, v) => spark.conf.set(k, v) }
         // the query ends by itself once the source is drained; a stop
         // while its thread winds down cancels a finished job group
-        val q = df.writeStream.outputMode(mode).foreachBatch(f)
+        val q = df.writeStream.outputMode(mode)
+          .foreachBatch(graft.operators.Kernels.inCallerScope(f))
           .trigger(Trigger.AvailableNow())
           .option("checkpointLocation", ckpt.toString).start()
         try q.awaitTermination() finally if (q.isActive) q.stop()

@@ -98,7 +98,7 @@ class GraphSpec extends AnyFunSuite {
     // chain is the worst case for neighbor propagation (diameter 1023)
     // and exactly the shape the mutual-kNN graph produces. The pointer
     // jump must converge in ~log2(1023) rounds, and the per-round
-    // localCheckpoint must keep the analyzed plan node count CONSTANT —
+    // cut must keep the analyzed plan node count CONSTANT —
     // cache-without-checkpoint grows it ~4x per round, which hung the
     // round-9 gates with 2 GiB plan strings.
     val n = 1024L
@@ -109,14 +109,14 @@ class GraphSpec extends AnyFunSuite {
     val persistedBefore = spark.sparkContext.getPersistentRDDs.size
     val frame = Dedup.clustersFromEdges(docs, chain, (r, p, c) => probes += ((r, p, c)))
     val got = frame.collect().map(r => r.getLong(0) -> r.getLong(1))
-    // stats-severing pin (the loopCheckpoint contract, observable at
-    // the loop's OUTPUT): a plain localCheckpoint inherits the round
+    // stats-severing pin (the Kernels.cut contract, observable at
+    // the loop's OUTPUT): an unsevered cut inherits the round
     // plan's ESTIMATED statistics, and this loop's self-join then
     // SQUARES sizeInBytes round over round — after the ~10 rounds this
     // chain needs, the final frame's estimate would carry thousands of
     // digits (and by round ~20 on real data the driver burns minutes
-    // per round just multiplying the BigInts). loopCheckpoint resets
-    // each round's leaf to defaultSizeInBytes, so the converged
+    // per round just multiplying the BigInts). The loop's lazy cut
+    // resets its leaf to defaultSizeInBytes, so the converged
     // frame's estimate stays node-sized.
     // threshold: a severed leaf carries defaultSizeInBytes (=
     // Long.MaxValue, ~2^63), so a few joins over severed leaves stay
@@ -124,13 +124,13 @@ class GraphSpec extends AnyFunSuite {
     // land around 2^64000
     val outStats = frame.queryExecution.optimizedPlan.stats.sizeInBytes
     assert(outStats < BigInt(2).pow(200),
-      s"loop output stats must stay flat (loopCheckpoint severs inheritance), got $outStats")
+      s"loop output stats must stay flat (Kernels.cut severs inheritance), got $outStats")
     Kernels.retireCaches()
     // block-release regression pin: Dataset.unpersist is a no-op on
-    // checkpointed frames, so without the per-round RDD-id release the
-    // loop would leave ~one persisted frame PER ROUND (10+ here); the
-    // final round's checkpoint is registered with Kernels and freed by
-    // the retireCaches above, so NOTHING may remain
+    // cuts, so without the per-round Kernels.free the loop would
+    // leave ~one persisted frame PER ROUND (10+ here); the final
+    // round's cut belongs to this scope and the retireCaches above
+    // frees it, so NOTHING may remain
     val persistedAfter = spark.sparkContext.getPersistentRDDs.size
     assert(persistedAfter <= persistedBefore,
       s"loop must release each round's checkpoint blocks and retireCaches the last " +
@@ -140,7 +140,7 @@ class GraphSpec extends AnyFunSuite {
     val rounds = probes.map(_._1).max
     assert(rounds <= 15,
       s"pointer jump should converge a 1023-diameter chain in ~log2 rounds, took $rounds")
-    // plan flatness: every round's frame is a localCheckpoint leaf, so
+    // plan flatness: every round's frame is a cut leaf, so
     // the analyzed node count is identical across ALL rounds
     val counts = probes.map(_._2).distinct
     assert(counts.size == 1,

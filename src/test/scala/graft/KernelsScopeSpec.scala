@@ -32,10 +32,10 @@ class KernelsScopeSpec extends AnyFunSuite {
         // "query B": pin a cache and a tracked checkpoint, execute
         val df = Kernels.cacheTracked((1 to 100).toDF("x"))
         assert(df.count() == 100)
-        val ck = Kernels.trackedCheckpoint((1 to 50).toDF("y"))
+        val ck = Kernels.cut((1 to 50).toDF("y"))
         assert(ck.count() == 50)
         otherCache = df
-        otherCkptId = Kernels.checkpointRddId(ck)
+        otherCkptId = Kernels.cutIds(ck).headOption
         otherPinned.countDown()
         mayRetire.await() // hold the pins across A's retire
         Kernels.retireCaches() // B's own retire drains B's scope
@@ -105,10 +105,10 @@ class KernelsScopeSpec extends AnyFunSuite {
     val t = new Thread(() => {
       val df = Kernels.cacheTracked((1 to 64).toDF("d"))
       assert(df.count() == 64)
-      val ck = Kernels.trackedCheckpoint((1 to 32).toDF("e"))
+      val ck = Kernels.cut((1 to 32).toDF("e"))
       assert(ck.count() == 32)
       deadCache = df
-      deadCkptId = Kernels.checkpointRddId(ck)
+      deadCkptId = Kernels.cutIds(ck).headOption
     })
     t.start(); t.join()
     assert(deadCache.storageLevel != StorageLevel.NONE,
@@ -176,19 +176,19 @@ class KernelsScopeSpec extends AnyFunSuite {
   test("memo: a new fingerprint frees the old value's checkpoint blocks") {
     import spark.implicits._
     val sc = spark.sparkContext
-    val v1 = Kernels.memo("spec-ckpt", ("t", "fp1"))((1 to 10).toDF("x").localCheckpoint())
-    val id1 = Kernels.checkpointRddId(v1)
+    val v1 = Kernels.memo("spec-ckpt", ("t", "fp1"))(Kernels.cut((1 to 10).toDF("x")))
+    val id1 = Kernels.cutIds(v1).headOption
     assert(id1.exists(sc.getPersistentRDDs.contains), "the memoized checkpoint must be live")
     // the same fingerprint is a hit
     val hit = Kernels.memo[org.apache.spark.sql.DataFrame]("spec-ckpt", ("t", "fp1"))(
       fail("a hit must not build"))
     assert(hit eq v1)
-    val v2 = Kernels.memo("spec-ckpt", ("t", "fp2"))((1 to 20).toDF("x").localCheckpoint())
+    val v2 = Kernels.memo("spec-ckpt", ("t", "fp2"))(Kernels.cut((1 to 20).toDF("x")))
     assert(v2.count() == 20)
     assert(id1.forall(id => !sc.getPersistentRDDs.contains(id)),
       "the superseded value's checkpoint blocks must be freed")
     // a driver value in turn supersedes v2, freeing its blocks too
-    val id2 = Kernels.checkpointRddId(v2)
+    val id2 = Kernels.cutIds(v2).headOption
     Kernels.memo[AnyRef]("spec-ckpt", ("t", "fp3"))("driver value")
     assert(id2.forall(id => !sc.getPersistentRDDs.contains(id)))
   }
@@ -222,63 +222,74 @@ class KernelsScopeSpec extends AnyFunSuite {
     Kernels.retireCaches()
   }
 
-  test("loopCheckpoint severs inherited plan statistics and tracks the persisted blocks") {
+  test("a lazy cut drops inherited statistics; free releases it") {
     import spark.implicits._
     val sc = spark.sparkContext
-    // a self-join whose ESTIMATED stats a plain localCheckpoint would
-    // inherit onto the new leaf (the compounding that melted the
-    // 20+-round component loops — see Kernels.loopCheckpoint)
-    val df = (1 to 100).toDF("x")
-    val joined = df.as("a")
-      .join(df.withColumnRenamed("x", "y").as("b"), $"x" === $"y")
+    // a self-join whose ESTIMATED stats a cut would inherit onto its
+    // leaf (the compounding that melted the 20+-round component loops
+    // — see Kernels.cut)
+    val default = BigInt(spark.sessionState.conf.defaultSizeInBytes)
+    val base = Kernels.cut((1 to 100).toDF("x"))
+    val joined = base.as("a")
+      .join(base.withColumnRenamed("x", "y").as("b"), $"x" === $"y")
       .select($"x")
-    val plain = Kernels.trackedCheckpoint((1 to 100).toDF("x"))
-    val (reset, id) = Kernels.loopCheckpoint(joined)
-    // severed: the re-wrapped frame's leaf carries the session DEFAULT
-    // size, not the join's product estimate
-    val resetStats = reset.queryExecution.optimizedPlan.stats.sizeInBytes
-    assert(resetStats == BigInt(spark.sessionState.conf.defaultSizeInBytes),
-      s"loopCheckpoint leaf must reset to defaultSizeInBytes, got $resetStats")
-    // values ride through the re-wrap unchanged
-    assert(reset.count() == 100)
-    // the PERSISTED checkpoint id is returned (the wrapper's own leaf
-    // is the unpersisted Row conversion) and its blocks are live...
-    assert(id.exists(i => sc.getPersistentRDDs.contains(i)),
-      "loopCheckpoint must return the persisted checkpoint RDD id")
-    // ...until released by id, the loop's per-round discipline
-    id.foreach(Kernels.releaseCheckpoint(sc, _))
-    assert(id.forall(i => !sc.getPersistentRDDs.contains(i)))
-    assert(plain.count() == 100)
+    val round = Kernels.cut(joined, eager = false)
+    // the loop's lazy cut carries the session DEFAULT size, not the
+    // join's product estimate; an eager cut keeps its estimate
+    assert(round.queryExecution.optimizedPlan.stats.sizeInBytes == default)
+    assert(Kernels.cut(joined).queryExecution.optimizedPlan.stats.sizeInBytes < default)
+    // values ride through unchanged, and the leaf is the persisted cut
+    assert(round.count() == 100)
+    val Seq(id) = Kernels.cutIds(round)
+    assert(sc.getPersistentRDDs.contains(id), "the fresh leaf must be the persisted cut")
+    // free releases the round, the loop's per-round discipline, and
+    // leaves the cut it reads alone
+    Kernels.free(round)
+    assert(!sc.getPersistentRDDs.contains(id))
+    assert(Kernels.cutIds(base).forall(sc.getPersistentRDDs.contains))
     Kernels.retireCaches()
+    assert(Kernels.cutIds(base).forall(i => !sc.getPersistentRDDs.contains(i)))
   }
 
-  test("loopCheckpoint coverage audit: every data-dependent-round loop severs stats") {
-    // The stats-compounding pathology (Kernels.loopCheckpoint) was
-    // found at round ~20 of a convergence loop — nothing structural
-    // stops a NEW loop from reintroducing it with a plain
-    // trackedCheckpoint/localCheckpoint, so this audit pins the
-    // source: a data-dependent-round loop (the `while (changed …)`
-    // fixpoint shape) may exist only where the round cut goes through
-    // Kernels.loopCheckpoint. Bounded-round loops (beam search,
-    // PageRank's fixed iterations) may keep trackedCheckpoint — a
-    // handful of stat inheritances is harmless; it is the UNBOUNDED
-    // self-joining fixpoint that squares sizeInBytes to astronomical
-    // BigInts. A new convergence loop must either route through
-    // Dedup.clustersFromEdges or adopt loopCheckpoint and extend the
-    // allowlist here.
-    import scala.jdk.CollectionConverters._
-    val files = java.nio.file.Files.walk(java.nio.file.Path.of("src/main/scala/graft"))
-      .iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
-    val loopFiles = files.filter(p =>
-      java.nio.file.Files.readString(p).contains("while (changed"))
-    assert(loopFiles.map(_.getFileName.toString).toSet == Set("Dedup.scala"),
-      s"unexpected data-dependent convergence loop in ${loopFiles.map(_.getFileName)} — " +
-        "route it through Kernels.loopCheckpoint and extend this allowlist")
-    loopFiles.foreach { p =>
-      val s = java.nio.file.Files.readString(p)
-      assert(s.contains("Kernels.loopCheckpoint"),
-        s"$p: the convergence loop must cut rounds with Kernels.loopCheckpoint")
+  test("a cut a releasing block returns is the caller's, freed by its retire") {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    var inner = Seq.empty[Int]
+    val kept = Kernels.releasing {
+      val scratch = Kernels.cut((1 to 10).toDF("s"))
+      inner = Kernels.cutIds(scratch)
+      Kernels.cut(scratch.select(($"s" * 2).as("d")))
     }
+    val ids = Kernels.cutIds(kept)
+    assert(inner.forall(i => !sc.getPersistentRDDs.contains(i)),
+      "the block's own intermediate cut must go when the block ends")
+    assert(ids.forall(sc.getPersistentRDDs.contains), "the returned cut must survive the block")
+    assert(kept.count() == 10)
+    Kernels.retireCaches()
+    assert(ids.forall(i => !sc.getPersistentRDDs.contains(i)),
+      "the caller's retire must free the returned cut")
+  }
+
+  test("a foreachBatch cut is the caller's: its retire frees it, no other's") {
+    val sc = spark.sparkContext
+    val ids = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    val region = Tables.stream(spark, SparkTestSession.Sf, "region")
+    graft.streaming.Streams.drainBatches(region) { (batch, _) =>
+      val ck = Kernels.cut(batch)
+      assert(ck.count() == 5)
+      Kernels.cutIds(ck).foreach(ids.add)
+    }
+    val made = ids.toArray.toSeq.map(_.asInstanceOf[Int])
+    assert(made.nonEmpty && made.forall(sc.getPersistentRDDs.contains),
+      "a batch body's cut must outlive the drain")
+    // another live thread's retire leaves the caller's cut alone
+    val other = new Thread(() => Kernels.retireCaches())
+    other.start(); other.join()
+    assert(made.forall(sc.getPersistentRDDs.contains),
+      "another thread's retire freed the calling query's batch cut")
+    Kernels.retireCaches()
+    assert(made.forall(i => !sc.getPersistentRDDs.contains(i)),
+      "the calling query's retire must free its batch cut")
   }
 
   test("a dedup operator leaves the caller's pins on its thread alone") {
@@ -312,14 +323,17 @@ class KernelsScopeSpec extends AnyFunSuite {
   }
 
   test("retire drops the memo entries of the scoped dirs it deletes") {
-    // stream_sketch_maintain reads its per-call store through
-    // Tables.parquet, which memoizes each path's schema; the retire that
-    // deletes the store's dir must take those entries with it
+    // a per-call store read through Tables.parquet memoizes each path's
+    // schema; the retire that deletes the store's dir must take those
+    // entries with it
+    import spark.implicits._
     def entries = Kernels.memoNames("parquet-schema")
-      .filter(_.contains("/graft-stream-sketch-")).toSet
+      .filter(_.contains("/graft-spec-scoped-")).toSet
     val before = entries
     for (call <- 1 to 2) {
-      graft.streaming.EventStream.streamSketchMaintain(spark, SparkTestSession.Sf).collect()
+      val root = Kernels.scopedStore("graft-spec-scoped")
+      (1 to 3).toDF("x").write.parquet(s"$root/t")
+      assert(Tables.parquet(spark, s"$root/t").count() == 3)
       val live = entries -- before
       assert(live.nonEmpty, s"call $call read no store path through the schema memo")
       Kernels.retireCaches()

@@ -2641,14 +2641,38 @@ class OperatorsSpec extends AnyFunSuite {
 
   test("bpe trainer plan depth is constant per round over many rounds") {
     // 16 rounds (4x the query constant): every round starts from the
-    // previous round's localCheckpoint, so the analyzed-plan node count
-    // must be IDENTICAL from round 2 on — any growth is the ~2^R
-    // lineage compounding the checkpoint cut exists to prevent, which
-    // only shows at realistic merge counts, never at Rounds=4
-    val probe = Bpe.roundProbe(spark, sf, 16)
-    val nodes = probe.map(_._1)
-    assert(nodes.drop(1).distinct.size == 1,
+    // previous round's cut, so the analyzed-plan node count must be
+    // IDENTICAL from round 2 on — any growth is the ~2^R lineage
+    // compounding the cut exists to prevent, which only shows at
+    // realistic merge counts, never at Rounds=4
+    val nodes = scala.collection.mutable.ArrayBuffer.empty[Int]
+    Bpe.trained(spark, sf, 16, (_, n) => nodes += n)
+    Kernels.retireCaches()
+    assert(nodes.size == 16 && nodes.drop(1).distinct.size == 1,
       s"plan node counts must be flat after round 1, got $nodes")
+  }
+
+  test("bpe training frees its round cuts: only the memo's frames stay") {
+    // a fresh key: a copy of the corpus under a new path trains anew
+    val dir = SparkTestSession.tmpDir("graft-bpe-fresh").toString
+    Tables.documents(spark, sf).write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet.toSet
+    Bpe.vocabEncode(spark, dir).collect()
+    Kernels.retireCaches()
+    val held = Kernels.cutIds(Bpe.mergeTable(spark, dir)).toSet ++
+      Kernels.cutIds(Bpe.vocabEncode(spark, dir))
+    Kernels.retireCaches()
+    val added = sc.getPersistentRDDs.keySet.toSet -- before
+    assert(held.size == Bpe.Rounds + 1, s"the memo holds the symbols and each round's pair: $held")
+    assert(added == held, s"training left cuts no memo holds: ${added -- held}")
+    // a new fingerprint supersedes the entry and frees every frame it held
+    new java.io.File(s"$dir/documents.parquet").listFiles()
+      .filter(_.getName.endsWith(".parquet")).foreach(_.setLastModified(0L))
+    Bpe.mergeTable(spark, dir).collect()
+    Kernels.retireCaches()
+    assert(held.forall(id => !sc.getPersistentRDDs.contains(id)),
+      "the superseded training memo kept its frames")
   }
 
   test("streaming span dedup reports exactly the batch-doc spans present in history") {

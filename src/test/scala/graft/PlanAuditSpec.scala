@@ -1385,6 +1385,38 @@ class PlanAuditSpec extends AnyFunSuite {
       s"a maintained-table write outside Store — use Store.append / next / rewrite:\n${hits.mkString("\n")}")
   }
 
+  test("cut audit: only Kernels.cut takes a localCheckpoint") {
+    // `Kernels.cut` gives every materialized intermediate one owner (the
+    // scope, a returning `releasing` block, or the memo holding it) and
+    // drops the statistics a loop round would inherit. A raw
+    // `localCheckpoint` (12 existed before) has neither: its blocks
+    // wait for GC and its estimate compounds round over round
+    val hits = sourceHitsOutside(Seq("src/main/scala/graft/operators/Kernels.scala"),
+      Seq("localCheckpoint("))
+    assert(hits.isEmpty,
+      s"a lineage cut outside Kernels — use Kernels.cut / free:\n${hits.mkString("\n")}")
+  }
+
+  test("cut audit: the one convergence loop cuts its rounds lazily") {
+    // Only the lazy cut drops the statistics a round inherits; an eager
+    // `Kernels.cut` in a self-joining fixpoint squares sizeInBytes every
+    // round until the driver spends minutes per round on the BigInt
+    // estimate. So the data-dependent-round loop (the `while (changed`
+    // shape) lives only in Dedup's component loop, and that loop's cut
+    // passes `eager = false`. A new convergence loop routes through
+    // `Dedup.clustersFromEdges` or cuts the same way and extends this list
+    val loops = sourceHitsOutside(Nil, Seq("while (changed"))
+    assert(loops.size == 1 && loops.head.startsWith("src/main/scala/graft/operators/Dedup.scala:"),
+      s"a data-dependent convergence loop outside Dedup's component loop:\n${loops.mkString("\n")}")
+    val src = java.nio.file.Files.readString(
+      java.nio.file.Path.of("src/main/scala/graft/operators/Dedup.scala"))
+    val from = src.indexOf("while (changed")
+    val body = src.substring(from, src.indexOf("Kernels.free(", from))
+    val cutAt = body.indexOf("Kernels.cut(")
+    assert(cutAt >= 0 && body.indexOf("eager = false", cutAt) > cutAt,
+      "the component loop must cut each round with Kernels.cut(..., eager = false)")
+  }
+
   test("memo audit: only Kernels locks or hooks a shared registry") {
     // `Kernels.memo` owns the one registry: builds run outside its lock,
     // superseded fingerprints free their blocks, retire drops the

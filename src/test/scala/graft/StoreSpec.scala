@@ -101,4 +101,17 @@ class StoreSpec extends AnyFunSuite {
       rows(Multimodal.mediaKeepMaintain(spark, sf))) finally Dedup.retireCaches()
     assert(stored == twin, "one merged batch must equal mm_media_keep_maintain")
   }
+
+  test("a warm stream_sketch_maintain reads its store with no schema build") {
+    // the store records each table's written schema, so reading a
+    // per-call store (a fresh path every call) infers nothing
+    def schemaBuilds = Kernels.memoStats().get("parquet-schema").fold(0L)(_.builds)
+    def run(): Unit =
+      try graft.streaming.EventStream.streamSketchMaintain(spark, sf).collect()
+      finally Dedup.retireCaches()
+    run()
+    val before = schemaBuilds
+    run()
+    assert(schemaBuilds == before, s"a warm call built ${schemaBuilds - before} parquet-schema entries")
+  }
 }

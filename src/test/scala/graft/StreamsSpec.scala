@@ -10,7 +10,7 @@ import org.apache.spark.sql.streaming.OutputMode
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.Dedup
-import graft.streaming.{DocStream, EventStream, Streams}
+import graft.streaming.{ChangeStream, DocStream, EventStream, Streams}
 
 /** The drain helper's isolation contract: a drain leaves nothing behind
   * once its query retires, and no other drain can see it. Two runs of
@@ -37,6 +37,8 @@ class StreamsSpec extends AnyFunSuite {
   private def tempViews(): Set[String] =
     spark.catalog.listTables().collect().filter(_.isTemporary).map(_.name).toSet
 
+  private def persistentRdds(): Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
+
   /** Runs `body` and retires, then checks the session is as `body`
     * found it.
     */
@@ -44,6 +46,7 @@ class StreamsSpec extends AnyFunSuite {
     val confs = overridden.map(k => k -> spark.conf.getOption(k))
     val views = tempViews()
     val dirs = drainDirs()
+    val rdds = persistentRdds()
     val out = try body finally Dedup.retireCaches()
     for ((k, v) <- confs)
       assert(spark.conf.getOption(k) == v, s"$k must read its pre-drain value")
@@ -51,8 +54,22 @@ class StreamsSpec extends AnyFunSuite {
     assert(spark.streams.active.isEmpty, "a drain must stop its query")
     assert(drainDirs().subsetOf(dirs),
       s"the retire must leave no checkpoint or scoped dir: ${drainDirs() -- dirs}")
+    assert(persistentRdds().subsetOf(rdds),
+      s"the retire must free every cut and cache: ${persistentRdds() -- rdds}")
     out
   }
+
+  /** The stream operators whose frames read a scoped dir. */
+  private val scopedOps = Seq[(String, (org.apache.spark.sql.SparkSession, String) => DataFrame)](
+    "stream_user_totals" -> EventStream.userTotals,
+    "stream_hourly" -> EventStream.hourlyRollup,
+    "stream_bm25_index" -> DocStream.streamSearchIndex,
+    "stream_bm25_compact" -> DocStream.streamSearchIndexCompacted,
+    "stream_ann_maintain" -> DocStream.streamAnnMaintain,
+    "stream_sketch_maintain" -> EventStream.streamSketchMaintain,
+    "stream_knn_maintain" -> DocStream.streamKnnMaintain,
+    "stream_media_keep" -> DocStream.streamMediaKeep,
+    "stream_media_keep_neardup" -> DocStream.streamMediaKeepNearDup)
 
   test("concurrent drains of one operator agree with a drain on its own") {
     def rows(): Set[Row] =
@@ -89,16 +106,7 @@ class StreamsSpec extends AnyFunSuite {
 
   test("Update, Complete and per-call store frames read stable rows until the retire deletes their dir") {
     def rows(df: DataFrame): Seq[String] = df.collect().map(_.toString).sorted.toSeq
-    for ((name, op) <- Seq[(String, (org.apache.spark.sql.SparkSession, String) => DataFrame)](
-        "stream_user_totals" -> EventStream.userTotals,
-        "stream_hourly" -> EventStream.hourlyRollup,
-        "stream_bm25_index" -> DocStream.streamSearchIndex,
-        "stream_bm25_compact" -> DocStream.streamSearchIndexCompacted,
-        "stream_ann_maintain" -> DocStream.streamAnnMaintain,
-        "stream_sketch_maintain" -> EventStream.streamSketchMaintain,
-        "stream_knn_maintain" -> DocStream.streamKnnMaintain,
-        "stream_media_keep" -> DocStream.streamMediaKeep,
-        "stream_media_keep_neardup" -> DocStream.streamMediaKeepNearDup)) {
+    for ((name, op) <- scopedOps) {
       val before = drainDirs()
       val df = op(spark, SparkTestSession.Sf)
       val own = drainDirs() -- before
@@ -107,6 +115,16 @@ class StreamsSpec extends AnyFunSuite {
       assert(first.nonEmpty && rows(df) == first, s"$name must read the same rows twice")
       Dedup.retireCaches()
       assert((drainDirs() intersect own).isEmpty, s"the retire must delete $name's dir")
+    }
+  }
+
+  test("a warm second run and its retire leave no persistent RDD") {
+    // the cold run builds the session memos, whose cuts and caches
+    // outlive the query by design; a warm run builds none, so after
+    // its retire every block it cut or cached must be gone
+    for ((name, op) <- scopedOps :+ ("stream_cdc_merge" -> ChangeStream.streamCdcMerge _)) {
+      try op(spark, SparkTestSession.Sf).collect() finally Dedup.retireCaches()
+      withClue(s"$name: ")(leavesNoTrace(op(spark, SparkTestSession.Sf).collect()))
     }
   }
 }
